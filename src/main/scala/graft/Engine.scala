@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * A user of the reference runs: ingest a CSV/Excel member submission,
   * resolve its items against canonical dictionaries, review the middle
   * band, push approved data, download reports. Each of those maps to
-  * one method here, all lazy DataFrame plans until an action runs.
+  * one method here. They return lazy DataFrame plans, except that
+  * [[processSubmission]] resolves the submission eagerly, once, so the
+  * review, push and report steps read stored rows.
   */
 object Engine {
 
@@ -36,6 +38,16 @@ object Engine {
 
   /** Ingest + process one submission file (CSV or xlsx) end-to-end
     * against a canonical dictionary `dict(title, ext_id)`.
+    *
+    * Eager: the call reads the submission once and resolves its items
+    * once. The validated rows, the valid members and the resolved items
+    * are eager local checkpoints, so every action on the result (band
+    * tally, [[reviewQueue]], [[pushPlan]], reports) reads stored rows;
+    * none re-reads the file or re-scores a candidate pair. `offerings`
+    * and `items` stay lazy plans over the stored valid rows.
+    *
+    * A nonexistent submission is rejected with [[Ingest.MissingInput]]
+    * before any read.
     *
     * P11 is ENFORCED here, not just offered: the extension whitelist
     * always applies; when `uploadRoot` is given, `path` is treated as
@@ -60,6 +72,8 @@ object Engine {
         java.nio.file.Paths.get(root).resolve(path).normalize.toString
       case None => path
     }
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(srcPath)))
+      throw Ingest.MissingInput(path)
     // routing must share the whitelist's case folding: an accepted
     // "DATA.XLS" would otherwise fall through to the CSV reader
     val extLower = srcPath.toLowerCase
@@ -82,23 +96,24 @@ object Engine {
     }
 
     // contactEmail is a RequiredField and missingRequired was checked
-    // empty above, so the column is guaranteed present — no fallback
+    // empty above, so the column is guaranteed present — no fallback.
+    // Eager: the one read of the submission; valid and errors both
+    // derive from these stored rows.
     val flagged = normed.withColumn("__valid",
       Normalize.validBusinessName(col("businessName")) &&
         col("country1").isNotNull &&
         Normalize.validEmail(col("contactEmail")))
-    // member_id must be DETERMINISTIC: r.valid/r.items/r.resolved are
-    // separate lazy branches of this plan, and reviewQueue joins resolved
-    // back to valid on member_id — monotonically_increasing_id() is
-    // documented nondeterministic and can diverge between branches.
-    // Derive the id from row content (xxhash64 over all columns), with a
-    // per-hash row_number so identical duplicate rows (interchangeable by
-    // construction) still get distinct ids.
+      .localCheckpoint(true)
+    // member_id is derived from row content (xxhash64 over all columns),
+    // not monotonically_increasing_id(), so the same file gets the same
+    // ids on every run; a per-hash row_number gives identical duplicate
+    // rows (interchangeable by construction) distinct ids. valid is an
+    // eager checkpoint, so items, resolved, reviewQueue's join back to
+    // valid and pushPlan all read one stored set of ids.
     val contentCols = projected.columns.toIndexedSeq.map(col)
     // orderBy the content columns, not a constant: identical rows still
-    // tie (interchangeable by construction), but a hash COLLISION of two
-    // distinct rows gets a total order, so the suffix assignment can't
-    // flip between the independently re-executed plan branches.
+    // tie, but a hash COLLISION of two distinct rows gets a total order,
+    // so the suffix assignment is a function of the file alone.
     val wDup = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__h")).orderBy(contentCols: _*)
     val valid = flagged.where(col("__valid")).drop("__valid")
@@ -106,6 +121,7 @@ object Engine {
       .withColumn("member_id",
         concat_ws("-", col("__h"), row_number().over(wDup)))
       .drop("__h")
+      .localCheckpoint(true)
     val errors = flagged.where(!col("__valid")).drop("__valid")
       .withColumn("error_message",
         when(!Normalize.validBusinessName(col("businessName")), "invalid business name")
@@ -121,9 +137,11 @@ object Engine {
     val items = ItemExplode.explodeItems(valid, Seq("member_id"), kindCols)
       .withColumn("item_norm", OfferingText.normalizeOffering(col("item_name")))
 
+    // Eager: the one resolution of this submission
     val resolved = EntityResolution.resolve(
       items, dict, Seq("member_id", "kind", "item_key"),
       itemCol = "item_norm", t = thresholds, blocked = blocked)
+      .localCheckpoint(true)
 
     SubmissionResult(mapping, valid, errors, offerings, items, resolved)
   }

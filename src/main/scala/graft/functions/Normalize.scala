@@ -81,16 +81,6 @@ object Normalize {
       .when(score >= autoReject, "review")
       .otherwise("rejected")
 
-  /** F9 — confidence band for display (high/medium/low; NULL scores
-    * read "low" — [[decisionBand]]'s convention). */
-  def confidenceBand(
-      score: Column,
-      high: Double = 90.0,
-      medium: Double = 70.0): Column =
-    when(score >= high, "high")
-      .when(score >= medium, "medium")
-      .otherwise("low")
-
   /** F8 — decision-status derivation from the review tri-state. */
   def decisionStatus(
       ignored: Column,

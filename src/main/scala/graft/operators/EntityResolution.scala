@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions._
   *    broadcast nested-loop join; at 100 TB the token-blocked variant
   *    joins on shared tokens first (equi-join shuffle, no cross product)
   *    and dedupes candidate pairs before scoring;
-  *  - top-k + best = one window (`row_number`) partitioned by item.
+  *  - top-k = one window (`row_number`) partitioned by item; the best
+  *    pick and its alternatives = one aggregate over those k rows, so
+  *    every candidate pair is scored once.
   */
 object EntityResolution {
 
@@ -264,44 +266,30 @@ object EntityResolution {
           > 20, 15.0).otherwise(0.0))
       .withColumn("score", greatest(col("adj") - col("cross_penalty"), lit(0.0)))
 
-    val wBest = Window.partitionBy(col(itemCol))
-      .orderBy(col("score").desc, col("raw_rn"))
-    val flagged = ranked.withColumn("best_rn", row_number().over(wBest))
-      .withColumn("best_name",
-        max(when(col("best_rn") === 1, col("cand_title")))
-          .over(Window.partitionBy(col(itemCol))))
-
-    // Alternatives (`app/etl.py:1344-1351`): in RAW-rank order, excluding
-    // the winner by name, score ≥ reject floor, first 3 — materialized in
-    // canonical order via sort_array on the raw rank (collect_list alone
-    // has no ordering guarantee).
-    val wAlt = Window.partitionBy(col(itemCol)).orderBy(col("raw_rn"))
-    val alts = flagged.where(col("cand_title") =!= col("best_name") &&
-        col("score") >= t.autoReject)
-      .withColumn("alt_rn", row_number().over(wAlt))
-      .where(col("alt_rn") <= nAlternatives)
-      .groupBy(col(itemCol))
-      .agg(transform(
-        sort_array(collect_list(struct(
-          col("raw_rn").as("rn"), col("cand_title").as("name"),
-          col("score"), col("cand_ext_id").as("ext_id")))),
-        x => struct(
-          x.getField("name").as("name"),
-          x.getField("score").as("score"),
-          x.getField("ext_id").as("ext_id"))).as("alternatives"))
-
-    val best = flagged.where(col("best_rn") === 1)
+    // Alternatives (`app/etl.py:1344-1351`): in RAW-rank order (sort_array
+    // on rn; collect_list alone has no order), excluding the winner by
+    // name, score ≥ reject floor, first `nAlternatives`. Only the review
+    // band carries them (`app/etl.py:1336-1357`), null when none are left.
+    val alts = transform(slice(filter(col("cands"), x =>
+        x.getField("name") =!= col("best.title") && x.getField("score") >= t.autoReject),
+      1, nAlternatives), _.dropFields("rn"))
+    // One aggregate per name takes the winner and its alternatives, so
+    // the scored pairs have one consumer: two window chains joined back
+    // together would each re-run the whole fuzzy subtree. The winner is
+    // the argmax of (score desc, raw_rn asc), total as raw_rn is unique.
+    val perName = ranked.groupBy(col(itemCol)).agg(
+      max_by(struct(col("cand_ext_id").as("ext_id"), col("cand_title").as("title")),
+        struct(col("score"), -col("raw_rn"))).as("best"),
+      max(col("score")).as("score"),
+      sort_array(collect_list(struct(col("raw_rn").as("rn"), col("cand_title").as("name"),
+        col("score"), col("cand_ext_id").as("ext_id")))).as("cands"))
       .withColumn("decision",
         Normalize.decisionBand(col("score"), t.autoResolve, t.autoReject))
-      .withColumn("ext_id",
-        when(col("decision") =!= "rejected", col("cand_ext_id")))
-      .select(col(itemCol), col("ext_id"), col("score"), col("decision"))
+      .select(col(itemCol),
+        when(col("decision") =!= "rejected", col("best.ext_id")).as("ext_id"),
+        col("score"), col("decision"),
+        when(col("decision") === "review" && size(alts) > 0, alts).as("alternatives"))
 
-    // the reference stores alternatives only for the review band
-    // (`app/etl.py:1336-1357`; resolve and reject branches carry none).
-    val perName = best.join(alts, Seq(itemCol), "left")
-      .withColumn("alternatives",
-        when(col("decision") === "review", col("alternatives")))
     val fuzzyOut = misses.join(perName, Seq(itemCol), "left")
       // names with zero fuzzy candidates (possible under token blocking:
       // nothing shares a token) must still surface — as auto-rejects.

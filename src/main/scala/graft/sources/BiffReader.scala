@@ -265,6 +265,8 @@ object BiffReader {
           s"corrupt BIFF workbook: ${e.getClass.getSimpleName}")
       case e: IllegalArgumentException => throw e // already typed
       case e: Ingest.UnsupportedFormat => throw e
+      case e: Ingest.MissingInput => throw e
+      case _: java.nio.file.NoSuchFileException => throw Ingest.MissingInput(path)
       case e: Exception =>
         throw Ingest.UnsupportedFormat(path,
           s"corrupt BIFF workbook: ${e.getClass.getSimpleName}")

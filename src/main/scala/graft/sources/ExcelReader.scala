@@ -316,6 +316,7 @@ object ExcelReader {
           s"corrupt xlsx workbook: ${e.getClass.getSimpleName}")
       case e: IllegalArgumentException => throw e // typed requires
       case e: Ingest.UnsupportedFormat => throw e
+      case e: Ingest.MissingInput => throw e
       case e: Exception =>
         throw Ingest.UnsupportedFormat(path,
           s"corrupt xlsx workbook: ${e.getClass.getSimpleName}")

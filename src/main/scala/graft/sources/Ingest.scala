@@ -26,6 +26,12 @@ object Ingest {
   final case class UnsupportedFormat(path: String, detail: String)
       extends RuntimeException(s"$path: $detail")
 
+  /** Typed missing-input rejection: the named input does not exist.
+    * Kept apart from [[UnsupportedFormat]] so a missing upload is never
+    * reported as a corrupt one. */
+  final case class MissingInput(path: String)
+      extends RuntimeException(s"$path: no such file")
+
   /** P11: the reference's upload whitelist (`app/routes.py:41-42`). */
   val AllowedExtensions: Set[String] = Set("csv", "xlsx", "xls")
 
@@ -127,7 +133,9 @@ object Ingest {
   }
 
   /** S3: pre-flight container validation for xlsx (a real zip with an
-    * `xl/` entry). Returns a typed error instead of a parser crash. */
+    * `xl/` entry). Returns a typed error instead of a parser crash; a
+    * file that does not exist throws [[MissingInput]], since there is no
+    * container to judge. */
   def validateXlsxContainer(path: String): Either[String, Unit] = {
     try {
       val zf = new java.util.zip.ZipFile(path)
@@ -139,6 +147,8 @@ object Ingest {
         if (hasXl) Right(()) else Left("not an Excel workbook: missing xl/ entries")
       } finally zf.close()
     } catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException =>
+        throw MissingInput(path)
       case e: Exception => Left(s"corrupt container: ${e.getMessage}")
     }
   }

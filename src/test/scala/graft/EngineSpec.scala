@@ -36,11 +36,13 @@ class EngineSpec extends AnyFunSuite {
     assert(decisions("Salt") == "resolved")
   }
 
-  test("end-to-end on the reference's own labeled corpus (fidelity)") {
-    // real canonical titles from the reference seed data, fed through
-    // the FULL pipeline (csv -> headers -> explode -> resolve)
+  test("end-to-end on a labeled catalogue workbook (fidelity)") {
+    // canonical titles from a generated labeled workbook, read through
+    // the xlsx reader and fed through the FULL pipeline (csv -> headers
+    // -> explode -> resolve)
+    val dir = Files.createTempDirectory("graft-ref-e2e")
     val corpus = graft.sources.ExcelReader.readXlsx(
-      spark, "/root/reference/seed_data/Training Data + Matching IDs.xlsx", sheet = 1)
+      spark, LabeledWorkbook.write(dir).toString, sheet = 1)
     val Seq(titleCol, uidCol) = corpus.columns.take(2).toSeq
     val refDict = corpus
       .select(col(s"`$titleCol`").as("title"), col(s"`$uidCol`").as("ext_id"))
@@ -49,7 +51,6 @@ class EngineSpec extends AnyFunSuite {
       .filter(t => !t.exists(";,\"\n".contains(_)) && t.trim.nonEmpty)
       .take(25)
     assert(titles.length == 25, "corpus too small for the fixture")
-    val dir = Files.createTempDirectory("graft-ref-e2e")
     val p = dir.resolve("ref.csv")
     Files.writeString(p,
       "Company Name,Country,E-Mail,Street Address,City,Products Offered,Ingredient List,About\n" +
@@ -59,10 +60,55 @@ class EngineSpec extends AnyFunSuite {
     assert(n >= 25, s"explode lost items: $n")
     val resolvedOrReview = r.resolved
       .where(col("decision") =!= "rejected").count()
-    // the reference's own vocabulary must overwhelmingly match itself;
+    // the catalogue's own vocabulary must overwhelmingly match itself;
     // normalizeOffering rewrites a small tail into review territory
     assert(resolvedOrReview >= (n * 0.8).toLong,
       s"only $resolvedOrReview of $n corpus titles matched their own dictionary")
+  }
+
+  test("after processSubmission, review, push and report actions never re-read or re-score") {
+    val src = Files.createTempDirectory("graft-once").resolve("m.csv")
+    Files.copy(java.nio.file.Paths.get(csvPath), src)
+    val r = Engine.processSubmission(spark, src.toString, dict)
+    // the submission is gone: any action that still scans it fails
+    Files.delete(src)
+    val tally = r.resolved.groupBy("decision").count()
+    assert(tally.collect().map(_.getLong(1)).sum == 3)
+    val (pending, dash) = Engine.reviewQueue(r, "m.csv")
+    dash.collect(); pending.collect()
+    val existing = Seq(("Acme", "M1")).toDF("businessName", "member_ext_id")
+    val (newDims, upd, ins) = Engine.pushPlan(r, dict, existing)
+    assert(upd.count() == 1 && ins.count() == 0)
+    newDims.collect()
+    val report = r.resolved.drop("alternatives")
+    graft.sources.Ingest.writeCsvReport(report,
+      Files.createTempDirectory("graft-once-report").resolve("resolved").toString)
+    assert(r.errors.count() == 1)
+    // and the plans those actions ran hold stored rows only: no file
+    // scan, and no nested-loop join (the fuzzy phase ran once, above)
+    Seq("tally" -> tally, "dashboard" -> dash, "pending" -> pending,
+        "new dims" -> newDims, "updates" -> upd, "inserts" -> ins,
+        "report" -> report, "errors" -> r.errors).foreach { case (name, df) =>
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("FileScan") && !p.contains("Scan csv"), s"$name re-reads the file:\n$p")
+      assert(!p.contains("NestedLoopJoin"), s"$name re-runs the fuzzy join:\n$p")
+    }
+  }
+
+  test("a missing submission is a typed MissingInput, raised before any read") {
+    Seq("csv", "xlsx", "xls").foreach { ext =>
+      val gone = Files.createTempDirectory("graft-missing").resolve(s"nope.$ext").toString
+      val e = intercept[graft.sources.Ingest.MissingInput] {
+        Engine.processSubmission(spark, gone, dict)
+      }
+      assert(e.path == gone)
+    }
+    // under an upload root the error names the submitted name only
+    val root = Files.createTempDirectory("graft-missing-root").toString
+    val e = intercept[graft.sources.Ingest.MissingInput] {
+      Engine.processSubmission(spark, "absent.csv", dict, uploadRoot = Some(root))
+    }
+    assert(e.path == "absent.csv")
   }
 
   test("P11 is ENFORCED by processSubmission: whitelist + traversal guard") {

@@ -948,4 +948,21 @@ class PlanAssertionsSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       "sketch-sized sides must broadcast")
   }
+
+  test("unblocked resolve scores every candidate pair once: one nested-loop join") {
+    // the best pick and the alternatives come from one aggregate over the
+    // ranked pairs; a second consumer of those pairs would plan the whole
+    // fuzzy subtree, broadcast nested-loop join included, a second time.
+    // Read the plan before it runs: once executed, adaptive execution may
+    // prune a branch whose rows came out empty, hiding the second join.
+    import spark.implicits._
+    val dict = Seq(("Green Tea", "G1"), ("Green Tea Extract", "G2"),
+      ("Green Tea Powder", "G3"), ("Almond Milk", "A1")).toDF("title", "ext_id")
+    val items = Seq((1L, "greem tea"), (2L, "almond mlk"), (3L, "almond milk"))
+      .toDF("item_id", "item_name")
+    val p = graft.operators.EntityResolution.resolve(items, dict, Seq("item_id"))
+      .queryExecution.executedPlan.toString
+    assert("BroadcastNestedLoopJoin".r.findAllIn(p).size == 1,
+      s"the fuzzy pairs must be generated exactly once:\n${p.take(4000)}")
+  }
 }

@@ -55,6 +55,18 @@ class IngressSpec extends AnyFunSuite {
     assert(e.getMessage.contains("OLE2"))
   }
 
+  test("a missing input is a typed MissingInput, never a corrupt container") {
+    val gone = Files.createTempDirectory("graft-gone")
+    val xlsx = gone.resolve("absent.xlsx").toString
+    assert(intercept[Ingest.MissingInput](Ingest.validateXlsxContainer(xlsx)).path == xlsx)
+    assert(intercept[Ingest.MissingInput](ExcelReader.readXlsx(spark, xlsx)).path == xlsx)
+    val xls = gone.resolve("absent.xls").toString
+    assert(intercept[Ingest.MissingInput](BiffReader.readXls(spark, xls)).path == xls)
+    // a present but broken file is still the container verdict
+    val bad = Files.writeString(gone.resolve("bad.xlsx"), "not a zip").toString
+    assert(Ingest.validateXlsxContainer(bad).left.exists(_.startsWith("corrupt container")))
+  }
+
   test("S8: zip bundle carries one csv entry per report, content intact") {
     import spark.implicits._
     val zipPath = Files.createTempDirectory("graft-zip").resolve("all.zip")
