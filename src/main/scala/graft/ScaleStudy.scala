@@ -526,7 +526,7 @@ object ScaleStudy {
       replicas: Int = Replicas): Unit =
     buildOnce(outDir, Seq(s"$srcDir/documents.parquet"),
         s"source-x$replicas", "documents.parquet/_SUCCESS") {
-      val d = spark.read.parquet(s"$srcDir/documents.parquet")
+      val d = Tables.raw(spark, srcDir, "documents")
       require(d.count() > 0,
         s"$srcDir/documents.parquet is empty — nothing to replicate")
       // the bijection/disjointness contract holds only if the SOURCE has
@@ -550,13 +550,14 @@ object ScaleStudy {
 
   /** Builds `outDir/events.parquet` as ONE FILE (the q44/q71 streaming
     * file source globs the literal file name, so a directory would be
-    * invisible to it) — 10× the source events. The source's raw-nanos
-    * `ts` round-trips as BIGINT, which `Tables.eventsTs` normalizes on
-    * read exactly like the fixture's TIMESTAMP(NANOS). */
+    * invisible to it) — 10× the source events. The source is read raw,
+    * so `ts` keeps its physical type (raw nanos round-trip as BIGINT,
+    * TIMESTAMP(MICROS) as TIMESTAMP_NTZ), which `Tables.eventsTs`
+    * normalizes on read exactly like the fixture's own. */
   def synthesizeEvents(spark: SparkSession, srcDir: String, outDir: String): Unit =
     buildOnce(outDir, Seq(s"$srcDir/events.parquet"),
         s"events-x$Replicas", "events.parquet") {
-      val ev = spark.read.parquet(s"$srcDir/events.parquet")
+      val ev = Tables.raw(spark, srcDir, "events")
       val guard = ev.agg(max(col("event_id")).as("me"),
         max(col("user_id")).as("mu")).head()
       // max() over zero rows is null, and getAs[Long] would unbox it to
@@ -595,7 +596,7 @@ object ScaleStudy {
       outDir: String): Unit =
     buildOnce(outDir, Seq(s"$srcDir/embeddings.parquet"),
         s"embeddings-x$Replicas", "embeddings.parquet/_SUCCESS") {
-      val e = spark.read.parquet(s"$srcDir/embeddings.parquet")
+      val e = Tables.raw(spark, srcDir, "embeddings")
       val guard = e.agg(max(col("vec_id")).as("mv")).head()
       require(!guard.isNullAt(0),
         s"$srcDir/embeddings.parquet is empty — cannot synthesize")
@@ -625,10 +626,9 @@ object ScaleStudy {
   def annStudies(baseDir: String): Map[String, (SparkSession, String) => DataFrame] = {
     import graft.operators.SimilaritySearch
     def qs(s: SparkSession): DataFrame =
-      s.read.parquet(s"$baseDir/embeddings.parquet")
-        .where(col("vec_id") % 100 === 0)
+      Tables(s, baseDir, "embeddings").where(col("vec_id") % 100 === 0)
     def corpus(s: SparkSession, dir: String): DataFrame =
-      s.read.parquet(s"$dir/embeddings.parquet")
+      Tables(s, dir, "embeddings")
     Map(
       "q195a_brute_chain" -> ((s: SparkSession, d: String) =>
         SimilaritySearch.bruteForceTopK(qs(s), corpus(s, d),
@@ -696,7 +696,7 @@ object ScaleStudy {
         Seq("lineitem", "orders", "part", "supplier", "nation", "customer")
           .map(t => s"$srcDir/$t.parquet"),
         s"lineitem-orders-x$replicas", "orders.parquet/_SUCCESS") {
-      val li = spark.read.parquet(s"$srcDir/lineitem.parquet")
+      val li = Tables.raw(spark, srcDir, "lineitem")
       val maxOk = li.agg(max(col("l_orderkey"))).head().getLong(0)
       require(maxOk < OrderOffset,
         s"source l_orderkey $maxOk >= OrderOffset $OrderOffset")
@@ -716,7 +716,7 @@ object ScaleStudy {
           org.apache.commons.io.FileUtils.copyDirectory(src, dst)
         else org.apache.commons.io.FileUtils.copyFile(src, dst)
       }
-      val ord = spark.read.parquet(s"$srcDir/orders.parquet")
+      val ord = Tables.raw(spark, srcDir, "orders")
       val maxOrd = ord.agg(max(col("o_orderkey"))).head().getLong(0)
       require(maxOrd < OrderOffset,
         s"source o_orderkey $maxOrd >= OrderOffset $OrderOffset")

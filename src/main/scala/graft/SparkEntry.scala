@@ -31,7 +31,7 @@ object SparkEntry {
     * problems than resolveOracleSql's dict CTE, its DuckDB mirror;
     * edit the two together. */
   private def resolveDict(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/part.parquet")
+    graft.Tables(s, dir, "part")
       .where(col("p_partkey") % 2 === 0)
       .groupBy(col("p_name").as("title"))
       .agg(concat(lit("EXT-"), min(col("p_partkey"))).as("ext_id"))
@@ -39,7 +39,7 @@ object SparkEntry {
   /** The natural item fixture (every third part) — entry/q40/q41;
     * q59/q66 perturb their own item names on top of the same base. */
   private def resolveItems(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/part.parquet")
+    graft.Tables(s, dir, "part")
       .where(col("p_partkey") % 3 === 0)
       .select(col("p_partkey").as("item_id"), col("p_name").as("item_name"))
 
@@ -50,8 +50,7 @@ object SparkEntry {
     * same way). Columns: user_id, conv_id, conv_ts, touch_id,
     * touch_ts, channel, rn, n. */
   private def attributionFrame(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.Tables.eventsTsMicros(
-      s.read.parquet(s"$dir/events.parquet"))
+    val ev = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
     val conv = ev.where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("conv_id"),
         col("ts_us").as("conv_ts"))
@@ -163,8 +162,7 @@ object SparkEntry {
     * inequality join — Spark would nested-loop it). */
   private def asofAttribution(s: SparkSession, dir: String)(
       join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val ev = graft.Tables.eventsTsMicros(
-        s.read.parquet(s"$dir/events.parquet"))
+    val ev = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
       .withColumn("cents", floor(col("value") * 100).cast("long"))
     val purch = ev.where(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts_us"), col("cents"))
@@ -275,7 +273,7 @@ object SparkEntry {
     // integer bucketing+scoring, so this one IS hash-checked (oracle
     // twin below).
     "q42_lsh_ann" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       SimilaritySearch.rademacherLshTopK(
         e.where(col("vec_id") % 100 === 0), e,
         "vec_id", "embedding", k = 5, nPlanes = 4, dim = 64)
@@ -285,7 +283,7 @@ object SparkEntry {
     // seeds, shuffle-free integer-cosine assignment against the inlined
     // centroid set, probe-one-cell — hash-checked like q42.
     "q52_ivf_ann" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       SimilaritySearch.ivfTopK(
         e.where(col("vec_id") % 100 === 0), e,
         "vec_id", "embedding", k = 5, nCells = 16, nProbe = 1)
@@ -294,7 +292,7 @@ object SparkEntry {
     // Deterministic k-means (2 Lloyd rounds, integer centroids) — the
     // coarse-quantizer training step for IVF, hash-checked.
     "q58_kmeans_assign" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       SimilaritySearch.kmeansAssignments(e, "vec_id", "embedding", k = 8, iters = 2)
         .orderBy("vec_id")
     }),
@@ -303,7 +301,7 @@ object SparkEntry {
     // queries ranked by exact integer ADC lookup tables — the
     // memory-bound ANN scan, deterministic end to end.
     "q111_pq_ann" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       SimilaritySearch.pqTopK(
         e.where(col("vec_id") % 100 === 0), e,
         "vec_id", "embedding", k = 5, m = 4, ksub = 8, iters = 2)
@@ -314,7 +312,7 @@ object SparkEntry {
     // residual codebooks compress it (4 codes/vector), both quantizers
     // exact-integer and hash-gated end to end.
     "q114_ivfpq_ann" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       SimilaritySearch.ivfPqTopK(
         e.where(col("vec_id") % 100 === 0), e,
         "vec_id", "embedding", k = 5, nCells = 8, nProbe = 2,
@@ -336,7 +334,7 @@ object SparkEntry {
     // query set only — queries broadcast, ONE corpus pass, never
     // corpus×corpus.
     "q195_ann_recall" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       val qs = e.where(col("vec_id") % 100 === 0)
       // the ground-truth pair set feeds two frames per method (hit
       // join + count) — materialize the tiny (n_queries·k)-row frame
@@ -377,7 +375,7 @@ object SparkEntry {
     // vector with a >= threshold cosine neighbor of smaller id in its
     // cell is marked dropped. Pairwise work never leaves a cell.
     "q76_semantic_dedup" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       SimilaritySearch.semanticDedup(e, "vec_id", "embedding",
         k = 8, iters = 2, minCosSqScaled = SemDedupThreshold)
         .orderBy("vec_id")
@@ -389,7 +387,7 @@ object SparkEntry {
     // (0.05), and the oracle asserts the flag by emitting literal TRUE
     // against its own exact count — an out-of-bound sketch hash-fails.
     "q43_approx_distinct" -> ((s, dir) => {
-      s.read.parquet(s"$dir/events.parquet")
+      graft.Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(
           approx_count_distinct(col("user_id"), 0.05).as("approx_users"),
@@ -406,7 +404,7 @@ object SparkEntry {
     // partition before the shuffle, the sketch's at-scale shape.
     "q51_kmv_distinct" -> ((s, dir) => {
       val k = 64
-      val h = s.read.parquet(s"$dir/events.parquet")
+      val h = graft.Tables(s, dir, "events")
         .where(col("user_id").isNotNull) // null ordering differs across engines
         .select(col("event_type"), md5(col("user_id").cast("string")).as("h"))
         .distinct()
@@ -436,11 +434,7 @@ object SparkEntry {
       // memory-sink table dies with the clone instead of piling up
       // across bench reruns.
       val s2 = streamClone(s)
-      val schema = s2.read.parquet(s"$dir/events.parquet").schema
-      val stream = graft.Tables.eventsTs(
-        s2.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet") // file source needs a dir
-          .parquet(dir))
+      val stream = graft.Tables.stream(s2, dir, "events")
       // state shuffle width = f(keyspace), not a constant: hours ×
       // event types bounds the window-count state. Set on the
       // discarded clone only; at 100 TB the same helper scales the
@@ -472,11 +466,7 @@ object SparkEntry {
     "q71_stream_sessions" -> ((s, dir) => {
       val s2 = streamClone(s)
       import s2.implicits._
-      val schema = s2.read.parquet(s"$dir/events.parquet").schema
-      val events = graft.Tables.eventsTs(
-          s2.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet") // file source needs a dir
-            .parquet(dir))
+      val events = graft.Tables.stream(s2, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"))
         .as[graft.streaming.Incremental.Event]
       s2.conf.set("spark.sql.shuffle.partitions",
@@ -513,7 +503,7 @@ object SparkEntry {
       // pair OUTPUT grows quadratically with the clique sizes — the
       // sample keeps the benchmark measuring the probe-join design, not
       // result materialization.
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = graft.Tables(s, dir, "documents")
         .where(col("doc_id") % 3 === 1)
         .repartition(s.sparkContext.defaultParallelism)
       graft.operators.Dedup.simhashNearDupPairs(d, "text", "doc_id", bits = 16)
@@ -534,7 +524,7 @@ object SparkEntry {
     // within 0.009 of a .5 boundary).
     "q67_video_frames" -> ((s, dir) => {
       import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
+      val ids = graft.Tables(s, dir, "documents")
         .where(col("doc_id") % 10 === 2).select(col("doc_id")).as[Long]
       val media = ids.mapPartitions(_.map { id =>
         val frames = (0 until (id % 5 + 1).toInt).map { f =>
@@ -605,7 +595,7 @@ object SparkEntry {
     // split on any engine, any run, any cluster size; no RNG, no seed
     // coordination).
     "q54_det_split" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = graft.Tables(s, dir, "documents")
       // null-lang guard (q51/q57's rule, in lockstep with the twin):
       // a NULL sort key orders NULLS FIRST in Spark, NULLS LAST in
       // DuckDB — the row ORDER would diverge on a regenerated fixture
@@ -626,7 +616,7 @@ object SparkEntry {
       // the shingle-join design, not result materialization.
       // single-row-group testdata => spread rows before the tokenizing
       // explode (many-file production layouts parallelize natively)
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = graft.Tables(s, dir, "documents")
         .where(col("doc_id") % 4 === 2)
         .repartition(s.sparkContext.defaultParallelism)
         .withColumn("split", mdSplit)
@@ -650,8 +640,7 @@ object SparkEntry {
     // positives die in the confirm join; Bloom has no false negatives)
     // and hash-checked.
     "q78_bloom_decontam" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .repartition(s.sparkContext.defaultParallelism)
+      val d = graft.Tables.spread(s, dir, "documents")
         .withColumn("split", mdSplit)
         .select(col("doc_id"), col("split"),
           graft.queries.TextQueries.wordBigrams.as("grams"))
@@ -694,8 +683,7 @@ object SparkEntry {
     // stream, bucket-blocked at 30 min so the join is a plain
     // equi-shuffle + exact filter, never a nested loop.
     "q101_interval_join" -> ((s, dir) => {
-      val ev = graft.Tables.eventsTsMicros(
-          s.read.parquet(s"$dir/events.parquet"))
+      val ev = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
         .select(col("event_id"), col("ts_us"),
           floor(col("value") * 100).cast("long").as("cents"))
       val iv = broadcast(ev.agg(min(col("ts_us")).as("__m0")))
@@ -739,7 +727,7 @@ object SparkEntry {
     // at rank (n+1)/2 is tie-invariant, so this equals the naive
     // row_number formulation on any engine.
     "q57_exact_median" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = graft.Tables(s, dir, "documents")
         .where(col("n_chars").isNotNull) // null sort position differs across engines
       val hist = d.groupBy("lang", "n_chars").agg(count(lit(1)).as("cnt"))
       val byVal = org.apache.spark.sql.expressions.Window
@@ -760,7 +748,7 @@ object SparkEntry {
     // category-mismatch, problematic-pair and length-ratio rules all
     // hash-checked.
     "q60_semantic_guard" -> ((s, dir) => {
-      val p = s.read.parquet(s"$dir/part.parquet")
+      val p = graft.Tables(s, dir, "part")
       val a = p.select(col("p_partkey").as("review_id"),
         col("p_name").as("item_name"))
       val b = p.select((col("p_partkey") - 1).as("review_id"),
@@ -829,7 +817,7 @@ object SparkEntry {
     // collapse, 34 variant rewrites, punctuation strip, smart title
     // case) over perturbed part names that exercise every stage.
     "q64_normalize_offering" -> ((s, dir) => {
-      val p = s.read.parquet(s"$dir/part.parquet")
+      val p = graft.Tables(s, dir, "part")
       val t = when(col("p_partkey") % 6 === 0, concat(lit("vit c "), col("p_name")))
         .when(col("p_partkey") % 6 === 1, concat(upper(col("p_name")), lit(", organic!!")))
         .when(col("p_partkey") % 6 === 2, concat(lit("b. lactis with "), col("p_name")))
@@ -845,7 +833,7 @@ object SparkEntry {
     // quotas instead of corpus-uniform sampling, the coreset-selection
     // pass of embedding-space curation.
     "q125_cluster_sample" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       TextAnalysis.prioritySample(
           SimilaritySearch.kmeansAssignments(
             e, "vec_id", "embedding", k = 8, iters = 2),
@@ -858,7 +846,7 @@ object SparkEntry {
     // out-of-distribution/noise candidates, the far-from-every-cluster
     // complement of SemDeDup's too-close test (q76).
     "q126_embedding_outliers" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       graft.operators.Robust.winsorize(
           SimilaritySearch.kmeansAssignmentsWithSim(
             e, "vec_id", "embedding", k = 8, iters = 2),
@@ -873,8 +861,7 @@ object SparkEntry {
     // Window operator); value pre-quantized to cents so frame sums are
     // exact integers in any engine.
     "q118_rolling_features" -> ((s, dir) => {
-      val ev = graft.Tables.eventsTsMicros(
-          s.read.parquet(s"$dir/events.parquet"))
+      val ev = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
         .select(col("event_id"), col("user_id"), col("ts_us"),
           floor(col("value") * 100).cast("long").as("cents"))
       Rolling.trailingAgg(ev, "user_id", "ts_us", "cents",
@@ -886,8 +873,7 @@ object SparkEntry {
     // per-step min-aggregation bounded by |users|, un-hinted joins so
     // AQE broadcasts the per-user frame only while it fits.
     "q119_funnel" -> ((s, dir) => {
-      val ev = graft.Tables.eventsTsMicros(
-          s.read.parquet(s"$dir/events.parquet"))
+      val ev = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
         .select(col("user_id"), col("ts_us"), col("event_type"))
       Funnel.funnel(ev, "user_id", "ts_us", "event_type",
           Seq("signup", "click", "purchase"))
@@ -900,8 +886,7 @@ object SparkEntry {
     // on event_id) — the sequence-modeling prep pass; transition
     // probability as exact integer ppm (1e6·n div row-total).
     "q120_event_transitions" -> ((s, dir) => {
-      val ev = graft.Tables.eventsTsMicros(
-          s.read.parquet(s"$dir/events.parquet"))
+      val ev = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
         .select(col("user_id"), col("ts_us"), col("event_id"),
           col("event_type"))
       val w = org.apache.spark.sql.expressions.Window
@@ -922,8 +907,7 @@ object SparkEntry {
     // cohort age. Two user-keyed aggs + one equi-join, output bounded
     // by weeks² — the product-analytics rollup every event store runs.
     "q130_retention_cohorts" -> ((s, dir) => {
-      val ev = graft.Tables.eventsTsMicros(
-          s.read.parquet(s"$dir/events.parquet"))
+      val ev = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
         .select(col("user_id"), expr("ts_us div 604800000000").as("wk"))
       val first = ev.groupBy("user_id").agg(min(col("wk")).as("cohort_wk"))
       ev.distinct()
@@ -983,8 +967,7 @@ object SparkEntry {
     // Work = 7 × |distinct (user, day)|, never |events| × window;
     // stickiness = DAU/WAU in exact mills.
     "q139_dau_wau" -> ((s, dir) => {
-      val ud = graft.Tables.eventsTsMicros(
-          s.read.parquet(s"$dir/events.parquet"))
+      val ud = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
         .select(col("user_id"), expr("ts_us div 86400000000").as("day"))
         .distinct()
       val mx = ud.agg(max(col("day")).as("mx"))
@@ -1011,8 +994,7 @@ object SparkEntry {
     // baseline); < 4 baseline days → never flagged. One daily hash
     // agg (day-bounded frame), then one type-keyed window.
     "q138_daily_anomaly" -> ((s, dir) => {
-      val daily = graft.Tables.eventsTsMicros(
-          s.read.parquet(s"$dir/events.parquet"))
+      val daily = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
         .groupBy(col("event_type"),
           expr("ts_us div 86400000000").as("day"))
         .agg(count(lit(1)).as("n_events"))
@@ -1028,8 +1010,7 @@ object SparkEntry {
     // rank window runs over the BOUNDED distinct-path frame, never the
     // event stream.
     "q128_session_paths" -> ((s, dir) => {
-      val ev = graft.Tables.eventsTsMicros(
-          s.read.parquet(s"$dir/events.parquet"))
+      val ev = graft.Tables.eventsTsMicros(graft.Tables(s, dir, "events"))
         .select(col("user_id"), col("ts_us"), col("event_id"),
           col("event_type"))
       val w = org.apache.spark.sql.expressions.Window

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
-/** Testdata table loaders.
+/** The one testdata table-access path: where a table lives
+  * (`<dir>/<name>.parquet`) and how it is decoded.
   *
   * `events.parquet` has shipped with two physical `ts` types across
   * fixture generations: TIMESTAMP(NANOS), which Spark only reads as a
@@ -19,14 +20,38 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   */
 object Tables {
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+  /** A table, decoded (`events.ts` normalized by [[eventsTs]]). */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    decode(name, raw(spark, dir, name))
+
+  /** The physical read with no decoding — for code that must copy a
+    * table's own column types (the `ScaleStudy` replica writers). */
+  def raw(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** The table with its rows spread across `defaultParallelism`
+    * partitions. The testdata ships one row group per file, so a bare
+    * scan is a single task; hashing- and dot-heavy projections need the
+    * rows spread across cores first. At production scale the many-file
+    * layout provides this for free. */
+  def spread(spark: SparkSession, dir: String, name: String): DataFrame =
+    apply(spark, dir, name).repartition(spark.sparkContext.defaultParallelism)
+
+  /** The table as a streaming file source, decoded like [[apply]]. The
+    * file source needs a directory, so it lists `dir` and keeps only
+    * this table's file; the schema comes from the batch read. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    decode(name, spark.readStream.schema(raw(spark, dir, name).schema)
+      .option("pathGlobFilter", s"$name.parquet")
+      .parquet(dir))
+
+  private def decode(name: String, df: DataFrame): DataFrame =
     if (name == "events") eventsTs(df) else df
-  }
 
   /** Normalize the events `ts` column (raw nanos long OR TIMESTAMP_NTZ)
     * to TimestampType in the UTC session zone. Works on batch and
-    * streaming DataFrames alike (schema-driven, no action). */
+    * streaming DataFrames alike (schema-driven, no action); a `ts`
+    * that is already TimestampType passes through. */
   def eventsTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -38,14 +63,11 @@ object Tables {
 
   /** The events `ts` as an exact epoch-micros BIGINT column `ts_us` —
     * the integer ordering domain shared bit-for-bit with DuckDB's
-    * `epoch_us(ts)` (q80's as-of join compares in it). */
+    * `epoch_us(ts)` (q80's as-of join compares in it). Exact on both
+    * physical types: `unix_micros(timestamp_micros(x div 1000))` is
+    * `x div 1000`. */
   def eventsTsMicros(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts_us", expr("ts div 1000"))
-      case _ =>
-        requireUtc(df.sparkSession)
-        df.withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
-    }
+    eventsTs(df).withColumn("ts_us", unix_micros(col("ts")))
 
   /** The NTZ→timestamp cast interprets the wall clock in the session
     * zone; any zone other than UTC would silently shift every epoch and

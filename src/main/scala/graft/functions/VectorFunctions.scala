@@ -202,17 +202,6 @@ object VectorFunctions {
         newChild: Expression): Expression = copy(child = newChild)
   }
 
-  /** LSH bucket id for cosine: sign bits of `planes.size` random-plane
-    * projections, packed into a bigint. Planes are caller-provided
-    * deterministic vectors (broadcast-sized). */
-  def signLshBucket(a: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val proj = aggregate(
-        zip_with(a, typedLit(p), (x, w) => x.cast("double") * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Rademacher (±1) hyperplane sign for plane `p`, dimension `d`:
     * parity of the first hex char of md5("p|d"). Database-friendly
     * random projections (Achlioptas 2003: ±1 entries preserve the JL

@@ -51,20 +51,6 @@ object Dedup {
         .withColumn("dup_count", lit(1L)))
   }
 
-  /** MinHash signatures: one row per doc with `nHashes` minhash columns
-    * mh0..mh{n-1} (md5-min over salted tokens). ONE multi-seed
-    * signature pass — n independent single-seed expressions would
-    * re-tokenize and re-hash the document n times (the exact
-    * anti-pattern TextHash's array kernel exists to avoid); the
-    * per-seed values are identical by construction. */
-  def minhashSignatures(df: DataFrame, textCol: String, nHashes: Int): DataFrame = {
-    val sig = graft.functions.TextHash
-      .minhashSignature(col(textCol), 0 until nHashes)
-    (0 until nHashes).foldLeft(df.withColumn("__sig", sig)) { (acc, i) =>
-      acc.withColumn(s"mh$i", element_at(col("__sig"), i + 1))
-    }.drop("__sig")
-  }
-
   /** MinHash-LSH candidate pairs: band the signature into `bands` groups
     * of `rowsPerBand` hashes; docs sharing any band string are
     * candidates. Output: (id_a, id_b) with id_a < id_b, distinct.

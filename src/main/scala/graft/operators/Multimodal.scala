@@ -452,8 +452,7 @@ object Multimodal {
     * (text bytes as payload) — lets every multimodal operator run and be
     * asserted on without codecs. */
   def syntheticMediaFromDocs(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
-    d.select(
+    graft.Tables(spark, dir, "documents").select(
       col("doc_id").as("media_id"),
       when(col("doc_id") % 3 === 0, "image")
         .when(col("doc_id") % 3 === 1, "audio")

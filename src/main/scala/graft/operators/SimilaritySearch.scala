@@ -51,16 +51,6 @@ object SimilaritySearch {
     rankTopK(scored, "neighbor_id", "cos_sq_scaled", asc = false, k)
   }
 
-  /** Deterministic pseudo-random hyperplanes (no RNG: hash-derived). */
-  def hyperplanes(nPlanes: Int, dim: Int): Seq[Seq[Double]] =
-    (0 until nPlanes).map { p =>
-      (0 until dim).map { d =>
-        // deterministic hash -> [-1, 1)
-        val h = scala.util.hashing.MurmurHash3.caseClassHash((p, d))
-        (h.toDouble / Int.MaxValue)
-      }
-    }
-
   /** The k corpus rows with the smallest md5(id), as centroid seeds —
     * deterministic (no RNG, md5 is unique per id so there are no ties)
     * and scale-safe: orderBy+limit plans as TakeOrderedAndProject
@@ -292,26 +282,6 @@ object SimilaritySearch {
       col(idCol).as("neighbor_id"),
       VectorFunctions.quantize(col(vecCol)).as("cv"))
       .withColumn("bucket", VectorFunctions.rademacherLshBucket(col("cv"), nPlanes, dim))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sq_scaled", VectorFunctions.cosineSqScaledQ(col("qv"), col("cv")))
-    rankTopK(scored, "neighbor_id", "cos_sq_scaled", asc = false, k)
-  }
-
-  /** LSH-bucketed ANN: probe only the query's bucket. Same output shape
-    * as bruteForceTopK; recall < 1 by construction (the scale path). */
-  def lshTopK(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int, nPlanes: Int, dim: Int): DataFrame = {
-    val planes = hyperplanes(nPlanes, dim)
-    val q = queries.select(
-      col(idCol).as("query_id"),
-      VectorFunctions.quantize(col(vecCol)).as("qv"),
-      VectorFunctions.signLshBucket(col(vecCol), planes).as("bucket"))
-    val c = corpus.select(
-      col(idCol).as("neighbor_id"),
-      VectorFunctions.quantize(col(vecCol)).as("cv"),
-      VectorFunctions.signLshBucket(col(vecCol), planes).as("bucket"))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_sq_scaled", VectorFunctions.cosineSqScaledQ(col("qv"), col("cv")))

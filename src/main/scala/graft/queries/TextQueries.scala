@@ -18,14 +18,10 @@ import org.apache.spark.sql.functions._
 object TextQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    graft.Tables(s, dir, "documents")
 
-  /** The testdata ships one row group per file, so a bare scan is a
-    * single task; hashing-heavy projections (md5 minhash/simhash per
-    * token) need the rows spread across cores first. At production
-    * scale the many-file layout provides this for free. */
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).repartition(s.sparkContext.defaultParallelism)
+    graft.Tables.spread(s, dir, "documents")
 
   /** Distinct sorted lowercase tokens — canonical shingle set. */
   private val tokSet = TextFunctions.tokenSetSorted(col("text"))
@@ -750,7 +746,7 @@ object TextQueries {
           docsSpread(s, dir), qs, "doc_id", "text", "qid", "qtext",
           k = Bm25K, k1 = Bm25K1, b = Bm25B)
         .select(col("qid"), col("doc_id"), col("rank"))
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(s, dir, "embeddings")
       val qv = e.where(col("vec_id").isin(
           Bm25Queries.map(_._1 * HybridVecStride): _*))
         .select(expr(s"vec_id div $HybridVecStride").as("qid"),

@@ -17,17 +17,12 @@ import org.apache.spark.sql.functions._
   * Scale design: brute-force KNN broadcasts only the query set and makes
   * one pass over the corpus (no corpus shuffle); near-dup verification
   * joins only within blocks (label here; an LSH bucket in the unlabeled
-  * case — see graft.operators.SimilaritySearch.lshTopK).
+  * case — see graft.operators.SimilaritySearch.rademacherLshTopK).
   */
 object VectorQueries {
 
   private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
-
-  /** Single-row-group testdata => single-task scans; spread rows before
-    * the quantize/dot-heavy stages (many-file layouts do this natively). */
-  private def embSpread(s: SparkSession, dir: String): DataFrame =
-    emb(s, dir).repartition(s.sparkContext.defaultParallelism)
+    graft.Tables(s, dir, "embeddings")
 
   /** q38's near-dup floor in signed cos²·1e6 units (the
     * cosineSqScaledQ scale): 50000 ≈ |cos| ≥ 0.224 — deliberately low
@@ -45,7 +40,7 @@ object VectorQueries {
     "q37_knn_bruteforce" -> ((s, dir) => {
       graft.operators.SimilaritySearch.bruteForceTopK(
           emb(s, dir).where(col("vec_id") % 100 === 0),
-          embSpread(s, dir), "vec_id", "embedding", k = 5)
+          graft.Tables.spread(s, dir, "embeddings"), "vec_id", "embedding", k = 5)
         .select("query_id", "rank", "neighbor_id", "cos_sq_scaled")
         .orderBy("query_id", "rank")
     }),
@@ -53,7 +48,7 @@ object VectorQueries {
     // Embedding near-dup pairs, blocked by label, verified by exact
     // quantized cosine (floor: [[NearDupCosSqScaledMin]]).
     "q38_embedding_dups" -> ((s, dir) => {
-      val e = embSpread(s, dir).where(col("vec_id") % 4 === 0)
+      val e = graft.Tables.spread(s, dir, "embeddings").where(col("vec_id") % 4 === 0)
         .select(col("label"), col("vec_id"),
           VectorFunctions.quantize(col("embedding")).as("q"))
       e.as("a").join(e.as("b"), Seq("label"))

@@ -51,7 +51,7 @@ object CorpusTimer {
     * timing in both so the rows stay comparable). */
   def composedRun(spark: SparkSession, docsDir: String,
       policy: String = "budget"): Composed = {
-    val docs = spark.read.parquet(s"$docsDir/documents.parquet")
+    val docs = graft.Tables(spark, docsDir, "documents")
       .select("doc_id", "lang", "text")
     val eval = docs.where(col("doc_id") % 97 === 0)
       .select((col("doc_id") + 1000000000L).as("doc_id"), col("text"))

@@ -21,20 +21,6 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(firstQ.toSeq == firstQ.sortBy(-_).toSeq) // descending by score
   }
 
-  test("LSH ANN results are a subset of same-bucket brute-force truth") {
-    val lsh = SimilaritySearch.lshTopK(queries, emb, "vec_id", "embedding",
-      k = 5, nPlanes = 2, dim = 64)
-    assert(lsh.count() > 0)
-    // every reported neighbor's score must match brute-force's score for
-    // that exact pair (the bucketing only prunes candidates, never
-    // changes scores)
-    val bf = SimilaritySearch.bruteForceTopK(queries, emb, "vec_id", "embedding",
-      k = Int.MaxValue - 1)
-    val joined = lsh.as("l").join(bf.as("b"), Seq("query_id", "neighbor_id"))
-      .where(col("l.cos_sq_scaled") =!= col("b.cos_sq_scaled"))
-    assert(joined.count() == 0)
-  }
-
   test("Rademacher LSH ANN preserves exact pair scores and bucket closure") {
     val lsh = SimilaritySearch.rademacherLshTopK(queries, emb, "vec_id", "embedding",
       k = 5, nPlanes = 4, dim = 64)

@@ -20,11 +20,21 @@ shift || true
 SF_DIR="/root/testdata/$SF"
 OUT_DIR="/tmp/preflight_verify_$SF"
 
-echo "== preflight 1/4: sbt Test/compile (main + test must compile at HEAD+worktree)"
+echo "== preflight 1/5: table-access guard (only Tables.scala opens a testdata <table>.parquet)"
+# every testdata read goes through graft.Tables: a read(Stream) whose
+# path literal names a .parquet file anywhere else in src/main is a
+# second table-access path
+STRAY=$(find src/main -name '*.scala' ! -path src/main/scala/graft/Tables.scala -print0 \
+  | xargs -0 perl -0777 -ne 'while (/\bread(?:Stream)?\b(?:\s*\.\s*\w+\([^()]*\))*\s*\.\s*parquet\(\s*s?"[^"]*\.parquet"/g) {
+      printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }')
+[ -z "$STRAY" ] \
+  || { echo "$STRAY"; echo "PREFLIGHT FAIL: testdata read outside graft.Tables (use Tables(spark, dir, name))"; exit 1; }
+
+echo "== preflight 2/5: sbt Test/compile (main + test must compile at HEAD+worktree)"
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 \
   || { tail -30 /tmp/preflight_compile.log; echo "PREFLIGHT FAIL: compile"; exit 1; }
 
-echo "== preflight 2/4: graft.Verify → $OUT_DIR ($SF)"
+echo "== preflight 3/5: graft.Verify → $OUT_DIR ($SF)"
 rm -rf "$OUT_DIR"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR $*" >/tmp/preflight_verify.log 2>&1 \
   || { tail -30 /tmp/preflight_verify.log; echo "PREFLIGHT FAIL: verify"; exit 1; }
@@ -42,11 +52,11 @@ for q in "$@"; do
     || { echo "PREFLIGHT FAIL: no dump for '$q' (unknown query name?)"; exit 1; }
 done
 
-echo "== preflight 3/4: oracle type lint (DESCRIBE all twins vs tools/oracle_schema.json)"
+echo "== preflight 4/5: oracle type lint (DESCRIBE all twins vs tools/oracle_schema.json)"
 python3 tools/lint_oracle_types.py "$OUT_DIR" "$SF_DIR" \
   || { echo "PREFLIGHT FAIL: oracle type drift (cast the twin, or --regen after an intentional schema change)"; exit 1; }
 
-echo "== preflight 4/4: DuckDB oracle compare"
+echo "== preflight 5/5: DuckDB oracle compare"
 COMPARE_OUT=$(python3 tools/compare_oracle.py "$OUT_DIR" "$SF_DIR" "$@") \
   || { echo "$COMPARE_OUT"; echo "PREFLIGHT FAIL: oracle mismatch"; exit 1; }
 echo "$COMPARE_OUT"
