@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Normalize, OfferingText, Similarity}
+import graft.functions.{Normalize, OfferingText}
 import graft.operators._
 import graft.sources.{BiffReader, ExcelReader, Ingest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,11 +20,11 @@ import org.apache.spark.sql.functions._
   */
 object Engine {
 
-  /** A session with the graft configuration + SQL similarity functions. */
+  /** A session with the graft configuration + the graft SQL functions. */
   def session(appName: String = "graft", cpus: String = "32"): SparkSession = {
     val s = Tables.configure(SparkSession.builder().appName(appName), cpus)
       .getOrCreate()
-    Similarity.register(s)
+    graft.plans.GraftExtensions.registerInto(s)
     s
   }
 

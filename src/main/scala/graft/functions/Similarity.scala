@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * token-set/partial family, so those two are implemented as native
   * Catalyst expressions (F2/F3 in SURVEY.md §2.7) — evaluated on
   * `UTF8String` inputs inside the executor, no Python/serialization
-  * round-trip, registered as SQL functions for `spark.sql` use.
+  * round-trip, registered as SQL functions by `graft.plans.GraftExtensions`.
   *
   * Scores are 0..100 doubles like the reference. The elementary ratio is
   * the indel ratio `100 * (1 - indel(a,b) / (|a|+|b|))` (Levenshtein with
@@ -200,23 +200,4 @@ object Similarity {
     floor(
       (lit(100) * (greatest(length(a), length(b), lit(1)) - levenshtein(a, b)))
         / greatest(length(a), length(b), lit(1))).cast("long")
-
-  /** Register the similarity family for SQL usage. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // arity-checked builder: es.head/es(1) on a 1-arg call would be an
-    // IndexOutOfBoundsException instead of a function-signature error
-    def binary(name: String, mk: (Expression, Expression) => Expression)
-        (es: Seq[Expression]): Expression = {
-      if (es.size != 2) throw new IllegalArgumentException(
-        s"$name expects 2 arguments, got ${es.size}")
-      mk(es.head, es(1))
-    }
-    reg.createOrReplaceTempFunction(
-      "token_set_ratio", binary("token_set_ratio", TokenSetRatio.apply), "built-in")
-    reg.createOrReplaceTempFunction(
-      "partial_ratio", binary("partial_ratio", PartialRatio.apply), "built-in")
-    reg.createOrReplaceTempFunction(
-      "indel_ratio", binary("indel_ratio", IndelRatio.apply), "built-in")
-  }
 }

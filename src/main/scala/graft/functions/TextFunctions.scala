@@ -166,28 +166,10 @@ object TextFunctions {
   /** Exact-content key for hash dedup: md5 of lowercased trimmed text. */
   def contentKey(c: Column): Column = md5(lower(trim(c)))
 
-  /** One MinHash value: the minimum md5 over tokens salted with `seed`.
-    * Backed by the single-pass TextHash expression (tokenize once). */
-  def minhash(c: Column, seed: Int): Column =
-    element_at(TextHash.minhashSignature(c, Seq(seed)), 1)
-
   /** MinHash signature as one concatenated band string (for LSH banding:
     * equal band string => candidate duplicate pair). */
   def minhashBand(c: Column, seeds: Seq[Int]): Column =
     TextHash.minhashBand(c, seeds)
-
-  /** One SimHash bit-weight: +1/-1 by parity of the ascii code of the
-    * (pos+1)-th hex char of each token's md5, summed over tokens. The
-    * signed sum's sign is bit `pos` of the document SimHash ONLY when
-    * `toks` is the DISTINCT token set (TextHash.simhashKernel sums over
-    * distinct tokens) — summing tokens-with-multiplicity weights
-    * repeated tokens and can flip bits relative to `simhash(c)`. */
-  def simhashBitWeight(toks: Column, pos: Int): Column =
-    aggregate(
-      transform(toks, t =>
-        when(ascii(substring(md5(t), pos + 1, 1)) % 2 === 1, lit(1)).otherwise(lit(-1))),
-      lit(0),
-      (acc, v) => acc + v)
 
   /** SimHash of `bits` bits as a bigint (bit i set iff weight_i > 0).
     * Backed by the single-pass TextHash expression (one md5 per token

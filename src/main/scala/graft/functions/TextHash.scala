@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass MinHash / SimHash Catalyst expressions.
   *
-  * The composable column forms (`TextFunctions.minhash` per salt,
-  * `simhashBitWeight` per bit) re-tokenize and re-hash the document for
+  * A composable column form (one MinHash per salt, one SimHash
+  * bit-weight per bit) would re-tokenize and re-hash the document for
   * every salt/bit — 8 salts means 8 tokenizations and 8·|tokens| md5
   * calls, all in interpreted higher-order functions. These expressions
   * tokenize once, hash each token once per salt (minhash) or once total

@@ -222,7 +222,9 @@ object VectorFunctions {
     * the fold then NULLs the projection, whose `when(proj >= 0, bit)
     * .otherwise(0)` contribution collapses to 0 — so ANY length
     * mismatch or NULL element zeroes EVERY plane's bit, i.e. bucket 0.
-    * Long wrap is identical (same add order, two's complement). */
+    * On a Long-overflow projection sum the old ANSI form raises where
+    * this wraps — unreachable from quantize() outputs (dim ±1 terms of
+    * |component·scale| ≲ 3e9), the only callers. */
   def rademacherBucketKernel(qv: ArrayData, signs: Array[Long],
       nPlanes: Int, dim: Int): Long = {
     val n = qv.numElements()

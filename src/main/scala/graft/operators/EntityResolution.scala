@@ -30,16 +30,12 @@ import org.apache.spark.sql.functions._
   */
 object EntityResolution {
 
-  /** The reference's three decision constants (`app/etl.py:40-42`).
-    * NB `fuzzyFloor` mirrors FUZZY_MATCH_THRESHOLD for config-surface
-    * fidelity but — exactly like the reference's own flow — nothing in
-    * [[resolve]] gates on it: candidate rescue keys off `autoResolve`
-    * and banding off `autoResolve`/`autoReject`. Tuning it changes
-    * nothing; it is carried, not consulted. */
+  /** The reference's decision constants (`app/etl.py:40-42`):
+    * candidate rescue keys off `autoResolve`, banding off
+    * `autoResolve`/`autoReject`. */
   case class Thresholds(
       autoResolve: Double = 97.0,
-      autoReject: Double = 50.0,
-      fuzzyFloor: Double = 85.0)
+      autoReject: Double = 50.0)
 
   /** Exact case-insensitive dictionary join. `dict(title, ext_id)`.
     * Returns items + (ext_id, exact_score) with null ext_id for misses. */

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal columns: image/audio/video as opaque `binary` columns with
   * typed metadata, plus the decode / feature-extract / resize /
@@ -26,17 +25,6 @@ import org.apache.spark.sql.types._
   * moves.
   */
 object Multimodal {
-
-  /** Canonical media row: opaque payload + typed metadata. */
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType),       // image | audio | video
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("duration_ms", LongType))))))
 
   case class MediaFeatures(
       media_id: Long,

@@ -191,7 +191,7 @@ object TextAnalysis {
     val toks = TextFunctions.tokens(col(textCol))
     // anchor contract: md5(token), first 15 hex chars as a 60-bit int,
     // mod anchorMod — the UNSALTED sibling of CountMin.bucket, and the
-    // DuckDB twin in TextQueries.oracle(q86) recomputes it verbatim
+    // DuckDB twin of q86 (TextQueries) recomputes it verbatim
     val anchored = df.select(col(idCol), toks.as("__toks"))
       .where(size(col("__toks")) >= windowTokens)
       .select(col(idCol), col("__toks"),
@@ -339,7 +339,7 @@ object TextAnalysis {
       idCol: String, buckets: Int): DataFrame = {
     require(buckets >= 1, s"buckets=$buckets must be >= 1")
     val reserved = Seq("n_grams", "dsir_mills", "dsir_avg_mills",
-      "__g", "__b", "__bs", "__sc", "__tc", "__ns", "__nt", "__w")
+      "__g", "__b", "__sc", "__tc", "__ns", "__nt", "__w")
     Seq(idCol, textCol).foreach(c =>
       require(!reserved.contains(c), s"column '$c' is reserved"))
     // round-13 OPT: the gram totals derive from the bucket-count aggs

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions.{Checksum, Similarity, TextHash, UnicodeNorm, VectorFunctions}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
@@ -143,5 +143,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case _ => throw new IllegalArgumentException(
           "zorder2(x, y[, bits]) requires a literal int bits in 1..31")
       }))
+  }
+}
+
+object GraftExtensions {
+
+  /** Registers the whole function family into a live session that was
+    * created without the extensions. */
+  def registerInto(spark: SparkSession): Unit = {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    GraftColumnBridge.registerInto(ext, spark)
   }
 }

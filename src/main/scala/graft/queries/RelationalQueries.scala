@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * Every query maps one or more SURVEY.md §2 operators onto the
   * TPC-H-ish tables, is fully deterministic (explicit ORDER BY on a
   * unique key; money in floor-scaled integer cents; no engine-dependent
-  * float accumulation), and has an ANSI-SQL twin in `oracle` that DuckDB
-  * executes on the same parquet files.
+  * float accumulation), and its [[Query]] entry carries the ANSI-SQL
+  * twin that DuckDB executes on the same parquet files.
   */
 object RelationalQueries {
 
@@ -38,10 +38,10 @@ object RelationalQueries {
   private[graft] val BenfordMills: Seq[Int] =
     Seq(301, 176, 125, 97, 79, 67, 58, 51, 46)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // A1/A2/A10 — grouped aggregate with exact integer measures (hash agg,
     // partial+final; one shuffle on the two grouping keys).
-    "q01_pricing_summary" -> ((s, dir) => {
+    Query("q01_pricing_summary", (s, dir) => {
       t(s, dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -51,20 +51,35 @@ object RelationalQueries {
           count(lit(1)).as("n_rows"),
           countDistinct(col("l_orderkey")).as("n_orders"))
         .orderBy("l_returnflag", "l_linestatus")
-    }),
+    },
+      s"""SELECT l_returnflag, l_linestatus,
+         CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
+         CAST(sum(CAST(floor(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents,
+         ${revenueCentsSumSql} AS revenue_cents,
+         count(*) AS n_rows,
+         count(DISTINCT l_orderkey) AS n_orders
+         FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // P1 — null-token normalization over a string column.
-    "q02_null_normalize" -> ((s, dir) => {
+    Query("q02_null_normalize", (s, dir) => {
       t(s, dir, "documents")
         .select(
           col("doc_id"),
           Normalize.normEmpty(col("source")).as("norm_source"),
           Normalize.normEmpty(col("text")).isNotNull.as("valid"))
         .orderBy("doc_id")
-    }),
+    },
+      // whitespace trim + NullTokens interpolated from Normalize (the
+      // engine's source — lockstep with normEmpty's wsTrim)
+      s"""SELECT doc_id,
+         CASE WHEN source IS NULL OR lower(${wst("source")}) IN ($nullTokensSql)
+              THEN NULL ELSE ${wst("source")} END AS norm_source,
+         (CASE WHEN text IS NULL OR lower(${wst("text")}) IN ($nullTokensSql)
+              THEN NULL ELSE ${wst("text")} END) IS NOT NULL AS valid
+         FROM documents ORDER BY doc_id"""),
 
     // P2/P3/P4 — validation predicates + error branch in one pass.
-    "q03_validate_rows" -> ((s, dir) => {
+    Query("q03_validate_rows", (s, dir) => {
       t(s, dir, "customer")
         .select(
           col("c_custkey"),
@@ -75,30 +90,50 @@ object RelationalQueries {
           when(!Normalize.validBusinessName(col("c_name")), lit("invalid business name"))
             .as("err"))
         .orderBy("c_custkey")
-    }),
+    },
+      """SELECT c_custkey,
+         (c_name IS NOT NULL AND length(trim(c_name)) BETWEEN 2 AND 200
+          AND NOT regexp_matches(c_name, '[<>"'']')) AS valid_name,
+         -- null branch mirrors Normalize.validEmail's `c.isNull || ...`
+         -- (Spark emits TRUE for a NULL input; a bare regexp_matches
+         -- would emit NULL and hash-diverge on a null-name fixture)
+         (c_name IS NULL OR
+          regexp_matches(lower(regexp_replace(c_name, ' ', '.', 'g')) || '@example.com',
+           '^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$')) AS valid_email,
+         CASE WHEN NOT (c_name IS NOT NULL AND length(trim(c_name)) BETWEEN 2 AND 200
+          AND NOT regexp_matches(c_name, '[<>"'']')) THEN 'invalid business name' END AS err
+         FROM customer ORDER BY c_custkey"""),
 
     // P5 — sanitize: tag-strip + entity-escape chain.
-    "q04_sanitize" -> ((s, dir) => {
+    Query("q04_sanitize", (s, dir) => {
       t(s, dir, "part")
         .select(
           col("p_partkey"),
           Normalize.sanitize(concat(lit("<b>"), col("p_name"), lit("</b> & co")))
             .as("clean_name"))
         .orderBy("p_partkey")
-    }),
+    },
+      """SELECT p_partkey,
+         regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+           regexp_replace('<b>' || p_name || '</b> & co', '<[^>]*>', '', 'g'),
+           '&', '&amp;', 'g'), '<', '&lt;', 'g'), '>', '&gt;', 'g'),
+           '"', '&quot;', 'g'), '''', '&#x27;', 'g') AS clean_name
+         FROM part ORDER BY p_partkey"""),
 
     // P7 — header→schema projection (rename/alias).
-    "q05_project_rename" -> ((s, dir) => {
+    Query("q05_project_rename", (s, dir) => {
       t(s, dir, "customer")
         .select(
           col("c_custkey").as("customer_id"),
           upper(col("c_name")).as("name_upper"),
           col("c_mktsegment").as("segment"))
         .orderBy("customer_id")
-    }),
+    },
+      """SELECT c_custkey AS customer_id, upper(c_name) AS name_upper,
+         c_mktsegment AS segment FROM customer ORDER BY customer_id"""),
 
     // J1 + A — broadcast dim join, revenue rollup by brand.
-    "q06_rev_by_brand" -> ((s, dir) => {
+    Query("q06_rev_by_brand", (s, dir) => {
       val li = t(s, dir, "lineitem")
       val p = t(s, dir, "part")
       li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
@@ -107,12 +142,17 @@ object RelationalQueries {
           sum(revenueCents).as("revenue_cents"),
           count(lit(1)).as("n_items"))
         .orderBy("p_brand")
-    }),
+    },
+      s"""SELECT p_brand,
+         ${revenueCentsSumSql} AS revenue_cents,
+         count(*) AS n_items
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         GROUP BY p_brand ORDER BY p_brand"""),
 
     // J2/W1/F6 — fuzzy candidate join (broadcast nested loop) + top-3
     // window + three-band routing, with an oracle-replicable integer
     // Levenshtein ratio.
-    "q07_fuzzy_topk_band" -> ((s, dir) => {
+    Query("q07_fuzzy_topk_band", (s, dir) => {
       val p = t(s, dir, "part")
       val items = p.where(col("p_partkey") % 7 === 3)
         .select(col("p_partkey").as("item_id"), lower(col("p_name")).as("item_name"))
@@ -132,10 +172,29 @@ object RelationalQueries {
       items.join(ranked, "item_name")
         .select("item_id", "rn", "title", "ext_id", "score", "decision")
         .orderBy("item_id", "rn")
-    }),
+    },
+      """WITH items AS (
+           SELECT p_partkey AS item_id, lower(p_name) AS item_name
+           FROM part WHERE p_partkey % 7 = 3),
+         dict AS (
+           SELECT lower(p_name) AS title, CAST(min(p_partkey) AS BIGINT) AS ext_id
+           FROM part WHERE p_partkey < 50 GROUP BY lower(p_name)),
+         scored AS (
+           SELECT item_id, item_name, title, ext_id,
+             CAST(floor((100 * (greatest(length(item_name), length(title), 1)
+                   - levenshtein(item_name, title)))
+                 / greatest(length(item_name), length(title), 1)) AS BIGINT) AS score
+           FROM items CROSS JOIN dict),
+         ranked AS (
+           SELECT *, row_number() OVER (PARTITION BY item_id
+             ORDER BY score DESC, ext_id) AS rn FROM scored)
+         SELECT item_id, rn, title, ext_id, score,
+           CASE WHEN score >= 97 THEN 'resolved'
+                WHEN score >= 50 THEN 'review' ELSE 'rejected' END AS decision
+         FROM ranked WHERE rn <= 3 ORDER BY item_id, rn"""),
 
     // J4/J5 — semi/anti probe split (the upsert update-vs-insert fork).
-    "q08_semi_anti_split" -> ((s, dir) => {
+    Query("q08_semi_anti_split", (s, dir) => {
       val c = t(s, dir, "customer")
       val o = t(s, dir, "orders")
       val upd = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
@@ -143,10 +202,16 @@ object RelationalQueries {
       val ins = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .select(col("c_custkey"), lit("insert").as("action"))
       upd.unionByName(ins).orderBy("c_custkey")
-    }),
+    },
+      """SELECT c_custkey, 'update' AS action FROM customer c
+         WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+         UNION ALL
+         SELECT c_custkey, 'insert' AS action FROM customer c
+         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+         ORDER BY c_custkey"""),
 
     // J7 — multi-way join rollup (region ⋈ nation ⋈ customer ⋈ orders).
-    "q09_multiway_rollup" -> ((s, dir) => {
+    Query("q09_multiway_rollup", (s, dir) => {
       val r = t(s, dir, "region"); val n = t(s, dir, "nation")
       val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
       o.join(c, o("o_custkey") === c("c_custkey"))
@@ -157,10 +222,17 @@ object RelationalQueries {
           count(lit(1)).as("n_orders"),
           sum(cents(col("o_totalprice"))).as("total_cents"))
         .orderBy("r_name", "n_name")
-    }),
+    },
+      """SELECT r_name, n_name, count(*) AS n_orders,
+         CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
+         FROM orders
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         GROUP BY r_name, n_name ORDER BY r_name, n_name"""),
 
     // W1/W2 — top-3 orders per customer (rank window, full tiebreak).
-    "q10_top3_per_customer" -> ((s, dir) => {
+    Query("q10_top3_per_customer", (s, dir) => {
       val o = t(s, dir, "orders")
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -170,10 +242,18 @@ object RelationalQueries {
           col("o_custkey"), col("rn"), col("o_orderkey"),
           cents(col("o_totalprice")).as("price_cents"))
         .orderBy("o_custkey", "rn")
-    }),
+    },
+      """WITH ranked AS (
+           SELECT o_custkey, o_orderkey, o_totalprice,
+             row_number() OVER (PARTITION BY o_custkey
+               ORDER BY o_totalprice DESC, o_orderkey) AS rn
+           FROM orders)
+         SELECT o_custkey, rn, o_orderkey,
+           CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents
+         FROM ranked WHERE rn <= 3 ORDER BY o_custkey, rn"""),
 
     // W4 — latest order per customer (argmax via rank).
-    "q11_latest_per_customer" -> ((s, dir) => {
+    Query("q11_latest_per_customer", (s, dir) => {
       val o = t(s, dir, "orders")
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
@@ -183,34 +263,50 @@ object RelationalQueries {
           col("o_custkey"), col("o_orderkey").as("last_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("last_date"))
         .orderBy("o_custkey")
-    }),
+    },
+      """WITH ranked AS (
+           SELECT o_custkey, o_orderkey, o_orderdate,
+             row_number() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+           FROM orders)
+         SELECT o_custkey, o_orderkey AS last_orderkey,
+           strftime(o_orderdate, '%Y-%m-%d') AS last_date
+         FROM ranked WHERE rn = 1 ORDER BY o_custkey"""),
 
     // W6 — global top-k (TakeOrderedAndProject, no full sort at scale).
-    "q12_top10_orders" -> ((s, dir) => {
+    Query("q12_top10_orders", (s, dir) => {
       t(s, dir, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(10)
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_cents"))
-    }),
+    },
+      """SELECT o_orderkey, CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents
+         FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""),
 
     // E1/E4 — split + explode + within-row distinct.
-    "q13_explode_tokens" -> ((s, dir) => {
+    Query("q13_explode_tokens", (s, dir) => {
       t(s, dir, "part")
         .select(col("p_partkey"),
           explode(array_distinct(split(col("p_name"), " "))).as("token"))
         .orderBy("p_partkey", "token")
-    }),
+    },
+      """SELECT p_partkey, unnest(list_distinct(string_split(p_name, ' '))) AS token
+         FROM part ORDER BY p_partkey, token"""),
 
     // E2 — melt (kind unpivot) via stack.
-    "q14_melt_attrs" -> ((s, dir) => {
+    Query("q14_melt_attrs", (s, dir) => {
       t(s, dir, "part")
         .select(col("p_partkey"),
           expr("stack(2, 'brand', p_brand, 'type', p_type) as (attr, val)"))
         .orderBy("p_partkey", "attr")
-    }),
+    },
+      """SELECT p_partkey, 'brand' AS attr, p_brand AS val FROM part
+         UNION ALL
+         SELECT p_partkey, 'type' AS attr, p_type AS val FROM part
+         ORDER BY p_partkey, attr"""),
 
     // J1 — exact case-insensitive dictionary join (broadcast hash join).
-    "q15_exact_dict_match" -> ((s, dir) => {
+    Query("q15_exact_dict_match", (s, dir) => {
       val p = t(s, dir, "part")
       val items = p.where(col("p_partkey") % 3 === 0)
         .select(col("p_partkey").as("item_id"), col("p_name").as("item_name"))
@@ -221,10 +317,19 @@ object RelationalQueries {
         .select(col("item_id"), col("item_name"), col("ext_id"),
           col("ext_id").isNotNull.as("matched"))
         .orderBy("item_id")
-    }),
+    },
+      """WITH items AS (
+           SELECT p_partkey AS item_id, p_name AS item_name
+           FROM part WHERE p_partkey % 3 = 0),
+         dict AS (
+           SELECT upper(p_name) AS title, CAST(min(p_partkey) AS BIGINT) AS ext_id
+           FROM part WHERE p_partkey % 2 = 0 GROUP BY upper(p_name))
+         SELECT item_id, item_name, ext_id, ext_id IS NOT NULL AS matched
+         FROM items LEFT JOIN dict ON lower(item_name) = lower(title)
+         ORDER BY item_id"""),
 
     // A3/F9 — confidence-band histogram.
-    "q16_band_histogram" -> ((s, dir) => {
+    Query("q16_band_histogram", (s, dir) => {
       t(s, dir, "orders")
         .withColumn("band",
           when(col("o_totalprice") >= 200000, "high")
@@ -232,28 +337,38 @@ object RelationalQueries {
             .otherwise("low"))
         .groupBy("band").agg(count(lit(1)).as("n"))
         .orderBy("band")
-    }),
+    },
+      """SELECT CASE WHEN o_totalprice >= 200000 THEN 'high'
+                WHEN o_totalprice >= 100000 THEN 'medium'
+                ELSE 'low' END AS band, count(*) AS n
+         FROM orders GROUP BY 1 ORDER BY band"""),
 
     // A7/F10 — daily usage rollup over the ops/event log.
-    "q17_daily_rollup" -> ((s, dir) => {
+    Query("q17_daily_rollup", (s, dir) => {
       t(s, dir, "events")
         .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
         .orderBy("day", "event_type")
-    }),
+    },
+      """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, count(*) AS n,
+         CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+         FROM events GROUP BY 1, 2 ORDER BY day, event_type"""),
 
     // A8/F11 — trailing-24h window anchored at max(ts) (deterministic).
-    "q18_last24h_by_type" -> ((s, dir) => {
+    Query("q18_last24h_by_type", (s, dir) => {
       val e = t(s, dir, "events")
       val mx = e.agg(max(col("ts")).as("mx"))
       e.crossJoin(broadcast(mx))
         .where(col("ts") >= col("mx") - expr("INTERVAL 24 HOURS"))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
         .orderBy("event_type")
-    }),
+    },
+      """SELECT event_type, count(*) AS n FROM events
+         WHERE ts >= (SELECT max(ts) - INTERVAL 24 HOURS FROM events)
+         GROUP BY event_type ORDER BY event_type"""),
 
     // F15 — keyword error categorization over synthesized messages.
-    "q19_error_categories" -> ((s, dir) => {
+    Query("q19_error_categories", (s, dir) => {
       t(s, dir, "events")
         .withColumn("msg",
           when(col("value") < 40, "connection timeout to upstream")
@@ -264,40 +379,75 @@ object RelationalQueries {
         .groupBy(Normalize.errorCategory(col("msg")).as("category"))
         .agg(count(lit(1)).as("n"))
         .orderBy("category")
-    }),
+    },
+      """WITH m AS (
+           SELECT CASE WHEN value < 40 THEN 'connection timeout to upstream'
+                  WHEN value < 80 THEN 'permission denied for user'
+                  WHEN value < 120 THEN 'duplicate key already exists'
+                  WHEN value < 160 THEN 'rate limit exceeded'
+                  ELSE event_type || ' failed unexpectedly' END AS msg
+           FROM events)
+         SELECT CASE
+             WHEN regexp_matches(lower(msg), 'connection|timeout|network|unreachable') THEN 'network'
+             WHEN regexp_matches(lower(msg), 'auth|permission|denied|unauthorized|forbidden') THEN 'auth'
+             WHEN regexp_matches(lower(msg), 'schema|column|field|type mismatch') THEN 'schema'
+             WHEN regexp_matches(lower(msg), 'duplicate|conflict|already exists') THEN 'conflict'
+             WHEN regexp_matches(lower(msg), 'daily limit|quota exceeded|rate limit|too many requests|throttle') THEN 'quota'
+             WHEN regexp_matches(lower(msg), 'parse|decode|encoding|malformed|invalid json') THEN 'parse'
+             WHEN regexp_matches(lower(msg), 'not found|missing|no such') THEN 'missing'
+             WHEN regexp_matches(lower(msg), 'disk|memory|resource|oom') THEN 'resource'
+             WHEN regexp_matches(lower(msg), 'error|fail|exception') THEN 'generic'
+             ELSE 'unknown' END AS category,
+           count(*) AS n
+         FROM m GROUP BY 1 ORDER BY category"""),
 
     // F13 — sensitive-data masking over log values.
-    "q20_mask_sensitive" -> ((s, dir) => {
+    Query("q20_mask_sensitive", (s, dir) => {
       t(s, dir, "events")
         .select(
           col("event_id"),
           Normalize.maskSensitive(concat(lit("tok"), md5(col("props")))).as("token_masked"),
           Normalize.maskSensitive(col("event_type")).as("type_unmasked"))
         .orderBy("event_id")
-    }),
+    },
+      """SELECT event_id,
+         CASE WHEN length('tok' || md5(props)) > 20
+               AND regexp_matches('tok' || md5(props), '^[A-Za-z0-9+/=]+$')
+              THEN '***MASKED***' ELSE 'tok' || md5(props) END AS token_masked,
+         CASE WHEN length(event_type) > 20
+               AND regexp_matches(event_type, '^[A-Za-z0-9+/=]+$')
+              THEN '***MASKED***' ELSE event_type END AS type_unmasked
+         FROM events ORDER BY event_id"""),
 
     // S4-ish — JSON value extraction from the props payload.
-    "q21_json_extract" -> ((s, dir) => {
+    Query("q21_json_extract", (s, dir) => {
       t(s, dir, "events")
         .select(
           col("event_id"),
           regexp_extract(col("props"), "([0-9]+)", 1).cast("long").as("k"))
         .orderBy("event_id")
-    }),
+    },
+      """SELECT event_id,
+           CAST(nullif(regexp_extract(props, '([0-9]+)', 1), '') AS BIGINT) AS k
+         FROM events ORDER BY event_id"""),
 
     // ST2 batch-mirror — tumbling 1h window counts (streaming twin lives
     // in graft.streaming with a real watermark; semantics identical).
-    "q22_hourly_window" -> ((s, dir) => {
+    Query("q22_hourly_window", (s, dir) => {
       t(s, dir, "events")
         .groupBy(
           date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm").as("hour"),
           col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
         .orderBy("hour", "event_type")
-    }),
+    },
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour,
+         event_type, count(*) AS n,
+         CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+         FROM events GROUP BY 1, 2 ORDER BY hour, event_type"""),
 
     // Gap sessionization — lag window, 30-minute inactivity break.
-    "q23_sessionize" -> ((s, dir) => {
+    Query("q23_sessionize", (s, dir) => {
       val e = t(s, dir, "events")
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       e.withColumn("prev_ts", lag(col("ts"), 1).over(w))
@@ -307,7 +457,16 @@ object RelationalQueries {
         .groupBy("user_id")
         .agg(sum(col("new_session")).as("n_sessions"), count(lit(1)).as("n_events"))
         .orderBy("user_id")
-    }),
+    },
+      """WITH g AS (
+           SELECT user_id, event_id, ts,
+             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+           FROM events)
+         SELECT user_id,
+           CAST(sum(CASE WHEN prev_ts IS NULL
+             OR floor(epoch(ts)) - floor(epoch(prev_ts)) > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
+           count(*) AS n_events
+         FROM g GROUP BY user_id ORDER BY user_id"""),
 
     // Session-depth histogram + engagement shares: the q23 sessionizer
     // extended with the per-user cumulative session id (the cumsum
@@ -315,7 +474,7 @@ object RelationalQueries {
     // per (user, session), then a bounded histogram with exact-mills
     // shares (bounce rate = the session_len = 1 row). Output bounded
     // by the longest session.
-    "q147_session_depth" -> ((s, dir) => {
+    Query("q147_session_depth", (s, dir) => {
       val e = t(s, dir, "events")
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val sess = e.withColumn("prev_ts", lag(col("ts"), 1).over(w))
@@ -330,7 +489,29 @@ object RelationalQueries {
         .withColumn("share_mills",
           expr("(1000 * n_sessions) div sum(n_sessions) OVER ()"))
         .orderBy("session_len")
-    }),
+    },
+      // the q23 lag/gap rule + the same-window cumsum session id
+      """WITH g AS (
+           SELECT user_id, event_id, ts,
+             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+               AS prev_ts
+           FROM events),
+         s AS (
+           SELECT user_id, event_id,
+             sum(CASE WHEN prev_ts IS NULL
+               OR floor(epoch(ts)) - floor(epoch(prev_ts)) > 1800
+               THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
+                 ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess
+           FROM g),
+         l AS (SELECT user_id, sess, CAST(count(*) AS BIGINT)
+                 AS session_len
+               FROM s GROUP BY 1, 2),
+         h AS (SELECT session_len, CAST(count(*) AS BIGINT) AS n_sessions
+               FROM l GROUP BY 1)
+         SELECT session_len, n_sessions,
+           CAST((1000 * n_sessions) // sum(n_sessions) OVER ()
+             AS BIGINT) AS share_mills
+         FROM h ORDER BY session_len"""),
 
     // Inter-arrival latency report: per event type, EXACT median and
     // p90 of the per-user inter-event gaps (gap attributed to the
@@ -338,7 +519,7 @@ object RelationalQueries {
     // so no per-type sort of the gap stream: one user-keyed window,
     // one (type, gap) hash agg, then rank thresholds over the bounded
     // histogram (ceil(n/2), ceil(9n/10) in integer arithmetic).
-    "q148_interarrival" -> ((s, dir) => {
+    Query("q148_interarrival", (s, dir) => {
       val e = t(s, dir, "events")
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val gaps = e.withColumn("prev_ts", lag(col("ts"), 1).over(w))
@@ -360,7 +541,29 @@ object RelationalQueries {
           min(when(col("cum") >= expr("(n * 9 + 9) div 10"), col("gap_s")))
             .as("p90_gap_s"))
         .orderBy("event_type")
-    }),
+    },
+      // identical gap derivation and rank-threshold arithmetic
+      """WITH g AS (
+           SELECT event_type,
+             CAST(floor(epoch(ts)) - floor(epoch(lag(ts) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id)))
+               AS BIGINT) AS gap_s
+           FROM events),
+         h AS (
+           SELECT event_type, gap_s, CAST(count(*) AS BIGINT) AS cnt
+           FROM g WHERE gap_s IS NOT NULL GROUP BY 1, 2),
+         r AS (
+           SELECT *,
+             sum(cnt) OVER (PARTITION BY event_type ORDER BY gap_s
+               ROWS UNBOUNDED PRECEDING) AS cum,
+             sum(cnt) OVER (PARTITION BY event_type) AS n
+           FROM h)
+         SELECT event_type, CAST(max(n) AS BIGINT) AS n_gaps,
+           min(CASE WHEN cum >= (n + 1) // 2 THEN gap_s END)
+             AS median_gap_s,
+           min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN gap_s END)
+             AS p90_gap_s
+         FROM r GROUP BY event_type ORDER BY event_type"""),
 
     // RFM customer segmentation (the classic recency / frequency /
     // monetary report): per customer last-order day, order count and
@@ -377,7 +580,7 @@ object RelationalQueries {
     // the max-day anchor. Orders is scanned exactly twice (threshold
     // pass + scoring pass); output bounded by the ≤ 125 (r, f, m)
     // cells.
-    "q151_rfm_segments" -> ((s, dir) => {
+    Query("q151_rfm_segments", (s, dir) => {
       val lastDay =
         expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01') AS LONG)")
       val base = t(s, dir, "orders")
@@ -419,6 +622,48 @@ object RelationalQueries {
         .agg(count(lit(1)).as("n_customers"),
           sum(col("cents")).as("cents_sum"))
         .orderBy("r_score", "f_score", "m_score")
+    }, {
+      // three identical histogram-quintile chains + the same
+      // greater-than-threshold score sums
+      def thrCte(name: String, dim: String): String = {
+        val mins = (1 to 4).map(k =>
+          s"min(CASE WHEN cum >= (n * $k + 4) // 5 THEN v END) AS t$k")
+          .mkString(", ")
+        s"""$name AS (
+             SELECT $mins
+             FROM (SELECT v,
+                 sum(cnt) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
+                   AS cum,
+                 sum(cnt) OVER () AS n
+               FROM (SELECT $dim AS v, CAST(count(*) AS BIGINT) AS cnt
+                     FROM base GROUP BY 1)))"""
+      }
+      def asc(dim: String, t: String): String =
+        "1 + " + (1 to 4).map(k =>
+          s"(CASE WHEN $dim > $t.t$k THEN 1 ELSE 0 END)").mkString(" + ")
+      s"""WITH base AS (
+           SELECT o_custkey,
+             (SELECT max(CAST(datediff('day', DATE '1970-01-01',
+                  CAST(o_orderdate AS DATE)) AS BIGINT)) FROM orders)
+               - max(CAST(datediff('day', DATE '1970-01-01',
+                  CAST(o_orderdate AS DATE)) AS BIGINT)) AS recency,
+             CAST(count(*) AS BIGINT) AS freq,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS cents
+           FROM orders GROUP BY o_custkey),
+         ${thrCte("tr", "recency")},
+         ${thrCte("tf", "freq")},
+         ${thrCte("tm", "cents")},
+         scored AS (
+           SELECT o_custkey, cents,
+             CAST(6 - (${asc("recency", "tr")}) AS BIGINT) AS r_score,
+             CAST(${asc("freq", "tf")} AS BIGINT) AS f_score,
+             CAST(${asc("cents", "tm")} AS BIGINT) AS m_score
+           FROM base CROSS JOIN tr CROSS JOIN tf CROSS JOIN tm)
+         SELECT r_score, f_score, m_score,
+           CAST(count(*) AS BIGINT) AS n_customers,
+           CAST(sum(cents) AS BIGINT) AS cents_sum
+         FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""
     }),
 
     // Revenue-inequality report: the EXACT Gini coefficient of
@@ -434,7 +679,7 @@ object RelationalQueries {
     // nation-partitioned histogram (value cardinality, never
     // customer rows) in DECIMAL(38,0). Customers with no orders are
     // out of frame (LTV undefined). Output: one row per nation.
-    "q157_nation_gini" -> ((s, dir) => {
+    Query("q157_nation_gini", (s, dir) => {
       val ltv = t(s, dir, "orders").groupBy(col("o_custkey"))
         .agg(sum(cents(col("o_totalprice"))).as("v"))
       val cust = t(s, dir, "customer")
@@ -460,7 +705,39 @@ object RelationalQueries {
                   div (CAST(n_customers AS DECIMAL(38,0)) * total_cents)
                   AS LONG)""").as("gini_mills"))
         .orderBy("nation")
-    }),
+    },
+      // the same sorted-rank histogram identity; HUGEINT twins the
+      // DECIMAL(38,0) products
+      """WITH ltv AS (
+           SELECT o_custkey,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS v
+           FROM orders GROUP BY 1),
+         bn AS (
+           SELECT n.n_name AS nation, ltv.v
+           FROM ltv
+           JOIN customer c ON ltv.o_custkey = c.c_custkey
+           JOIN nation n ON c.c_nationkey = n.n_nationkey),
+         h AS (
+           SELECT nation, v, CAST(count(*) AS BIGINT) AS c
+           FROM bn GROUP BY 1, 2),
+         x AS (
+           SELECT nation, v, c,
+             sum(c) OVER (PARTITION BY nation ORDER BY v
+               ROWS UNBOUNDED PRECEDING) - c AS cb
+           FROM h),
+         a AS (
+           SELECT nation,
+             CAST(sum(c) AS BIGINT) AS n_customers,
+             CAST(sum(v * c) AS BIGINT) AS total_cents,
+             sum(CAST(v AS HUGEINT) * c * (2 * cb + c + 1)) AS num
+           FROM x GROUP BY 1 HAVING sum(v * c) > 0)
+         SELECT nation, n_customers, total_cents,
+           CAST((1000 * (num
+                 - CAST(n_customers + 1 AS HUGEINT) * total_cents))
+             // (CAST(n_customers AS HUGEINT) * total_cents) AS BIGINT)
+             AS gini_mills
+         FROM a ORDER BY 1"""),
 
     // EXACT Pareto skyline (best-customer frontier): the set of
     // customers no one else dominates on (lifetime value, last-order
@@ -480,7 +757,7 @@ object RelationalQueries {
     // window exchange. Any globally-dominated candidate is dominated
     // by a transitive chain ending at a candidate, so phase 2 is
     // exact, never approximate.
-    "q159_customer_skyline" -> ((s, dir) => {
+    Query("q159_customer_skyline", (s, dir) => {
       val a = t(s, dir, "orders").groupBy(col("o_custkey"))
         .agg(sum(cents(col("o_totalprice"))).as("ltv_cents"),
           max(col("o_orderdate").cast("date")).as("d"))
@@ -501,7 +778,24 @@ object RelationalQueries {
         .select(col("o_custkey"), col("ltv_cents"),
           date_format(col("d"), "yyyy-MM-dd").as("last_day"))
         .orderBy("o_custkey")
-    }),
+    },
+      // the oracle checks dominance the O(n²) way — deliberately a
+      // DIFFERENT algorithm from the engine's divide-and-merge
+      // windows, so a staircase-logic bug cannot self-confirm
+      """WITH a AS (
+           SELECT o_custkey,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS ltv_cents,
+             max(CAST(o_orderdate AS DATE)) AS d
+           FROM orders GROUP BY 1)
+         SELECT q.o_custkey, q.ltv_cents,
+           strftime(q.d, '%Y-%m-%d') AS last_day
+         FROM a q
+         WHERE NOT EXISTS (
+           SELECT 1 FROM a p
+           WHERE p.ltv_cents >= q.ltv_cents AND p.d >= q.d
+             AND (p.ltv_cents > q.ltv_cents OR p.d > q.d))
+         ORDER BY 1"""),
 
     // Incremental view maintenance: refresh a per-customer order view
     // by MERGING the stored base-snapshot aggregate with a delta-batch
@@ -517,7 +811,7 @@ object RelationalQueries {
     // partial-state merge is lossless, including customers present in
     // only one side and the derived avg recomputed post-merge (avg is
     // NOT additive — deriving it from merged sums is the contract).
-    "q160_ivm_refresh" -> ((s, dir) => {
+    Query("q160_ivm_refresh", (s, dir) => {
       val o = t(s, dir, "orders")
       def part(df: DataFrame) = df.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n"),
@@ -539,7 +833,21 @@ object RelationalQueries {
             coalesce(col("d.d"), col("b.d"))), "yyyy-MM-dd").as("last_day"))
         .withColumn("avg_cents", expr("total_cents div n_orders"))
         .orderBy("o_custkey")
-    }),
+    },
+      // the oracle recomputes the view DIRECTLY over all facts — no
+      // split, no merge — so parity proves the engine's partial-state
+      // refresh algebra lossless
+      """SELECT o_custkey,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+             AS BIGINT) AS total_cents,
+           CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_open,
+           strftime(max(CAST(o_orderdate AS DATE)), '%Y-%m-%d')
+             AS last_day,
+           CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+             AS BIGINT) // CAST(count(*) AS BIGINT) AS avg_cents
+         FROM orders GROUP BY 1 ORDER BY 1"""),
 
     // Benford first-digit audit (the classic fabricated-numbers
     // screen): per order priority, the EXACT first-significant-digit
@@ -554,7 +862,7 @@ object RelationalQueries {
     // DECIMAL(38,0)/HUGEINT ((1000·O−n·p)² ≤ 1e6·n² overflows int64
     // at real volumes). First digit is string-head of the cents
     // BIGINT — cents > 0 for all orders, so no zero-digit branch.
-    "q161_benford_digits" -> ((s, dir) => {
+    Query("q161_benford_digits", (s, dir) => {
       val digits = 1 to 9
       val perP = t(s, dir, "orders")
         .select(col("o_orderpriority"),
@@ -579,6 +887,37 @@ object RelationalQueries {
           expr(s"stack(9, $stacked)").as(Seq("digit", "n_digit", "exp_mills"))): _*)
         .withColumn("share_mills", expr("(1000 * n_digit) div n_orders"))
         .orderBy("o_orderpriority", "digit")
+    }, {
+      // same conditional-sum pivot + the same mills constants
+      // (interpolated from BenfordMills, never hand-copied); HUGEINT
+      // twins the DECIMAL(38,0) squares
+      val os = (1 to 9).map(d =>
+        s"CAST(sum(CASE WHEN fd = $d THEN 1 ELSE 0 END) AS BIGINT) AS o$d")
+        .mkString(", ")
+      val terms = (1 to 9).map { d =>
+        val p = BenfordMills(d - 1)
+        s"""(CAST(1000 * o$d - n * $p AS HUGEINT)
+             * CAST(1000 * o$d - n * $p AS HUGEINT)) // $p"""
+      }.mkString(" + ")
+      val arms = (1 to 9).map { d =>
+        s"""SELECT o_orderpriority, n AS n_orders, stat_mills,
+              CAST($d AS BIGINT) AS digit, o$d AS n_digit,
+              CAST(${BenfordMills(d - 1)} AS BIGINT) AS exp_mills,
+              (1000 * o$d) // n AS share_mills FROM x"""
+      }.mkString(" UNION ALL ")
+      s"""WITH f AS (
+            SELECT o_orderpriority,
+              CAST(substr(CAST(CAST(floor(o_totalprice * 100) AS BIGINT)
+                AS VARCHAR), 1, 1) AS BIGINT) AS fd
+            FROM orders),
+          p AS (
+            SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n, $os
+            FROM f GROUP BY 1),
+          x AS (
+            SELECT *, CAST(($terms) // (1000 * CAST(n AS HUGEINT))
+              AS BIGINT) AS stat_mills
+            FROM p)
+          $arms ORDER BY o_orderpriority, digit"""
     }),
 
     // CDC apply (the Delta/Hudi merge): a sequence-ordered change
@@ -593,7 +932,7 @@ object RelationalQueries {
     // untouched ones keep snapshot values with the −1 seq sentinel.
     // The fixture's FK totality means no 'inserted' rows here — that
     // branch is pinned by DedupMergeSpec on a toy batch.
-    "q163_cdc_apply" -> ((s, dir) => {
+    Query("q163_cdc_apply", (s, dir) => {
       val snap = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey").cast("long"),
           cents(col("c_acctbal")).as("current_cents"))
@@ -605,7 +944,31 @@ object RelationalQueries {
         cents(col("o_totalprice")).as("current_cents"))
       graft.operators.Merge.applyCdc(snap, ops, "c_custkey", "seq", "op")
         .orderBy("c_custkey")
-    }),
+    },
+      // the same derived change stream, applied the declarative way
+      // (rank + left join + CASE) — parity proves the operator's
+      // full-outer merge, tombstone filter and payload override
+      """WITH cdc AS (
+           SELECT o_custkey AS k, o_orderkey AS seq,
+             CASE WHEN o_orderkey % 13 = 0 THEN 'D' ELSE 'U' END AS op,
+             CAST(floor(o_totalprice * 100) AS BIGINT) AS v
+           FROM orders),
+         latest AS (
+           SELECT k, seq, op, v FROM (
+             SELECT *, row_number() OVER (PARTITION BY k
+                 ORDER BY seq DESC, op DESC, v DESC)
+               AS rn FROM cdc) WHERE rn = 1)
+         SELECT c.c_custkey,
+           CAST(c.c_nationkey AS BIGINT) AS c_nationkey,
+           CASE WHEN l.op = 'U' THEN l.v
+                ELSE CAST(floor(c.c_acctbal * 100) AS BIGINT)
+           END AS current_cents,
+           CASE WHEN l.op IS NULL THEN 'snapshot' ELSE 'updated' END
+             AS cdc_src,
+           coalesce(l.seq, -1) AS last_seq
+         FROM customer c LEFT JOIN latest l ON c.c_custkey = l.k
+         WHERE l.op IS NULL OR l.op <> 'D'
+         ORDER BY 1"""),
 
     // Bounded-memory quantile estimation with a DETERMINISTIC error
     // gate — the sketch the exact-percentile kernel (q57/q81) trades
@@ -621,7 +984,7 @@ object RelationalQueries {
     // exact + the min/max frame) and the binning scan against the
     // broadcast per-type stats. All arithmetic in int64 (spans ×128
     // stay far under 2^63 at real cents magnitudes).
-    "q164_hist_quantiles" -> ((s, dir) => {
+    Query("q164_hist_quantiles", (s, dir) => {
       val B = 128
       val pcts = Seq(50, 90, 99)
       // value IS NOT NULL on BOTH sides: a NULL histogram row sorts
@@ -666,6 +1029,62 @@ object RelationalQueries {
           col("err") >= 0 && col("err") <= col("bin_w"))
         .drop("bin")
         .orderBy("event_type", "pct")
+    }, {
+      // full recompute of both paths — exact from the value histogram,
+      // estimate from the 128-bin equi-width histogram — with the same
+      // integer lower-edge and ceil-width arithmetic; the error gate
+      // is recomputed, never pinned
+      val pcts = Seq(50, 90, 99)
+      val exs = pcts.map(p =>
+        s"min(CASE WHEN cum >= ($p * n + 99) // 100 THEN v END) AS ex$p")
+        .mkString(", ")
+      val bins = pcts.map(p =>
+        s"min(CASE WHEN cum >= ($p * n + 99) // 100 THEN bin END) AS bin$p")
+        .mkString(", ")
+      val arms = pcts.map(p =>
+        s"""SELECT event_type, n, mn, mx, CAST($p AS BIGINT) AS pct,
+              ex$p AS exact_cents, bin$p AS bin FROM j""").mkString(" UNION ALL ")
+      s"""WITH ev AS (
+            SELECT event_type, CAST(floor(value * 100) AS BIGINT) AS v
+            FROM events WHERE value IS NOT NULL),
+          vh AS (
+            SELECT event_type, v, CAST(count(*) AS BIGINT) AS c
+            FROM ev GROUP BY 1, 2),
+          st AS (
+            SELECT event_type, CAST(sum(c) AS BIGINT) AS n,
+              min(v) AS mn, max(v) AS mx
+            FROM vh GROUP BY 1),
+          vc AS (
+            SELECT event_type, v, sum(c) OVER (PARTITION BY event_type
+              ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
+            FROM vh),
+          ex AS (
+            SELECT vc.event_type, $exs
+            FROM vc JOIN st USING (event_type) GROUP BY 1),
+          bh AS (
+            SELECT ev.event_type,
+              ((v - mn) * 128) // (mx - mn + 1) AS bin,
+              CAST(count(*) AS BIGINT) AS c
+            FROM ev JOIN st USING (event_type) GROUP BY 1, 2),
+          bc AS (
+            SELECT event_type, bin, sum(c) OVER (PARTITION BY event_type
+              ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum
+            FROM bh),
+          es AS (
+            SELECT bc.event_type, $bins
+            FROM bc JOIN st USING (event_type) GROUP BY 1),
+          j AS (
+            SELECT st.event_type, n, mn, mx, ex.*, es.*
+            FROM st JOIN ex USING (event_type) JOIN es USING (event_type)),
+          stacked AS ($arms)
+          SELECT event_type, n, mn, mx, pct, exact_cents,
+            mn + (bin * (mx - mn + 1) + 127) // 128 AS est_cents,
+            (mx - mn + 128) // 128 AS bin_w,
+            exact_cents - (mn + (bin * (mx - mn + 1) + 127) // 128) AS err,
+            exact_cents - (mn + (bin * (mx - mn + 1) + 127) // 128) >= 0
+              AND exact_cents - (mn + (bin * (mx - mn + 1) + 127) // 128)
+                  <= (mx - mn + 128) // 128 AS within_bin
+          FROM stacked ORDER BY event_type, pct"""
     }),
 
     // Day-of-week seasonality profile + EXACT chi-square uniformity
@@ -681,7 +1100,7 @@ object RelationalQueries {
     // profile carries per-bin floor-mills shares. Spark dayofweek is
     // 1-7 (Sun=1), DuckDB's 0-6 (Sun=0) — the −1 shift is the parity
     // contract.
-    "q155_dow_seasonality" -> ((s, dir) => {
+    Query("q155_dow_seasonality", (s, dir) => {
       val dows = 0 to 6
       val perType = t(s, dir, "events")
         .select(col("event_type"),
@@ -702,6 +1121,34 @@ object RelationalQueries {
           expr(s"stack(7, $stacked)").as(Seq("dow", "n_dow"))): _*)
         .withColumn("share_mills", expr("(1000 * n_dow) div n_events"))
         .orderBy("event_type", "dow")
+    }, {
+      // same conditional-sum pivot (zero-count bins first-class) +
+      // the same Σ(7O−n)²/(7n) integer identity; the 7-way UNION ALL
+      // unpivot is the stack() twin
+      val os = (0 to 6).map(d =>
+        s"CAST(sum(CASE WHEN dw = $d THEN 1 ELSE 0 END) AS BIGINT) AS o$d")
+        .mkString(", ")
+      val sq = (0 to 6).map(d =>
+        s"CAST(7 * o$d - n AS HUGEINT) * CAST(7 * o$d - n AS HUGEINT)")
+        .mkString(" + ")
+      val arms = (0 to 6).map(d =>
+        s"""SELECT event_type, n AS n_events, chi2_mills,
+              CAST($d AS BIGINT) AS dow, o$d AS n_dow FROM c""")
+        .mkString(" UNION ALL ")
+      s"""WITH p AS (
+           SELECT event_type, CAST(count(*) AS BIGINT) AS n, $os
+           FROM (SELECT event_type, dayofweek(CAST(ts AS DATE)) AS dw
+                 FROM events)
+           GROUP BY 1),
+         c AS (
+           SELECT event_type, n,
+             CAST((1000 * ($sq)) // (7 * CAST(n AS HUGEINT)) AS BIGINT)
+               AS chi2_mills,
+             o0, o1, o2, o3, o4, o5, o6
+           FROM p)
+         SELECT event_type, n_events, chi2_mills, dow,
+           n_dow, (1000 * n_dow) // n_events AS share_mills
+         FROM ($arms) ORDER BY event_type, dow"""
     }),
 
     // Daily trend regression (is this metric growing?): per event
@@ -718,7 +1165,7 @@ object RelationalQueries {
     // slopes agree exactly. Types seen on a single day are excluded
     // (den = 0, no trend is defined); constant-count types report a
     // perfect flat fit (r² = 1000 by convention, both sides).
-    "q154_daily_trend" -> ((s, dir) => {
+    Query("q154_daily_trend", (s, dir) => {
       val grid = t(s, dir, "events")
         .groupBy(col("event_type"),
           expr("CAST(datediff(CAST(ts AS DATE), DATE'1970-01-01') AS LONG)")
@@ -758,7 +1205,47 @@ object RelationalQueries {
                     - CAST(n_events AS DECIMAL(38,0)) * n_events))
                 AS LONG) END""").as("r2_mills"))
         .orderBy("event_type")
-    }),
+    },
+      // same rebase + 5-sum OLS algebra; HUGEINT twins DECIMAL(38,0),
+      // both divisions truncate toward zero so signed slopes agree
+      """WITH g AS (
+           SELECT event_type,
+             CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
+               AS BIGINT) AS day,
+             CAST(count(*) AS BIGINT) AS y
+           FROM events GROUP BY 1, 2),
+         x AS (
+           SELECT event_type,
+             day - min(day) OVER (PARTITION BY event_type) AS x, y
+           FROM g),
+         a AS (
+           SELECT event_type,
+             CAST(count(*) AS BIGINT) AS n_days,
+             CAST(sum(y) AS BIGINT) AS n_events,
+             CAST(sum(x) AS BIGINT) AS sx,
+             CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
+             CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
+             CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
+           FROM x GROUP BY 1 HAVING count(*) >= 2)
+         SELECT event_type, n_days, n_events,
+           CAST(((CAST(n_days AS HUGEINT) * sxy
+                 - CAST(sx AS HUGEINT) * n_events) * 1000)
+             // (CAST(n_days AS HUGEINT) * sxx
+                 - CAST(sx AS HUGEINT) * sx) AS BIGINT)
+             AS slope_mills_per_day,
+           CASE WHEN CAST(n_days AS HUGEINT) * syy
+                 - CAST(n_events AS HUGEINT) * n_events = 0
+             THEN 1000
+             ELSE CAST(((CAST(n_days AS HUGEINT) * sxy
+                   - CAST(sx AS HUGEINT) * n_events)
+                 * (CAST(n_days AS HUGEINT) * sxy
+                   - CAST(sx AS HUGEINT) * n_events) * 1000)
+               // ((CAST(n_days AS HUGEINT) * sxx
+                   - CAST(sx AS HUGEINT) * sx)
+                 * (CAST(n_days AS HUGEINT) * syy
+                   - CAST(n_events AS HUGEINT) * n_events)) AS BIGINT)
+             END AS r2_mills
+         FROM a ORDER BY 1"""),
 
     // Robust outlier report (median / MAD, the outlier method that
     // survives the skewed long-tails z-scores choke on): per event
@@ -775,7 +1262,7 @@ object RelationalQueries {
     // exactly TWO scans. Medians broadcast back on the bounded type
     // key. Null values excluded on both sides (engine null-sort
     // order differs).
-    "q153_mad_outliers" -> ((s, dir) => {
+    Query("q153_mad_outliers", (s, dir) => {
       val v = t(s, dir, "events")
         .where(col("value").isNotNull)
         .select(col("event_type"), cents(col("value")).as("v"))
@@ -815,7 +1302,49 @@ object RelationalQueries {
         .withColumn("outlier_mills",
           expr("(1000 * n_outliers) div n_events"))
         .orderBy("event_type")
-    }),
+    },
+      // same two histogram-selection chains + the same 3×MAD fence
+      """WITH v AS (
+           SELECT event_type, CAST(floor(value * 100) AS BIGINT) AS v
+           FROM events WHERE value IS NOT NULL),
+         h AS (
+           SELECT event_type, v, CAST(count(*) AS BIGINT) AS cnt
+           FROM v GROUP BY 1, 2),
+         m AS (
+           SELECT event_type,
+             min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS median_cents
+           FROM (SELECT event_type, v, cnt,
+               sum(cnt) OVER (PARTITION BY event_type ORDER BY v
+                 ROWS UNBOUNDED PRECEDING) AS cum,
+               sum(cnt) OVER (PARTITION BY event_type) AS n
+             FROM h)
+           GROUP BY 1),
+         hd AS (
+           SELECT v.event_type, abs(v.v - m.median_cents) AS d,
+             CAST(count(*) AS BIGINT) AS cnt
+           FROM v JOIN m USING (event_type) GROUP BY 1, 2),
+         md AS (
+           SELECT event_type,
+             min(CASE WHEN cum >= (n + 1) // 2 THEN d END) AS mad_cents,
+             max(n) AS n_events
+           FROM (SELECT event_type, d, cnt,
+               sum(cnt) OVER (PARTITION BY event_type ORDER BY d
+                 ROWS UNBOUNDED PRECEDING) AS cum,
+               sum(cnt) OVER (PARTITION BY event_type) AS n
+             FROM hd)
+           GROUP BY 1)
+         SELECT hd.event_type,
+           CAST(max(md.n_events) AS BIGINT) AS n_events,
+           CAST(max(m.median_cents) AS BIGINT) AS median_cents,
+           CAST(max(md.mad_cents) AS BIGINT) AS mad_cents,
+           CAST(coalesce(sum(CASE WHEN hd.d > 3 * md.mad_cents
+             THEN hd.cnt END), 0) AS BIGINT) AS n_outliers,
+           CAST((1000 * coalesce(sum(CASE WHEN hd.d > 3 * md.mad_cents
+             THEN hd.cnt END), 0)) // max(md.n_events) AS BIGINT)
+             AS outlier_mills
+         FROM hd
+         JOIN md USING (event_type) JOIN m USING (event_type)
+         GROUP BY 1 ORDER BY 1"""),
 
     // ABC / Pareto analysis (the 80/95 revenue-concentration report):
     // per-part discounted revenue, parts banded A/B/C by where the
@@ -828,7 +1357,7 @@ object RelationalQueries {
     // scanned once. Threshold compares and the share division run in
     // DECIMAL(38,0) (HUGEINT in the oracle): 1000×cum overflows int64
     // at real-warehouse revenue sums.
-    "q152_abc_pareto" -> ((s, dir) => {
+    Query("q152_abc_pareto", (s, dir) => {
       val pr = t(s, dir, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(sum(revenueCents).as("rev"))
@@ -856,19 +1385,53 @@ object RelationalQueries {
                    div CAST(max(total) AS DECIMAL(38,0)) AS LONG)""")
             .as("share_mills"))
         .orderBy("abc_class")
-    }),
+    },
+      // same value-level banding over the revenue histogram; HUGEINT
+      // is the twin of Spark's DECIMAL(38,0) exact threshold/share math
+      s"""WITH pr AS (
+           SELECT l_partkey, $revenueCentsSumSql AS rev
+           FROM lineitem GROUP BY 1),
+         h AS (
+           SELECT rev, CAST(count(*) AS BIGINT) AS n_parts,
+             CAST(rev * count(*) AS BIGINT) AS mass
+           FROM pr GROUP BY 1),
+         c AS (
+           SELECT n_parts, mass,
+             sum(mass) OVER (ORDER BY rev DESC ROWS UNBOUNDED PRECEDING)
+               AS cum,
+             sum(mass) OVER () AS total
+           FROM h),
+         cls AS (
+           SELECT CASE
+               WHEN CAST(cum AS HUGEINT) * 1000
+                 <= CAST(total AS HUGEINT) * 800 THEN 'A'
+               WHEN CAST(cum AS HUGEINT) * 1000
+                 <= CAST(total AS HUGEINT) * 950 THEN 'B'
+               ELSE 'C' END AS abc_class,
+             n_parts, mass, total
+           FROM c)
+         SELECT abc_class,
+           CAST(sum(n_parts) AS BIGINT) AS n_parts,
+           CAST(sum(mass) AS BIGINT) AS revenue_cents,
+           CAST((CAST(sum(mass) AS HUGEINT) * 1000)
+             // CAST(max(total) AS HUGEINT) AS BIGINT) AS share_mills
+         FROM cls GROUP BY 1 ORDER BY 1"""),
 
     // U1/U2 — union distinct of two selection branches.
-    "q24_union_orders" -> ((s, dir) => {
+    Query("q24_union_orders", (s, dir) => {
       val o = t(s, dir, "orders")
       o.where(col("o_totalprice") >= 250000).select("o_orderkey")
         .union(o.where(col("o_orderpriority") === "1-URGENT").select("o_orderkey"))
         .distinct()
         .orderBy("o_orderkey")
-    }),
+    },
+      """SELECT o_orderkey FROM orders WHERE o_totalprice >= 250000
+         UNION
+         SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'
+         ORDER BY o_orderkey"""),
 
     // S6/J4 — set-oriented MERGE: full-outer reconcile of two snapshots.
-    "q25_merge_snapshots" -> ((s, dir) => {
+    Query("q25_merge_snapshots", (s, dir) => {
       val o = t(s, dir, "orders")
       val old = o.where(col("o_orderkey") % 3 <= 1)
         .select(col("o_orderkey").as("key"), cents(col("o_totalprice")).as("old_cents"))
@@ -882,10 +1445,22 @@ object RelationalQueries {
         .withColumn("merged_cents", coalesce(col("new_cents"), col("old_cents")))
         .select("key", "action", "merged_cents")
         .orderBy("key")
-    }),
+    },
+      """WITH old AS (
+           SELECT o_orderkey AS key, CAST(floor(o_totalprice * 100) AS BIGINT) AS old_cents
+           FROM orders WHERE o_orderkey % 3 <= 1),
+         neu AS (
+           SELECT o_orderkey AS key, CAST(floor(o_totalprice * 100) AS BIGINT) + 100 AS new_cents
+           FROM orders WHERE o_orderkey % 3 >= 1)
+         SELECT coalesce(old.key, neu.key) AS key,
+           CASE WHEN old_cents IS NOT NULL AND new_cents IS NOT NULL THEN 'update'
+                WHEN new_cents IS NOT NULL THEN 'insert' ELSE 'delete' END AS action,
+           coalesce(new_cents, old_cents) AS merged_cents
+         FROM old FULL OUTER JOIN neu ON old.key = neu.key
+         ORDER BY key"""),
 
     // A9 — grouped distinct-set aggregation rendered as a stable string.
-    "q26_segments_by_nation" -> ((s, dir) => {
+    Query("q26_segments_by_nation", (s, dir) => {
       val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
       c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
         .groupBy("n_name")
@@ -893,28 +1468,38 @@ object RelationalQueries {
           concat_ws(",", array_sort(collect_set(col("c_mktsegment")))).as("segments"),
           count(lit(1)).as("n_customers"))
         .orderBy("n_name")
-    }),
+    },
+      """SELECT n_name,
+         array_to_string(list_sort(list_distinct(list(c_mktsegment))), ',') AS segments,
+         count(*) AS n_customers
+         FROM customer JOIN nation ON c_nationkey = n_nationkey
+         GROUP BY n_name ORDER BY n_name"""),
 
     // A5 — distinct sorted value list.
-    "q27_distinct_segments" -> ((s, dir) => {
+    Query("q27_distinct_segments", (s, dir) => {
       t(s, dir, "customer").select("c_mktsegment").distinct().orderBy("c_mktsegment")
-    }),
+    },
+      """SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment"""),
 
     // A4/A10 — global stats in one aggregate.
-    "q28_global_stats" -> ((s, dir) => {
+    Query("q28_global_stats", (s, dir) => {
       t(s, dir, "lineitem")
         .agg(
           count(lit(1)).as("n_rows"),
           sum(col("l_quantity")).cast("long").as("sum_qty"),
           countDistinct(col("l_partkey")).as("n_parts"),
           countDistinct(col("l_suppkey")).as("n_suppliers"))
-    }),
+    },
+      """SELECT count(*) AS n_rows, CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
+         count(DISTINCT l_partkey) AS n_parts,
+         count(DISTINCT l_suppkey) AS n_suppliers
+         FROM lineitem"""),
 
     // SCD2 history build: each user's event_type change log collapsed
     // into validity-interval versions (Scd2.buildHistory — one shuffle
     // on user_id; lag/collapse/lead all reuse it). valid_* as exact
     // epoch micros; nullable valid_to coalesced to the -1 sentinel.
-    "q82_scd2_history" -> ((s, dir) => {
+    Query("q82_scd2_history", (s, dir) => {
       graft.operators.Scd2.buildHistory(t(s, dir, "events"),
           keys = Seq("user_id"), attrs = Seq("event_type"),
           tsCol = "ts", tieCols = Seq("event_id"))
@@ -923,7 +1508,26 @@ object RelationalQueries {
           coalesce(unix_micros(col("valid_to")), lit(-1L)).as("to_us"),
           col("is_current"), col("n_rows"))
         .orderBy("user_id", "version_no")
-    }),
+    },
+      // DuckDB reads events.ts at MICRO precision, so epoch_us(ts) is the
+      // exact twin of Spark's `ts div 1000` (Tables) + unix_micros.
+      // change = IS DISTINCT FROM (null-safe, like Spark's <=> negation)
+      // OR first-row-of-key (lag(1) IS NULL — a first row with a null
+      // attribute must still open version 1, matching Scd2.buildHistory);
+      // valid_to is ordered by version_no so same-ts boundaries stay
+      // deterministic; grouping by event_type directly is safe because
+      // the attribute is constant within a version; is_current is the
+      // structural last version (lead(1) IS NULL), not valid_to IS NULL,
+      // matching the operator's null-ts contract.
+      s"""WITH ${scd2HistoryCtes("events")}
+         SELECT user_id, version_no, event_type,
+           epoch_us(vf) AS from_us,
+           coalesce(epoch_us(lead(vf) OVER
+             (PARTITION BY user_id ORDER BY version_no)), -1) AS to_us,
+           lead(1) OVER (PARTITION BY user_id ORDER BY version_no)
+             IS NULL AS is_current,
+           n_rows
+         FROM hist ORDER BY user_id, version_no"""),
 
     // Point-in-time SCD2 lookup — "what was the user's state when they
     // purchased": history built from the non-purchase event stream
@@ -931,7 +1535,7 @@ object RelationalQueries {
     // SCD2's half-open partition of [first_version, ∞) the backward
     // as-of on valid_from IS the containment lookup — one ordered
     // window over one exchange, no interval explode, no range join.
-    "q103_pit_lookup" -> ((s, dir) => {
+    Query("q103_pit_lookup", (s, dir) => {
       val ev = t(s, dir, "events")
       val hist = graft.operators.Scd2.buildHistory(
           ev.where(col("event_type") =!= "purchase"),
@@ -948,7 +1552,24 @@ object RelationalQueries {
           coalesce(col("m_version_no"), lit(-1L)).as("m_version_no"),
           coalesce(col("m_state_type"), lit("none")).as("m_state_type"))
         .orderBy("event_id")
-    }),
+    },
+      // the history recompute (shared scd2HistoryCtes, here over the
+      // non-purchase state stream) + DuckDB's native ASOF for the
+      // point-in-time pick — an independent derivation of the engine's
+      // buildHistory ∘ asofBackward composition
+      s"""WITH ${scd2HistoryCtes(
+             "(SELECT * FROM events WHERE event_type <> 'purchase')")},
+         p AS (
+           SELECT event_id, user_id, ts FROM events
+           WHERE event_type = 'purchase')
+         SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
+           coalesce(h.version_no, -1) AS m_version_no,
+           coalesce(h.state_type, 'none') AS m_state_type
+         FROM p ASOF LEFT JOIN
+           (SELECT user_id, vf, version_no, event_type AS state_type
+            FROM hist) h
+           ON p.user_id = h.user_id AND p.ts >= h.vf
+         ORDER BY p.event_id"""),
 
     // Grouping-set ROLLUP with subtotal provenance: one pass produces
     // the detail cells, per-flag subtotals, and the grand total, each
@@ -960,7 +1581,7 @@ object RelationalQueries {
     // coalesced to a sentinel ('ALL') so subtotal rows sort and hash
     // deterministically and real NULL keys (none here) stay separable
     // via gid.
-    "q131_rollup_totals" -> ((s, dir) => {
+    Query("q131_rollup_totals", (s, dir) => {
       t(s, dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -973,7 +1594,18 @@ object RelationalQueries {
           coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
           col("gid"), col("sum_qty"), col("revenue_cents"), col("n_rows"))
         .orderBy("gid", "rf", "ls")
-    }),
+    },
+      // same ANSI ROLLUP + GROUPING bitmask (first key = high bit in
+      // both engines), same sentinel coalesce
+      s"""SELECT coalesce(l_returnflag, 'ALL') AS rf,
+           coalesce(l_linestatus, 'ALL') AS ls,
+           CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+           CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
+           ${revenueCentsSumSql} AS revenue_cents,
+           count(*) AS n_rows
+         FROM lineitem
+         GROUP BY ROLLUP(l_returnflag, l_linestatus)
+         ORDER BY gid, rf, ls"""),
 
     // Market-segment × order-status pivot (wide matrix report): an
     // explicit pivot value list keeps the output schema static — the
@@ -985,7 +1617,7 @@ object RelationalQueries {
     // scan + one map-side combine (plan contract in
     // PlanAssertionsSpec). The oracle is the manual conditional-agg
     // twin — same cells, same values.
-    "q132_pivot_matrix" -> ((s, dir) => {
+    Query("q132_pivot_matrix", (s, dir) => {
       val oc = t(s, dir, "orders")
         .join(t(s, dir, "customer"),
           col("o_custkey") === col("c_custkey"))
@@ -1006,7 +1638,21 @@ object RelationalQueries {
           coalesce(col("O_cents"), lit(0L)).as("cents_o"),
           coalesce(col("P_cents"), lit(0L)).as("cents_p"))
         .orderBy("c_mktsegment")
-    }),
+    },
+      // manual conditional aggregation — the exact plan Spark compiles
+      // the static-value pivot to
+      """SELECT c_mktsegment,
+           CAST(count(*) FILTER (o_orderstatus = 'F') AS BIGINT) AS n_f,
+           CAST(count(*) FILTER (o_orderstatus = 'O') AS BIGINT) AS n_o,
+           CAST(count(*) FILTER (o_orderstatus = 'P') AS BIGINT) AS n_p,
+           CAST(coalesce(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+             FILTER (o_orderstatus = 'F'), 0) AS BIGINT) AS cents_f,
+           CAST(coalesce(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+             FILTER (o_orderstatus = 'O'), 0) AS BIGINT) AS cents_o,
+           CAST(coalesce(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+             FILTER (o_orderstatus = 'P'), 0) AS BIGINT) AS cents_p
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
 
     // Data-quality column profiler: per configured column, row count,
     // raw nulls, blank-ish tokens (the q02 normEmpty rule), distinct
@@ -1016,7 +1662,7 @@ object RelationalQueries {
     // the table once and hash-aggs on the tiny col_name key; the oracle
     // is a per-column UNION ALL generated from the SAME column list
     // (ProfileCols) so the twins cannot drift.
-    "q133_column_profile" -> ((s, dir) => {
+    Query("q133_column_profile", (s, dir) => {
       val cells = ProfileCols.map(c =>
         struct(lit(c).as("col_name"), col(c).cast("string").as("v")))
       t(s, dir, "documents")
@@ -1035,7 +1681,9 @@ object RelationalQueries {
         .withColumn("avg_len_mills",
           expr("(1000 * len_sum) div nullif(n_rows - n_null, 0)"))
         .orderBy("col_name")
-    }),
+    },
+      (ProfileCols.map(profileSql).mkString(" UNION ALL ") +
+        " ORDER BY col_name")),
 
     // Gaps-and-islands: per customer, runs of CONSECUTIVE order months
     // (month index − row_number over distinct months is constant within
@@ -1048,7 +1696,7 @@ object RelationalQueries {
     // the (custkey, grp) run grouping and the final per-customer rollup
     // (subset partitioning satisfies both; plan contract pins no third
     // exchange).
-    "q134_order_streaks" -> ((s, dir) => {
+    Query("q134_order_streaks", (s, dir) => {
       val mi = t(s, dir, "orders")
         .select(col("o_custkey"),
           (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
@@ -1063,7 +1711,22 @@ object RelationalQueries {
           count(lit(1)).as("n_streaks"),
           sum(col("len")).as("n_active_months"))
         .orderBy("o_custkey")
-    }),
+    },
+      """WITH mi AS (
+           SELECT DISTINCT o_custkey,
+             CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mi
+           FROM orders),
+         g AS (
+           SELECT o_custkey, mi,
+             mi - row_number() OVER (PARTITION BY o_custkey ORDER BY mi) AS grp
+           FROM mi),
+         runs AS (
+           SELECT o_custkey, grp, CAST(count(*) AS BIGINT) AS len
+           FROM g GROUP BY 1, 2)
+         SELECT o_custkey, max(len) AS max_streak,
+           CAST(count(*) AS BIGINT) AS n_streaks,
+           CAST(sum(len) AS BIGINT) AS n_active_months
+         FROM runs GROUP BY o_custkey ORDER BY o_custkey"""),
 
     // Market-basket co-purchase pairs: per-order part sets (bounded by
     // items/order) generate ordered pairs ARRAY-SIDE — the q129
@@ -1072,10 +1735,13 @@ object RelationalQueries {
     // TakeOrdered top-K with a full deterministic tie-break. The
     // oracle is the NAIVE pair self-join twin: parity proves the
     // array-side generation lossless and duplicate-free.
-    "q141_copurchase_pairs" -> ((s, dir) =>
+    Query("q141_copurchase_pairs", (s, dir) =>
       coPairCounts(s, dir)
         .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
-        .limit(CoPairTopK)),
+        .limit(CoPairTopK),
+      s"""WITH $coPairSql
+         SELECT part_a, part_b, n_orders FROM cp
+         ORDER BY n_orders DESC, part_a, part_b LIMIT $CoPairTopK"""),
 
     // Triangle count on the co-purchase graph (edges = pairs with
     // support ≥ CoPairMinSupport) via the DEGREE-ORIENTED algorithm
@@ -1087,7 +1753,7 @@ object RelationalQueries {
     // vertex-rank window rides the parts-bounded frame; the rank
     // table broadcasts back. Oracle = the NAIVE 3-way self-join —
     // parity proves the orientation logic, not just the plumbing.
-    "q142_triangle_count" -> ((s, dir) => {
+    Query("q142_triangle_count", (s, dir) => {
       // eager pin on the support-thinned edge frame (parts-bounded,
       // tiny): deg/oriented/closure reference it ~6 times, and without
       // the cut each reference re-runs the corpus-sized pair-generation
@@ -1125,7 +1791,17 @@ object RelationalQueries {
         col("wa") === col("src") && col("wb") === col("dst"), "left_semi")
       edges.agg(count(lit(1)).as("n_edges"))
         .crossJoin(broadcast(tri.agg(count(lit(1)).as("n_triangles"))))
-    }),
+    },
+      // the naive 3-way self-join counts each a<b<c triangle once —
+      // an INDEPENDENT twin of the engine's degree-oriented algorithm
+      s"""WITH $coPairSql,
+         e AS (SELECT part_a, part_b FROM cp
+               WHERE n_orders >= $CoPairMinSupport)
+         SELECT CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
+           CAST((SELECT count(*) FROM e e1
+             JOIN e e2 ON e1.part_a = e2.part_a AND e1.part_b < e2.part_b
+             JOIN e e3 ON e3.part_a = e1.part_b AND e3.part_b = e2.part_b)
+             AS BIGINT) AS n_triangles"""),
 
     // PageRank (Brin & Page 1998) on the symmetric co-purchase graph,
     // in EXACT INTEGER micro-units: p'(v) = (150·(10⁶ div N) +
@@ -1136,7 +1812,7 @@ object RelationalQueries {
     // hash agg on dst — one keyed shuffle per round on an edge frame
     // the support floor keeps parts-bounded; N and the teleport base
     // ride a 1-row broadcast.
-    "q143_pagerank" -> ((s, dir) => {
+    Query("q143_pagerank", (s, dir) => {
       val cp = coPairCounts(s, dir)
         .where(col("n_orders") >= CoPairMinSupport)
       // Round-14 OPT (the q165 shape): the fully-lazy chain re-derived
@@ -1183,6 +1859,35 @@ object RelationalQueries {
         .select(col("v").as("part"), col("p").as("pr_micros"),
           col("deg").as("degree"))
         .orderBy("part")
+    }, {
+      // identical unrolled integer rounds ( // is DuckDB's floor div,
+      // the twin of Spark's div on non-negative longs)
+      val rounds = (1 to PrIters).map { k =>
+        s"""c$k AS (
+             SELECT e.dst AS v, sum(p${k - 1}.p // d2.deg) AS c
+             FROM e JOIN p${k - 1} ON e.src = p${k - 1}.v
+               JOIN d d2 ON e.src = d2.v
+             GROUP BY 1),
+           p$k AS (
+             SELECT d.v,
+               (150 * (1000000 // nn.n) + 850 * coalesce(c$k.c, 0)) // 1000
+                 AS p
+             FROM d CROSS JOIN nn LEFT JOIN c$k ON d.v = c$k.v)"""
+      }.mkString(",\n")
+      s"""WITH $coPairSql,
+         ed AS (SELECT part_a, part_b FROM cp
+                WHERE n_orders >= $CoPairMinSupport),
+         e AS (SELECT part_a AS src, part_b AS dst FROM ed
+               UNION ALL SELECT part_b, part_a FROM ed),
+         d AS (SELECT src AS v, CAST(count(*) AS BIGINT) AS deg FROM e
+               GROUP BY 1),
+         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
+         p0 AS (SELECT v, 1000000 // nn.n AS p FROM d CROSS JOIN nn),
+         $rounds
+         SELECT p$PrIters.v AS part,
+           CAST(p$PrIters.p AS BIGINT) AS pr_micros, d.deg AS degree
+         FROM p$PrIters JOIN d ON p$PrIters.v = d.v
+         ORDER BY part"""
     }),
 
     // Multi-source BFS hop distance (the traversal member of the graph
@@ -1198,7 +1903,7 @@ object RelationalQueries {
     // budget report −1, the honest capped-BFS answer (and the
     // harness's null-int sentinel). The seed rank window rides the
     // parts-bounded degree frame.
-    "q165_bfs_hops" -> ((s, dir) => {
+    Query("q165_bfs_hops", (s, dir) => {
       val cp = coPairCounts(s, dir)
         .where(col("n_orders") >= CoPairMinSupport)
       // eager checkpoint (the q53/q153 iterative-loop contract): the
@@ -1248,6 +1953,36 @@ object RelationalQueries {
           coalesce(col("dist"), lit(-1L)).as("dist"),
           col("deg").as("degree"))
         .orderBy("part")
+    }, {
+      // identical unrolled min-label rounds; the coalesce-pair least
+      // sidesteps any engine-specific NULL handling in least()
+      val rounds = (1 to BfsMaxHops).map { k =>
+        s"""n$k AS (
+             SELECT e.dst AS v, min(d${k - 1}.dist) + 1 AS nd
+             FROM e JOIN d${k - 1} ON e.src = d${k - 1}.v GROUP BY 1),
+           d$k AS (
+             SELECT coalesce(a.v, b.v) AS v,
+               least(coalesce(a.dist, b.nd), coalesce(b.nd, a.dist))
+                 AS dist
+             FROM d${k - 1} a FULL OUTER JOIN n$k b ON a.v = b.v)"""
+      }.mkString(",\n")
+      s"""WITH $coPairSql,
+         ed AS (SELECT part_a, part_b FROM cp
+                WHERE n_orders >= $CoPairMinSupport),
+         e AS (SELECT part_a AS src, part_b AS dst FROM ed
+               UNION ALL SELECT part_b, part_a FROM ed),
+         d AS (SELECT src AS v, CAST(count(*) AS BIGINT) AS deg FROM e
+               GROUP BY 1),
+         s AS (SELECT v FROM (
+                 SELECT v, row_number() OVER (ORDER BY deg DESC, v) AS rn
+                 FROM d) WHERE rn <= $BfsSeedK),
+         d0 AS (SELECT v, CAST(0 AS BIGINT) AS dist FROM s),
+         $rounds
+         SELECT d.v AS part,
+           CAST(coalesce(d$BfsMaxHops.dist, -1) AS BIGINT) AS dist,
+           d.deg AS degree
+         FROM d LEFT JOIN d$BfsMaxHops ON d.v = d$BfsMaxHops.v
+         ORDER BY part"""
     }),
 
     // OHLC bars (the time-series rollup every metrics store ships):
@@ -1260,7 +1995,7 @@ object RelationalQueries {
     // friendly pass where the textbook row_number-window formulation
     // (the oracle, deliberately) would shuffle every event. event_id
     // breaks ts ties deterministically.
-    "q166_ohlc_bars" -> ((s, dir) => {
+    Query("q166_ohlc_bars", (s, dir) => {
       val ev = t(s, dir, "events").select(
         col("event_type"), col("ts"), col("event_id"),
         cents(col("value")).as("v"))
@@ -1275,7 +2010,29 @@ object RelationalQueries {
           count(lit(1)).as("n_events"),
           sum(col("v")).as("vol_cents"))
         .orderBy("event_type", "day")
-    }),
+    },
+      // the textbook row_number formulation — a deliberately DIFFERENT
+      // algorithm from the engine's struct-min/max fold, so an
+      // ordering bug in the associative form cannot self-confirm
+      """WITH e AS (
+           SELECT event_type, ts, event_id,
+             CAST(floor(value * 100) AS BIGINT) AS v,
+             strftime(ts, '%Y-%m-%d') AS day
+           FROM events),
+         x AS (
+           SELECT *,
+             row_number() OVER (PARTITION BY event_type, day
+               ORDER BY ts, event_id) AS rna,
+             row_number() OVER (PARTITION BY event_type, day
+               ORDER BY ts DESC, event_id DESC) AS rnd
+           FROM e)
+         SELECT event_type, day,
+           CAST(max(CASE WHEN rna = 1 THEN v END) AS BIGINT) AS open_cents,
+           max(v) AS high_cents, min(v) AS low_cents,
+           CAST(max(CASE WHEN rnd = 1 THEN v END) AS BIGINT) AS close_cents,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(sum(v) AS BIGINT) AS vol_cents
+         FROM x GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // Sorted-neighborhood dedup blocking (Hernández & Stolfo 1995 —
     // the OTHER classic blocking family, complementing the LSH/prefix/
@@ -1288,7 +2045,7 @@ object RelationalQueries {
     // join is an equi-join on rank+offset — W·N candidates, never N².
     // Offsets come from a tiny exploded literal array, so the pair
     // stream stays a single narrow plan.
-    "q171_sorted_neighborhood" -> ((s, dir) => {
+    Query("q171_sorted_neighborhood", (s, dir) => {
       val toks = (c: org.apache.spark.sql.Column) =>
         array_distinct(split(c, " "))
       val r = t(s, dir, "part")
@@ -1313,7 +2070,32 @@ object RelationalQueries {
         .where(col("j_mills") >= SnmMinJaccardMills)
         .select(col("id_a"), col("id_b"), col("j_mills"))
         .orderBy("id_a", "id_b")
-    }),
+    },
+      // same rank window + offset join; intersection via
+      // list_filter/list_contains (ta is distinct so the filter count
+      // IS |∩|), union by inclusion-exclusion — the exact twin of
+      // array_intersect/array_distinct
+      s"""WITH r AS (
+           SELECT p_partkey, p_name,
+             row_number() OVER (ORDER BY p_name, p_partkey) AS rn
+           FROM part),
+         pr AS (
+           SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
+             list_distinct(string_split(a.p_name, ' ')) AS ta,
+             list_distinct(string_split(b.p_name, ' ')) AS tb
+           FROM r a JOIN r b
+             ON b.rn BETWEEN a.rn + 1 AND a.rn + $SnmWindow),
+         j AS (
+           SELECT id_a, id_b,
+             CAST(len(list_filter(ta, x -> list_contains(tb, x)))
+               AS BIGINT) AS inter,
+             CAST(len(ta) + len(tb) AS BIGINT) AS stot
+           FROM pr)
+         SELECT id_a, id_b,
+           (1000 * inter) // (stot - inter) AS j_mills
+         FROM j WHERE (1000 * inter) // (stot - inter)
+           >= $SnmMinJaccardMills
+         ORDER BY id_a, id_b"""),
 
     // Referential-integrity audit (the ETL data-quality gate a
     // warehouse runs after every load): orphan counts for every FK
@@ -1323,7 +2105,7 @@ object RelationalQueries {
     // join — both sides corpus-sized), unioned into a bounded report.
     // The events edge exercises the orphan branch for real (user ids
     // outside the customer key range).
-    "q172_fk_audit" -> ((s, dir) => {
+    Query("q172_fk_audit", (s, dir) => {
       def edge(name: String, fact: DataFrame, fk: String,
           dim: DataFrame, pk: String, bcast: Boolean): DataFrame = {
         val d0 = dim.select(col(pk).as("__pk")).distinct()
@@ -1354,6 +2136,33 @@ object RelationalQueries {
           "s_nationkey", t(s, dir, "nation"), "n_nationkey", bcast = true)
       ).reduce(_ unionByName _)
         .orderBy("fk_edge")
+    }, {
+      def edgeSql(name: String, fact: String, fk: String,
+          dim: String, pk: String): String =
+        s"""SELECT '$name' AS fk_edge,
+              CAST(count(*) AS BIGINT) AS n_rows,
+              CAST(sum(CASE WHEN d.$pk IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_orphans,
+              sum(CASE WHEN d.$pk IS NULL THEN 1 ELSE 0 END) = 0 AS ok
+            FROM $fact f
+            LEFT JOIN (SELECT DISTINCT $pk FROM $dim) d
+              ON f.$fk = d.$pk"""
+      Seq(
+        edgeSql("customer.c_nationkey->nation", "customer", "c_nationkey",
+          "nation", "n_nationkey"),
+        edgeSql("events.user_id->customer", "events", "user_id",
+          "customer", "c_custkey"),
+        edgeSql("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
+          "orders", "o_orderkey"),
+        edgeSql("lineitem.l_partkey->part", "lineitem", "l_partkey",
+          "part", "p_partkey"),
+        edgeSql("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
+          "supplier", "s_suppkey"),
+        edgeSql("orders.o_custkey->customer", "orders", "o_custkey",
+          "customer", "c_custkey"),
+        edgeSql("supplier.s_nationkey->nation", "supplier", "s_nationkey",
+          "nation", "n_nationkey")
+      ).mkString(" UNION ALL ") + " ORDER BY fk_edge"
     }),
 
     // Column profiling (the Deequ/Great-Expectations analyzer a
@@ -1368,7 +2177,7 @@ object RelationalQueries {
     // nullable derived column exercises the null branch for real.
     // Modal tie-break: max(struct(cnt, v)) — highest count, then
     // highest value, deterministic in both engines.
-    "q173_column_profile" -> ((s, dir) => {
+    Query("q173_column_profile", (s, dir) => {
       val long = t(s, dir, "orders")
         .select(col("o_orderstatus"), col("o_orderpriority"),
           col("o_custkey").cast("string").as("o_custkey_s"),
@@ -1395,7 +2204,36 @@ object RelationalQueries {
           col("n_distinct"), col("min_v"), col("max_v"),
           col("top.v").as("top_v"), col("top.c").as("top_n"))
         .orderBy("col_name")
-    }),
+    },
+      // same unpivot + two-level aggregate; the modal tie-break is the
+      // row_number twin of max(struct(c, v))
+      """WITH long AS (
+           SELECT 'o_orderstatus' AS col_name, o_orderstatus AS v FROM orders
+           UNION ALL SELECT 'o_orderpriority', o_orderpriority FROM orders
+           UNION ALL SELECT 'o_custkey', CAST(o_custkey AS VARCHAR) FROM orders
+           UNION ALL SELECT 'o_orderdate', strftime(o_orderdate, '%Y-%m-%d') FROM orders
+           UNION ALL SELECT 'o_status_nullable', nullif(o_orderstatus, 'F') FROM orders),
+         g AS (
+           SELECT col_name, v, CAST(count(*) AS BIGINT) AS c
+           FROM long GROUP BY 1, 2),
+         top AS (
+           SELECT col_name, v, c,
+             row_number() OVER (PARTITION BY col_name
+               ORDER BY c DESC, v DESC) AS rn
+           FROM g WHERE v IS NOT NULL),
+         lvl2 AS (
+           SELECT col_name,
+             CAST(sum(c) AS BIGINT) AS n_rows,
+             CAST(sum(CASE WHEN v IS NULL THEN c ELSE 0 END) AS BIGINT)
+               AS n_null,
+             CAST(count(CASE WHEN v IS NOT NULL THEN 1 END) AS BIGINT)
+               AS n_distinct,
+             min(v) AS min_v, max(v) AS max_v
+           FROM g GROUP BY 1)
+         SELECT l.col_name, l.n_rows, l.n_null, l.n_distinct,
+           l.min_v, l.max_v, t.v AS top_v, t.c AS top_n
+         FROM lvl2 l JOIN top t ON l.col_name = t.col_name AND t.rn = 1
+         ORDER BY l.col_name"""),
 
     // Join-key skew diagnostics (the report that sizes
     // operators/SkewJoin.scala's salting): per-key frequencies, the
@@ -1405,7 +2243,7 @@ object RelationalQueries {
     // the corpus; the rank window cuts partial top-k per partition
     // (WindowGroupLimit) before the single-key exchange; the totals
     // frame is 1 row, broadcast.
-    "q174_skew_report" -> ((s, dir) => {
+    Query("q174_skew_report", (s, dir) => {
       val k = t(s, dir, "events")
         .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
       val tot = k.agg(sum(col("cnt")).as("n_total"),
@@ -1419,7 +2257,22 @@ object RelationalQueries {
           expr("(cnt * n_keys + n_total - 1) div n_total")
             .as("salt_factor"))
         .orderBy("rk")
-    }),
+    },
+      s"""WITH k AS (
+           SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
+           FROM events GROUP BY 1),
+         tot AS (
+           SELECT CAST(sum(cnt) AS BIGINT) AS n_total,
+             CAST(count(*) AS BIGINT) AS n_keys FROM k),
+         r AS (
+           SELECT user_id, cnt,
+             CAST(row_number() OVER (ORDER BY cnt DESC, user_id)
+               AS BIGINT) AS rk
+           FROM k)
+         SELECT rk, user_id, cnt,
+           (1000 * cnt) // n_total AS share_mills,
+           (cnt * n_keys + n_total - 1) // n_total AS salt_factor
+         FROM r, tot WHERE rk <= $SkewTopK ORDER BY rk"""),
 
     // Funnel conversion-rate report: the aggregate layer over the
     // gated Funnel.funnel operator (q119's kernel, REUSED not forked
@@ -1427,7 +2280,7 @@ object RelationalQueries {
     // summary the analyst actually reads). stage ≥ k counts fold the
     // one-row-per-user funnel frame to ONE row; step-to-step and
     // end-to-end conversion in exact mills.
-    "q175_funnel_steps" -> ((s, dir) => {
+    Query("q175_funnel_steps", (s, dir) => {
       val ev = graft.Tables.eventsTsMicros(t(s, dir, "events"))
         .select(col("user_id"), col("event_type"), col("ts_us"))
       graft.operators.Funnel
@@ -1441,7 +2294,32 @@ object RelationalQueries {
           expr("(1000 * n_click) div n_view").as("conv_vc_mills"),
           expr("(1000 * n_purchase) div n_click").as("conv_cp_mills"),
           expr("(1000 * n_purchase) div n_view").as("conv_vp_mills"))
-    }),
+    },
+      // the strictly-after (ts > prev) iterated-min recompute of
+      // Funnel.funnel, folded to the one-row rate report
+      """WITH e AS (
+           SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
+         v AS (
+           SELECT user_id, min(ts_us) AS vts FROM e
+           WHERE event_type = 'view' GROUP BY 1),
+         c AS (
+           SELECT e.user_id, min(e.ts_us) AS cts
+           FROM e JOIN v ON e.user_id = v.user_id
+           WHERE e.event_type = 'click' AND e.ts_us > v.vts GROUP BY 1),
+         p AS (
+           SELECT e.user_id, min(e.ts_us) AS pts
+           FROM e JOIN c ON e.user_id = c.user_id
+           WHERE e.event_type = 'purchase' AND e.ts_us > c.cts GROUP BY 1)
+         SELECT
+           (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_view,
+           (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_click,
+           (SELECT CAST(count(*) AS BIGINT) FROM p) AS n_purchase,
+           (1000 * (SELECT count(*) FROM c))
+             // (SELECT count(*) FROM v) AS conv_vc_mills,
+           (1000 * (SELECT count(*) FROM p))
+             // (SELECT count(*) FROM c) AS conv_cp_mills,
+           (1000 * (SELECT count(*) FROM p))
+             // (SELECT count(*) FROM v) AS conv_vp_mills"""),
 
     // Recency-decay weighted event report (the data-mixture /
     // monitoring weighting read beside q175's funnel and q177's
@@ -1461,7 +2339,7 @@ object RelationalQueries {
     // to BIGINT. Scale shape: one scan for the anchor + one grouped
     // scan — no window over event rows, the share window rides the
     // bounded per-type frame.
-    "q176_decay_weights" -> ((s, dir) => {
+    Query("q176_decay_weights", (s, dir) => {
       val ev = graft.Tables.eventsTsMicros(t(s, dir, "events"))
         .where(col("value").isNotNull && col("ts").isNotNull)
         .select(col("event_type"),
@@ -1487,7 +2365,33 @@ object RelationalQueries {
           expr("""CAST((1000 * CAST(decayed_cents AS DECIMAL(38,0)))
               div tot AS BIGINT)""").as("decay_share_mills"))
         .orderBy("event_type")
-    }),
+    },
+      // identical integer decay: epoch_us age, div-floored day bucket,
+      // ppm weight as a capped right shift, HUGEINT weighted lane
+      s"""WITH ev AS (
+           SELECT event_type,
+             CAST(floor(value * 100) AS BIGINT) AS cents,
+             epoch_us(ts) AS ts_us
+           FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
+         a AS (SELECT max(ts_us) AS anchor_us FROM ev),
+         wgt AS (
+           SELECT event_type, cents,
+             CAST(1000000 AS BIGINT) >> CAST(least(
+               ((anchor_us - ts_us) // 86400000000) // $DecayHalfLifeDays,
+               62) AS INTEGER) AS weight_ppm
+           FROM ev, a),
+         g AS (
+           SELECT event_type,
+             CAST(count(*) AS BIGINT) AS n_events,
+             CAST(sum(cents) AS BIGINT) AS raw_sum_cents,
+             CAST(sum(CAST(cents AS HUGEINT) * weight_ppm) // 1000000
+               AS BIGINT) AS decayed_cents
+           FROM wgt GROUP BY 1)
+         SELECT event_type, n_events, raw_sum_cents, decayed_cents,
+           CAST((1000 * CAST(decayed_cents AS HUGEINT))
+             // sum(CAST(decayed_cents AS HUGEINT)) OVER ()
+             AS BIGINT) AS decay_share_mills
+         FROM g ORDER BY event_type"""),
 
     // Distribution-drift report (the ML-ops gate between two load
     // periods): orders split at the exact midpoint day of the date
@@ -1498,7 +2402,7 @@ object RelationalQueries {
     // over the BOUNDED bin frame. Everything is exact integer math —
     // no logs, no float shares — so the gate is reproducible across
     // engines.
-    "q177_drift_report" -> ((s, dir) => {
+    Query("q177_drift_report", (s, dir) => {
       val binned = driftBinned(s, dir)
       binned
         .crossJoin(broadcast(binned.agg(
@@ -1514,7 +2418,35 @@ object RelationalQueries {
           // only coincides with div below 2^53
           expr("sum(gap_mills) OVER () div 2"))
         .orderBy("bin")
-    }),
+    },
+      s"""WITH o AS (
+           SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents,
+             datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
+               AS day FROM orders),
+         anchor AS (
+           SELECT (min(day) + max(day)) // 2 AS mid_day FROM o),
+         b AS (
+           SELECT price_cents // $DriftBinCents AS bin,
+             CASE WHEN day < (SELECT mid_day FROM anchor)
+               THEN 1 ELSE 0 END AS in_a
+           FROM o),
+         h AS (
+           SELECT bin, CAST(sum(in_a) AS BIGINT) AS n_a,
+             CAST(sum(1 - in_a) AS BIGINT) AS n_b
+           FROM b GROUP BY 1),
+         tot AS (
+           SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
+             CAST(sum(n_b) AS BIGINT) AS tot_b FROM h),
+         sh AS (
+           SELECT bin, n_a, n_b,
+             (1000 * n_a) // tot_a AS share_a_mills,
+             (1000 * n_b) // tot_b AS share_b_mills,
+             abs((1000 * n_a) // tot_a - (1000 * n_b) // tot_b)
+               AS gap_mills
+           FROM h, tot)
+         SELECT bin, n_a, n_b, share_a_mills, share_b_mills, gap_mills,
+           CAST(sum(gap_mills) OVER () // 2 AS BIGINT) AS tvd_mills
+         FROM sh ORDER BY bin"""),
 
     // Population Stability Index (the model-monitoring drift metric
     // read next to q177's TVD): PSI = Σ_bins (p_i − q_i)·log2(p_i/q_i)
@@ -1530,7 +2462,7 @@ object RelationalQueries {
     // args are bounded at NA'·NB' ≲ 2⁵³ ≈ 9·10¹⁵ — roughly 10⁸ rows
     // per period, NOT the naive 2⁶³ product bound; rescale counts
     // past that (the q188 precedent).
-    "q189_psi_drift" -> ((s, dir) => {
+    Query("q189_psi_drift", (s, dir) => {
       val binned = driftBinned(s, dir)
       val tot = binned.agg(sum(col("n_a")).as("tot_a"),
         sum(col("n_b")).as("tot_b"), count(lit(1)).as("n_bins"))
@@ -1549,6 +2481,44 @@ object RelationalQueries {
           expr("""CAST((1000 * s) div
               (CAST(tot_a + n_bins AS DECIMAL(38,0)) * (tot_b + n_bins))
             AS BIGINT)""").as("psi_micros"))
+    }, {
+      // the same bins, anchor and Laplace smoothing; HUGEINT twins
+      // DECIMAL(38,0), the Mitchell twin on the same integer args
+      def mitchell(x: String) =
+        s"""(1000 * (length(printf('%b', $x)) - 1)
+           + (1000 * (($x) - (CAST(1 AS BIGINT)
+               << CAST(length(printf('%b', $x)) - 1 AS INT))))
+             // (CAST(1 AS BIGINT)
+               << CAST(length(printf('%b', $x)) - 1 AS INT)))"""
+      s"""WITH o AS (
+           SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents,
+             datediff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE)) AS dd
+           FROM orders),
+         a AS (SELECT (min(dd) + max(dd)) // 2 AS mid_day FROM o),
+         b AS (
+           SELECT price_cents // $DriftBinCents AS bin,
+             CAST(sum(CASE WHEN dd < (SELECT mid_day FROM a)
+               THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+             CAST(sum(CASE WHEN dd < (SELECT mid_day FROM a)
+               THEN 0 ELSE 1 END) AS BIGINT) AS n_b
+           FROM o GROUP BY 1),
+         t AS (SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
+                 CAST(sum(n_b) AS BIGINT) AS tot_b,
+                 CAST(count(*) AS BIGINT) AS n_bins
+               FROM b),
+         x AS (SELECT (n_a + 1) * (tot_b + n_bins) AS x,
+                 (n_b + 1) * (tot_a + n_bins) AS y,
+                 tot_a, tot_b, n_bins
+               FROM b CROSS JOIN t),
+         s AS (SELECT tot_a, tot_b, n_bins,
+                 sum(CAST(x - y AS HUGEINT)
+                   * (${mitchell("x")} - ${mitchell("y")})) AS s
+               FROM x GROUP BY 1, 2, 3)
+         SELECT n_bins, tot_a AS n_a, tot_b AS n_b,
+           CAST((1000 * s) // (CAST(tot_a + n_bins AS HUGEINT)
+             * (tot_b + n_bins)) AS BIGINT) AS psi_micros
+         FROM s"""
     }),
 
     // Mann–Whitney U (the nonparametric two-sample location test —
@@ -1563,7 +2533,7 @@ object RelationalQueries {
     // classic identity, spec-pinned), the common-language effect
     // size and the signed rank-biserial correlation in mills
     // (sign-split division).
-    "q190_mannwhitney_u" -> ((s, dir) => {
+    Query("q190_mannwhitney_u", (s, dir) => {
       val o = t(s, dir, "orders").select(
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("v"),
         expr("datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01')").as("dd"))
@@ -1596,7 +2566,44 @@ object RelationalQueries {
               ELSE -CAST((1000 * (CAST(2 AS DECIMAL(38,0)) * n_a * n_b - 2 * u2_a))
                 div (CAST(2 AS DECIMAL(38,0)) * n_a * n_b) AS BIGINT)
             END""").as("rank_biserial_mills"))
-    }),
+    },
+      // same joint value histogram, same cumulative-below window,
+      // same doubled-U algebra; HUGEINT twins DECIMAL(38,0) and the
+      // rank-biserial keeps the sign-split truncation
+      """WITH o AS (
+           SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS v,
+             datediff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE)) AS dd
+           FROM orders),
+         a AS (SELECT (min(dd) + max(dd)) // 2 AS mid_day FROM o),
+         h AS (
+           SELECT v,
+             CAST(sum(CASE WHEN dd < (SELECT mid_day FROM a)
+               THEN 1 ELSE 0 END) AS BIGINT) AS na,
+             CAST(sum(CASE WHEN dd < (SELECT mid_day FROM a)
+               THEN 0 ELSE 1 END) AS BIGINT) AS nb
+           FROM o GROUP BY 1),
+         c AS (SELECT na, nb,
+                 coalesce(CAST(sum(nb) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                   AS BIGINT), 0) AS cum_b
+               FROM h),
+         s AS (SELECT CAST(sum(na) AS BIGINT) AS n_a,
+                 CAST(sum(nb) AS BIGINT) AS n_b,
+                 sum(CAST(2 AS HUGEINT) * na * cum_b
+                   + CAST(na AS HUGEINT) * nb) AS u2_a
+               FROM c)
+         SELECT n_a, n_b, CAST(u2_a AS BIGINT) AS u2_a,
+           CAST(CAST(2 AS HUGEINT) * n_a * n_b - u2_a AS BIGINT) AS u2_b,
+           CAST((1000 * u2_a) // (CAST(2 AS HUGEINT) * n_a * n_b)
+             AS BIGINT) AS cles_mills,
+           CASE WHEN 2 * u2_a - CAST(2 AS HUGEINT) * n_a * n_b >= 0
+             THEN CAST((1000 * (2 * u2_a - CAST(2 AS HUGEINT) * n_a * n_b))
+               // (CAST(2 AS HUGEINT) * n_a * n_b) AS BIGINT)
+             ELSE -CAST((1000 * (CAST(2 AS HUGEINT) * n_a * n_b - 2 * u2_a))
+               // (CAST(2 AS HUGEINT) * n_a * n_b) AS BIGINT)
+           END AS rank_biserial_mills
+         FROM s"""),
 
     // Equi-depth discretizer (the ML feature-prep staple): k-quantile
     // boundaries computed EXACTLY via the q57 histogram-selection
@@ -1607,7 +2614,7 @@ object RelationalQueries {
     // per-row boundary shuffle. Report = per-bin counts and value
     // ranges (≈ n/k each by construction; duplicates make the
     // imbalance visible and deterministic).
-    "q178_equidepth_bins" -> ((s, dir) => {
+    Query("q178_equidepth_bins", (s, dir) => {
       val o = t(s, dir, "orders").select(
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("v"))
       val hist = o.groupBy("v").agg(count(lit(1)).as("cnt"))
@@ -1630,7 +2637,31 @@ object RelationalQueries {
         .agg(count(lit(1)).as("n_rows"),
           min(col("v")).as("min_cents"), max(col("v")).as("max_cents"))
         .orderBy("bin")
-    }),
+    },
+      // same histogram-selection boundaries; bin assignment via a
+      // correlated boundary count — the twin of size(filter(bs, <))
+      s"""WITH o AS (
+           SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS v
+           FROM orders),
+         h AS (SELECT v, CAST(count(*) AS BIGINT) AS cnt FROM o GROUP BY 1),
+         c AS (
+           SELECT v, cnt,
+             CAST(sum(cnt) OVER (ORDER BY v) AS BIGINT) AS cum,
+             CAST(sum(cnt) OVER () AS BIGINT) AS n
+           FROM h),
+         bidx AS (SELECT unnest(range(1, $EquiDepthK)) AS i),
+         bset AS (
+           SELECT i, min(v) AS b FROM bidx, c
+           WHERE cum >= (i * n + ${EquiDepthK - 1}) // $EquiDepthK
+           GROUP BY i),
+         a AS (
+           SELECT v,
+             (SELECT CAST(count(*) AS BIGINT) FROM bset WHERE bset.b < o.v)
+               AS bin
+           FROM o)
+         SELECT bin, CAST(count(*) AS BIGINT) AS n_rows,
+           min(v) AS min_cents, max(v) AS max_cents
+         FROM a GROUP BY 1 ORDER BY 1"""),
 
     // Dimension-coverage audit (q172's complement — the OTHER
     // direction of referential quality): for each dimension, how many
@@ -1639,7 +2670,7 @@ object RelationalQueries {
     // join dim←refs (dim-sized both sides, un-hinted — AQE broadcasts
     // while it fits), a conditional-count fold per edge, unioned into
     // a bounded report.
-    "q179_dim_coverage" -> ((s, dir) => {
+    Query("q179_dim_coverage", (s, dir) => {
       def edge(name: String, dim: DataFrame, pk: String,
           fact: DataFrame, fk: String): DataFrame = {
         val refs = fact.select(col(fk).as("__ref")).distinct()
@@ -1666,6 +2697,28 @@ object RelationalQueries {
           li, "l_suppkey")
       ).reduce(_ unionByName _)
         .orderBy("dim_edge")
+    }, {
+      def edgeSql(name: String, dim: String, pk: String,
+          fact: String, fk: String): String =
+        s"""SELECT '$name' AS dim_edge,
+              CAST(count(*) AS BIGINT) AS n_members,
+              CAST(count(r.$fk) AS BIGINT) AS n_referenced,
+              (1000 * count(r.$fk)) // count(*) AS coverage_mills
+            FROM $dim d
+            LEFT JOIN (SELECT DISTINCT $fk FROM $fact) r
+              ON d.$pk = r.$fk"""
+      Seq(
+        edgeSql("customer<-orders", "customer", "c_custkey",
+          "orders", "o_custkey"),
+        edgeSql("customer<-events", "customer", "c_custkey",
+          "events", "user_id"),
+        edgeSql("nation<-customer", "nation", "n_nationkey",
+          "customer", "c_nationkey"),
+        edgeSql("part<-lineitem", "part", "p_partkey",
+          "lineitem", "l_partkey"),
+        edgeSql("supplier<-lineitem", "supplier", "s_suppkey",
+          "lineitem", "l_suppkey")
+      ).mkString(" UNION ALL ") + " ORDER BY dim_edge"
     }),
 
     // "Also bought" recommendation table (the serving layer over
@@ -1675,7 +2728,7 @@ object RelationalQueries {
     // cuts partial top-k per partition (WindowGroupLimit) before the
     // part-keyed exchange. Deterministic tie-break (support desc,
     // neighbor asc).
-    "q180_also_bought" -> ((s, dir) => {
+    Query("q180_also_bought", (s, dir) => {
       val pairs = coPairCounts(s, dir)
         .where(col("n_orders") >= CoPairMinSupport)
       val sym = pairs
@@ -1689,7 +2742,20 @@ object RelationalQueries {
         .where(col("rk") <= AlsoBoughtK)
         .select(col("p"), col("rk"), col("rec"), col("n_orders"))
         .orderBy("p", "rk")
-    }),
+    },
+      s"""WITH $coPairSql,
+         fp AS (SELECT * FROM cp WHERE n_orders >= $CoPairMinSupport),
+         sym AS (
+           SELECT part_a AS p, part_b AS rec, n_orders FROM fp
+           UNION ALL
+           SELECT part_b AS p, part_a AS rec, n_orders FROM fp),
+         r AS (
+           SELECT p, rec, n_orders,
+             row_number() OVER (PARTITION BY p
+               ORDER BY n_orders DESC, rec) AS rk
+           FROM sym)
+         SELECT p, rk, rec, n_orders FROM r
+         WHERE rk <= $AlsoBoughtK ORDER BY p, rk"""),
 
     // Winsorized statistics (robust feature prep): per event type,
     // p01/p99 boundaries via the q57 histogram-selection kernel, then
@@ -1697,7 +2763,7 @@ object RelationalQueries {
     // sum(clamp(v)·cnt) — so the corpus is scanned exactly once and
     // everything downstream rides the (type × value) histogram frame.
     // Mean and winsorized mean in exact floored cents.
-    "q181_winsorized_stats" -> ((s, dir) => {
+    Query("q181_winsorized_stats", (s, dir) => {
       // value IS NOT NULL on BOTH sides (the q153 null-sort discipline)
       val ev = t(s, dir, "events").where(col("value").isNotNull)
         .select(col("event_type"),
@@ -1724,7 +2790,39 @@ object RelationalQueries {
           expr("sum(cents * cnt) div sum(cnt)").as("mean_cents"),
           expr("sum(clipped * cnt) div sum(cnt)").as("wmean_cents"))
         .orderBy("event_type")
-    }),
+    },
+      """WITH ev AS (
+           SELECT event_type,
+             CAST(floor(value * 100) AS BIGINT) AS cents
+           FROM events WHERE value IS NOT NULL),
+         h AS (
+           SELECT event_type, cents, CAST(count(*) AS BIGINT) AS cnt
+           FROM ev GROUP BY 1, 2),
+         c AS (
+           SELECT event_type, cents, cnt,
+             CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY cents)
+               AS BIGINT) AS cum,
+             CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS n
+           FROM h),
+         lo AS (
+           SELECT event_type, min(cents) AS lo_cents FROM c
+           WHERE cum >= (1 * n + 99) // 100 GROUP BY 1),
+         hi AS (
+           SELECT event_type, min(cents) AS hi_cents FROM c
+           WHERE cum >= (99 * n + 99) // 100 GROUP BY 1)
+         SELECT h.event_type,
+           CAST(sum(h.cnt) AS BIGINT) AS n_events,
+           max(lo.lo_cents) AS lo_cents,
+           max(hi.hi_cents) AS hi_cents,
+           CAST(sum(h.cents * h.cnt) // sum(h.cnt) AS BIGINT)
+             AS mean_cents,
+           CAST(sum(greatest(least(h.cents, hi.hi_cents), lo.lo_cents)
+               * h.cnt)
+             // sum(h.cnt) AS BIGINT) AS wmean_cents
+         FROM h
+         JOIN lo ON h.event_type = lo.event_type
+         JOIN hi ON h.event_type = hi.event_type
+         GROUP BY 1 ORDER BY 1"""),
 
     // Association rules (Agrawal & Srikant 1994, the rule layer above
     // q141's pair supports, kernel REUSED not forked): every
@@ -1737,7 +2835,7 @@ object RelationalQueries {
     // vertices (edges-bounded, broadcast-safe at any scale — never
     // the full part dimension); N rides a 1-row broadcast. Top-K by
     // (lift, conf, rule) with a full deterministic tie-break.
-    "q182_assoc_rules" -> ((s, dir) => {
+    Query("q182_assoc_rules", (s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       // q142's rationale: three references (verts x2, rules) on the
@@ -1771,7 +2869,32 @@ object RelationalQueries {
         .orderBy(col("lift_mills").desc, col("conf_mills").desc,
           col("ante"), col("cons"))
         .limit(AssocTopK)
-    }),
+    },
+      // HUGEINT twins DECIMAL(38,0) for the lift product (q90's
+      // int64-overflow precedent); li is coPairSql's distinct
+      // (order, part) frame, reused for item supports and N
+      s"""WITH $coPairSql,
+         fp AS (SELECT * FROM cp WHERE n_orders >= $CoPairMinSupport),
+         isupp AS (SELECT l_partkey AS p, CAST(count(*) AS BIGINT) AS supp
+                   FROM li GROUP BY 1),
+         nn AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n
+                FROM li),
+         rules AS (
+           SELECT part_a AS ante, part_b AS cons, n_orders AS supp_pair
+           FROM fp
+           UNION ALL
+           SELECT part_b, part_a, n_orders FROM fp)
+         SELECT r.ante, r.cons, r.supp_pair,
+           a.supp AS supp_ante, c.supp AS supp_cons,
+           (1000 * r.supp_pair) // a.supp AS conf_mills,
+           CAST((CAST(1000 AS HUGEINT) * r.supp_pair * nn.n)
+             // (CAST(a.supp AS HUGEINT) * c.supp) AS BIGINT) AS lift_mills
+         FROM rules r
+         JOIN isupp a ON r.ante = a.p
+         JOIN isupp c ON r.cons = c.p
+         CROSS JOIN nn
+         ORDER BY lift_mills DESC, conf_mills DESC, ante, cons
+         LIMIT $AssocTopK"""),
 
     // Theil–Sen robust trend (Sen 1968) of weekly revenue: slope =
     // lower median over ALL pair slopes, intercept = lower median of
@@ -1783,7 +2906,7 @@ object RelationalQueries {
     // over value cardinality). Slopes are floored mills with explicit
     // truncate-toward-zero sign handling (den > 0 always): Spark div
     // and DuckDB // agree only on non-negative operands.
-    "q183_theil_sen" -> ((s, dir) => {
+    Query("q183_theil_sen", (s, dir) => {
       // calendar-bounded frame referenced three times (pairs twice +
       // residuals + count) — the q153 doubly-referenced-frame rule
       val weekly = weeklyRevenueCents(s, dir).localCheckpoint(true)
@@ -1803,7 +2926,47 @@ object RelationalQueries {
         .crossJoin(broadcast(med.select(col("n_vals").as("n_pairs"),
           col("med").as("slope_mills_wk"))))
         .crossJoin(broadcast(imed.select(col("med").as("icept_cents_mills"))))
-    }),
+    },
+      // same weekly frame, naive pair self-join, same histogram-median
+      // selection. NB on the sign-split CASE: DuckDB 1.0's `//`
+      // TRUNCATES toward zero exactly like Spark's div (verified:
+      // -7 // 2 = -3, not -4 — an earlier comment here claimed floor
+      // semantics, which is wrong); the CASE normalizes the operands
+      // non-negative so the twin stays correct under EITHER floor or
+      // truncation semantics (a DuckDB upgrade can't silently shift
+      // negative slopes by one). Same shim in q187/q190/q191/q193.
+      s"""WITH wkly AS (
+           SELECT datediff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE)) // $TsWeekDays AS wk,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS cents
+           FROM orders GROUP BY 1),
+         p AS (
+           SELECT b.cents - a.cents AS num, b.wk - a.wk AS den
+           FROM wkly a JOIN wkly b ON a.wk < b.wk),
+         sl AS (
+           SELECT CASE WHEN num >= 0 THEN (1000 * num) // den
+             ELSE -((1000 * (-num)) // den) END AS m FROM p),
+         h1 AS (SELECT m, CAST(count(*) AS BIGINT) AS cnt FROM sl
+                GROUP BY 1),
+         c1 AS (SELECT m, CAST(sum(cnt) OVER (ORDER BY m) AS BIGINT)
+                  AS cum, CAST(sum(cnt) OVER () AS BIGINT) AS n
+                FROM h1),
+         med AS (SELECT min(m) AS slope, max(n) AS n_pairs FROM c1
+                 WHERE cum >= (n + 1) // 2),
+         r AS (SELECT 1000 * w.cents - med.slope * w.wk AS ic
+               FROM wkly w CROSS JOIN med),
+         h2 AS (SELECT ic, CAST(count(*) AS BIGINT) AS cnt FROM r
+                GROUP BY 1),
+         c2 AS (SELECT ic, CAST(sum(cnt) OVER (ORDER BY ic) AS BIGINT)
+                  AS cum, CAST(sum(cnt) OVER () AS BIGINT) AS n
+                FROM h2),
+         imed AS (SELECT min(ic) AS icept FROM c2
+                  WHERE cum >= (n + 1) // 2)
+         SELECT (SELECT CAST(count(*) AS BIGINT) FROM wkly) AS n_weeks,
+           med.n_pairs, med.slope AS slope_mills_wk,
+           imed.icept AS icept_cents_mills
+         FROM med CROSS JOIN imed"""),
 
     // Lead–lag cross-correlation (the Box–Jenkins CCF companion to
     // q187's ACF): does view activity LEAD purchases? Per lag L in
@@ -1823,7 +2986,7 @@ object RelationalQueries {
     // ~2,400-day grid; rescale units — count in thousands — past
     // that, or Spark's non-ANSI decimal silently NULLs where DuckDB's
     // HUGEINT errors). Events scans once.
-    "q193_crosscorrelation" -> ((s, dir) => {
+    Query("q193_crosscorrelation", (s, dir) => {
       val grid = t(s, dir, "events")
         .where(col("event_type").isin("view", "purchase"))
         .groupBy(expr(
@@ -1864,7 +3027,46 @@ object RelationalQueries {
                   AS BIGINT)
             END""").as("r2_signed_mills"))
         .orderBy("lag")
-    }),
+    },
+      // same daily (views, purchases) grid, same ±lag range self-join,
+      // same sign-split squared-Pearson integer algebra; HUGEINT twins
+      // DECIMAL(38,0), quotient magnitude is always ≥0 so DuckDB's //
+      // and Spark's div agree exactly
+      s"""WITH g AS (
+           SELECT CAST(datediff('day', DATE '1970-01-01',
+               CAST(ts AS DATE)) AS BIGINT) AS day,
+             CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
+               AS BIGINT) AS x,
+             CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+               AS BIGINT) AS y
+           FROM events WHERE event_type IN ('view', 'purchase')
+           GROUP BY 1),
+         p AS (SELECT b.day - a.day AS lag, a.x AS x, b.y AS y
+               FROM g a JOIN g b
+                 ON b.day - a.day BETWEEN -$CcfMaxLag AND $CcfMaxLag),
+         s AS (SELECT lag, CAST(count(*) AS BIGINT) AS n,
+                 sum(CAST(x AS HUGEINT)) AS sx,
+                 sum(CAST(y AS HUGEINT)) AS sy,
+                 sum(CAST(x AS HUGEINT) * y) AS sxy,
+                 sum(CAST(x AS HUGEINT) * x) AS sxx,
+                 sum(CAST(y AS HUGEINT) * y) AS syy
+               FROM p GROUP BY 1)
+         SELECT lag, n AS n_days,
+           CASE
+             WHEN (CAST(n AS HUGEINT) * sxx - sx * sx)
+                  * (CAST(n AS HUGEINT) * syy - sy * sy) = 0
+               THEN CAST(0 AS BIGINT)
+             WHEN CAST(n AS HUGEINT) * sxy - sx * sy >= 0
+               THEN CAST(((CAST(n AS HUGEINT) * sxy - sx * sy)
+                   * (CAST(n AS HUGEINT) * sxy - sx * sy) * 1000)
+                 // ((CAST(n AS HUGEINT) * sxx - sx * sx)
+                   * (CAST(n AS HUGEINT) * syy - sy * sy)) AS BIGINT)
+             ELSE -CAST(((CAST(n AS HUGEINT) * sxy - sx * sy)
+                   * (CAST(n AS HUGEINT) * sxy - sx * sy) * 1000)
+                 // ((CAST(n AS HUGEINT) * sxx - sx * sx)
+                   * (CAST(n AS HUGEINT) * syy - sy * sy)) AS BIGINT)
+           END AS r2_signed_mills
+         FROM s ORDER BY lag"""),
 
     // Mann–Kendall trend test (Mann 1945; Kendall) — the significance
     // companion to q183's Theil–Sen slope, on the SAME calendar-bounded
@@ -1875,7 +3077,7 @@ object RelationalQueries {
     // (kept ×18 so it stays an exact integer; tie groups come from one
     // value-cardinality hash agg on the weekly frame). All products in
     // DECIMAL(38,0)/HUGEINT. Orders scans once into the checkpoint.
-    "q191_mann_kendall" -> ((s, dir) => {
+    Query("q191_mann_kendall", (s, dir) => {
       val weekly = weeklyRevenueCents(s, dir).localCheckpoint(true)
       val sStat = weekly.as("a")
         .join(broadcast(weekly.as("b")), col("a.wk") < col("b.wk"))
@@ -1895,7 +3097,34 @@ object RelationalQueries {
           expr("""CAST(CAST(n_weeks AS DECIMAL(38,0)) * (n_weeks - 1)
               * (2 * n_weeks + 5) - coalesce(tie_term, 0)
             AS BIGINT)""").as("var18"))
-    }),
+    },
+      // same weekly frame, naive pair self-join, same tie-corrected
+      // variance algebra; HUGEINT twins DECIMAL(38,0)
+      s"""WITH wkly AS (
+           SELECT datediff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE)) // $TsWeekDays AS wk,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS cents
+           FROM orders GROUP BY 1),
+         p AS (SELECT CAST(sum(CASE WHEN b.cents > a.cents THEN 1
+                   WHEN b.cents < a.cents THEN -1 ELSE 0 END)
+                   AS BIGINT) AS s_stat,
+                 CAST(count(*) AS BIGINT) AS n_pairs
+               FROM wkly a JOIN wkly b ON a.wk < b.wk),
+         ti AS (SELECT sum(CAST(tc AS HUGEINT) * (tc - 1)
+                    * (2 * tc + 5)) AS tie_term,
+                  CAST(count(*) AS BIGINT) AS n_weeks
+                FROM (SELECT cents, CAST(count(*) AS BIGINT) AS tc
+                      FROM wkly GROUP BY 1))
+         SELECT n_weeks, n_pairs, s_stat,
+           CASE WHEN s_stat >= 0
+             THEN CAST((1000 * CAST(s_stat AS HUGEINT)) // n_pairs AS BIGINT)
+             ELSE -CAST((1000 * CAST(-s_stat AS HUGEINT)) // n_pairs AS BIGINT)
+           END AS tau_a_mills,
+           CAST(CAST(n_weeks AS HUGEINT) * (n_weeks - 1)
+             * (2 * n_weeks + 5) - coalesce(tie_term, 0) AS BIGINT)
+             AS var18
+         FROM p CROSS JOIN ti"""),
 
     // Kaplan–Meier survival curve (Kaplan & Meier 1958) of customer
     // lifetime: per-customer first→last order span in 30-day buckets;
@@ -1909,7 +3138,7 @@ object RelationalQueries {
     // aggregate() — the DuckDB twin is a recursive CTE running the
     // identical recurrence, so every step is bit-equal. Orders scans
     // exactly twice (per-customer spans + the 1-row max-date anchor).
-    "q184_kaplan_meier" -> ((s, dir) => {
+    Query("q184_kaplan_meier", (s, dir) => {
       def day(c: String) =
         s"datediff(CAST($c AS DATE), DATE '1970-01-01')"
       val cust = t(s, dir, "orders").groupBy("o_custkey")
@@ -1944,7 +3173,40 @@ object RelationalQueries {
           col("r.d").as("n_died"), col("r.c").as("n_censored"),
           col("r.surv").as("surv_micros"))
         .orderBy("t_months")
-    }),
+    },
+      // identical risk sets and the IDENTICAL integer survival
+      // recurrence, run as a recursive CTE over the bucket index —
+      // each step's floor division is bit-equal to the Spark fold
+      s"""WITH RECURSIVE cust AS (
+           SELECT o_custkey,
+             datediff('day', DATE '1970-01-01',
+               CAST(min(o_orderdate) AS DATE)) AS fd,
+             datediff('day', DATE '1970-01-01',
+               CAST(max(o_orderdate) AS DATE)) AS ld
+           FROM orders GROUP BY 1),
+         mx AS (SELECT max(ld) AS md FROM cust),
+         ev AS (
+           SELECT (ld - fd) // $LifetimeBucketDays AS t,
+             CASE WHEN ld <= (SELECT md FROM mx) - $ChurnGraceDays
+               THEN 1 ELSE 0 END AS died
+           FROM cust),
+         b AS (SELECT t, CAST(sum(died) AS BIGINT) AS d,
+                 CAST(sum(1 - died) AS BIGINT) AS c
+               FROM ev GROUP BY 1),
+         bn AS (SELECT t, d, c,
+                  CAST(sum(d + c) OVER (ORDER BY t DESC) AS BIGINT) AS n,
+                  CAST(row_number() OVER (ORDER BY t) AS BIGINT) AS i
+                FROM b),
+         km AS (
+           SELECT i, t, d, c, n, (1000000 * (n - d)) // n AS surv
+           FROM bn WHERE i = 1
+           UNION ALL
+           SELECT bn.i, bn.t, bn.d, bn.c, bn.n,
+             (km.surv * (bn.n - bn.d)) // bn.n
+           FROM km, bn WHERE bn.i = km.i + 1)
+         SELECT t AS t_months, n AS n_risk, d AS n_died,
+           c AS n_censored, surv AS surv_micros
+         FROM km ORDER BY t_months"""),
 
     // EWMA forecast (Brown's simple exponential smoothing) of daily
     // revenue: s_1 = 1000·v_1, s_t = (α·1000·v_t + (1000−α)·s_{t−1})
@@ -1958,7 +3220,7 @@ object RelationalQueries {
     // twin) because milli-cents × mills overflows int64 at real daily
     // revenue. Orders scans exactly once. The DuckDB twin is a
     // recursive CTE running the identical integer recurrence.
-    "q185_ewma_forecast" -> ((s, dir) => {
+    Query("q185_ewma_forecast", (s, dir) => {
       val a = EwmaAlphaMills
       val daily = dailyRevenueCents(s, dir)
       val step = s"""CAST((CAST($a AS DECIMAL(38,0)) * x.cents * 1000
@@ -1986,7 +3248,31 @@ object RelationalQueries {
         .select(col("r.day").as("day"), col("r.cents").as("cents"),
           col("r.ewma_mc").as("ewma_mc"), col("r.err_mc").as("err_mc"))
         .orderBy("day")
-    }),
+    },
+      // the IDENTICAL integer recurrence as a recursive CTE over the
+      // day index; HUGEINT twins DECIMAL(38,0) for the α·1000·v
+      // product, all operands non-negative so // and div agree
+      s"""WITH RECURSIVE d AS (
+           SELECT CAST(datediff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS cents
+           FROM orders GROUP BY 1),
+         ix AS (SELECT day, cents,
+                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
+                FROM d),
+         r AS (
+           SELECT i, day, cents, 1000 * cents AS s,
+             CAST(-1 AS BIGINT) AS err
+           FROM ix WHERE i = 1
+           UNION ALL
+           SELECT ix.i, ix.day, ix.cents,
+             CAST((CAST($EwmaAlphaMills AS HUGEINT) * ix.cents * 1000
+               + ${1000 - EwmaAlphaMills} * r.s) // 1000 AS BIGINT),
+             abs(1000 * ix.cents - r.s)
+           FROM r JOIN ix ON ix.i = r.i + 1)
+         SELECT day, cents, s AS ewma_mc, err AS err_mc
+         FROM r ORDER BY day"""),
 
     // CUSUM changepoint detection (Page 1954) on daily revenue: the
     // cumulative sum of deviations from the series mean needs NO
@@ -1999,7 +3285,7 @@ object RelationalQueries {
     // DuckDB // agree. The calendar-bounded daily frame is referenced
     // twice (mean anchor + the cumsum) — the q153 doubly-referenced-
     // frame rule — so it checkpoints and orders scans exactly ONCE.
-    "q186_cusum_changepoint" -> ((s, dir) => {
+    Query("q186_cusum_changepoint", (s, dir) => {
       val daily = dailyRevenueCents(s, dir).localCheckpoint(true)
       val m = daily.agg(expr(
           """CAST((CAST(1000 AS DECIMAL(38,0)) * sum(cents))
@@ -2020,7 +3306,29 @@ object RelationalQueries {
           (-col("mx.nd")).as("cp_day"),
           col("mx.c").cast("long").as("cusum_mc"),
           col("mx.a").cast("long").as("max_abs_cusum_mc"))
-    }),
+    },
+      // same mean anchor, same HUGEINT cumulative window; the
+      // changepoint row comes from a fully-ordered LIMIT 1 (abs DESC,
+      // day ASC) — the twin of Spark's max(struct(abs, -day)) pick
+      s"""WITH d AS (
+           SELECT CAST(datediff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS cents
+           FROM orders GROUP BY 1),
+         m AS (SELECT CAST((CAST(1000 AS HUGEINT) * sum(cents))
+                   // count(*) AS BIGINT) AS mean_mc,
+                 CAST(count(*) AS BIGINT) AS n_days
+               FROM d),
+         c AS (SELECT day,
+                 CAST(sum(CAST(1000 AS HUGEINT) * cents - mean_mc)
+                   OVER (ORDER BY day) AS BIGINT) AS cusum
+               FROM d CROSS JOIN m),
+         cp AS (SELECT day AS cp_day, cusum AS cusum_mc,
+                  abs(cusum) AS max_abs_cusum_mc
+                FROM c ORDER BY abs(cusum) DESC, day ASC LIMIT 1)
+         SELECT n_days, mean_mc, cp_day, cusum_mc, max_abs_cusum_mc
+         FROM m CROSS JOIN cp"""),
 
     // Autocorrelation function (Box–Jenkins diagnostics) of daily
     // revenue at lags 1..[[AcfMaxLag]]: ACF(L) = Σ(x_t−m)(x_{t−L}−m)
@@ -2032,7 +3340,7 @@ object RelationalQueries {
     // pair at that lag, and the denominator is the full-series sum of
     // squares (the standard estimator). Sign-split division keeps
     // truncate-toward-zero identical across engines. Orders scans once.
-    "q187_autocorrelation" -> ((s, dir) => {
+    Query("q187_autocorrelation", (s, dir) => {
       val daily = dailyRevenueCents(s, dir).localCheckpoint(true)
       val m = daily.agg(expr(
         """CAST((CAST(1000 AS DECIMAL(38,0)) * sum(cents))
@@ -2059,7 +3367,33 @@ object RelationalQueries {
               ELSE -CAST((1000 * (-num)) div den AS BIGINT)
             END""").as("acf_mills"))
         .orderBy("lag")
-    }),
+    },
+      // same deviations, same lagged self-join, same sign-split
+      // division; HUGEINT twins DECIMAL(38,0) throughout
+      s"""WITH d AS (
+           SELECT CAST(datediff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS cents
+           FROM orders GROUP BY 1),
+         m AS (SELECT CAST((CAST(1000 AS HUGEINT) * sum(cents))
+                 // count(*) AS BIGINT) AS mean_mc FROM d),
+         dv AS (SELECT day,
+                  CAST(1000 AS HUGEINT) * cents - mean_mc AS dd
+                FROM d CROSS JOIN m),
+         dn AS (SELECT sum(dd * dd) AS den FROM dv),
+         nm AS (SELECT a.day - b.day AS lag,
+                  CAST(count(*) AS BIGINT) AS n_pairs,
+                  sum(a.dd * b.dd) AS num
+                FROM dv a JOIN dv b
+                  ON a.day - b.day BETWEEN 1 AND $AcfMaxLag
+                GROUP BY 1)
+         SELECT lag, n_pairs,
+           CASE WHEN num >= 0 THEN CAST((1000 * num) // den AS BIGINT)
+             ELSE -CAST((1000 * (-num)) // den AS BIGINT) END
+             AS acf_mills
+         FROM nm CROSS JOIN dn
+         ORDER BY lag"""),
 
     // Frequent 3-itemsets (the A-priori level above q141's pairs):
     // per-order sorted part sets generate ordered triples ARRAY-SIDE
@@ -2069,7 +3403,7 @@ object RelationalQueries {
     // tie-break. The oracle is the naive 3-way self-join twin: parity
     // proves the nested slice/transform generation emits each ordered
     // triple exactly once.
-    "q169_frequent_triples" -> ((s, dir) => {
+    Query("q169_frequent_triples", (s, dir) => {
       // round-14 OPT: codegen'd ordered-triple kernel replaces the
       // doubly-nested transform/slice HOF generation (interpreted,
       // O(k³) slice allocations per order) — identical triple multiset
@@ -2083,7 +3417,26 @@ object RelationalQueries {
         .orderBy(col("n_orders").desc, col("part_a"), col("part_b"),
           col("part_c"))
         .limit(CoPairTopK)
-    }),
+    },
+      // the naive 3-way self-join twin with a rank cut (LIMIT-after-
+      // filter has engine-defined order; the rank predicate is the
+      // deterministic form)
+      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+         t3 AS (
+           SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
+             c.l_partkey AS part_c, CAST(count(*) AS BIGINT) AS n_orders
+           FROM li a
+           JOIN li b ON a.l_orderkey = b.l_orderkey
+             AND a.l_partkey < b.l_partkey
+           JOIN li c ON b.l_orderkey = c.l_orderkey
+             AND b.l_partkey < c.l_partkey
+           GROUP BY 1, 2, 3),
+         f AS (SELECT * FROM t3 WHERE n_orders >= $TripleMinSupport),
+         r AS (SELECT *, row_number() OVER (ORDER BY n_orders DESC,
+             part_a, part_b, part_c) AS rn FROM f)
+         SELECT part_a, part_b, part_c, n_orders FROM r
+         WHERE rn <= $CoPairTopK
+         ORDER BY n_orders DESC, part_a, part_b, part_c"""),
 
     // Funnel time-to-convert distribution (the product-analytics
     // latency metric): per user, first click → first purchase AT OR
@@ -2094,7 +3447,7 @@ object RelationalQueries {
     // only after its own user agg at scale — here the frame is
     // user-bounded either way); the histogram window rides delta
     // cardinality, never user rows.
-    "q170_funnel_latency" -> ((s, dir) => {
+    Query("q170_funnel_latency", (s, dir) => {
       val ev = graft.Tables.eventsTsMicros(t(s, dir, "events"))
         .select(col("user_id"), col("event_type"), col("ts_us"))
       val c = ev.where(col("event_type") === "click")
@@ -2116,7 +3469,29 @@ object RelationalQueries {
           min(when(col("cum") >= expr("(90 * n + 99) div 100"), col("tt")))
             .as("p90_us"),
           max(col("tt")).as("max_us"))
-    }),
+    },
+      // same two-agg + histogram-selection recompute in epoch micros
+      """WITH e AS (
+           SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
+         c AS (
+           SELECT user_id, min(ts_us) AS cts FROM e
+           WHERE event_type = 'click' GROUP BY 1),
+         tt AS (
+           SELECT e.user_id, min(e.ts_us) - min(c.cts) AS tt
+           FROM e JOIN c USING (user_id)
+           WHERE e.event_type = 'purchase' AND e.ts_us >= c.cts
+           GROUP BY 1),
+         n1 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tt),
+         h AS (SELECT tt, CAST(count(*) AS BIGINT) AS c FROM tt GROUP BY 1),
+         hc AS (SELECT tt, sum(c) OVER (ORDER BY tt
+             ROWS UNBOUNDED PRECEDING) AS cum FROM h)
+         SELECT max(n) AS n_converted,
+           min(CASE WHEN cum >= (50 * n + 99) // 100 THEN tt END)
+             AS p50_us,
+           min(CASE WHEN cum >= (90 * n + 99) // 100 THEN tt END)
+             AS p90_us,
+           max(tt) AS max_us
+         FROM hc CROSS JOIN n1"""),
 
     // A/B experiment lift report: users assigned to variants by the
     // deterministic split user_id % 2, conversion = any purchase
@@ -2128,7 +3503,7 @@ object RelationalQueries {
     // not raw cells; the fixture is exact). One user-keyed distinct
     // agg absorbs the corpus, then the 2×2 table is a conditional-sum
     // fold to ONE row — the whole report is two bounded aggregates.
-    "q167_ab_lift" -> ((s, dir) => {
+    Query("q167_ab_lift", (s, dir) => {
       val perUser = t(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -2156,7 +3531,43 @@ object RelationalQueries {
                   * (conv_a + conv_b)
                   * (users_a + users_b - conv_a - conv_b), 0)
              AS LONG)"""))
-    }),
+    },
+      // same per-user distinct conversion fold, same exact 2×2
+      // algebra; HUGEINT twins DECIMAL(38,0), nullif twins the
+      // degenerate all-converted/none-converted guard
+      """WITH pu AS (
+           SELECT user_id,
+             max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+               AS conv
+           FROM events GROUP BY 1),
+         t AS (
+           SELECT
+             CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
+               AS BIGINT) AS users_a,
+             CAST(sum(CASE WHEN user_id % 2 = 0 THEN conv ELSE 0 END)
+               AS BIGINT) AS conv_a,
+             CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
+               AS BIGINT) AS users_b,
+             CAST(sum(CASE WHEN user_id % 2 = 1 THEN conv ELSE 0 END)
+               AS BIGINT) AS conv_b
+           FROM pu),
+         r AS (
+           SELECT *, (1000 * conv_a) // users_a AS rate_a_mills,
+             (1000 * conv_b) // users_b AS rate_b_mills
+           FROM t)
+         SELECT users_a, conv_a, users_b, conv_b,
+           rate_a_mills, rate_b_mills,
+           rate_b_mills - rate_a_mills AS lift_mills,
+           CAST((1000 * (users_a + users_b)
+                 * CAST(conv_a * (users_b - conv_b)
+                        - conv_b * (users_a - conv_a) AS HUGEINT)
+                 * CAST(conv_a * (users_b - conv_b)
+                        - conv_b * (users_a - conv_a) AS HUGEINT))
+               // nullif(CAST(users_a AS HUGEINT) * users_b
+                    * (conv_a + conv_b)
+                    * (users_a + users_b - conv_a - conv_b), 0)
+             AS BIGINT) AS chi2_mills
+         FROM r"""),
 
     // Time-weighted average (the metrics-store kernel a plain mean
     // gets WRONG when samples arrive unevenly): treat each user's
@@ -2170,7 +3581,7 @@ object RelationalQueries {
     // the honest piecewise-constant answer. Output: one row per
     // type, with the unweighted mean beside the TWA so the report
     // SHOWS the sampling-bias correction.
-    "q168_time_weighted_avg" -> ((s, dir) => {
+    Query("q168_time_weighted_avg", (s, dir) => {
       val ev = graft.Tables.eventsTsMicros(t(s, dir, "events"))
         .select(col("event_type"), col("user_id"), col("event_id"),
           col("ts_us"), cents(col("value")).as("v"))
@@ -2190,7 +3601,30 @@ object RelationalQueries {
         .withColumn("mean_cents", expr("__vsum div n_events"))
         .drop("__wsum", "__vsum")
         .orderBy("event_type")
-    }),
+    },
+      // same user-keyed lead window, same pooled Σv·Δt / ΣΔt algebra;
+      // HUGEINT twins DECIMAL(38,0); epoch_us(ts) is the shared exact
+      // micros domain (q80's precedent)
+      """WITH e AS (
+           SELECT event_type, user_id, event_id, epoch_us(ts) AS ts_us,
+             CAST(floor(value * 100) AS BIGINT) AS v
+           FROM events),
+         x AS (
+           SELECT *, lead(ts_us) OVER (PARTITION BY user_id, event_type
+             ORDER BY ts_us, event_id) - ts_us AS dt
+           FROM e),
+         a AS (
+           SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+             sum(CASE WHEN dt IS NOT NULL
+                 THEN CAST(v AS HUGEINT) * dt END) AS ws,
+             CAST(coalesce(sum(dt), 0) AS BIGINT) AS span_us,
+             CAST(sum(v) AS BIGINT) AS vs
+           FROM x GROUP BY 1)
+         SELECT event_type, n_events, span_us,
+           CAST(coalesce(ws // nullif(CAST(span_us AS HUGEINT), 0), -1)
+             AS BIGINT) AS twa_cents,
+           vs // n_events AS mean_cents
+         FROM a ORDER BY 1"""),
 
     // Z-order clustering key (Morton interleave, graft.functions.ZOrder):
     // quantize (l_orderkey, l_partkey) to 2^bits, interleave, and roll
@@ -2198,7 +3632,7 @@ object RelationalQueries {
     // the locality contract (each bucket is a 2-D quadrant, both dims
     // tight) and sum/min/max of the key pin every interleaved bit of
     // every row. One hash-agg shuffle on the bucket.
-    "q97_zorder_stats" -> ((s, dir) => {
+    Query("q97_zorder_stats", (s, dir) => {
       val bits = ZOrderBits
       val q = t(s, dir, "lineitem").select(
         (col("l_orderkey") % (1L << bits)).as("xq"),
@@ -2213,7 +3647,22 @@ object RelationalQueries {
           sum("zkey").as("sum_z"), min("zkey").as("min_z"),
           max("zkey").as("max_z"))
         .orderBy("bucket")
-    }))
+    },
+      // full recompute: identical quantization, the shared static
+      // interleave expansion, identical bucket shift
+      s"""WITH q AS (
+           SELECT CAST(l_orderkey % ${1L << ZOrderBits} AS BIGINT) AS xq,
+             CAST(l_partkey % ${1L << ZOrderBits} AS BIGINT) AS yq
+           FROM lineitem),
+         z AS (SELECT xq, yq, ${zInterleaveSql("xq", "yq", ZOrderBits)} AS zkey
+               FROM q)
+         SELECT zkey >> ${2 * ZOrderBits - 8} AS bucket,
+           CAST(count(*) AS BIGINT) AS n,
+           min(xq) AS min_x, max(xq) AS max_x,
+           min(yq) AS min_y, max(yq) AS max_y,
+           CAST(sum(zkey) AS BIGINT) AS sum_z,
+           min(zkey) AS min_z, max(zkey) AS max_z
+         FROM z GROUP BY bucket ORDER BY bucket"""))
 
   /** q97's z-order quantization width (dims masked to 2^bits) — shared
     * with the oracle twin; edit HERE. */
@@ -2427,1535 +3876,6 @@ object RelationalQueries {
     (0 until bits).map(i =>
       s"((((($x) >> $i) & 1) << ${2 * i}) | (((($y) >> $i) & 1) << ${2 * i + 1}))")
       .mkString(" | ")
-
-  val oracle: Map[String, String] = Map(
-    "q141_copurchase_pairs" ->
-      s"""WITH $coPairSql
-         SELECT part_a, part_b, n_orders FROM cp
-         ORDER BY n_orders DESC, part_a, part_b LIMIT $CoPairTopK""",
-    "q142_triangle_count" ->
-      // the naive 3-way self-join counts each a<b<c triangle once —
-      // an INDEPENDENT twin of the engine's degree-oriented algorithm
-      s"""WITH $coPairSql,
-         e AS (SELECT part_a, part_b FROM cp
-               WHERE n_orders >= $CoPairMinSupport)
-         SELECT CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
-           CAST((SELECT count(*) FROM e e1
-             JOIN e e2 ON e1.part_a = e2.part_a AND e1.part_b < e2.part_b
-             JOIN e e3 ON e3.part_a = e1.part_b AND e3.part_b = e2.part_b)
-             AS BIGINT) AS n_triangles""",
-    "q143_pagerank" -> {
-      // identical unrolled integer rounds ( // is DuckDB's floor div,
-      // the twin of Spark's div on non-negative longs)
-      val rounds = (1 to PrIters).map { k =>
-        s"""c$k AS (
-             SELECT e.dst AS v, sum(p${k - 1}.p // d2.deg) AS c
-             FROM e JOIN p${k - 1} ON e.src = p${k - 1}.v
-               JOIN d d2 ON e.src = d2.v
-             GROUP BY 1),
-           p$k AS (
-             SELECT d.v,
-               (150 * (1000000 // nn.n) + 850 * coalesce(c$k.c, 0)) // 1000
-                 AS p
-             FROM d CROSS JOIN nn LEFT JOIN c$k ON d.v = c$k.v)"""
-      }.mkString(",\n")
-      s"""WITH $coPairSql,
-         ed AS (SELECT part_a, part_b FROM cp
-                WHERE n_orders >= $CoPairMinSupport),
-         e AS (SELECT part_a AS src, part_b AS dst FROM ed
-               UNION ALL SELECT part_b, part_a FROM ed),
-         d AS (SELECT src AS v, CAST(count(*) AS BIGINT) AS deg FROM e
-               GROUP BY 1),
-         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
-         p0 AS (SELECT v, 1000000 // nn.n AS p FROM d CROSS JOIN nn),
-         $rounds
-         SELECT p$PrIters.v AS part,
-           CAST(p$PrIters.p AS BIGINT) AS pr_micros, d.deg AS degree
-         FROM p$PrIters JOIN d ON p$PrIters.v = d.v
-         ORDER BY part"""
-    },
-    "q165_bfs_hops" -> {
-      // identical unrolled min-label rounds; the coalesce-pair least
-      // sidesteps any engine-specific NULL handling in least()
-      val rounds = (1 to BfsMaxHops).map { k =>
-        s"""n$k AS (
-             SELECT e.dst AS v, min(d${k - 1}.dist) + 1 AS nd
-             FROM e JOIN d${k - 1} ON e.src = d${k - 1}.v GROUP BY 1),
-           d$k AS (
-             SELECT coalesce(a.v, b.v) AS v,
-               least(coalesce(a.dist, b.nd), coalesce(b.nd, a.dist))
-                 AS dist
-             FROM d${k - 1} a FULL OUTER JOIN n$k b ON a.v = b.v)"""
-      }.mkString(",\n")
-      s"""WITH $coPairSql,
-         ed AS (SELECT part_a, part_b FROM cp
-                WHERE n_orders >= $CoPairMinSupport),
-         e AS (SELECT part_a AS src, part_b AS dst FROM ed
-               UNION ALL SELECT part_b, part_a FROM ed),
-         d AS (SELECT src AS v, CAST(count(*) AS BIGINT) AS deg FROM e
-               GROUP BY 1),
-         s AS (SELECT v FROM (
-                 SELECT v, row_number() OVER (ORDER BY deg DESC, v) AS rn
-                 FROM d) WHERE rn <= $BfsSeedK),
-         d0 AS (SELECT v, CAST(0 AS BIGINT) AS dist FROM s),
-         $rounds
-         SELECT d.v AS part,
-           CAST(coalesce(d$BfsMaxHops.dist, -1) AS BIGINT) AS dist,
-           d.deg AS degree
-         FROM d LEFT JOIN d$BfsMaxHops ON d.v = d$BfsMaxHops.v
-         ORDER BY part"""
-    },
-    "q166_ohlc_bars" ->
-      // the textbook row_number formulation — a deliberately DIFFERENT
-      // algorithm from the engine's struct-min/max fold, so an
-      // ordering bug in the associative form cannot self-confirm
-      """WITH e AS (
-           SELECT event_type, ts, event_id,
-             CAST(floor(value * 100) AS BIGINT) AS v,
-             strftime(ts, '%Y-%m-%d') AS day
-           FROM events),
-         x AS (
-           SELECT *,
-             row_number() OVER (PARTITION BY event_type, day
-               ORDER BY ts, event_id) AS rna,
-             row_number() OVER (PARTITION BY event_type, day
-               ORDER BY ts DESC, event_id DESC) AS rnd
-           FROM e)
-         SELECT event_type, day,
-           CAST(max(CASE WHEN rna = 1 THEN v END) AS BIGINT) AS open_cents,
-           max(v) AS high_cents, min(v) AS low_cents,
-           CAST(max(CASE WHEN rnd = 1 THEN v END) AS BIGINT) AS close_cents,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(v) AS BIGINT) AS vol_cents
-         FROM x GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q171_sorted_neighborhood" ->
-      // same rank window + offset join; intersection via
-      // list_filter/list_contains (ta is distinct so the filter count
-      // IS |∩|), union by inclusion-exclusion — the exact twin of
-      // array_intersect/array_distinct
-      s"""WITH r AS (
-           SELECT p_partkey, p_name,
-             row_number() OVER (ORDER BY p_name, p_partkey) AS rn
-           FROM part),
-         pr AS (
-           SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-             list_distinct(string_split(a.p_name, ' ')) AS ta,
-             list_distinct(string_split(b.p_name, ' ')) AS tb
-           FROM r a JOIN r b
-             ON b.rn BETWEEN a.rn + 1 AND a.rn + $SnmWindow),
-         j AS (
-           SELECT id_a, id_b,
-             CAST(len(list_filter(ta, x -> list_contains(tb, x)))
-               AS BIGINT) AS inter,
-             CAST(len(ta) + len(tb) AS BIGINT) AS stot
-           FROM pr)
-         SELECT id_a, id_b,
-           (1000 * inter) // (stot - inter) AS j_mills
-         FROM j WHERE (1000 * inter) // (stot - inter)
-           >= $SnmMinJaccardMills
-         ORDER BY id_a, id_b""",
-    "q172_fk_audit" -> {
-      def edgeSql(name: String, fact: String, fk: String,
-          dim: String, pk: String): String =
-        s"""SELECT '$name' AS fk_edge,
-              CAST(count(*) AS BIGINT) AS n_rows,
-              CAST(sum(CASE WHEN d.$pk IS NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_orphans,
-              sum(CASE WHEN d.$pk IS NULL THEN 1 ELSE 0 END) = 0 AS ok
-            FROM $fact f
-            LEFT JOIN (SELECT DISTINCT $pk FROM $dim) d
-              ON f.$fk = d.$pk"""
-      Seq(
-        edgeSql("customer.c_nationkey->nation", "customer", "c_nationkey",
-          "nation", "n_nationkey"),
-        edgeSql("events.user_id->customer", "events", "user_id",
-          "customer", "c_custkey"),
-        edgeSql("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
-          "orders", "o_orderkey"),
-        edgeSql("lineitem.l_partkey->part", "lineitem", "l_partkey",
-          "part", "p_partkey"),
-        edgeSql("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
-          "supplier", "s_suppkey"),
-        edgeSql("orders.o_custkey->customer", "orders", "o_custkey",
-          "customer", "c_custkey"),
-        edgeSql("supplier.s_nationkey->nation", "supplier", "s_nationkey",
-          "nation", "n_nationkey")
-      ).mkString(" UNION ALL ") + " ORDER BY fk_edge"
-    },
-    "q173_column_profile" ->
-      // same unpivot + two-level aggregate; the modal tie-break is the
-      // row_number twin of max(struct(c, v))
-      """WITH long AS (
-           SELECT 'o_orderstatus' AS col_name, o_orderstatus AS v FROM orders
-           UNION ALL SELECT 'o_orderpriority', o_orderpriority FROM orders
-           UNION ALL SELECT 'o_custkey', CAST(o_custkey AS VARCHAR) FROM orders
-           UNION ALL SELECT 'o_orderdate', strftime(o_orderdate, '%Y-%m-%d') FROM orders
-           UNION ALL SELECT 'o_status_nullable', nullif(o_orderstatus, 'F') FROM orders),
-         g AS (
-           SELECT col_name, v, CAST(count(*) AS BIGINT) AS c
-           FROM long GROUP BY 1, 2),
-         top AS (
-           SELECT col_name, v, c,
-             row_number() OVER (PARTITION BY col_name
-               ORDER BY c DESC, v DESC) AS rn
-           FROM g WHERE v IS NOT NULL),
-         lvl2 AS (
-           SELECT col_name,
-             CAST(sum(c) AS BIGINT) AS n_rows,
-             CAST(sum(CASE WHEN v IS NULL THEN c ELSE 0 END) AS BIGINT)
-               AS n_null,
-             CAST(count(CASE WHEN v IS NOT NULL THEN 1 END) AS BIGINT)
-               AS n_distinct,
-             min(v) AS min_v, max(v) AS max_v
-           FROM g GROUP BY 1)
-         SELECT l.col_name, l.n_rows, l.n_null, l.n_distinct,
-           l.min_v, l.max_v, t.v AS top_v, t.c AS top_n
-         FROM lvl2 l JOIN top t ON l.col_name = t.col_name AND t.rn = 1
-         ORDER BY l.col_name""",
-    "q174_skew_report" ->
-      s"""WITH k AS (
-           SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
-           FROM events GROUP BY 1),
-         tot AS (
-           SELECT CAST(sum(cnt) AS BIGINT) AS n_total,
-             CAST(count(*) AS BIGINT) AS n_keys FROM k),
-         r AS (
-           SELECT user_id, cnt,
-             CAST(row_number() OVER (ORDER BY cnt DESC, user_id)
-               AS BIGINT) AS rk
-           FROM k)
-         SELECT rk, user_id, cnt,
-           (1000 * cnt) // n_total AS share_mills,
-           (cnt * n_keys + n_total - 1) // n_total AS salt_factor
-         FROM r, tot WHERE rk <= $SkewTopK ORDER BY rk""",
-    "q175_funnel_steps" ->
-      // the strictly-after (ts > prev) iterated-min recompute of
-      // Funnel.funnel, folded to the one-row rate report
-      """WITH e AS (
-           SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-         v AS (
-           SELECT user_id, min(ts_us) AS vts FROM e
-           WHERE event_type = 'view' GROUP BY 1),
-         c AS (
-           SELECT e.user_id, min(e.ts_us) AS cts
-           FROM e JOIN v ON e.user_id = v.user_id
-           WHERE e.event_type = 'click' AND e.ts_us > v.vts GROUP BY 1),
-         p AS (
-           SELECT e.user_id, min(e.ts_us) AS pts
-           FROM e JOIN c ON e.user_id = c.user_id
-           WHERE e.event_type = 'purchase' AND e.ts_us > c.cts GROUP BY 1)
-         SELECT
-           (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_view,
-           (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_click,
-           (SELECT CAST(count(*) AS BIGINT) FROM p) AS n_purchase,
-           (1000 * (SELECT count(*) FROM c))
-             // (SELECT count(*) FROM v) AS conv_vc_mills,
-           (1000 * (SELECT count(*) FROM p))
-             // (SELECT count(*) FROM c) AS conv_cp_mills,
-           (1000 * (SELECT count(*) FROM p))
-             // (SELECT count(*) FROM v) AS conv_vp_mills""",
-    "q176_decay_weights" ->
-      // identical integer decay: epoch_us age, div-floored day bucket,
-      // ppm weight as a capped right shift, HUGEINT weighted lane
-      s"""WITH ev AS (
-           SELECT event_type,
-             CAST(floor(value * 100) AS BIGINT) AS cents,
-             epoch_us(ts) AS ts_us
-           FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
-         a AS (SELECT max(ts_us) AS anchor_us FROM ev),
-         wgt AS (
-           SELECT event_type, cents,
-             CAST(1000000 AS BIGINT) >> CAST(least(
-               ((anchor_us - ts_us) // 86400000000) // $DecayHalfLifeDays,
-               62) AS INTEGER) AS weight_ppm
-           FROM ev, a),
-         g AS (
-           SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_events,
-             CAST(sum(cents) AS BIGINT) AS raw_sum_cents,
-             CAST(sum(CAST(cents AS HUGEINT) * weight_ppm) // 1000000
-               AS BIGINT) AS decayed_cents
-           FROM wgt GROUP BY 1)
-         SELECT event_type, n_events, raw_sum_cents, decayed_cents,
-           CAST((1000 * CAST(decayed_cents AS HUGEINT))
-             // sum(CAST(decayed_cents AS HUGEINT)) OVER ()
-             AS BIGINT) AS decay_share_mills
-         FROM g ORDER BY event_type""",
-    "q178_equidepth_bins" ->
-      // same histogram-selection boundaries; bin assignment via a
-      // correlated boundary count — the twin of size(filter(bs, <))
-      s"""WITH o AS (
-           SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS v
-           FROM orders),
-         h AS (SELECT v, CAST(count(*) AS BIGINT) AS cnt FROM o GROUP BY 1),
-         c AS (
-           SELECT v, cnt,
-             CAST(sum(cnt) OVER (ORDER BY v) AS BIGINT) AS cum,
-             CAST(sum(cnt) OVER () AS BIGINT) AS n
-           FROM h),
-         bidx AS (SELECT unnest(range(1, $EquiDepthK)) AS i),
-         bset AS (
-           SELECT i, min(v) AS b FROM bidx, c
-           WHERE cum >= (i * n + ${EquiDepthK - 1}) // $EquiDepthK
-           GROUP BY i),
-         a AS (
-           SELECT v,
-             (SELECT CAST(count(*) AS BIGINT) FROM bset WHERE bset.b < o.v)
-               AS bin
-           FROM o)
-         SELECT bin, CAST(count(*) AS BIGINT) AS n_rows,
-           min(v) AS min_cents, max(v) AS max_cents
-         FROM a GROUP BY 1 ORDER BY 1""",
-    "q179_dim_coverage" -> {
-      def edgeSql(name: String, dim: String, pk: String,
-          fact: String, fk: String): String =
-        s"""SELECT '$name' AS dim_edge,
-              CAST(count(*) AS BIGINT) AS n_members,
-              CAST(count(r.$fk) AS BIGINT) AS n_referenced,
-              (1000 * count(r.$fk)) // count(*) AS coverage_mills
-            FROM $dim d
-            LEFT JOIN (SELECT DISTINCT $fk FROM $fact) r
-              ON d.$pk = r.$fk"""
-      Seq(
-        edgeSql("customer<-orders", "customer", "c_custkey",
-          "orders", "o_custkey"),
-        edgeSql("customer<-events", "customer", "c_custkey",
-          "events", "user_id"),
-        edgeSql("nation<-customer", "nation", "n_nationkey",
-          "customer", "c_nationkey"),
-        edgeSql("part<-lineitem", "part", "p_partkey",
-          "lineitem", "l_partkey"),
-        edgeSql("supplier<-lineitem", "supplier", "s_suppkey",
-          "lineitem", "l_suppkey")
-      ).mkString(" UNION ALL ") + " ORDER BY dim_edge"
-    },
-    "q180_also_bought" ->
-      s"""WITH $coPairSql,
-         fp AS (SELECT * FROM cp WHERE n_orders >= $CoPairMinSupport),
-         sym AS (
-           SELECT part_a AS p, part_b AS rec, n_orders FROM fp
-           UNION ALL
-           SELECT part_b AS p, part_a AS rec, n_orders FROM fp),
-         r AS (
-           SELECT p, rec, n_orders,
-             row_number() OVER (PARTITION BY p
-               ORDER BY n_orders DESC, rec) AS rk
-           FROM sym)
-         SELECT p, rk, rec, n_orders FROM r
-         WHERE rk <= $AlsoBoughtK ORDER BY p, rk""",
-    "q181_winsorized_stats" ->
-      """WITH ev AS (
-           SELECT event_type,
-             CAST(floor(value * 100) AS BIGINT) AS cents
-           FROM events WHERE value IS NOT NULL),
-         h AS (
-           SELECT event_type, cents, CAST(count(*) AS BIGINT) AS cnt
-           FROM ev GROUP BY 1, 2),
-         c AS (
-           SELECT event_type, cents, cnt,
-             CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY cents)
-               AS BIGINT) AS cum,
-             CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM h),
-         lo AS (
-           SELECT event_type, min(cents) AS lo_cents FROM c
-           WHERE cum >= (1 * n + 99) // 100 GROUP BY 1),
-         hi AS (
-           SELECT event_type, min(cents) AS hi_cents FROM c
-           WHERE cum >= (99 * n + 99) // 100 GROUP BY 1)
-         SELECT h.event_type,
-           CAST(sum(h.cnt) AS BIGINT) AS n_events,
-           max(lo.lo_cents) AS lo_cents,
-           max(hi.hi_cents) AS hi_cents,
-           CAST(sum(h.cents * h.cnt) // sum(h.cnt) AS BIGINT)
-             AS mean_cents,
-           CAST(sum(greatest(least(h.cents, hi.hi_cents), lo.lo_cents)
-               * h.cnt)
-             // sum(h.cnt) AS BIGINT) AS wmean_cents
-         FROM h
-         JOIN lo ON h.event_type = lo.event_type
-         JOIN hi ON h.event_type = hi.event_type
-         GROUP BY 1 ORDER BY 1""",
-    "q182_assoc_rules" ->
-      // HUGEINT twins DECIMAL(38,0) for the lift product (q90's
-      // int64-overflow precedent); li is coPairSql's distinct
-      // (order, part) frame, reused for item supports and N
-      s"""WITH $coPairSql,
-         fp AS (SELECT * FROM cp WHERE n_orders >= $CoPairMinSupport),
-         isupp AS (SELECT l_partkey AS p, CAST(count(*) AS BIGINT) AS supp
-                   FROM li GROUP BY 1),
-         nn AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n
-                FROM li),
-         rules AS (
-           SELECT part_a AS ante, part_b AS cons, n_orders AS supp_pair
-           FROM fp
-           UNION ALL
-           SELECT part_b, part_a, n_orders FROM fp)
-         SELECT r.ante, r.cons, r.supp_pair,
-           a.supp AS supp_ante, c.supp AS supp_cons,
-           (1000 * r.supp_pair) // a.supp AS conf_mills,
-           CAST((CAST(1000 AS HUGEINT) * r.supp_pair * nn.n)
-             // (CAST(a.supp AS HUGEINT) * c.supp) AS BIGINT) AS lift_mills
-         FROM rules r
-         JOIN isupp a ON r.ante = a.p
-         JOIN isupp c ON r.cons = c.p
-         CROSS JOIN nn
-         ORDER BY lift_mills DESC, conf_mills DESC, ante, cons
-         LIMIT $AssocTopK""",
-    "q183_theil_sen" ->
-      // same weekly frame, naive pair self-join, same histogram-median
-      // selection. NB on the sign-split CASE: DuckDB 1.0's `//`
-      // TRUNCATES toward zero exactly like Spark's div (verified:
-      // -7 // 2 = -3, not -4 — an earlier comment here claimed floor
-      // semantics, which is wrong); the CASE normalizes the operands
-      // non-negative so the twin stays correct under EITHER floor or
-      // truncation semantics (a DuckDB upgrade can't silently shift
-      // negative slopes by one). Same shim in q187/q190/q191/q193.
-      s"""WITH wkly AS (
-           SELECT datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) // $TsWeekDays AS wk,
-             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS cents
-           FROM orders GROUP BY 1),
-         p AS (
-           SELECT b.cents - a.cents AS num, b.wk - a.wk AS den
-           FROM wkly a JOIN wkly b ON a.wk < b.wk),
-         sl AS (
-           SELECT CASE WHEN num >= 0 THEN (1000 * num) // den
-             ELSE -((1000 * (-num)) // den) END AS m FROM p),
-         h1 AS (SELECT m, CAST(count(*) AS BIGINT) AS cnt FROM sl
-                GROUP BY 1),
-         c1 AS (SELECT m, CAST(sum(cnt) OVER (ORDER BY m) AS BIGINT)
-                  AS cum, CAST(sum(cnt) OVER () AS BIGINT) AS n
-                FROM h1),
-         med AS (SELECT min(m) AS slope, max(n) AS n_pairs FROM c1
-                 WHERE cum >= (n + 1) // 2),
-         r AS (SELECT 1000 * w.cents - med.slope * w.wk AS ic
-               FROM wkly w CROSS JOIN med),
-         h2 AS (SELECT ic, CAST(count(*) AS BIGINT) AS cnt FROM r
-                GROUP BY 1),
-         c2 AS (SELECT ic, CAST(sum(cnt) OVER (ORDER BY ic) AS BIGINT)
-                  AS cum, CAST(sum(cnt) OVER () AS BIGINT) AS n
-                FROM h2),
-         imed AS (SELECT min(ic) AS icept FROM c2
-                  WHERE cum >= (n + 1) // 2)
-         SELECT (SELECT CAST(count(*) AS BIGINT) FROM wkly) AS n_weeks,
-           med.n_pairs, med.slope AS slope_mills_wk,
-           imed.icept AS icept_cents_mills
-         FROM med CROSS JOIN imed""",
-    "q184_kaplan_meier" ->
-      // identical risk sets and the IDENTICAL integer survival
-      // recurrence, run as a recursive CTE over the bucket index —
-      // each step's floor division is bit-equal to the Spark fold
-      s"""WITH RECURSIVE cust AS (
-           SELECT o_custkey,
-             datediff('day', DATE '1970-01-01',
-               CAST(min(o_orderdate) AS DATE)) AS fd,
-             datediff('day', DATE '1970-01-01',
-               CAST(max(o_orderdate) AS DATE)) AS ld
-           FROM orders GROUP BY 1),
-         mx AS (SELECT max(ld) AS md FROM cust),
-         ev AS (
-           SELECT (ld - fd) // $LifetimeBucketDays AS t,
-             CASE WHEN ld <= (SELECT md FROM mx) - $ChurnGraceDays
-               THEN 1 ELSE 0 END AS died
-           FROM cust),
-         b AS (SELECT t, CAST(sum(died) AS BIGINT) AS d,
-                 CAST(sum(1 - died) AS BIGINT) AS c
-               FROM ev GROUP BY 1),
-         bn AS (SELECT t, d, c,
-                  CAST(sum(d + c) OVER (ORDER BY t DESC) AS BIGINT) AS n,
-                  CAST(row_number() OVER (ORDER BY t) AS BIGINT) AS i
-                FROM b),
-         km AS (
-           SELECT i, t, d, c, n, (1000000 * (n - d)) // n AS surv
-           FROM bn WHERE i = 1
-           UNION ALL
-           SELECT bn.i, bn.t, bn.d, bn.c, bn.n,
-             (km.surv * (bn.n - bn.d)) // bn.n
-           FROM km, bn WHERE bn.i = km.i + 1)
-         SELECT t AS t_months, n AS n_risk, d AS n_died,
-           c AS n_censored, surv AS surv_micros
-         FROM km ORDER BY t_months""",
-    "q185_ewma_forecast" ->
-      // the IDENTICAL integer recurrence as a recursive CTE over the
-      // day index; HUGEINT twins DECIMAL(38,0) for the α·1000·v
-      // product, all operands non-negative so // and div agree
-      s"""WITH RECURSIVE d AS (
-           SELECT CAST(datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS cents
-           FROM orders GROUP BY 1),
-         ix AS (SELECT day, cents,
-                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-                FROM d),
-         r AS (
-           SELECT i, day, cents, 1000 * cents AS s,
-             CAST(-1 AS BIGINT) AS err
-           FROM ix WHERE i = 1
-           UNION ALL
-           SELECT ix.i, ix.day, ix.cents,
-             CAST((CAST($EwmaAlphaMills AS HUGEINT) * ix.cents * 1000
-               + ${1000 - EwmaAlphaMills} * r.s) // 1000 AS BIGINT),
-             abs(1000 * ix.cents - r.s)
-           FROM r JOIN ix ON ix.i = r.i + 1)
-         SELECT day, cents, s AS ewma_mc, err AS err_mc
-         FROM r ORDER BY day""",
-    "q186_cusum_changepoint" ->
-      // same mean anchor, same HUGEINT cumulative window; the
-      // changepoint row comes from a fully-ordered LIMIT 1 (abs DESC,
-      // day ASC) — the twin of Spark's max(struct(abs, -day)) pick
-      s"""WITH d AS (
-           SELECT CAST(datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS cents
-           FROM orders GROUP BY 1),
-         m AS (SELECT CAST((CAST(1000 AS HUGEINT) * sum(cents))
-                   // count(*) AS BIGINT) AS mean_mc,
-                 CAST(count(*) AS BIGINT) AS n_days
-               FROM d),
-         c AS (SELECT day,
-                 CAST(sum(CAST(1000 AS HUGEINT) * cents - mean_mc)
-                   OVER (ORDER BY day) AS BIGINT) AS cusum
-               FROM d CROSS JOIN m),
-         cp AS (SELECT day AS cp_day, cusum AS cusum_mc,
-                  abs(cusum) AS max_abs_cusum_mc
-                FROM c ORDER BY abs(cusum) DESC, day ASC LIMIT 1)
-         SELECT n_days, mean_mc, cp_day, cusum_mc, max_abs_cusum_mc
-         FROM m CROSS JOIN cp""",
-    "q187_autocorrelation" ->
-      // same deviations, same lagged self-join, same sign-split
-      // division; HUGEINT twins DECIMAL(38,0) throughout
-      s"""WITH d AS (
-           SELECT CAST(datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS cents
-           FROM orders GROUP BY 1),
-         m AS (SELECT CAST((CAST(1000 AS HUGEINT) * sum(cents))
-                 // count(*) AS BIGINT) AS mean_mc FROM d),
-         dv AS (SELECT day,
-                  CAST(1000 AS HUGEINT) * cents - mean_mc AS dd
-                FROM d CROSS JOIN m),
-         dn AS (SELECT sum(dd * dd) AS den FROM dv),
-         nm AS (SELECT a.day - b.day AS lag,
-                  CAST(count(*) AS BIGINT) AS n_pairs,
-                  sum(a.dd * b.dd) AS num
-                FROM dv a JOIN dv b
-                  ON a.day - b.day BETWEEN 1 AND $AcfMaxLag
-                GROUP BY 1)
-         SELECT lag, n_pairs,
-           CASE WHEN num >= 0 THEN CAST((1000 * num) // den AS BIGINT)
-             ELSE -CAST((1000 * (-num)) // den AS BIGINT) END
-             AS acf_mills
-         FROM nm CROSS JOIN dn
-         ORDER BY lag""",
-    "q189_psi_drift" -> {
-      // the same bins, anchor and Laplace smoothing; HUGEINT twins
-      // DECIMAL(38,0), the Mitchell twin on the same integer args
-      def mitchell(x: String) =
-        s"""(1000 * (length(printf('%b', $x)) - 1)
-           + (1000 * (($x) - (CAST(1 AS BIGINT)
-               << CAST(length(printf('%b', $x)) - 1 AS INT))))
-             // (CAST(1 AS BIGINT)
-               << CAST(length(printf('%b', $x)) - 1 AS INT)))"""
-      s"""WITH o AS (
-           SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents,
-             datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) AS dd
-           FROM orders),
-         a AS (SELECT (min(dd) + max(dd)) // 2 AS mid_day FROM o),
-         b AS (
-           SELECT price_cents // $DriftBinCents AS bin,
-             CAST(sum(CASE WHEN dd < (SELECT mid_day FROM a)
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(sum(CASE WHEN dd < (SELECT mid_day FROM a)
-               THEN 0 ELSE 1 END) AS BIGINT) AS n_b
-           FROM o GROUP BY 1),
-         t AS (SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
-                 CAST(sum(n_b) AS BIGINT) AS tot_b,
-                 CAST(count(*) AS BIGINT) AS n_bins
-               FROM b),
-         x AS (SELECT (n_a + 1) * (tot_b + n_bins) AS x,
-                 (n_b + 1) * (tot_a + n_bins) AS y,
-                 tot_a, tot_b, n_bins
-               FROM b CROSS JOIN t),
-         s AS (SELECT tot_a, tot_b, n_bins,
-                 sum(CAST(x - y AS HUGEINT)
-                   * (${mitchell("x")} - ${mitchell("y")})) AS s
-               FROM x GROUP BY 1, 2, 3)
-         SELECT n_bins, tot_a AS n_a, tot_b AS n_b,
-           CAST((1000 * s) // (CAST(tot_a + n_bins AS HUGEINT)
-             * (tot_b + n_bins)) AS BIGINT) AS psi_micros
-         FROM s"""
-    },
-    "q190_mannwhitney_u" ->
-      // same joint value histogram, same cumulative-below window,
-      // same doubled-U algebra; HUGEINT twins DECIMAL(38,0) and the
-      // rank-biserial keeps the sign-split truncation
-      """WITH o AS (
-           SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS v,
-             datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) AS dd
-           FROM orders),
-         a AS (SELECT (min(dd) + max(dd)) // 2 AS mid_day FROM o),
-         h AS (
-           SELECT v,
-             CAST(sum(CASE WHEN dd < (SELECT mid_day FROM a)
-               THEN 1 ELSE 0 END) AS BIGINT) AS na,
-             CAST(sum(CASE WHEN dd < (SELECT mid_day FROM a)
-               THEN 0 ELSE 1 END) AS BIGINT) AS nb
-           FROM o GROUP BY 1),
-         c AS (SELECT na, nb,
-                 coalesce(CAST(sum(nb) OVER (ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                   AS BIGINT), 0) AS cum_b
-               FROM h),
-         s AS (SELECT CAST(sum(na) AS BIGINT) AS n_a,
-                 CAST(sum(nb) AS BIGINT) AS n_b,
-                 sum(CAST(2 AS HUGEINT) * na * cum_b
-                   + CAST(na AS HUGEINT) * nb) AS u2_a
-               FROM c)
-         SELECT n_a, n_b, CAST(u2_a AS BIGINT) AS u2_a,
-           CAST(CAST(2 AS HUGEINT) * n_a * n_b - u2_a AS BIGINT) AS u2_b,
-           CAST((1000 * u2_a) // (CAST(2 AS HUGEINT) * n_a * n_b)
-             AS BIGINT) AS cles_mills,
-           CASE WHEN 2 * u2_a - CAST(2 AS HUGEINT) * n_a * n_b >= 0
-             THEN CAST((1000 * (2 * u2_a - CAST(2 AS HUGEINT) * n_a * n_b))
-               // (CAST(2 AS HUGEINT) * n_a * n_b) AS BIGINT)
-             ELSE -CAST((1000 * (CAST(2 AS HUGEINT) * n_a * n_b - 2 * u2_a))
-               // (CAST(2 AS HUGEINT) * n_a * n_b) AS BIGINT)
-           END AS rank_biserial_mills
-         FROM s""",
-    "q193_crosscorrelation" ->
-      // same daily (views, purchases) grid, same ±lag range self-join,
-      // same sign-split squared-Pearson integer algebra; HUGEINT twins
-      // DECIMAL(38,0), quotient magnitude is always ≥0 so DuckDB's //
-      // and Spark's div agree exactly
-      s"""WITH g AS (
-           SELECT CAST(datediff('day', DATE '1970-01-01',
-               CAST(ts AS DATE)) AS BIGINT) AS day,
-             CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-               AS BIGINT) AS x,
-             CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               AS BIGINT) AS y
-           FROM events WHERE event_type IN ('view', 'purchase')
-           GROUP BY 1),
-         p AS (SELECT b.day - a.day AS lag, a.x AS x, b.y AS y
-               FROM g a JOIN g b
-                 ON b.day - a.day BETWEEN -$CcfMaxLag AND $CcfMaxLag),
-         s AS (SELECT lag, CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(x AS HUGEINT)) AS sx,
-                 sum(CAST(y AS HUGEINT)) AS sy,
-                 sum(CAST(x AS HUGEINT) * y) AS sxy,
-                 sum(CAST(x AS HUGEINT) * x) AS sxx,
-                 sum(CAST(y AS HUGEINT) * y) AS syy
-               FROM p GROUP BY 1)
-         SELECT lag, n AS n_days,
-           CASE
-             WHEN (CAST(n AS HUGEINT) * sxx - sx * sx)
-                  * (CAST(n AS HUGEINT) * syy - sy * sy) = 0
-               THEN CAST(0 AS BIGINT)
-             WHEN CAST(n AS HUGEINT) * sxy - sx * sy >= 0
-               THEN CAST(((CAST(n AS HUGEINT) * sxy - sx * sy)
-                   * (CAST(n AS HUGEINT) * sxy - sx * sy) * 1000)
-                 // ((CAST(n AS HUGEINT) * sxx - sx * sx)
-                   * (CAST(n AS HUGEINT) * syy - sy * sy)) AS BIGINT)
-             ELSE -CAST(((CAST(n AS HUGEINT) * sxy - sx * sy)
-                   * (CAST(n AS HUGEINT) * sxy - sx * sy) * 1000)
-                 // ((CAST(n AS HUGEINT) * sxx - sx * sx)
-                   * (CAST(n AS HUGEINT) * syy - sy * sy)) AS BIGINT)
-           END AS r2_signed_mills
-         FROM s ORDER BY lag""",
-    "q191_mann_kendall" ->
-      // same weekly frame, naive pair self-join, same tie-corrected
-      // variance algebra; HUGEINT twins DECIMAL(38,0)
-      s"""WITH wkly AS (
-           SELECT datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) // $TsWeekDays AS wk,
-             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS cents
-           FROM orders GROUP BY 1),
-         p AS (SELECT CAST(sum(CASE WHEN b.cents > a.cents THEN 1
-                   WHEN b.cents < a.cents THEN -1 ELSE 0 END)
-                   AS BIGINT) AS s_stat,
-                 CAST(count(*) AS BIGINT) AS n_pairs
-               FROM wkly a JOIN wkly b ON a.wk < b.wk),
-         ti AS (SELECT sum(CAST(tc AS HUGEINT) * (tc - 1)
-                    * (2 * tc + 5)) AS tie_term,
-                  CAST(count(*) AS BIGINT) AS n_weeks
-                FROM (SELECT cents, CAST(count(*) AS BIGINT) AS tc
-                      FROM wkly GROUP BY 1))
-         SELECT n_weeks, n_pairs, s_stat,
-           CASE WHEN s_stat >= 0
-             THEN CAST((1000 * CAST(s_stat AS HUGEINT)) // n_pairs AS BIGINT)
-             ELSE -CAST((1000 * CAST(-s_stat AS HUGEINT)) // n_pairs AS BIGINT)
-           END AS tau_a_mills,
-           CAST(CAST(n_weeks AS HUGEINT) * (n_weeks - 1)
-             * (2 * n_weeks + 5) - coalesce(tie_term, 0) AS BIGINT)
-             AS var18
-         FROM p CROSS JOIN ti""",
-    "q177_drift_report" ->
-      s"""WITH o AS (
-           SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents,
-             datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-               AS day FROM orders),
-         anchor AS (
-           SELECT (min(day) + max(day)) // 2 AS mid_day FROM o),
-         b AS (
-           SELECT price_cents // $DriftBinCents AS bin,
-             CASE WHEN day < (SELECT mid_day FROM anchor)
-               THEN 1 ELSE 0 END AS in_a
-           FROM o),
-         h AS (
-           SELECT bin, CAST(sum(in_a) AS BIGINT) AS n_a,
-             CAST(sum(1 - in_a) AS BIGINT) AS n_b
-           FROM b GROUP BY 1),
-         tot AS (
-           SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
-             CAST(sum(n_b) AS BIGINT) AS tot_b FROM h),
-         sh AS (
-           SELECT bin, n_a, n_b,
-             (1000 * n_a) // tot_a AS share_a_mills,
-             (1000 * n_b) // tot_b AS share_b_mills,
-             abs((1000 * n_a) // tot_a - (1000 * n_b) // tot_b)
-               AS gap_mills
-           FROM h, tot)
-         SELECT bin, n_a, n_b, share_a_mills, share_b_mills, gap_mills,
-           CAST(sum(gap_mills) OVER () // 2 AS BIGINT) AS tvd_mills
-         FROM sh ORDER BY bin""",
-    "q169_frequent_triples" ->
-      // the naive 3-way self-join twin with a rank cut (LIMIT-after-
-      // filter has engine-defined order; the rank predicate is the
-      // deterministic form)
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         t3 AS (
-           SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-             c.l_partkey AS part_c, CAST(count(*) AS BIGINT) AS n_orders
-           FROM li a
-           JOIN li b ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
-           JOIN li c ON b.l_orderkey = c.l_orderkey
-             AND b.l_partkey < c.l_partkey
-           GROUP BY 1, 2, 3),
-         f AS (SELECT * FROM t3 WHERE n_orders >= $TripleMinSupport),
-         r AS (SELECT *, row_number() OVER (ORDER BY n_orders DESC,
-             part_a, part_b, part_c) AS rn FROM f)
-         SELECT part_a, part_b, part_c, n_orders FROM r
-         WHERE rn <= $CoPairTopK
-         ORDER BY n_orders DESC, part_a, part_b, part_c""",
-    "q170_funnel_latency" ->
-      // same two-agg + histogram-selection recompute in epoch micros
-      """WITH e AS (
-           SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-         c AS (
-           SELECT user_id, min(ts_us) AS cts FROM e
-           WHERE event_type = 'click' GROUP BY 1),
-         tt AS (
-           SELECT e.user_id, min(e.ts_us) - min(c.cts) AS tt
-           FROM e JOIN c USING (user_id)
-           WHERE e.event_type = 'purchase' AND e.ts_us >= c.cts
-           GROUP BY 1),
-         n1 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tt),
-         h AS (SELECT tt, CAST(count(*) AS BIGINT) AS c FROM tt GROUP BY 1),
-         hc AS (SELECT tt, sum(c) OVER (ORDER BY tt
-             ROWS UNBOUNDED PRECEDING) AS cum FROM h)
-         SELECT max(n) AS n_converted,
-           min(CASE WHEN cum >= (50 * n + 99) // 100 THEN tt END)
-             AS p50_us,
-           min(CASE WHEN cum >= (90 * n + 99) // 100 THEN tt END)
-             AS p90_us,
-           max(tt) AS max_us
-         FROM hc CROSS JOIN n1""",
-    "q167_ab_lift" ->
-      // same per-user distinct conversion fold, same exact 2×2
-      // algebra; HUGEINT twins DECIMAL(38,0), nullif twins the
-      // degenerate all-converted/none-converted guard
-      """WITH pu AS (
-           SELECT user_id,
-             max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               AS conv
-           FROM events GROUP BY 1),
-         t AS (
-           SELECT
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-               AS BIGINT) AS users_a,
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN conv ELSE 0 END)
-               AS BIGINT) AS conv_a,
-             CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-               AS BIGINT) AS users_b,
-             CAST(sum(CASE WHEN user_id % 2 = 1 THEN conv ELSE 0 END)
-               AS BIGINT) AS conv_b
-           FROM pu),
-         r AS (
-           SELECT *, (1000 * conv_a) // users_a AS rate_a_mills,
-             (1000 * conv_b) // users_b AS rate_b_mills
-           FROM t)
-         SELECT users_a, conv_a, users_b, conv_b,
-           rate_a_mills, rate_b_mills,
-           rate_b_mills - rate_a_mills AS lift_mills,
-           CAST((1000 * (users_a + users_b)
-                 * CAST(conv_a * (users_b - conv_b)
-                        - conv_b * (users_a - conv_a) AS HUGEINT)
-                 * CAST(conv_a * (users_b - conv_b)
-                        - conv_b * (users_a - conv_a) AS HUGEINT))
-               // nullif(CAST(users_a AS HUGEINT) * users_b
-                    * (conv_a + conv_b)
-                    * (users_a + users_b - conv_a - conv_b), 0)
-             AS BIGINT) AS chi2_mills
-         FROM r""",
-    "q168_time_weighted_avg" ->
-      // same user-keyed lead window, same pooled Σv·Δt / ΣΔt algebra;
-      // HUGEINT twins DECIMAL(38,0); epoch_us(ts) is the shared exact
-      // micros domain (q80's precedent)
-      """WITH e AS (
-           SELECT event_type, user_id, event_id, epoch_us(ts) AS ts_us,
-             CAST(floor(value * 100) AS BIGINT) AS v
-           FROM events),
-         x AS (
-           SELECT *, lead(ts_us) OVER (PARTITION BY user_id, event_type
-             ORDER BY ts_us, event_id) - ts_us AS dt
-           FROM e),
-         a AS (
-           SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-             sum(CASE WHEN dt IS NOT NULL
-                 THEN CAST(v AS HUGEINT) * dt END) AS ws,
-             CAST(coalesce(sum(dt), 0) AS BIGINT) AS span_us,
-             CAST(sum(v) AS BIGINT) AS vs
-           FROM x GROUP BY 1)
-         SELECT event_type, n_events, span_us,
-           CAST(coalesce(ws // nullif(CAST(span_us AS HUGEINT), 0), -1)
-             AS BIGINT) AS twa_cents,
-           vs // n_events AS mean_cents
-         FROM a ORDER BY 1""",
-    "q131_rollup_totals" ->
-      // same ANSI ROLLUP + GROUPING bitmask (first key = high bit in
-      // both engines), same sentinel coalesce
-      s"""SELECT coalesce(l_returnflag, 'ALL') AS rf,
-           coalesce(l_linestatus, 'ALL') AS ls,
-           CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-           CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-           ${revenueCentsSumSql} AS revenue_cents,
-           count(*) AS n_rows
-         FROM lineitem
-         GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         ORDER BY gid, rf, ls""",
-    "q132_pivot_matrix" ->
-      // manual conditional aggregation — the exact plan Spark compiles
-      // the static-value pivot to
-      """SELECT c_mktsegment,
-           CAST(count(*) FILTER (o_orderstatus = 'F') AS BIGINT) AS n_f,
-           CAST(count(*) FILTER (o_orderstatus = 'O') AS BIGINT) AS n_o,
-           CAST(count(*) FILTER (o_orderstatus = 'P') AS BIGINT) AS n_p,
-           CAST(coalesce(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-             FILTER (o_orderstatus = 'F'), 0) AS BIGINT) AS cents_f,
-           CAST(coalesce(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-             FILTER (o_orderstatus = 'O'), 0) AS BIGINT) AS cents_o,
-           CAST(coalesce(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-             FILTER (o_orderstatus = 'P'), 0) AS BIGINT) AS cents_p
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q133_column_profile" ->
-      (ProfileCols.map(profileSql).mkString(" UNION ALL ") +
-        " ORDER BY col_name"),
-    "q134_order_streaks" ->
-      """WITH mi AS (
-           SELECT DISTINCT o_custkey,
-             CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mi
-           FROM orders),
-         g AS (
-           SELECT o_custkey, mi,
-             mi - row_number() OVER (PARTITION BY o_custkey ORDER BY mi) AS grp
-           FROM mi),
-         runs AS (
-           SELECT o_custkey, grp, CAST(count(*) AS BIGINT) AS len
-           FROM g GROUP BY 1, 2)
-         SELECT o_custkey, max(len) AS max_streak,
-           CAST(count(*) AS BIGINT) AS n_streaks,
-           CAST(sum(len) AS BIGINT) AS n_active_months
-         FROM runs GROUP BY o_custkey ORDER BY o_custkey""",
-    "q97_zorder_stats" ->
-      // full recompute: identical quantization, the shared static
-      // interleave expansion, identical bucket shift
-      s"""WITH q AS (
-           SELECT CAST(l_orderkey % ${1L << ZOrderBits} AS BIGINT) AS xq,
-             CAST(l_partkey % ${1L << ZOrderBits} AS BIGINT) AS yq
-           FROM lineitem),
-         z AS (SELECT xq, yq, ${zInterleaveSql("xq", "yq", ZOrderBits)} AS zkey
-               FROM q)
-         SELECT zkey >> ${2 * ZOrderBits - 8} AS bucket,
-           CAST(count(*) AS BIGINT) AS n,
-           min(xq) AS min_x, max(xq) AS max_x,
-           min(yq) AS min_y, max(yq) AS max_y,
-           CAST(sum(zkey) AS BIGINT) AS sum_z,
-           min(zkey) AS min_z, max(zkey) AS max_z
-         FROM z GROUP BY bucket ORDER BY bucket""",
-    "q01_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-         CAST(sum(CAST(floor(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents,
-         ${revenueCentsSumSql} AS revenue_cents,
-         count(*) AS n_rows,
-         count(DISTINCT l_orderkey) AS n_orders
-         FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q02_null_normalize" ->
-      // whitespace trim + NullTokens interpolated from Normalize (the
-      // engine's source — lockstep with normEmpty's wsTrim)
-      s"""SELECT doc_id,
-         CASE WHEN source IS NULL OR lower(${wst("source")}) IN ($nullTokensSql)
-              THEN NULL ELSE ${wst("source")} END AS norm_source,
-         (CASE WHEN text IS NULL OR lower(${wst("text")}) IN ($nullTokensSql)
-              THEN NULL ELSE ${wst("text")} END) IS NOT NULL AS valid
-         FROM documents ORDER BY doc_id""",
-    "q03_validate_rows" ->
-      """SELECT c_custkey,
-         (c_name IS NOT NULL AND length(trim(c_name)) BETWEEN 2 AND 200
-          AND NOT regexp_matches(c_name, '[<>"'']')) AS valid_name,
-         -- null branch mirrors Normalize.validEmail's `c.isNull || ...`
-         -- (Spark emits TRUE for a NULL input; a bare regexp_matches
-         -- would emit NULL and hash-diverge on a null-name fixture)
-         (c_name IS NULL OR
-          regexp_matches(lower(regexp_replace(c_name, ' ', '.', 'g')) || '@example.com',
-           '^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$')) AS valid_email,
-         CASE WHEN NOT (c_name IS NOT NULL AND length(trim(c_name)) BETWEEN 2 AND 200
-          AND NOT regexp_matches(c_name, '[<>"'']')) THEN 'invalid business name' END AS err
-         FROM customer ORDER BY c_custkey""",
-    "q04_sanitize" ->
-      """SELECT p_partkey,
-         regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-           regexp_replace('<b>' || p_name || '</b> & co', '<[^>]*>', '', 'g'),
-           '&', '&amp;', 'g'), '<', '&lt;', 'g'), '>', '&gt;', 'g'),
-           '"', '&quot;', 'g'), '''', '&#x27;', 'g') AS clean_name
-         FROM part ORDER BY p_partkey""",
-    "q05_project_rename" ->
-      """SELECT c_custkey AS customer_id, upper(c_name) AS name_upper,
-         c_mktsegment AS segment FROM customer ORDER BY customer_id""",
-    "q06_rev_by_brand" ->
-      s"""SELECT p_brand,
-         ${revenueCentsSumSql} AS revenue_cents,
-         count(*) AS n_items
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY p_brand ORDER BY p_brand""",
-    "q07_fuzzy_topk_band" ->
-      """WITH items AS (
-           SELECT p_partkey AS item_id, lower(p_name) AS item_name
-           FROM part WHERE p_partkey % 7 = 3),
-         dict AS (
-           SELECT lower(p_name) AS title, CAST(min(p_partkey) AS BIGINT) AS ext_id
-           FROM part WHERE p_partkey < 50 GROUP BY lower(p_name)),
-         scored AS (
-           SELECT item_id, item_name, title, ext_id,
-             CAST(floor((100 * (greatest(length(item_name), length(title), 1)
-                   - levenshtein(item_name, title)))
-                 / greatest(length(item_name), length(title), 1)) AS BIGINT) AS score
-           FROM items CROSS JOIN dict),
-         ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY item_id
-             ORDER BY score DESC, ext_id) AS rn FROM scored)
-         SELECT item_id, rn, title, ext_id, score,
-           CASE WHEN score >= 97 THEN 'resolved'
-                WHEN score >= 50 THEN 'review' ELSE 'rejected' END AS decision
-         FROM ranked WHERE rn <= 3 ORDER BY item_id, rn""",
-    "q08_semi_anti_split" ->
-      """SELECT c_custkey, 'update' AS action FROM customer c
-         WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-         UNION ALL
-         SELECT c_custkey, 'insert' AS action FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-         ORDER BY c_custkey""",
-    "q09_multiway_rollup" ->
-      """SELECT r_name, n_name, count(*) AS n_orders,
-         CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-         FROM orders
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-    "q10_top3_per_customer" ->
-      """WITH ranked AS (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_custkey
-               ORDER BY o_totalprice DESC, o_orderkey) AS rn
-           FROM orders)
-         SELECT o_custkey, rn, o_orderkey,
-           CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents
-         FROM ranked WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    "q11_latest_per_customer" ->
-      """WITH ranked AS (
-           SELECT o_custkey, o_orderkey, o_orderdate,
-             row_number() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-           FROM orders)
-         SELECT o_custkey, o_orderkey AS last_orderkey,
-           strftime(o_orderdate, '%Y-%m-%d') AS last_date
-         FROM ranked WHERE rn = 1 ORDER BY o_custkey""",
-    "q12_top10_orders" ->
-      """SELECT o_orderkey, CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents
-         FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""",
-    "q13_explode_tokens" ->
-      """SELECT p_partkey, unnest(list_distinct(string_split(p_name, ' '))) AS token
-         FROM part ORDER BY p_partkey, token""",
-    "q14_melt_attrs" ->
-      """SELECT p_partkey, 'brand' AS attr, p_brand AS val FROM part
-         UNION ALL
-         SELECT p_partkey, 'type' AS attr, p_type AS val FROM part
-         ORDER BY p_partkey, attr""",
-    "q15_exact_dict_match" ->
-      """WITH items AS (
-           SELECT p_partkey AS item_id, p_name AS item_name
-           FROM part WHERE p_partkey % 3 = 0),
-         dict AS (
-           SELECT upper(p_name) AS title, CAST(min(p_partkey) AS BIGINT) AS ext_id
-           FROM part WHERE p_partkey % 2 = 0 GROUP BY upper(p_name))
-         SELECT item_id, item_name, ext_id, ext_id IS NOT NULL AS matched
-         FROM items LEFT JOIN dict ON lower(item_name) = lower(title)
-         ORDER BY item_id""",
-    "q16_band_histogram" ->
-      """SELECT CASE WHEN o_totalprice >= 200000 THEN 'high'
-                WHEN o_totalprice >= 100000 THEN 'medium'
-                ELSE 'low' END AS band, count(*) AS n
-         FROM orders GROUP BY 1 ORDER BY band""",
-    "q17_daily_rollup" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, count(*) AS n,
-         CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-         FROM events GROUP BY 1, 2 ORDER BY day, event_type""",
-    "q18_last24h_by_type" ->
-      """SELECT event_type, count(*) AS n FROM events
-         WHERE ts >= (SELECT max(ts) - INTERVAL 24 HOURS FROM events)
-         GROUP BY event_type ORDER BY event_type""",
-    "q19_error_categories" ->
-      """WITH m AS (
-           SELECT CASE WHEN value < 40 THEN 'connection timeout to upstream'
-                  WHEN value < 80 THEN 'permission denied for user'
-                  WHEN value < 120 THEN 'duplicate key already exists'
-                  WHEN value < 160 THEN 'rate limit exceeded'
-                  ELSE event_type || ' failed unexpectedly' END AS msg
-           FROM events)
-         SELECT CASE
-             WHEN regexp_matches(lower(msg), 'connection|timeout|network|unreachable') THEN 'network'
-             WHEN regexp_matches(lower(msg), 'auth|permission|denied|unauthorized|forbidden') THEN 'auth'
-             WHEN regexp_matches(lower(msg), 'schema|column|field|type mismatch') THEN 'schema'
-             WHEN regexp_matches(lower(msg), 'duplicate|conflict|already exists') THEN 'conflict'
-             WHEN regexp_matches(lower(msg), 'daily limit|quota exceeded|rate limit|too many requests|throttle') THEN 'quota'
-             WHEN regexp_matches(lower(msg), 'parse|decode|encoding|malformed|invalid json') THEN 'parse'
-             WHEN regexp_matches(lower(msg), 'not found|missing|no such') THEN 'missing'
-             WHEN regexp_matches(lower(msg), 'disk|memory|resource|oom') THEN 'resource'
-             WHEN regexp_matches(lower(msg), 'error|fail|exception') THEN 'generic'
-             ELSE 'unknown' END AS category,
-           count(*) AS n
-         FROM m GROUP BY 1 ORDER BY category""",
-    "q20_mask_sensitive" ->
-      """SELECT event_id,
-         CASE WHEN length('tok' || md5(props)) > 20
-               AND regexp_matches('tok' || md5(props), '^[A-Za-z0-9+/=]+$')
-              THEN '***MASKED***' ELSE 'tok' || md5(props) END AS token_masked,
-         CASE WHEN length(event_type) > 20
-               AND regexp_matches(event_type, '^[A-Za-z0-9+/=]+$')
-              THEN '***MASKED***' ELSE event_type END AS type_unmasked
-         FROM events ORDER BY event_id""",
-    "q21_json_extract" ->
-      """SELECT event_id,
-           CAST(nullif(regexp_extract(props, '([0-9]+)', 1), '') AS BIGINT) AS k
-         FROM events ORDER BY event_id""",
-    "q22_hourly_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour,
-         event_type, count(*) AS n,
-         CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-         FROM events GROUP BY 1, 2 ORDER BY hour, event_type""",
-    "q23_sessionize" ->
-      """WITH g AS (
-           SELECT user_id, event_id, ts,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-           FROM events)
-         SELECT user_id,
-           CAST(sum(CASE WHEN prev_ts IS NULL
-             OR floor(epoch(ts)) - floor(epoch(prev_ts)) > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-           count(*) AS n_events
-         FROM g GROUP BY user_id ORDER BY user_id""",
-    "q147_session_depth" ->
-      // the q23 lag/gap rule + the same-window cumsum session id
-      """WITH g AS (
-           SELECT user_id, event_id, ts,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev_ts
-           FROM events),
-         s AS (
-           SELECT user_id, event_id,
-             sum(CASE WHEN prev_ts IS NULL
-               OR floor(epoch(ts)) - floor(epoch(prev_ts)) > 1800
-               THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess
-           FROM g),
-         l AS (SELECT user_id, sess, CAST(count(*) AS BIGINT)
-                 AS session_len
-               FROM s GROUP BY 1, 2),
-         h AS (SELECT session_len, CAST(count(*) AS BIGINT) AS n_sessions
-               FROM l GROUP BY 1)
-         SELECT session_len, n_sessions,
-           CAST((1000 * n_sessions) // sum(n_sessions) OVER ()
-             AS BIGINT) AS share_mills
-         FROM h ORDER BY session_len""",
-    "q151_rfm_segments" -> {
-      // three identical histogram-quintile chains + the same
-      // greater-than-threshold score sums
-      def thrCte(name: String, dim: String): String = {
-        val mins = (1 to 4).map(k =>
-          s"min(CASE WHEN cum >= (n * $k + 4) // 5 THEN v END) AS t$k")
-          .mkString(", ")
-        s"""$name AS (
-             SELECT $mins
-             FROM (SELECT v,
-                 sum(cnt) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-                   AS cum,
-                 sum(cnt) OVER () AS n
-               FROM (SELECT $dim AS v, CAST(count(*) AS BIGINT) AS cnt
-                     FROM base GROUP BY 1)))"""
-      }
-      def asc(dim: String, t: String): String =
-        "1 + " + (1 to 4).map(k =>
-          s"(CASE WHEN $dim > $t.t$k THEN 1 ELSE 0 END)").mkString(" + ")
-      s"""WITH base AS (
-           SELECT o_custkey,
-             (SELECT max(CAST(datediff('day', DATE '1970-01-01',
-                  CAST(o_orderdate AS DATE)) AS BIGINT)) FROM orders)
-               - max(CAST(datediff('day', DATE '1970-01-01',
-                  CAST(o_orderdate AS DATE)) AS BIGINT)) AS recency,
-             CAST(count(*) AS BIGINT) AS freq,
-             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS cents
-           FROM orders GROUP BY o_custkey),
-         ${thrCte("tr", "recency")},
-         ${thrCte("tf", "freq")},
-         ${thrCte("tm", "cents")},
-         scored AS (
-           SELECT o_custkey, cents,
-             CAST(6 - (${asc("recency", "tr")}) AS BIGINT) AS r_score,
-             CAST(${asc("freq", "tf")} AS BIGINT) AS f_score,
-             CAST(${asc("cents", "tm")} AS BIGINT) AS m_score
-           FROM base CROSS JOIN tr CROSS JOIN tf CROSS JOIN tm)
-         SELECT r_score, f_score, m_score,
-           CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(sum(cents) AS BIGINT) AS cents_sum
-         FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""
-    },
-    "q157_nation_gini" ->
-      // the same sorted-rank histogram identity; HUGEINT twins the
-      // DECIMAL(38,0) products
-      """WITH ltv AS (
-           SELECT o_custkey,
-             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS v
-           FROM orders GROUP BY 1),
-         bn AS (
-           SELECT n.n_name AS nation, ltv.v
-           FROM ltv
-           JOIN customer c ON ltv.o_custkey = c.c_custkey
-           JOIN nation n ON c.c_nationkey = n.n_nationkey),
-         h AS (
-           SELECT nation, v, CAST(count(*) AS BIGINT) AS c
-           FROM bn GROUP BY 1, 2),
-         x AS (
-           SELECT nation, v, c,
-             sum(c) OVER (PARTITION BY nation ORDER BY v
-               ROWS UNBOUNDED PRECEDING) - c AS cb
-           FROM h),
-         a AS (
-           SELECT nation,
-             CAST(sum(c) AS BIGINT) AS n_customers,
-             CAST(sum(v * c) AS BIGINT) AS total_cents,
-             sum(CAST(v AS HUGEINT) * c * (2 * cb + c + 1)) AS num
-           FROM x GROUP BY 1 HAVING sum(v * c) > 0)
-         SELECT nation, n_customers, total_cents,
-           CAST((1000 * (num
-                 - CAST(n_customers + 1 AS HUGEINT) * total_cents))
-             // (CAST(n_customers AS HUGEINT) * total_cents) AS BIGINT)
-             AS gini_mills
-         FROM a ORDER BY 1""",
-    "q159_customer_skyline" ->
-      // the oracle checks dominance the O(n²) way — deliberately a
-      // DIFFERENT algorithm from the engine's divide-and-merge
-      // windows, so a staircase-logic bug cannot self-confirm
-      """WITH a AS (
-           SELECT o_custkey,
-             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS ltv_cents,
-             max(CAST(o_orderdate AS DATE)) AS d
-           FROM orders GROUP BY 1)
-         SELECT q.o_custkey, q.ltv_cents,
-           strftime(q.d, '%Y-%m-%d') AS last_day
-         FROM a q
-         WHERE NOT EXISTS (
-           SELECT 1 FROM a p
-           WHERE p.ltv_cents >= q.ltv_cents AND p.d >= q.d
-             AND (p.ltv_cents > q.ltv_cents OR p.d > q.d))
-         ORDER BY 1""",
-    "q160_ivm_refresh" ->
-      // the oracle recomputes the view DIRECTLY over all facts — no
-      // split, no merge — so parity proves the engine's partial-state
-      // refresh algebra lossless
-      """SELECT o_custkey,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-             AS BIGINT) AS total_cents,
-           CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_open,
-           strftime(max(CAST(o_orderdate AS DATE)), '%Y-%m-%d')
-             AS last_day,
-           CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-             AS BIGINT) // CAST(count(*) AS BIGINT) AS avg_cents
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    "q161_benford_digits" -> {
-      // same conditional-sum pivot + the same mills constants
-      // (interpolated from BenfordMills, never hand-copied); HUGEINT
-      // twins the DECIMAL(38,0) squares
-      val os = (1 to 9).map(d =>
-        s"CAST(sum(CASE WHEN fd = $d THEN 1 ELSE 0 END) AS BIGINT) AS o$d")
-        .mkString(", ")
-      val terms = (1 to 9).map { d =>
-        val p = BenfordMills(d - 1)
-        s"""(CAST(1000 * o$d - n * $p AS HUGEINT)
-             * CAST(1000 * o$d - n * $p AS HUGEINT)) // $p"""
-      }.mkString(" + ")
-      val arms = (1 to 9).map { d =>
-        s"""SELECT o_orderpriority, n AS n_orders, stat_mills,
-              CAST($d AS BIGINT) AS digit, o$d AS n_digit,
-              CAST(${BenfordMills(d - 1)} AS BIGINT) AS exp_mills,
-              (1000 * o$d) // n AS share_mills FROM x"""
-      }.mkString(" UNION ALL ")
-      s"""WITH f AS (
-            SELECT o_orderpriority,
-              CAST(substr(CAST(CAST(floor(o_totalprice * 100) AS BIGINT)
-                AS VARCHAR), 1, 1) AS BIGINT) AS fd
-            FROM orders),
-          p AS (
-            SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n, $os
-            FROM f GROUP BY 1),
-          x AS (
-            SELECT *, CAST(($terms) // (1000 * CAST(n AS HUGEINT))
-              AS BIGINT) AS stat_mills
-            FROM p)
-          $arms ORDER BY o_orderpriority, digit"""
-    },
-    "q163_cdc_apply" ->
-      // the same derived change stream, applied the declarative way
-      // (rank + left join + CASE) — parity proves the operator's
-      // full-outer merge, tombstone filter and payload override
-      """WITH cdc AS (
-           SELECT o_custkey AS k, o_orderkey AS seq,
-             CASE WHEN o_orderkey % 13 = 0 THEN 'D' ELSE 'U' END AS op,
-             CAST(floor(o_totalprice * 100) AS BIGINT) AS v
-           FROM orders),
-         latest AS (
-           SELECT k, seq, op, v FROM (
-             SELECT *, row_number() OVER (PARTITION BY k
-                 ORDER BY seq DESC, op DESC, v DESC)
-               AS rn FROM cdc) WHERE rn = 1)
-         SELECT c.c_custkey,
-           CAST(c.c_nationkey AS BIGINT) AS c_nationkey,
-           CASE WHEN l.op = 'U' THEN l.v
-                ELSE CAST(floor(c.c_acctbal * 100) AS BIGINT)
-           END AS current_cents,
-           CASE WHEN l.op IS NULL THEN 'snapshot' ELSE 'updated' END
-             AS cdc_src,
-           coalesce(l.seq, -1) AS last_seq
-         FROM customer c LEFT JOIN latest l ON c.c_custkey = l.k
-         WHERE l.op IS NULL OR l.op <> 'D'
-         ORDER BY 1""",
-    "q164_hist_quantiles" -> {
-      // full recompute of both paths — exact from the value histogram,
-      // estimate from the 128-bin equi-width histogram — with the same
-      // integer lower-edge and ceil-width arithmetic; the error gate
-      // is recomputed, never pinned
-      val pcts = Seq(50, 90, 99)
-      val exs = pcts.map(p =>
-        s"min(CASE WHEN cum >= ($p * n + 99) // 100 THEN v END) AS ex$p")
-        .mkString(", ")
-      val bins = pcts.map(p =>
-        s"min(CASE WHEN cum >= ($p * n + 99) // 100 THEN bin END) AS bin$p")
-        .mkString(", ")
-      val arms = pcts.map(p =>
-        s"""SELECT event_type, n, mn, mx, CAST($p AS BIGINT) AS pct,
-              ex$p AS exact_cents, bin$p AS bin FROM j""").mkString(" UNION ALL ")
-      s"""WITH ev AS (
-            SELECT event_type, CAST(floor(value * 100) AS BIGINT) AS v
-            FROM events WHERE value IS NOT NULL),
-          vh AS (
-            SELECT event_type, v, CAST(count(*) AS BIGINT) AS c
-            FROM ev GROUP BY 1, 2),
-          st AS (
-            SELECT event_type, CAST(sum(c) AS BIGINT) AS n,
-              min(v) AS mn, max(v) AS mx
-            FROM vh GROUP BY 1),
-          vc AS (
-            SELECT event_type, v, sum(c) OVER (PARTITION BY event_type
-              ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-            FROM vh),
-          ex AS (
-            SELECT vc.event_type, $exs
-            FROM vc JOIN st USING (event_type) GROUP BY 1),
-          bh AS (
-            SELECT ev.event_type,
-              ((v - mn) * 128) // (mx - mn + 1) AS bin,
-              CAST(count(*) AS BIGINT) AS c
-            FROM ev JOIN st USING (event_type) GROUP BY 1, 2),
-          bc AS (
-            SELECT event_type, bin, sum(c) OVER (PARTITION BY event_type
-              ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum
-            FROM bh),
-          es AS (
-            SELECT bc.event_type, $bins
-            FROM bc JOIN st USING (event_type) GROUP BY 1),
-          j AS (
-            SELECT st.event_type, n, mn, mx, ex.*, es.*
-            FROM st JOIN ex USING (event_type) JOIN es USING (event_type)),
-          stacked AS ($arms)
-          SELECT event_type, n, mn, mx, pct, exact_cents,
-            mn + (bin * (mx - mn + 1) + 127) // 128 AS est_cents,
-            (mx - mn + 128) // 128 AS bin_w,
-            exact_cents - (mn + (bin * (mx - mn + 1) + 127) // 128) AS err,
-            exact_cents - (mn + (bin * (mx - mn + 1) + 127) // 128) >= 0
-              AND exact_cents - (mn + (bin * (mx - mn + 1) + 127) // 128)
-                  <= (mx - mn + 128) // 128 AS within_bin
-          FROM stacked ORDER BY event_type, pct"""
-    },
-    "q155_dow_seasonality" -> {
-      // same conditional-sum pivot (zero-count bins first-class) +
-      // the same Σ(7O−n)²/(7n) integer identity; the 7-way UNION ALL
-      // unpivot is the stack() twin
-      val os = (0 to 6).map(d =>
-        s"CAST(sum(CASE WHEN dw = $d THEN 1 ELSE 0 END) AS BIGINT) AS o$d")
-        .mkString(", ")
-      val sq = (0 to 6).map(d =>
-        s"CAST(7 * o$d - n AS HUGEINT) * CAST(7 * o$d - n AS HUGEINT)")
-        .mkString(" + ")
-      val arms = (0 to 6).map(d =>
-        s"""SELECT event_type, n AS n_events, chi2_mills,
-              CAST($d AS BIGINT) AS dow, o$d AS n_dow FROM c""")
-        .mkString(" UNION ALL ")
-      s"""WITH p AS (
-           SELECT event_type, CAST(count(*) AS BIGINT) AS n, $os
-           FROM (SELECT event_type, dayofweek(CAST(ts AS DATE)) AS dw
-                 FROM events)
-           GROUP BY 1),
-         c AS (
-           SELECT event_type, n,
-             CAST((1000 * ($sq)) // (7 * CAST(n AS HUGEINT)) AS BIGINT)
-               AS chi2_mills,
-             o0, o1, o2, o3, o4, o5, o6
-           FROM p)
-         SELECT event_type, n_events, chi2_mills, dow,
-           n_dow, (1000 * n_dow) // n_events AS share_mills
-         FROM ($arms) ORDER BY event_type, dow"""
-    },
-    "q154_daily_trend" ->
-      // same rebase + 5-sum OLS algebra; HUGEINT twins DECIMAL(38,0),
-      // both divisions truncate toward zero so signed slopes agree
-      """WITH g AS (
-           SELECT event_type,
-             CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
-               AS BIGINT) AS day,
-             CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
-         x AS (
-           SELECT event_type,
-             day - min(day) OVER (PARTITION BY event_type) AS x, y
-           FROM g),
-         a AS (
-           SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_days,
-             CAST(sum(y) AS BIGINT) AS n_events,
-             CAST(sum(x) AS BIGINT) AS sx,
-             CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-             CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-             CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-           FROM x GROUP BY 1 HAVING count(*) >= 2)
-         SELECT event_type, n_days, n_events,
-           CAST(((CAST(n_days AS HUGEINT) * sxy
-                 - CAST(sx AS HUGEINT) * n_events) * 1000)
-             // (CAST(n_days AS HUGEINT) * sxx
-                 - CAST(sx AS HUGEINT) * sx) AS BIGINT)
-             AS slope_mills_per_day,
-           CASE WHEN CAST(n_days AS HUGEINT) * syy
-                 - CAST(n_events AS HUGEINT) * n_events = 0
-             THEN 1000
-             ELSE CAST(((CAST(n_days AS HUGEINT) * sxy
-                   - CAST(sx AS HUGEINT) * n_events)
-                 * (CAST(n_days AS HUGEINT) * sxy
-                   - CAST(sx AS HUGEINT) * n_events) * 1000)
-               // ((CAST(n_days AS HUGEINT) * sxx
-                   - CAST(sx AS HUGEINT) * sx)
-                 * (CAST(n_days AS HUGEINT) * syy
-                   - CAST(n_events AS HUGEINT) * n_events)) AS BIGINT)
-             END AS r2_mills
-         FROM a ORDER BY 1""",
-    "q153_mad_outliers" ->
-      // same two histogram-selection chains + the same 3×MAD fence
-      """WITH v AS (
-           SELECT event_type, CAST(floor(value * 100) AS BIGINT) AS v
-           FROM events WHERE value IS NOT NULL),
-         h AS (
-           SELECT event_type, v, CAST(count(*) AS BIGINT) AS cnt
-           FROM v GROUP BY 1, 2),
-         m AS (
-           SELECT event_type,
-             min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS median_cents
-           FROM (SELECT event_type, v, cnt,
-               sum(cnt) OVER (PARTITION BY event_type ORDER BY v
-                 ROWS UNBOUNDED PRECEDING) AS cum,
-               sum(cnt) OVER (PARTITION BY event_type) AS n
-             FROM h)
-           GROUP BY 1),
-         hd AS (
-           SELECT v.event_type, abs(v.v - m.median_cents) AS d,
-             CAST(count(*) AS BIGINT) AS cnt
-           FROM v JOIN m USING (event_type) GROUP BY 1, 2),
-         md AS (
-           SELECT event_type,
-             min(CASE WHEN cum >= (n + 1) // 2 THEN d END) AS mad_cents,
-             max(n) AS n_events
-           FROM (SELECT event_type, d, cnt,
-               sum(cnt) OVER (PARTITION BY event_type ORDER BY d
-                 ROWS UNBOUNDED PRECEDING) AS cum,
-               sum(cnt) OVER (PARTITION BY event_type) AS n
-             FROM hd)
-           GROUP BY 1)
-         SELECT hd.event_type,
-           CAST(max(md.n_events) AS BIGINT) AS n_events,
-           CAST(max(m.median_cents) AS BIGINT) AS median_cents,
-           CAST(max(md.mad_cents) AS BIGINT) AS mad_cents,
-           CAST(coalesce(sum(CASE WHEN hd.d > 3 * md.mad_cents
-             THEN hd.cnt END), 0) AS BIGINT) AS n_outliers,
-           CAST((1000 * coalesce(sum(CASE WHEN hd.d > 3 * md.mad_cents
-             THEN hd.cnt END), 0)) // max(md.n_events) AS BIGINT)
-             AS outlier_mills
-         FROM hd
-         JOIN md USING (event_type) JOIN m USING (event_type)
-         GROUP BY 1 ORDER BY 1""",
-    "q152_abc_pareto" ->
-      // same value-level banding over the revenue histogram; HUGEINT
-      // is the twin of Spark's DECIMAL(38,0) exact threshold/share math
-      s"""WITH pr AS (
-           SELECT l_partkey, $revenueCentsSumSql AS rev
-           FROM lineitem GROUP BY 1),
-         h AS (
-           SELECT rev, CAST(count(*) AS BIGINT) AS n_parts,
-             CAST(rev * count(*) AS BIGINT) AS mass
-           FROM pr GROUP BY 1),
-         c AS (
-           SELECT n_parts, mass,
-             sum(mass) OVER (ORDER BY rev DESC ROWS UNBOUNDED PRECEDING)
-               AS cum,
-             sum(mass) OVER () AS total
-           FROM h),
-         cls AS (
-           SELECT CASE
-               WHEN CAST(cum AS HUGEINT) * 1000
-                 <= CAST(total AS HUGEINT) * 800 THEN 'A'
-               WHEN CAST(cum AS HUGEINT) * 1000
-                 <= CAST(total AS HUGEINT) * 950 THEN 'B'
-               ELSE 'C' END AS abc_class,
-             n_parts, mass, total
-           FROM c)
-         SELECT abc_class,
-           CAST(sum(n_parts) AS BIGINT) AS n_parts,
-           CAST(sum(mass) AS BIGINT) AS revenue_cents,
-           CAST((CAST(sum(mass) AS HUGEINT) * 1000)
-             // CAST(max(total) AS HUGEINT) AS BIGINT) AS share_mills
-         FROM cls GROUP BY 1 ORDER BY 1""",
-    "q148_interarrival" ->
-      // identical gap derivation and rank-threshold arithmetic
-      """WITH g AS (
-           SELECT event_type,
-             CAST(floor(epoch(ts)) - floor(epoch(lag(ts) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id)))
-               AS BIGINT) AS gap_s
-           FROM events),
-         h AS (
-           SELECT event_type, gap_s, CAST(count(*) AS BIGINT) AS cnt
-           FROM g WHERE gap_s IS NOT NULL GROUP BY 1, 2),
-         r AS (
-           SELECT *,
-             sum(cnt) OVER (PARTITION BY event_type ORDER BY gap_s
-               ROWS UNBOUNDED PRECEDING) AS cum,
-             sum(cnt) OVER (PARTITION BY event_type) AS n
-           FROM h)
-         SELECT event_type, CAST(max(n) AS BIGINT) AS n_gaps,
-           min(CASE WHEN cum >= (n + 1) // 2 THEN gap_s END)
-             AS median_gap_s,
-           min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN gap_s END)
-             AS p90_gap_s
-         FROM r GROUP BY event_type ORDER BY event_type""",
-    "q24_union_orders" ->
-      """SELECT o_orderkey FROM orders WHERE o_totalprice >= 250000
-         UNION
-         SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'
-         ORDER BY o_orderkey""",
-    "q25_merge_snapshots" ->
-      """WITH old AS (
-           SELECT o_orderkey AS key, CAST(floor(o_totalprice * 100) AS BIGINT) AS old_cents
-           FROM orders WHERE o_orderkey % 3 <= 1),
-         neu AS (
-           SELECT o_orderkey AS key, CAST(floor(o_totalprice * 100) AS BIGINT) + 100 AS new_cents
-           FROM orders WHERE o_orderkey % 3 >= 1)
-         SELECT coalesce(old.key, neu.key) AS key,
-           CASE WHEN old_cents IS NOT NULL AND new_cents IS NOT NULL THEN 'update'
-                WHEN new_cents IS NOT NULL THEN 'insert' ELSE 'delete' END AS action,
-           coalesce(new_cents, old_cents) AS merged_cents
-         FROM old FULL OUTER JOIN neu ON old.key = neu.key
-         ORDER BY key""",
-    "q26_segments_by_nation" ->
-      """SELECT n_name,
-         array_to_string(list_sort(list_distinct(list(c_mktsegment))), ',') AS segments,
-         count(*) AS n_customers
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name""",
-    "q27_distinct_segments" ->
-      """SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment""",
-    "q28_global_stats" ->
-      """SELECT count(*) AS n_rows, CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-         count(DISTINCT l_partkey) AS n_parts,
-         count(DISTINCT l_suppkey) AS n_suppliers
-         FROM lineitem""",
-    // DuckDB reads events.ts at MICRO precision, so epoch_us(ts) is the
-    // exact twin of Spark's `ts div 1000` (Tables) + unix_micros.
-    // change = IS DISTINCT FROM (null-safe, like Spark's <=> negation)
-    // OR first-row-of-key (lag(1) IS NULL — a first row with a null
-    // attribute must still open version 1, matching Scd2.buildHistory);
-    // valid_to is ordered by version_no so same-ts boundaries stay
-    // deterministic; grouping by event_type directly is safe because
-    // the attribute is constant within a version; is_current is the
-    // structural last version (lead(1) IS NULL), not valid_to IS NULL,
-    // matching the operator's null-ts contract.
-    "q82_scd2_history" ->
-      s"""WITH ${scd2HistoryCtes("events")}
-         SELECT user_id, version_no, event_type,
-           epoch_us(vf) AS from_us,
-           coalesce(epoch_us(lead(vf) OVER
-             (PARTITION BY user_id ORDER BY version_no)), -1) AS to_us,
-           lead(1) OVER (PARTITION BY user_id ORDER BY version_no)
-             IS NULL AS is_current,
-           n_rows
-         FROM hist ORDER BY user_id, version_no""",
-    "q103_pit_lookup" ->
-      // the history recompute (shared scd2HistoryCtes, here over the
-      // non-purchase state stream) + DuckDB's native ASOF for the
-      // point-in-time pick — an independent derivation of the engine's
-      // buildHistory ∘ asofBackward composition
-      s"""WITH ${scd2HistoryCtes(
-             "(SELECT * FROM events WHERE event_type <> 'purchase')")},
-         p AS (
-           SELECT event_id, user_id, ts FROM events
-           WHERE event_type = 'purchase')
-         SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-           coalesce(h.version_no, -1) AS m_version_no,
-           coalesce(h.state_type, 'none') AS m_state_type
-         FROM p ASOF LEFT JOIN
-           (SELECT user_id, vf, version_no, event_type AS state_type
-            FROM hist) h
-           ON p.user_id = h.user_id AND p.ts >= h.vf
-         ORDER BY p.event_id""")
 
   /** DuckDB CTE body recomputing the SCD2 history (q82's contract)
     * over `src` (a table name or parenthesized subquery): yields CTE

@@ -641,17 +641,20 @@ object TextQueries {
       byBand, Seq("band_no", "sig"), "doc_id", LshBucketCap)
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // Exact dedup via content hash: one hash-agg shuffle on md5 key.
-    "q29_dedup_exact" -> ((s, dir) => {
+    Query("q29_dedup_exact", (s, dir) => {
       docs(s, dir)
         .groupBy(TextFunctions.contentKey(col("text")).as("content_key"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_count"))
         .orderBy("keep_id")
-    }),
+    },
+      """SELECT md5(lower(trim(text))) AS content_key,
+         min(doc_id) AS keep_id, count(*) AS dup_count
+         FROM documents GROUP BY 1 ORDER BY keep_id"""),
 
     // Token statistics + fingerprint per document (pure projection).
-    "q30_token_stats" -> ((s, dir) => {
+    Query("q30_token_stats", (s, dir) => {
       docs(s, dir)
         .select(
           col("doc_id"),
@@ -660,7 +663,13 @@ object TextQueries {
           length(trim(col("text"))).cast("long").as("n_chars_trim"),
           TextFunctions.fingerprint(col("text")).as("fingerprint"))
         .orderBy("doc_id")
-    }),
+    },
+      s"""SELECT doc_id,
+         CAST($sqlTokenCount AS BIGINT) AS n_tokens,
+         CAST(len($sqlTokSet) AS BIGINT) AS n_distinct_tokens,
+         CAST(length(trim(text)) AS BIGINT) AS n_chars_trim,
+         md5(array_to_string($sqlTokSet, ' ')) AS fingerprint
+         FROM documents ORDER BY doc_id"""),
 
     // Quantile sketch gate: exact DISCRETE p50/p90/p99 of n_chars per
     // lang from ONE histogram pass (the q57 selection generalized to
@@ -670,7 +679,7 @@ object TextQueries {
     // literal TRUE, so an out-of-bound sketch hash-fails. Raw sketch
     // values are NOT emitted (GK merge order is engine/run-specific);
     // the bound is the portable surface.
-    "q81_quantile_sketch" -> ((s, dir) => {
+    Query("q81_quantile_sketch", (s, dir) => {
       // n_chars IS NOT NULL on BOTH sides (the q153 null-sort
       // discipline: Spark cumulates NULLS FIRST, DuckDB LAST)
       val d = docsSpread(s, dir).select(col("lang"), col("n_chars"))
@@ -721,25 +730,44 @@ object TextQueries {
         .select(col("lang"), col("p_mills"), col("exact_val"),
           col("sketch_in_bound"))
         .orderBy("lang", "p_mills")
+    }, {
+      val per = QuantilePercentiles.map {
+        case (pm, num, den) =>
+          s"""SELECT lang, CAST($pm AS BIGINT) AS p_mills,
+             CAST(min(CASE WHEN cum >= (n * $num + ${den - 1}) // $den
+               THEN n_chars END) AS BIGINT) AS exact_val,
+             TRUE AS sketch_in_bound
+             FROM r GROUP BY lang"""
+      }.mkString(" UNION ALL ")
+      s"""WITH h AS (
+           SELECT lang, n_chars, count(*) AS cnt
+           FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
+         r AS (
+           SELECT lang, n_chars, cnt,
+             sum(cnt) OVER (PARTITION BY lang ORDER BY n_chars
+               ROWS UNBOUNDED PRECEDING) AS cum,
+             sum(cnt) OVER (PARTITION BY lang) AS n
+           FROM h)
+         $per ORDER BY lang, p_mills"""
     }),
 
     // BM25 (rational-idf) keyword retrieval: top-10 docs per query over
     // the document corpus — the lexical twin of the ANN top-k family.
-    "q79_bm25_topk" -> ((s, dir) => {
+    Query("q79_bm25_topk", (s, dir) => {
       import s.implicits._
       val qs = Bm25Queries.toDF("qid", "qtext")
       graft.operators.Retrieval.bm25TopK(
           docsSpread(s, dir), qs, "doc_id", "text", "qid", "qtext",
           k = Bm25K, k1 = Bm25K1, b = Bm25B)
         .orderBy("qid", "rank")
-    }),
+    }, bm25OracleSql),
     // Hybrid retrieval (Retrieval.rrfFuse): the q79 BM25 lexical
     // ranking and a brute-cosine semantic ranking (q37 kernel; query
     // vector of qid = embedding vec_id qid·20) fused by reciprocal-rank
     // — integer contributions 1000000 div (60 + rank), missing source
     // contributes 0. Both inputs are top-k frames, so fusion is
     // bounded by |queries|·k rows whatever the corpus size.
-    "q117_hybrid_rrf" -> ((s, dir) => {
+    Query("q117_hybrid_rrf", (s, dir) => {
       import s.implicits._
       val qs = Bm25Queries.toDF("qid", "qtext")
       val lex = graft.operators.Retrieval.bm25TopK(
@@ -766,10 +794,42 @@ object TextQueries {
           Seq("lex" -> lex, "sem" -> sem), "qid", "doc_id", "rank",
           k = Bm25K, k0 = RrfK0)
         .orderBy("qid", "rank")
+    }, {
+      // the SAME factored lexical SQL as q79's oracle rides as a
+      // subquery; semantic side mirrors q37's quantized-cosine twin;
+      // fusion is pure integer floor-division (DuckDB `//` ≡ Spark
+      // `div` on positive BIGINTs)
+      val vecIds = Bm25Queries.map(_._1 * HybridVecStride).mkString(", ")
+      val quant = VectorQueries.quant
+      s"""WITH lex AS (
+           SELECT qid, doc_id, rank AS rank_lex FROM ($bm25OracleSql)),
+         qv AS (SELECT vec_id // $HybridVecStride AS qid, $quant AS qv
+                FROM embeddings WHERE vec_id IN ($vecIds)),
+         c AS (SELECT vec_id AS doc_id, $quant AS cv FROM embeddings),
+         ss AS (SELECT qid, doc_id, ${VectorQueries.cossq("qv", "cv")} AS cos
+                FROM c CROSS JOIN qv),
+         sr AS (SELECT qid, doc_id, row_number() OVER (PARTITION BY qid
+                  ORDER BY cos DESC, doc_id) AS rank_sem FROM ss),
+         sem AS (SELECT qid, doc_id, rank_sem FROM sr
+                 WHERE rank_sem <= $Bm25K),
+         u AS (SELECT coalesce(l.qid, s.qid) AS qid,
+                 coalesce(l.doc_id, s.doc_id) AS doc_id,
+                 l.rank_lex, s.rank_sem
+               FROM lex l FULL OUTER JOIN sem s
+                 ON l.qid = s.qid AND l.doc_id = s.doc_id),
+         f AS (SELECT qid, doc_id, rank_lex, rank_sem,
+                 CAST(coalesce(1000000 // ($RrfK0 + rank_lex), 0)
+                    + coalesce(1000000 // ($RrfK0 + rank_sem), 0)
+                   AS BIGINT) AS rrf_mills
+               FROM u),
+         rr AS (SELECT *, row_number() OVER (PARTITION BY qid
+                  ORDER BY rrf_mills DESC, doc_id) AS rank FROM f)
+         SELECT qid, rank, doc_id, rrf_mills, rank_lex, rank_sem
+         FROM rr WHERE rank <= $Bm25K ORDER BY qid, rank"""
     }),
 
     // Quality scoring in integer mills + stopword hits.
-    "q31_quality_score" -> ((s, dir) => {
+    Query("q31_quality_score", (s, dir) => {
       docs(s, dir)
         .select(
           col("doc_id"),
@@ -778,11 +838,33 @@ object TextQueries {
             TextFunctions.tokens(col("text")), TextAnalysis.DefaultStopwords)
             .cast("long").as("stopword_hits"))
         .orderBy("doc_id")
-    }),
+    },
+      ("""WITH m AS (
+           SELECT doc_id, length(text) AS len,
+             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
+             CASE WHEN length(trim(text)) = 0 THEN 0
+               ELSE len(list_filter(string_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ' '), t -> t <> '')) END AS toks
+           FROM documents),
+         sw AS (
+           -- stopword list interpolated from TextAnalysis.DefaultStopwords
+           -- (the engine's source) -- never hand-sync it here
+           SELECT doc_id, CAST(count(*) FILTER (WHERE lower(tok) IN
+             (""" +
+        graft.operators.TextAnalysis.DefaultStopwords
+          .map(w => s"'$w'").mkString(",") +
+        """)) AS BIGINT) AS hits
+           FROM (SELECT doc_id,
+                   unnest(list_filter(string_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ' '), t -> t <> '')) AS tok
+                 FROM documents) u
+           GROUP BY doc_id)
+         SELECT m.doc_id,
+           """ + sqlQualityMills + """ AS quality_mills,
+           coalesce(sw.hits, 0) AS stopword_hits
+         FROM m LEFT JOIN sw USING (doc_id) ORDER BY doc_id""")),
 
     // Language-ID heuristic (marker-token argmax; ties → lexicographically
     // greatest language, no hits → 'und').
-    "q32_lang_id" -> ((s, dir) => {
+    Query("q32_lang_id", (s, dir) => {
       docs(s, dir)
         .select(
           col("doc_id"), col("lang"),
@@ -790,18 +872,59 @@ object TextQueries {
             TextFunctions.tokens(lower(col("text"))), TextAnalysis.DefaultMarkers)
             .as("lang_pred"))
         .orderBy("doc_id")
+    }, {
+      // marker tables interpolated from TextAnalysis.DefaultMarkers
+      // (the engine's source) — never hand-sync them here
+      def markers(l: String) = graft.operators.TextAnalysis
+        .DefaultMarkers(l).map(w => s"'$w'").mkString(",")
+      """WITH toks AS (
+           SELECT doc_id, lang,
+             unnest(list_filter(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '), t -> t <> '')) AS tok
+           FROM documents),
+         hits AS (
+           SELECT doc_id, lang,
+             CAST(sum(CASE WHEN tok IN (""" + markers("en") + """) THEN 1 ELSE 0 END) AS BIGINT) AS h_en,
+             CAST(sum(CASE WHEN tok IN (""" + markers("es") + """) THEN 1 ELSE 0 END) AS BIGINT) AS h_es,
+             CAST(sum(CASE WHEN tok IN (""" + markers("de") + """) THEN 1 ELSE 0 END) AS BIGINT) AS h_de,
+             CAST(sum(CASE WHEN tok IN (""" + markers("fr") + """) THEN 1 ELSE 0 END) AS BIGINT) AS h_fr
+           FROM toks GROUP BY doc_id, lang)
+         SELECT doc_id, lang,
+           CASE WHEN greatest(h_en, h_es, h_de, h_fr) = 0 THEN 'und'
+                WHEN h_fr = greatest(h_en, h_es, h_de, h_fr) THEN 'fr'
+                WHEN h_es = greatest(h_en, h_es, h_de, h_fr) THEN 'es'
+                WHEN h_en = greatest(h_en, h_es, h_de, h_fr) THEN 'en'
+                ELSE 'de' END AS lang_pred
+         FROM hits ORDER BY doc_id"""
     }),
 
     // SimHash signature (8-bit here, parity-of-md5-hex-char bit weights).
-    "q33_simhash" -> ((s, dir) => {
+    Query("q33_simhash", (s, dir) => {
       docsSpread(s, dir)
         .select(col("doc_id"), TextFunctions.simhash(col("text"), 8).as("simhash"))
         .orderBy("doc_id")
+    }, {
+      val sums = (0 until 8).map(i =>
+        s"sum(CASE WHEN ascii(substr(md5(tok), ${i + 1}, 1)) % 2 = 1 THEN 1 ELSE -1 END) AS s$i")
+        .mkString(", ")
+      val pack = (0 until 8).map(i =>
+        s"(CASE WHEN s$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")
+      // row-preserving like the engine's projection: a token-less doc
+      // simhashes to 0 (all bit sums zero), a NULL text to NULL — the
+      // bare GROUP BY would DROP such docs and row-count-diverge
+      s"""WITH toks AS (
+           SELECT doc_id, unnest($sqlTokSet) AS tok FROM documents),
+         bits AS (SELECT doc_id, $sums FROM toks GROUP BY doc_id),
+         packed AS (SELECT doc_id, CAST($pack AS BIGINT) AS simhash FROM bits)
+         SELECT d.doc_id,
+           CASE WHEN d.text IS NULL THEN NULL
+                ELSE coalesce(p.simhash, 0) END AS simhash
+         FROM documents d LEFT JOIN packed p USING (doc_id)
+         ORDER BY doc_id"""
     }),
 
     // MinHash signature (4 salted-md5 min-hashes in one pass; codegen's
     // subexpression elimination computes the signature array once).
-    "q34_minhash_sig" -> ((s, dir) => {
+    Query("q34_minhash_sig", (s, dir) => {
       val sig = graft.functions.TextHash.minhashSignature(col("text"), 0 until 4)
       docsSpread(s, dir)
         .select(
@@ -809,13 +932,30 @@ object TextQueries {
           element_at(sig, 1).as("mh0"), element_at(sig, 2).as("mh1"),
           element_at(sig, 3).as("mh2"), element_at(sig, 4).as("mh3"))
         .orderBy("doc_id")
-    }),
+    },
+      // row-preserving, q33's rule: empty token set min-hashes to ''
+      // per seed (TextHash.minhashKernel), NULL text to NULL
+      s"""WITH toks AS (
+           SELECT doc_id, unnest($sqlTokSet) AS tok FROM documents),
+         m AS (
+           SELECT doc_id, ${sqlMinhash(0)} AS mh0, ${sqlMinhash(1)} AS mh1,
+             ${sqlMinhash(2)} AS mh2, ${sqlMinhash(3)} AS mh3
+           FROM toks GROUP BY doc_id)
+         SELECT d.doc_id,
+           CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(m.mh0, '') END AS mh0,
+           CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(m.mh1, '') END AS mh1,
+           CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(m.mh2, '') END AS mh2,
+           CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(m.mh3, '') END AS mh3
+         FROM documents d LEFT JOIN m USING (doc_id)
+         ORDER BY doc_id"""),
 
     // MinHash-LSH candidate pairs: 2 bands × 4 rows, banded equi-join on
     // the band string (the anti-cross-product design), on a 1-in-5
     // document sample.
-    "q35_lsh_pairs" -> ((s, dir) =>
-      lshPairs(s, dir).orderBy("id_a", "id_b")),
+    Query("q35_lsh_pairs", (s, dir) =>
+      lshPairs(s, dir).orderBy("id_a", "id_b"),
+      s"""WITH $lshPairsCtes
+         SELECT id_a, id_b FROM pairs ORDER BY id_a, id_b"""),
 
     // LSH S-curve audit — the measurement that tells a dedup operator
     // whether its banding is tuned: empirical recall of the REAL q35
@@ -834,9 +974,51 @@ object TextQueries {
     // propagation are what's audited, not a re-derivation. Joins are
     // pair-keyed / id-keyed over candidate-bounded frames; recalls in
     // exact floored mills.
-    "q192_lsh_scurve" -> ((s, dir) =>
+    Query("q192_lsh_scurve", (s, dir) =>
       scurveAudit(docsSpread(s, dir).where(col("doc_id") % 5 === 0))
-        .orderBy("bucket_lo_hmills")),
+        .orderBy("bucket_lo_hmills"), {
+      // ground truth is the NAIVE all-pairs Jaccard twin (parity
+      // proves the PPJoin prefix lossless at the audit floor); the LSH
+      // side is the shared q35 CTE chain and q53's recursive-closure
+      // twin, so the capped banding AND the label propagation are
+      // what's audited on both engines
+      val jm = "floor(1000 * len(list_intersect(a.toks, b.toks)) " +
+        "/ (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))))"
+      s"""WITH RECURSIVE $lshPairsCtes,
+         edges AS (
+           SELECT id_a AS src, id_b AS dst FROM pairs
+           UNION
+           SELECT id_b AS src, id_a AS dst FROM pairs),
+         reach AS (
+           SELECT src AS id, src AS comp FROM edges
+           UNION
+           SELECT e.dst AS id, r.comp FROM reach r
+           JOIN edges e ON e.src = r.id),
+         cmp AS (SELECT id, min(comp) AS comp FROM reach GROUP BY 1),
+         d AS (SELECT doc_id, $sqlTokSet AS toks
+               FROM documents WHERE doc_id % 5 = 0),
+         tr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                  CAST($jm AS BIGINT) AS jac_mills
+                FROM d a JOIN d b ON a.doc_id < b.doc_id
+                WHERE $jm >= $LshAuditMinJac),
+         au AS (SELECT tr.jac_mills // 100 AS bucket_lo_hmills,
+                  CAST(count(*) AS BIGINT) AS n_true,
+                  CAST(sum(CASE WHEN p.id_a IS NOT NULL THEN 1 ELSE 0
+                    END) AS BIGINT) AS n_pair,
+                  CAST(sum(CASE WHEN ca.comp IS NOT NULL
+                    AND ca.comp = cb.comp THEN 1 ELSE 0
+                    END) AS BIGINT) AS n_closure
+                FROM tr
+                LEFT JOIN pairs p
+                  ON tr.id_a = p.id_a AND tr.id_b = p.id_b
+                LEFT JOIN cmp ca ON tr.id_a = ca.id
+                LEFT JOIN cmp cb ON tr.id_b = cb.id
+                GROUP BY 1)
+         SELECT bucket_lo_hmills, n_true, n_pair, n_closure,
+           (1000 * n_pair) // n_true AS recall_pair_mills,
+           (1000 * n_closure) // n_true AS recall_closure_mills
+         FROM au ORDER BY bucket_lo_hmills"""
+    }),
 
     // The q192 audit AT SCALE, executable: the reference's candidate
     // retrieval carries implicit recall expectations (`app/etl.py:1272`
@@ -859,7 +1041,7 @@ object TextQueries {
     // truncates the full corpus's hot buckets, so the sampled
     // DIRECT-pair recall reads optimistic; closure recall is the
     // cap-stable statistic.
-    "q194_lsh_scurve_sampled" -> ((s, dir) => {
+    Query("q194_lsh_scurve_sampled", (s, dir) => {
       val sample = graft.operators.TextAnalysis.stratifiedSample(
         docsSpread(s, dir).where(col("doc_id") % 5 === 0),
         "lang", "doc_id", Map.empty, defaultRate = ScurveSampleRate)
@@ -871,12 +1053,61 @@ object TextQueries {
         .withColumn("coverage_mills",
           expr("(1000 * n_sample_docs) div n_subset_docs"))
         .orderBy("bucket_lo_hmills")
+    }, {
+      // the q192 chain verbatim, restricted to the shared md5-threshold
+      // sample filter (ground truth, banding AND closure all inside the
+      // sample), plus the coverage fraction recomputed independently
+      val jm = "floor(1000 * len(list_intersect(a.toks, b.toks)) " +
+        "/ (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))))"
+      s"""WITH RECURSIVE ${lshPairsCtesWhere(scurveSampleFilter)},
+         edges AS (
+           SELECT id_a AS src, id_b AS dst FROM pairs
+           UNION
+           SELECT id_b AS src, id_a AS dst FROM pairs),
+         reach AS (
+           SELECT src AS id, src AS comp FROM edges
+           UNION
+           SELECT e.dst AS id, r.comp FROM reach r
+           JOIN edges e ON e.src = r.id),
+         cmp AS (SELECT id, min(comp) AS comp FROM reach GROUP BY 1),
+         d AS (SELECT doc_id, $sqlTokSet AS toks
+               FROM documents WHERE $scurveSampleFilter),
+         tr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                  CAST($jm AS BIGINT) AS jac_mills
+                FROM d a JOIN d b ON a.doc_id < b.doc_id
+                WHERE $jm >= $LshAuditMinJac),
+         cov AS (SELECT
+                  (SELECT count(*) FROM documents
+                   WHERE $scurveSampleFilter) AS n_sample_docs,
+                  (SELECT count(*) FROM documents
+                   WHERE doc_id % 5 = 0) AS n_subset_docs),
+         au AS (SELECT tr.jac_mills // 100 AS bucket_lo_hmills,
+                  CAST(count(*) AS BIGINT) AS n_true,
+                  CAST(sum(CASE WHEN p.id_a IS NOT NULL THEN 1 ELSE 0
+                    END) AS BIGINT) AS n_pair,
+                  CAST(sum(CASE WHEN ca.comp IS NOT NULL
+                    AND ca.comp = cb.comp THEN 1 ELSE 0
+                    END) AS BIGINT) AS n_closure
+                FROM tr
+                LEFT JOIN pairs p
+                  ON tr.id_a = p.id_a AND tr.id_b = p.id_b
+                LEFT JOIN cmp ca ON tr.id_a = ca.id
+                LEFT JOIN cmp cb ON tr.id_b = cb.id
+                GROUP BY 1)
+         SELECT bucket_lo_hmills, n_true, n_pair, n_closure,
+           (1000 * n_pair) // n_true AS recall_pair_mills,
+           (1000 * n_closure) // n_true AS recall_closure_mills,
+           CAST(cov.n_sample_docs AS BIGINT) AS n_sample_docs,
+           CAST(cov.n_subset_docs AS BIGINT) AS n_subset_docs,
+           (1000 * cov.n_sample_docs) // cov.n_subset_docs
+             AS coverage_mills
+         FROM au, cov ORDER BY bucket_lo_hmills"""
     }),
 
     // Dedup GROUPS: connected components over the q35 pair graph (keep
     // min id per component, drop the rest) — min-label propagation, one
     // equi-shuffle per round, converging in graph-diameter rounds.
-    "q53_dedup_components" -> ((s, dir) => {
+    Query("q53_dedup_components", (s, dir) => {
       // (measured: shrinking shuffle partitions for the tiny per-round
       // frames does NOT help here — local[32] amortizes task overhead
       // and the checkpoint writes parallelize; the loop's cost is its
@@ -884,7 +1115,22 @@ object TextQueries {
       graft.operators.Dedup.connectedComponents(lshPairs(s, dir))
         .select(col("id").as("doc_id"), col("comp").as("component"))
         .orderBy("doc_id")
-    }),
+    },
+      // transitive closure by label propagation: every node reaches its
+      // whole component through the bidirectional edge list; min over
+      // reached labels = canonical component id. Feasible at oracle
+      // scale; the engine side does the same by iterated min-shuffles.
+      s"""WITH RECURSIVE $lshPairsCtes,
+         edges AS (
+           SELECT id_a AS src, id_b AS dst FROM pairs
+           UNION
+           SELECT id_b AS src, id_a AS dst FROM pairs),
+         reach AS (
+           SELECT src AS id, src AS comp FROM edges
+           UNION
+           SELECT e.dst AS id, r.comp FROM reach r JOIN edges e ON e.src = r.id)
+         SELECT id AS doc_id, min(comp) AS component
+         FROM reach GROUP BY id ORDER BY doc_id"""),
 
     // Near-dedup keeper cut (round 13) — the COMPOSED within-corpus
     // fuzzy-dedup stage `Engine.processCorpus(nearDedup = ...)` runs,
@@ -898,7 +1144,7 @@ object TextQueries {
     // EngineSpec's parity test pins the facade stage to this exact
     // composition, so processCorpus's near-dedup is transitively
     // oracle-gated through this entry.
-    "q196_near_dedup" -> ((s, dir) => {
+    Query("q196_near_dedup", (s, dir) => {
       // round-13 OPT: one scan of the universe computes the token sets
       // AND the two q35 band signatures, materialized once — the
       // banding, both verify joins and the final universe projection
@@ -935,7 +1181,40 @@ object TextQueries {
           coalesce(col("comp"), col("doc_id")).as("component"))
         .withColumn("kept", col("component") === col("doc_id"))
         .orderBy("doc_id")
-    }),
+    },
+      // q53's closure pattern over the VERIFIED edge set: the q35 pair
+      // graph is cut to pairs whose exact token-set Jaccard (q108's
+      // list_intersect arithmetic — float division then floor, the
+      // engine's exact shape) reaches NearDedupMinJac, then min-label
+      // closure + the keeper projection. Universe docs never reached
+      // by a verified edge keep their own id (LEFT JOIN + coalesce).
+      s"""WITH RECURSIVE $lshPairsCtes,
+         ts AS (SELECT doc_id, $sqlTokSet AS tset
+                FROM documents WHERE doc_id % 5 = 0),
+         verified AS (
+           SELECT p.id_a, p.id_b
+           FROM pairs p
+           JOIN ts x ON p.id_a = x.doc_id
+           JOIN ts y ON p.id_b = y.doc_id
+           WHERE floor(1000 * len(list_intersect(x.tset, y.tset))
+               / (len(x.tset) + len(y.tset)
+                  - len(list_intersect(x.tset, y.tset))))
+             >= $NearDedupMinJac),
+         edges AS (
+           SELECT id_a AS src, id_b AS dst FROM verified
+           UNION
+           SELECT id_b AS src, id_a AS dst FROM verified),
+         reach AS (
+           SELECT src AS id, src AS comp FROM edges
+           UNION
+           SELECT e.dst AS id, r.comp FROM reach r JOIN edges e ON e.src = r.id),
+         comp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id)
+         SELECT d.doc_id,
+           CAST(coalesce(c.component, d.doc_id) AS BIGINT) AS component,
+           (coalesce(c.component, d.doc_id) = d.doc_id) AS kept
+         FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
+         LEFT JOIN comp c ON c.id = d.doc_id
+         ORDER BY d.doc_id"""),
 
     // Vocabulary coverage curve — the tokenizer-planning head-mass
     // report: what share of total token MASS the top-k vocabulary
@@ -944,7 +1223,7 @@ object TextQueries {
     // partition ships k rows, no global sort materialization), then
     // rank/cumsum over the BOUNDED top frame against a 1-row
     // broadcast total.
-    "q150_vocab_coverage" -> ((s, dir) => {
+    Query("q150_vocab_coverage", (s, dir) => {
       val tc = docs(s, dir)
         .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
@@ -959,7 +1238,25 @@ object TextQueries {
         .select(col("k"), col("mass"),
           expr("(1000 * mass) div total").as("coverage_mills"))
         .orderBy("k")
-    }),
+    },
+      // identical rank/cumsum over the full vocab (bounded at oracle
+      // scale), cut to the same checkpoints
+      s"""WITH tc AS (
+           SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM (
+             SELECT unnest($tokenListSql) AS tok FROM documents)
+           WHERE tok <> '' GROUP BY 1),
+         tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM tc),
+         r AS (
+           SELECT tok, cnt,
+             CAST(row_number() OVER (ORDER BY cnt DESC, tok) AS BIGINT)
+               AS k,
+             sum(cnt) OVER (ORDER BY cnt DESC, tok
+               ROWS UNBOUNDED PRECEDING) AS mass
+           FROM tc)
+         SELECT k, CAST(mass AS BIGINT) AS mass,
+           CAST((1000 * mass) // total AS BIGINT) AS coverage_mills
+         FROM r CROSS JOIN tot
+         WHERE k IN (${CovKs.mkString(", ")}) ORDER BY k"""),
 
     // Zipf-law fit of the vocabulary (the tokenizer-planning sanity
     // check "is this corpus natural language?"): OLS of log2(freq)
@@ -971,7 +1268,7 @@ object TextQueries {
     // float math. One token-count shuffle, a TakeOrdered k-cut, the
     // rank window and all five sums over the BOUNDED top frame;
     // output is one row.
-    "q156_zipf_fit" -> ((s, dir) => {
+    Query("q156_zipf_fit", (s, dir) => {
       val wr = Window.orderBy(col("cnt").desc, col("tok"))
       val pts = tokStream(s, dir)
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
@@ -1004,6 +1301,53 @@ object TextQueries {
                   * (CAST(k_fit AS DECIMAL(38,0)) * syy
                     - CAST(sy AS DECIMAL(38,0)) * sy))
                 AS LONG) END""").as("r2_mills"))
+    }, {
+      // the shared Mitchell twin on rank and count + the q154 OLS
+      // algebra in HUGEINT — zero float math on either side
+      def mitchell(x: String) =
+        s"""(1000 * (length(printf('%b', $x)) - 1)
+           + (1000 * ($x - (CAST(1 AS BIGINT)
+               << CAST(length(printf('%b', $x)) - 1 AS INT))))
+             // (CAST(1 AS BIGINT)
+               << CAST(length(printf('%b', $x)) - 1 AS INT)))"""
+      s"""WITH tc AS (
+           SELECT tok, CAST(count(*) AS BIGINT) AS cnt
+           FROM $sqlTokRows WHERE tok <> '' GROUP BY tok),
+         top AS (
+           SELECT cnt,
+             CAST(row_number() OVER (ORDER BY cnt DESC, tok) AS BIGINT)
+               AS rk
+           FROM tc ORDER BY cnt DESC, tok LIMIT $ZipfK),
+         pts AS (
+           SELECT CAST(${mitchell("rk")} AS BIGINT) AS x,
+             CAST(${mitchell("cnt")} AS BIGINT) AS y
+           FROM top),
+         a AS (
+           SELECT CAST(count(*) AS BIGINT) AS k_fit,
+             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+             CAST(sum(x * y) AS BIGINT) AS sxy,
+             CAST(sum(x * x) AS BIGINT) AS sxx,
+             CAST(sum(y * y) AS BIGINT) AS syy
+           FROM pts HAVING count(*) >= 2)
+         SELECT k_fit,
+           CAST(((CAST(k_fit AS HUGEINT) * sxy
+                 - CAST(sx AS HUGEINT) * sy) * 1000)
+             // (CAST(k_fit AS HUGEINT) * sxx
+                 - CAST(sx AS HUGEINT) * sx) AS BIGINT)
+             AS zipf_slope_mills,
+           CASE WHEN CAST(k_fit AS HUGEINT) * syy
+                 - CAST(sy AS HUGEINT) * sy = 0
+             THEN 1000
+             ELSE CAST(((CAST(k_fit AS HUGEINT) * sxy
+                   - CAST(sx AS HUGEINT) * sy)
+                 * (CAST(k_fit AS HUGEINT) * sxy
+                   - CAST(sx AS HUGEINT) * sy) * 1000)
+               // ((CAST(k_fit AS HUGEINT) * sxx
+                   - CAST(sx AS HUGEINT) * sx)
+                 * (CAST(k_fit AS HUGEINT) * syy
+                   - CAST(sy AS HUGEINT) * sy)) AS BIGINT)
+             END AS r2_mills
+         FROM a"""
     }),
 
     // Vocabulary-growth curve (the Heaps-law companion to q156's Zipf
@@ -1017,7 +1361,7 @@ object TextQueries {
     // saturates in decile 0). One corpus gram scan + one gram-keyed
     // agg; the decile bounds ride a 1-row min/max broadcast and the
     // cumsum rides the ≤ 10-row frame.
-    "q158_vocab_growth" -> ((s, dir) => {
+    Query("q158_vocab_growth", (s, dir) => {
       val firstSeen = docs(s, dir)
         .select(col("doc_id"),
           explode(TextFunctions.wordNGrams(lower(col("text")), 2)).as("g"))
@@ -1032,7 +1376,32 @@ object TextQueries {
         .groupBy("bucket").agg(count(lit(1)).as("n_new_grams"))
         .withColumn("cum_vocab", sum(col("n_new_grams")).over(wb))
         .orderBy("bucket")
-    }),
+    },
+      // same first-seen attribution + decile arithmetic on the SAME
+      // lowered bigram constructor; the min/max subquery twins the
+      // 1-row broadcast
+      s"""WITH dt AS (
+           SELECT doc_id,
+             list_filter(string_split(regexp_replace(lower(trim(text)),
+               '\\s+', ' ', 'g'), ' '), t -> t <> '') AS l
+           FROM documents),
+         fs AS (
+           SELECT g, CAST(min(doc_id) AS BIGINT) AS first_doc
+           FROM (SELECT doc_id, unnest($wordBigramsAllSql) AS g FROM dt)
+           GROUP BY g),
+         b AS (
+           SELECT CAST(min(doc_id) AS BIGINT) AS mn,
+             CAST(max(doc_id) AS BIGINT) AS mx
+           FROM documents),
+         d AS (
+           SELECT least(9, ((first_doc - mn) * 10) // (mx - mn + 1))
+               AS bucket
+           FROM fs CROSS JOIN b)
+         SELECT CAST(bucket AS BIGINT) AS bucket,
+           CAST(count(*) AS BIGINT) AS n_new_grams,
+           CAST(sum(count(*)) OVER (ORDER BY bucket
+             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_vocab
+         FROM d GROUP BY bucket ORDER BY bucket"""),
 
     // CMS join-size estimation (Cormode & Muthukrishnan §4.2) — the
     // sketch a cost-based optimizer consults BEFORE running an
@@ -1051,7 +1420,7 @@ object TextQueries {
     // read from the sketches' own row-0 totals (no extra scan), the
     // N_a·N_b product in DECIMAL(38,0)/HUGEINT (overflows int64 at
     // ~3e9 tokens per side).
-    "q162_cms_joinsize" -> ((s, dir) => {
+    Query("q162_cms_joinsize", (s, dir) => {
       import graft.operators.CountMin
       // ONE corpus scan: the per-side token histogram (vocab-bounded)
       // is pinned, then BOTH sketches (weighted build — bit-identical
@@ -1085,7 +1454,57 @@ object TextQueries {
           col("est_join") <= col("exact_join") + col("eps_bound"))
         .select("n_a", "n_b", "exact_join", "est_join", "eps_bound",
           "ge_exact", "within_eps")
-    }),
+    },
+      // full bit-for-bit recompute of BOTH sketches, the min-row inner
+      // product (densified over all depth rows), the exact Σ fA·fB and
+      // both guarantee flags via the shared sqlCmsBucket contract —
+      // the flags are RECOMPUTED with the engine's own arithmetic
+      // (q84's fixture-sensitivity note applied), so parity never
+      // depends on the probabilistic bound holding
+      s"""WITH tokrows AS (
+            SELECT side, tok FROM $sqlTokRowsSided WHERE tok <> ''),
+          rows_d AS (SELECT CAST(unnest(range($CmsDepth)) AS INT) AS r),
+          ska AS (
+            SELECT r, ${sqlCmsBucket("tok", "r")} AS bucket,
+              CAST(count(*) AS BIGINT) AS cnt
+            FROM tokrows, rows_d WHERE side = 0 GROUP BY 1, 2),
+          skb AS (
+            SELECT r, ${sqlCmsBucket("tok", "r")} AS bucket,
+              CAST(count(*) AS BIGINT) AS cnt
+            FROM tokrows, rows_d WHERE side = 1 GROUP BY 1, 2),
+          prod AS (
+            SELECT a.r AS r, sum(CAST(a.cnt AS HUGEINT) * b.cnt) AS ip
+            FROM ska a JOIN skb b ON a.r = b.r AND a.bucket = b.bucket
+            GROUP BY 1),
+          est AS (
+            SELECT CAST(least(min(coalesce(prod.ip, 0)),
+                CAST(9223372036854775807 AS HUGEINT)) AS BIGINT) AS est_join
+            FROM rows_d LEFT JOIN prod ON rows_d.r = prod.r),
+          ex AS (
+            SELECT CAST(coalesce(sum(CAST(x.ca AS HUGEINT) * y.cb), 0)
+              AS BIGINT) AS exact_join
+            FROM (SELECT tok, count(*) AS ca FROM tokrows
+                  WHERE side = 0 GROUP BY 1) x
+            JOIN (SELECT tok, count(*) AS cb FROM tokrows
+                  WHERE side = 1 GROUP BY 1) y USING (tok)),
+          tot AS (
+            SELECT
+              (SELECT CAST(count(*) AS BIGINT) FROM tokrows WHERE side = 0)
+                AS n_a,
+              (SELECT CAST(count(*) AS BIGINT) FROM tokrows WHERE side = 1)
+                AS n_b),
+          sel AS (
+            SELECT n_a, n_b, exact_join, est_join,
+              CAST((${graft.operators.CountMin.EpsNum}
+                    * CAST(n_a AS HUGEINT) * n_b
+                    + ${graft.operators.CountMin.EpsDen * CmsWidth - 1})
+                   // ${graft.operators.CountMin.EpsDen * CmsWidth}
+                AS BIGINT) AS eps_bound
+            FROM est, ex, tot)
+          SELECT n_a, n_b, exact_join, est_join, eps_bound,
+            est_join >= exact_join AS ge_exact,
+            est_join <= exact_join + eps_bound AS within_eps
+          FROM sel"""),
 
     // Duplication-mass report — the "how much of my corpus is
     // duplicated" summary every dedup run ends with: the q53
@@ -1093,7 +1512,7 @@ object TextQueries {
     // docs, removable dup docs). Two bounded hash aggs on top of the
     // gated components operator; output bounded by the largest
     // cluster size.
-    "q146_dedup_mass" -> ((s, dir) =>
+    Query("q146_dedup_mass", (s, dir) =>
       graft.operators.Dedup.connectedComponents(lshPairs(s, dir))
         .groupBy(col("comp")).agg(count(lit(1)).as("__sz"))
         .groupBy(col("__sz").as("cluster_size"))
@@ -1101,7 +1520,26 @@ object TextQueries {
         .withColumn("n_docs", col("cluster_size") * col("n_clusters"))
         .withColumn("n_dup_docs",
           (col("cluster_size") - 1L) * col("n_clusters"))
-        .orderBy("cluster_size")),
+        .orderBy("cluster_size"),
+      // the SAME transitive-closure chain, rolled to the size histogram
+      s"""WITH RECURSIVE $lshPairsCtes,
+         edges AS (
+           SELECT id_a AS src, id_b AS dst FROM pairs
+           UNION
+           SELECT id_b AS src, id_a AS dst FROM pairs),
+         reach AS (
+           SELECT src AS id, src AS comp FROM edges
+           UNION
+           SELECT e.dst AS id, r.comp FROM reach r JOIN edges e ON e.src = r.id),
+         comps AS (
+           SELECT id, min(comp) AS comp FROM reach GROUP BY id),
+         sz AS (
+           SELECT comp, CAST(count(*) AS BIGINT) AS cluster_size
+           FROM comps GROUP BY comp)
+         SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
+           cluster_size * CAST(count(*) AS BIGINT) AS n_docs,
+           (cluster_size - 1) * CAST(count(*) AS BIGINT) AS n_dup_docs
+         FROM sz GROUP BY cluster_size ORDER BY cluster_size"""),
 
     // Token-set Jaccard near-dup pairs within the `source` block, found
     // by a PPJoin-style prefix-filtered shingle join (Bayardo et al.
@@ -1113,39 +1551,73 @@ object TextQueries {
     // space — then exact sorted-array verification on candidates only.
     // Row-identical to the naive all-pairs formulation (the oracle) by
     // the prefix-filter theorem.
-    "q36_jaccard_pairs" -> ((s, dir) =>
+    Query("q36_jaccard_pairs", (s, dir) =>
       graft.operators.Dedup.jaccardPairs(
         docsSpread(s, dir).where(col("doc_id") % 3 === 0),
         "text", "doc_id", minJaccardMills = 600, blockCols = Seq("source"))
-        .orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b"),
+      s"""WITH d AS (
+           SELECT doc_id, source, $sqlTokSet AS toks
+           FROM documents WHERE doc_id % 3 = 0)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           CAST(floor(1000 * len(list_intersect(a.toks, b.toks))
+             / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) AS BIGINT) AS jac_mills
+         FROM d a JOIN d b ON a.source = b.source AND a.doc_id < b.doc_id
+         WHERE floor(1000 * len(list_intersect(a.toks, b.toks))
+             / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) >= 600
+         ORDER BY id_a, id_b"""),
 
     // Deterministic stratified sampling (corpus mixture): per-lang keep
     // rates via an md5 threshold — no RNG, reproducible in any engine,
     // filter pushes to the scan. Summarized per stratum so the gate
     // checks both membership determinism and the aggregate counts.
-    "q70_stratified_sample" -> ((s, dir) =>
+    Query("q70_stratified_sample", (s, dir) =>
       graft.operators.TextAnalysis.stratifiedSample(
         docs(s, dir), "lang", "doc_id", SampleRates, defaultRate = 0.25)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_kept"),
           min(col("doc_id")).as("min_id"),
           sum(col("doc_id")).as("id_sum"))
-        .orderBy("lang")),
+        .orderBy("lang"), {
+      // thresholds generated FROM SampleRates — oracle and operator
+      // share one rate table (and one threshold arithmetic)
+      def th(r: Double) = (r * 4294967296.0).toLong
+      val whens = SampleRates.toSeq.sortBy(_._1)
+        .map { case (l, r) => s"WHEN '$l' THEN ${th(r)}" }.mkString(" ")
+      s"""SELECT lang, count(*) AS n_kept, min(doc_id) AS min_id,
+         CAST(sum(doc_id) AS BIGINT) AS id_sum
+         FROM documents
+         WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+           < CASE lang $whens ELSE ${th(0.25)} END
+         GROUP BY lang ORDER BY lang"""
+    }),
 
     // Sequence packing (concat-then-chunk): docs per source shard in
     // doc_id order, 512-token budget; each doc lands in the chunk where
     // it starts. Partitioned cumsum — no global sort (the 100 TB shape).
-    "q69_sequence_pack" -> ((s, dir) =>
+    Query("q69_sequence_pack", (s, dir) =>
       graft.operators.TextAnalysis.packSequences(
         docs(s, dir), "text", "doc_id", "source", budgetTokens = PackBudget)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""WITH t AS (
+           SELECT source, doc_id, CAST($sqlTokenCount AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (
+           SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source
+             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+             0) AS cum_before
+           FROM t)
+         SELECT source, doc_id, n_tokens,
+           CAST(floor(cum_before / $PackBudget) AS BIGINT) AS seq_no,
+           CAST(cum_before % $PackBudget AS BIGINT) AS seq_offset
+         FROM c ORDER BY doc_id"""),
 
     // Packing QA rollup over q69's operator: per shard, the sequence
     // count the token stream actually needs (integer ceil), the fill
     // ratio in mills, and how many sequences carry a doc start —
     // the utilization metrics a training-batch pipeline reports.
     // Bounded agg over the packing output; no extra corpus pass.
-    "q93_pack_stats" -> ((s, dir) =>
+    Query("q93_pack_stats", (s, dir) =>
       graft.operators.TextAnalysis.packSequences(
           docs(s, dir), "text", "doc_id", "source", budgetTokens = PackBudget)
         .groupBy("source").agg(
@@ -1162,7 +1634,34 @@ object TextQueries {
             .otherwise(floor(lit(1000) * col("total_tokens")
               / (col("n_seqs") * PackBudget)))
             .cast("long"))
-        .orderBy("source")),
+        .orderBy("source"),
+      // same packing CTE as q69, rolled up: integer-ceil sequence
+      // count, same-double-division fill mills (zero-token shards
+      // guarded — DuckDB would error on the 0/0), distinct start chunks
+      s"""WITH t AS (
+           SELECT source, doc_id, CAST($sqlTokenCount AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (
+           SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source
+             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+             0) AS cum_before
+           FROM t),
+         g AS (
+           SELECT source,
+             CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+             CAST((sum(n_tokens) + ${PackBudget - 1}) // $PackBudget
+               AS BIGINT) AS n_seqs,
+             CAST(count(DISTINCT CAST(floor(cum_before / $PackBudget)
+               AS BIGINT)) AS BIGINT) AS n_start_seqs,
+             CAST(max(n_tokens) AS BIGINT) AS max_doc_tokens
+           FROM c GROUP BY source)
+         SELECT source, n_docs, total_tokens, n_seqs, n_start_seqs,
+           max_doc_tokens,
+           CASE WHEN n_seqs = 0 THEN 0 ELSE
+             CAST(floor(CAST(1000 AS DOUBLE) * total_tokens
+               / (n_seqs * $PackBudget)) AS BIGINT) END AS fill_mills
+         FROM g ORDER BY source"""),
 
     // The BINDING star-cap variant of q36 on a deliberately degenerate
     // corpus: every doc_id ≡ 3 (mod 21) carries identical boilerplate,
@@ -1171,7 +1670,7 @@ object TextQueries {
     // O(N²) clique. The DuckDB twin replicates the capped PPJoin
     // (global-df prefix + bucket star-reduction) exactly, so the cap
     // semantics — not just the happy path — are hash-gated.
-    "q68_capped_jaccard" -> ((s, dir) => {
+    Query("q68_capped_jaccard", (s, dir) => {
       val d = docsSpread(s, dir).where(col("doc_id") % 7 === 3)
         .select(col("doc_id"),
           when(col("doc_id") % 3 === 0, lit("mass duplicated boilerplate row"))
@@ -1179,15 +1678,81 @@ object TextQueries {
       graft.operators.Dedup.jaccardPairs(d, "text", "doc_id",
         minJaccardMills = 600, maxCandBucket = CappedJaccardBucket)
         .orderBy("id_a", "id_b")
+    }, {
+      // full replica of the CAPPED PPJoin: global-df-ordered prefix
+      // (identical ceil arithmetic to Dedup.jaccardPairs), per-shingle
+      // bucket star-reduction at CappedJaccardBucket, then exact
+      // verification — so the star semantics are what's hash-gated.
+      val jm = "floor(1000 * len(list_intersect(a.toks, b.toks)) " +
+        "/ (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))))"
+      s"""WITH d0 AS (
+           SELECT doc_id,
+             CASE WHEN doc_id % 3 = 0 THEN 'mass duplicated boilerplate row'
+                  ELSE text END AS text
+           FROM documents WHERE doc_id % 7 = 3),
+         d AS (SELECT doc_id, $sqlTokSet AS toks FROM d0),
+         tk AS (SELECT doc_id, unnest(toks) AS shingle FROM d),
+         dfreq AS (SELECT shingle, count(*) AS gdf FROM tk GROUP BY shingle),
+         pre AS (
+           SELECT doc_id, shingle FROM (
+             SELECT t.doc_id, t.shingle,
+               row_number() OVER (PARTITION BY t.doc_id
+                 ORDER BY f.gdf, t.shingle) AS rnk,
+               count(*) OVER (PARTITION BY t.doc_id) AS sz
+             FROM tk t JOIN dfreq f USING (shingle))
+           WHERE rnk <= sz - ceil(sz * 600 / 1000.0) + 1),
+         bkt AS (SELECT shingle, count(*) AS bsz, min(doc_id) AS bmin
+                 FROM pre GROUP BY shingle),
+         cand AS (
+           SELECT DISTINCT id_a, id_b FROM (
+             SELECT a.doc_id AS id_a, b.doc_id AS id_b
+             FROM pre a JOIN pre b USING (shingle) JOIN bkt USING (shingle)
+             WHERE bsz <= $CappedJaccardBucket AND a.doc_id < b.doc_id
+             UNION ALL
+             SELECT bmin AS id_a, doc_id AS id_b
+             FROM pre JOIN bkt USING (shingle)
+             WHERE bsz > $CappedJaccardBucket AND doc_id <> bmin))
+         SELECT c.id_a, c.id_b, CAST($jm AS BIGINT) AS jac_mills
+         FROM cand c JOIN d a ON c.id_a = a.doc_id
+                     JOIN d b ON c.id_b = b.doc_id
+         WHERE $jm >= 600
+         ORDER BY id_a, id_b"""
     }),
 
     // Gopher/C4-style repetition quality filter: most-frequent-bigram
     // share + repeated-trigram mass per document (word-level, with
     // multiplicity — the standard pretraining-data repetition signals).
-    "q65_repetition_stats" -> ((s, dir) =>
+    Query("q65_repetition_stats", (s, dir) =>
       graft.operators.TextAnalysis.repetitionStats(
         docsSpread(s, dir), "text", "doc_id")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), {
+      val triAllSql =
+        "[l[CAST(i AS INT)] || ' ' || l[CAST(i + 1 AS INT)] || ' ' || l[CAST(i + 2 AS INT)] FOR i IN range(1, len(l) - 1)]"
+      s"""WITH t AS (
+           SELECT doc_id, $tokenListSql AS l FROM documents
+           WHERE text IS NOT NULL),
+         eligible AS (SELECT * FROM t WHERE len(l) >= 3),
+         b AS (
+           SELECT doc_id,
+             CAST(floor(1000 * max(c) / sum(c)) AS BIGINT) AS top_bigram_share_mills
+           FROM (SELECT doc_id, g, count(*) AS c
+                 FROM (SELECT doc_id, unnest($wordBigramsAllSql) AS g FROM eligible) u
+                 GROUP BY doc_id, g) gc
+           GROUP BY doc_id),
+         tr AS (
+           SELECT doc_id,
+             CAST(floor(1000 * sum(CASE WHEN c > 1 THEN c ELSE 0 END) / sum(c)) AS BIGINT)
+               AS dup_trigram_mills
+           FROM (SELECT doc_id, g, count(*) AS c
+                 FROM (SELECT doc_id, unnest($triAllSql) AS g FROM eligible) u
+                 GROUP BY doc_id, g) gc
+           GROUP BY doc_id)
+         SELECT b.doc_id, top_bigram_share_mills, dup_trigram_mills,
+           (top_bigram_share_mills < ${graft.operators.TextAnalysis.MaxTopBigramShareMills}
+            AND dup_trigram_mills < ${graft.operators.TextAnalysis.MaxDupTrigramMills})
+             AS repetition_ok
+         FROM b JOIN tr USING (doc_id) ORDER BY doc_id"""
+    }),
 
     // Word-bigram (2-gram shingle) Jaccard near-dup — the order-aware
     // n-gram variant of q36 (unigram sets ignore token order; bigrams
@@ -1199,7 +1764,7 @@ object TextQueries {
     // Work tracks bigram collision mass (per-source bigram df maxes at
     // 28 on this corpus — no hot key); the block×block pair space is
     // never formed. Row-identical to the naive all-pairs oracle.
-    "q47_bigram_jaccard" -> ((s, dir) => {
+    Query("q47_bigram_jaccard", (s, dir) => {
       val d = docsSpread(s, dir).where(col("doc_id") % 4 === 1)
         .select(col("doc_id"), col("source"), wordBigrams.as("sh"))
       val sizes = d.select(col("doc_id"), size(col("sh")).as("ns"))
@@ -1217,20 +1782,59 @@ object TextQueries {
         .where(col("jac_mills") >= 60)
         .select("id_a", "id_b", "jac_mills")
         .orderBy("id_a", "id_b")
-    }),
+    },
+      s"""WITH t AS (
+           SELECT doc_id, source, $tokenListSql AS l
+           FROM documents WHERE doc_id % 4 = 1),
+         d AS (
+           SELECT doc_id, source, list_sort($wordBigramsSql) AS sh
+           FROM t)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           CAST(floor(1000 * len(list_intersect(a.sh, b.sh))
+             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))) AS BIGINT) AS jac_mills
+         FROM d a JOIN d b ON a.source = b.source AND a.doc_id < b.doc_id
+         WHERE floor(1000 * len(list_intersect(a.sh, b.sh))
+             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))) >= 60
+         ORDER BY id_a, id_b"""),
 
     // C4/RefinedWeb-style corpus-level line dedup (boilerplate removal):
     // lines in more than LineDedupMaxDf distinct docs are dropped from
     // every doc. The fixture is single-line, so the gate synthesizes a
     // 3-line corpus (content + shared footer + unique marker) from
     // doc_id — see lineDedupText. Hashed on the rebuilt clean text.
-    "q72_line_dedup" -> ((s, dir) => {
+    Query("q72_line_dedup", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), lineDedupText.as("text"))
       graft.operators.TextAnalysis.dedupLines(d, "text", "doc_id", LineDedupMaxDf)
         .select(col("doc_id"), col("n_lines"), col("n_kept"),
           md5(col("clean_text")).as("clean_key"))
         .orderBy("doc_id")
-    }),
+    },
+      s"""WITH base AS (
+           SELECT doc_id,
+             text || chr(10) || 'shared footer variant ' || CAST(doc_id % 4 AS VARCHAR)
+                  || chr(10) || 'doc marker ' || CAST(doc_id AS VARCHAR) AS t2
+           FROM documents),
+         lx AS (SELECT doc_id, string_split(t2, chr(10)) AS l FROM base),
+         flat AS (
+           SELECT doc_id, CAST(struct_extract(s, 'i') AS BIGINT) AS line_no,
+             struct_extract(s, 'ln') AS line
+           FROM (SELECT doc_id,
+               unnest([{'i': i, 'ln': l[CAST(i AS INT)]} FOR i IN range(1, len(l) + 1)]) AS s
+             FROM lx)),
+         freq AS (
+           SELECT md5(trim(line)) AS lk, count(DISTINCT doc_id) AS ndocs
+           FROM flat WHERE trim(line) <> '' GROUP BY 1),
+         kept AS (
+           SELECT f.doc_id, f.line_no, f.line
+           FROM flat f LEFT JOIN freq ON md5(trim(f.line)) = freq.lk
+           WHERE freq.ndocs IS NULL OR freq.ndocs <= $LineDedupMaxDf),
+         reb AS (
+           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+             md5(string_agg(line, chr(10) ORDER BY line_no)) AS ck
+           FROM kept GROUP BY doc_id)
+         SELECT b.doc_id, CAST(len(string_split(b.t2, chr(10))) AS BIGINT) AS n_lines,
+           coalesce(r.n_kept, 0) AS n_kept, coalesce(r.ck, md5('')) AS clean_key
+         FROM base b LEFT JOIN reb r USING (doc_id) ORDER BY b.doc_id"""),
 
     // PII scrub (emails -> IPv4 -> phone runs, in that order) with the
     // per-class replacement counts; gated on the scrubbed-text digest.
@@ -1243,7 +1847,7 @@ object TextQueries {
     // generated array-side — never a key self-join, so a viral key
     // costs |sources|² pair rows, not occurrence². The oracle is the
     // NAIVE key self-join: parity proves the pair generation lossless.
-    "q129_source_overlap" -> ((s, dir) => {
+    Query("q129_source_overlap", (s, dir) => {
       val ks = docsSpread(s, dir)
         .select(col("source"),
           md5(array_join(slice(
@@ -1261,7 +1865,19 @@ object TextQueries {
         .groupBy("source_a", "source_b")
         .agg(count(lit(1)).as("n_shared_keys"))
         .orderBy("source_a", "source_b")
-    }),
+    },
+      // the naive key self-join twin — parity proves the bounded
+      // array-side pair generation lossless and duplicate-free
+      """WITH ks AS (
+           SELECT DISTINCT source,
+             md5(array_to_string(
+               (list_filter(string_split(regexp_replace(trim(lower(text)),
+                  '\s+', ' ', 'g'), ' '), t -> t <> ''))[1:8], ' ')) AS k
+           FROM documents)
+         SELECT a.source AS source_a, b.source AS source_b,
+           CAST(count(*) AS BIGINT) AS n_shared_keys
+         FROM ks a JOIN ks b ON a.k = b.k AND a.source < b.source
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
     // Jensen–Shannon divergence between source token distributions
     // (Lin 1991 — the symmetric, bounded corpus-comparison measure a
     // mixture designer reads before blending sources): JSD(P,Q) =
@@ -1281,7 +1897,7 @@ object TextQueries {
     // construction (their JSD is exactly 1 bit). The oracle is the
     // naive token self-join twin — parity proves the array-side
     // generation lossless.
-    "q188_source_jsd" -> ((s, dir) => {
+    Query("q188_source_jsd", (s, dir) => {
       val tc = docsSpread(s, dir)
         .select(col("source"),
           explode(TextFunctions.tokens(col("text"))).as("tok"))
@@ -1333,16 +1949,87 @@ object TextQueries {
           signDiv("sum_a * nb + sum_b * na",
             "2 * CAST(na AS DECIMAL(38,0)) * nb").as("jsd_mills"))
         .orderBy("source_a", "source_b")
+    }, {
+      // the naive token self-join twin of the array-side pair
+      // generation; the IDENTICAL Mitchell algebra on integer args,
+      // HUGEINT sums, the same closed-form one-sided correction and
+      // sign-split divisions
+      def mitchell(x: String) =
+        s"""(1000 * (length(printf('%b', $x)) - 1)
+           + (1000 * (($x) - (CAST(1 AS BIGINT)
+               << CAST(length(printf('%b', $x)) - 1 AS INT))))
+             // (CAST(1 AS BIGINT)
+               << CAST(length(printf('%b', $x)) - 1 AS INT)))"""
+      def signDiv(x: String, d: String) =
+        s"""CASE WHEN $x >= 0 THEN CAST(($x) // ($d) AS BIGINT)
+            ELSE -CAST((-($x)) // ($d) AS BIGINT) END"""
+      s"""WITH dt AS (
+           SELECT source, unnest($tokenListSql) AS tok FROM documents),
+         tc AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS cnt
+                FROM dt WHERE tok <> '' GROUP BY 1, 2),
+         tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n
+                 FROM tc GROUP BY 1),
+         pr AS (SELECT a.source AS source_a, b.source AS source_b,
+                  a.cnt AS ca, b.cnt AS cb
+                FROM tc a JOIN tc b
+                  ON a.tok = b.tok AND a.source < b.source),
+         wt AS (SELECT pr.*, ta.n AS na, tb.n AS nb FROM pr
+                JOIN tot ta ON pr.source_a = ta.source
+                JOIN tot tb ON pr.source_b = tb.source),
+         ag AS (SELECT source_a, source_b,
+                  CAST(count(*) AS BIGINT) AS n_shared_toks,
+                  CAST(sum(ca) AS BIGINT) AS sca,
+                  CAST(sum(cb) AS BIGINT) AS scb,
+                  sum(CAST(ca AS HUGEINT) * (${mitchell("2*ca*nb")}
+                    - ${mitchell("ca*nb + cb*na")})) AS da,
+                  sum(CAST(cb AS HUGEINT) * (${mitchell("2*cb*na")}
+                    - ${mitchell("ca*nb + cb*na")})) AS db,
+                  max(na) AS na, max(nb) AS nb
+                FROM wt GROUP BY 1, 2),
+         fin AS (SELECT source_a, source_b, n_shared_toks, na, nb,
+                   da + CAST(1000 AS HUGEINT) * (na - sca) AS sum_a,
+                   db + CAST(1000 AS HUGEINT) * (nb - scb) AS sum_b
+                 FROM ag)
+         SELECT source_a, source_b, n_shared_toks,
+           ${signDiv("sum_a", "na")} AS kl_a_mills,
+           ${signDiv("sum_b", "nb")} AS kl_b_mills,
+           ${signDiv("sum_a * nb + sum_b * na",
+             "2 * CAST(na AS HUGEINT) * nb")} AS jsd_mills
+         FROM fin ORDER BY source_a, source_b"""
     }),
     // Token-entropy quality gate (TextAnalysis.tokenEntropy): Shannon
     // entropy over each doc's own token distribution in exact Mitchell
     // millibits — n·L(n) − Σ c·L(c), no window, no join; flags docs
     // under EntMinMills/token (threshold inside the corpus range, so
     // both branches are data-exercised at every SF).
-    "q127_token_entropy" -> ((s, dir) =>
+    Query("q127_token_entropy", (s, dir) =>
       TextAnalysis.tokenEntropy(docsSpread(s, dir), "doc_id", "text",
           minMillsPerTok = EntMinMills)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), {
+      // the shared Mitchell twin (printf('%b') / << / //) applied to
+      // cnt and n; entropy re-derived through the same n·L(n) − Σ c·L(c)
+      // algebra, flag as an exact integer compare
+      def mitchell(x: String) =
+        s"""(1000 * (length(printf('%b', $x)) - 1)
+           + (1000 * ($x - (CAST(1 AS BIGINT)
+               << CAST(length(printf('%b', $x)) - 1 AS INT))))
+             // (CAST(1 AS BIGINT)
+               << CAST(length(printf('%b', $x)) - 1 AS INT)))"""
+      s"""WITH dt AS (
+           SELECT doc_id, unnest($tokenListSql) AS tok FROM documents),
+         tc AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt
+                FROM dt WHERE tok <> '' GROUP BY 1, 2),
+         per AS (
+           SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_toks,
+             CAST(count(*) AS BIGINT) AS n_distinct,
+             CAST(sum(cnt * ${mitchell("cnt")}) AS BIGINT) AS s
+           FROM tc GROUP BY 1)
+         SELECT doc_id, n_toks, n_distinct,
+           n_toks * ${mitchell("n_toks")} - s AS ent_total_mills,
+           n_toks * ${mitchell("n_toks")} - s < n_toks * $EntMinMills
+             AS low_diversity
+         FROM per ORDER BY doc_id"""
+    }),
     // C4 page cleaning (Raffel et al. 2020, TextAnalysis.c4Clean):
     // line retention (terminal punct + ≥ C4MinWords words + no
     // 'javascript') applied ARRAY-SIDE over the synthetic multi-line
@@ -1351,14 +2038,44 @@ object TextQueries {
     // retained text) flip on doc_id residues so every branch is
     // data-exercised at every SF. kept_text ships as an md5 digest —
     // the rebuilt page never crosses the compare.
-    "q135_c4_filters" -> ((s, dir) =>
+    Query("q135_c4_filters", (s, dir) =>
       TextAnalysis.c4Clean(
           docs(s, dir).select(col("doc_id"), c4Text.as("text")),
           "doc_id", "text")
         .select(col("doc_id"), col("n_lines"), col("n_kept"),
           md5(col("kept_text")).as("kept_md5"), col("n_sentences"),
           col("has_lorem"), col("has_brace"), col("page_keep"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // same construction (c4TextSql interpolates the shared lists),
+      // same line lambda (terminal punct incl. optional closing quote,
+      // EMPTY-DROPPING word count over a \s+ split of the trimmed
+      // line, no 'javascript'), same sentence proxy (terminal marks in
+      // the retained text, 'g'-flagged replace), same page verdict
+      s"""WITH base AS (SELECT doc_id, $c4TextSql AS t FROM documents),
+         f AS (
+           SELECT doc_id, t, string_split(t, chr(10)) AS ls,
+             list_filter(string_split(t, chr(10)), l ->
+               regexp_matches(rtrim(l), '[.!?]"?$$')
+               AND len(list_filter(regexp_split_to_array(trim(l), '\\s+'),
+                 w -> w <> '')) >= ${TextAnalysis.C4MinWords}
+               AND NOT contains(lower(l), 'javascript')) AS ks
+           FROM base),
+         k AS (
+           SELECT doc_id, t, ls, ks,
+             array_to_string(ks, chr(10)) AS kt FROM f)
+         SELECT doc_id,
+           CAST(len(ls) AS BIGINT) AS n_lines,
+           CAST(len(ks) AS BIGINT) AS n_kept,
+           md5(kt) AS kept_md5,
+           CAST(length(regexp_replace(kt, '[^.!?]', '', 'g')) AS BIGINT)
+             AS n_sentences,
+           contains(lower(t), 'lorem ipsum') AS has_lorem,
+           contains(t, '{') AS has_brace,
+           (NOT contains(lower(t), 'lorem ipsum')
+             AND NOT contains(t, '{')
+             AND length(regexp_replace(kt, '[^.!?]', '', 'g'))
+               >= ${TextAnalysis.C4MinSentences}) AS page_keep
+         FROM k ORDER BY doc_id"""),
     // UniMax budget allocation (Chung et al. 2023,
     // TextAnalysis.unimaxAllocate): exact integer water-filling over
     // per-lang token capacities (UnimaxEpochs × n_tokens) at a corpus-
@@ -1367,10 +2084,20 @@ object TextQueries {
     // agg, then every window rides the strata-bounded (≤ |langs|-row)
     // frame; allocations sum to exactly the budget, remainder to the
     // smallest uncapped strata, no floats anywhere.
-    "q136_unimax_alloc" -> ((s, dir) =>
+    Query("q136_unimax_alloc", (s, dir) =>
       TextAnalysis.unimaxAllocate(docs(s, dir), "lang", "text",
           maxEpochs = UnimaxEpochs, budgetPerMille = Some(UnimaxPerMille))
-        .orderBy("stratum")),
+        .orderBy("stratum"),
+      // identical water-filling algebra: capacity-ascending prefix
+      // inequality for the capped test, integer floor share + remainder
+      // to the smallest uncapped strata (CASE keeps the // lazy when
+      // every stratum is capped)
+      s"""WITH $unimaxCtes
+         SELECT stratum, n_tokens, capacity, capped,
+           CAST(allocated AS BIGINT) AS allocated,
+           CAST(coalesce((1000 * allocated) // nullif(n_tokens, 0), 0)
+             AS BIGINT) AS epochs_mills
+         FROM uni ORDER BY stratum"""),
     // Temperature-scaled mixture allocation at α = 1/2 (mT5 / XLM-R
     // low-resource up-weighting, TextAnalysis.temperatureAllocate):
     // strata weighted by EXACT integer isqrt(n_tokens) (float sqrt
@@ -1378,17 +2105,55 @@ object TextQueries {
     // floor-split targets with the remainder to the largest weights
     // so targets sum to exactly the budget; deficit vs supply
     // reported. One corpus hash agg + strata-bounded windows.
-    "q145_temperature_mix" -> ((s, dir) =>
+    Query("q145_temperature_mix", (s, dir) =>
       TextAnalysis.temperatureAllocate(docs(s, dir), "lang", "text",
           budgetPerMille = Some(TempPerMille))
-        .orderBy("stratum")),
+        .orderBy("stratum"),
+      // identical algebra: corrected isqrt, floor split, remainder by
+      // (w desc, stratum) rank
+      s"""WITH caps AS (
+           SELECT lang AS stratum,
+             CAST(sum($sqlTokenCount) AS BIGINT) AS n_tokens
+           FROM documents GROUP BY 1),
+         iw AS (
+           SELECT stratum, n_tokens,
+             CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
+               - CASE WHEN CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
+                           * CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
+                           > n_tokens THEN 1 ELSE 0 END
+               + CASE WHEN (CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) + 1)
+                           * (CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) + 1)
+                           <= n_tokens THEN 1 ELSE 0 END AS w
+           FROM caps),
+         g AS (
+           SELECT *, sum(w) OVER () AS sw,
+             ($TempPerMille * sum(n_tokens) OVER ()) // 1000 AS b,
+             (($TempPerMille * sum(n_tokens) OVER ()) // 1000) * w
+               // nullif(sum(w) OVER (), 0) AS fl,
+             CAST(row_number() OVER (ORDER BY w DESC, stratum)
+               AS BIGINT) AS rk
+           FROM iw),
+         h AS (
+           SELECT *, b - sum(fl) OVER () AS rem FROM g),
+         a AS (
+           SELECT stratum, n_tokens, w,
+             CAST((1000 * w) // nullif(sw, 0) AS BIGINT) AS share_mills,
+             CAST(coalesce(fl, 0)
+               + (CASE WHEN rk <= rem THEN 1 ELSE 0 END) AS BIGINT)
+               AS target_tokens
+           FROM h)
+         SELECT stratum, n_tokens, w, share_mills, target_tokens,
+           least(n_tokens, target_tokens) AS alloc_tokens,
+           target_tokens - least(n_tokens, target_tokens)
+             AS deficit_tokens
+         FROM a ORDER BY stratum"""),
     // UniMax-allocated selection — the execution half of q136's plan
     // (the q116 pattern on a different allocator): water-filled
     // per-stratum allocations drive the q74 histogram-selection
     // kernel. Capped strata (allocation = 2 epochs ≥ supply) keep
     // every document; the waterlined stratum (en) is cut by quality —
     // both selection regimes data-exercised at every SF.
-    "q137_unimax_select" -> ((s, dir) => {
+    Query("q137_unimax_select", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.qualityScoreMills(col("text")).as("q_mills"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
@@ -1404,13 +2169,35 @@ object TextQueries {
           min(col("q_mills")).as("min_quality"),
           sum(col("doc_id")).as("id_sum"))
         .orderBy("lang")
-    }),
+    },
+      // the SHARED water-filling CTE chain feeding the q74/q116 naive
+      // ordered window — capped strata keep everything (alloc ≥
+      // supply), the waterlined stratum cuts on quality
+      s"""WITH $unimaxCtes,
+         m AS (
+           SELECT doc_id, lang, length(text) AS len,
+             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
+             CAST($sqlTokenCount AS BIGINT) AS toks
+           FROM documents),
+         t AS (
+           SELECT doc_id, lang, $sqlQualityMills AS q_mills,
+             toks AS n_tokens
+           FROM m),
+         c AS (
+           SELECT t.*, uni.allocated, sum(t.n_tokens) OVER (
+             PARTITION BY t.lang ORDER BY t.q_mills DESC, t.doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+           FROM t JOIN uni ON t.lang IS NOT DISTINCT FROM uni.stratum)
+         SELECT lang, count(*) AS n_kept,
+           CAST(sum(n_tokens) AS BIGINT) AS tok_sum,
+           min(q_mills) AS min_quality, CAST(sum(doc_id) AS BIGINT) AS id_sum
+         FROM c WHERE cum <= allocated GROUP BY lang ORDER BY lang"""),
     // Snapshot-to-snapshot corpus diff (CorpusDiff.diff): v2 derives
     // from v1 with removed (%17=3), changed (%13=5, content edit),
     // case-only drift (%11=2 — must read UNCHANGED through the
     // normalized content key), and added (+1e6 ids, %19=7) rows; one
     // full-outer equi-join on the id, only 32-char keys cross the wire.
-    "q123_snapshot_diff" -> ((s, dir) => {
+    Query("q123_snapshot_diff", (s, dir) => {
       val v1 = docs(s, dir).select(col("doc_id"), col("text"))
       val kept = v1.where(col("doc_id") % 17 =!= 3)
         .select(col("doc_id"),
@@ -1423,14 +2210,36 @@ object TextQueries {
       graft.operators.CorpusDiff.diff(
           v1, kept.unionByName(added), "doc_id", "text")
         .orderBy("doc_id")
-    }),
+    },
+      """WITH v1 AS (SELECT doc_id, text FROM documents),
+         v2 AS (
+           SELECT doc_id,
+             CASE WHEN doc_id % 13 = 5 THEN text || ' rev2'
+                  WHEN doc_id % 11 = 2 THEN upper(text)
+                  ELSE text END AS text
+           FROM v1 WHERE doc_id % 17 <> 3
+           UNION ALL
+           SELECT doc_id + 1000000 AS doc_id,
+             'new doc ' || CAST(doc_id AS VARCHAR) AS text
+           FROM v1 WHERE doc_id % 19 = 7),
+         o AS (SELECT doc_id, md5(lower(trim(text))) AS old_key FROM v1),
+         n AS (SELECT doc_id, md5(lower(trim(text))) AS new_key FROM v2)
+         SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+           CASE WHEN o.doc_id IS NULL THEN 'added'
+                WHEN n.doc_id IS NULL THEN 'removed'
+                WHEN o.old_key IS NOT DISTINCT FROM n.new_key THEN 'unchanged'
+                ELSE 'changed' END AS status,
+           coalesce(old_key, '') AS old_key,
+           coalesce(new_key, '') AS new_key
+         FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
+         ORDER BY doc_id"""),
     // Hard-negative mining for retrieval training (Karpukhin et al.
     // 2020 DPR practice): per query, top-HnPos BM25 hits are
     // positives, the rest of the top-k are HARD negatives (lexically
     // close non-answers), plus HnRand deterministic md5-ranked
     // negatives from the non-retrieved pool — Q×N by design (the
     // brute-ANN contract) with a WindowGroupLimit k-cut.
-    "q124_hard_negatives" -> ((s, dir) => {
+    Query("q124_hard_negatives", (s, dir) => {
       import s.implicits._
       val qs = Bm25Queries.toDF("qid", "qtext")
       // Q×k rows, referenced three times (pos/hard/pool anti-join) —
@@ -1461,15 +2270,51 @@ object TextQueries {
           col("rank"))
       pos.unionByName(hard).unionByName(rand)
         .orderBy("qid", "role", "rank")
+    }, {
+      val qids = Bm25Queries.map { case (id, _) =>
+        s"(CAST($id AS BIGINT))" }.mkString(", ")
+      s"""WITH lex AS (SELECT qid, doc_id, rank FROM ($bm25OracleSql)),
+         qd AS (SELECT * FROM (VALUES $qids) AS t(qid)),
+         pool AS (
+           SELECT qd.qid, d.doc_id
+           FROM qd CROSS JOIN (SELECT doc_id FROM documents) d
+           WHERE NOT EXISTS (SELECT 1 FROM lex
+             WHERE lex.qid = qd.qid AND lex.doc_id = d.doc_id)),
+         rnd AS (
+           SELECT qid, doc_id, 'rand_neg' AS role,
+             row_number() OVER (PARTITION BY qid ORDER BY
+               md5(CAST(qid AS VARCHAR) || '#' || CAST(doc_id AS VARCHAR)),
+               doc_id) AS rank
+           FROM pool)
+         SELECT qid, doc_id, role, rank FROM (
+           SELECT qid, doc_id, 'pos' AS role, rank FROM lex
+           WHERE rank <= $HnPos
+           UNION ALL
+           SELECT qid, doc_id, 'hard_neg' AS role, rank - $HnPos AS rank
+           FROM lex WHERE rank > $HnPos
+           UNION ALL
+           SELECT qid, doc_id, role, rank FROM rnd WHERE rank <= $HnRand)
+         ORDER BY qid, role, rank"""
     }),
     // BPE merge learning (Bpe.learnMerges — Sennrich et al. 2016): the
     // first rounds of subword-tokenizer training. One corpus-sized
     // token count, then every merge round works the vocab-bounded
     // word-frequency table; per round exactly one argmax row reaches
     // the driver (k-means anchor precedent).
-    "q122_bpe_merges" -> ((s, dir) =>
+    Query("q122_bpe_merges", (s, dir) =>
       graft.operators.Bpe.learnMerges(docs(s, dir), "text", BpeRounds)
-        .orderBy("round")),
+        .orderBy("round"), {
+      // the shared merge-learning chain; each round's argmax pair sits
+      // in t$r
+      val out = (1 to BpeRounds).map { r =>
+        s"""SELECT CAST($r AS BIGINT) AS round,
+              string_split(pair, ' ')[1] AS "left",
+              string_split(pair, ' ')[2] AS "right",
+              replace(pair, ' ', '') AS merged, w AS weight FROM t$r"""
+      }.mkString(" UNION ALL ")
+      s"""WITH $bpeLearnCtes
+         SELECT * FROM ($out) ORDER BY round"""
+    }),
     // BPE ENCODE (Bpe.encode): the trained tokenizer applied back to
     // the corpus — q122's learned merges (a bounded driver-side table,
     // the centroid-anchor precedent) ride the plan as literals inside
@@ -1477,12 +2322,45 @@ object TextQueries {
     // enc_md5 pins the EXACT per-token segmentation, so a drift in
     // merge order, greedy-replace semantics, or tie-breaks hash-fails
     // — not just the counts.
-    "q140_bpe_encode" -> ((s, dir) => {
+    Query("q140_bpe_encode", (s, dir) => {
       val m = graft.operators.Bpe.learnMerges(docs(s, dir), "text",
           BpeRounds).orderBy("round").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       graft.operators.Bpe.encode(docs(s, dir), "text", "doc_id", m)
         .orderBy("doc_id")
+    }, {
+      // the SAME learning chain derives the merge table, then every
+      // document token is char-segmented and pushed through the k
+      // replaces in rank order — identical greedy literal-replace
+      // semantics, rebuilt per token and rejoined in token order for
+      // the md5
+      val encRounds = (1 to BpeRounds).map { r =>
+        s"""d$r AS (SELECT doc_id, i, tok, replace(seq,
+               ' ' || replace((SELECT pair FROM t$r), ' ', '  ') || ' ',
+               ' ' || replace((SELECT pair FROM t$r), ' ', '') || ' ')
+               AS seq
+             FROM d${r - 1})"""
+      }.mkString(",\n")
+      s"""WITH $bpeLearnCtes,
+         tl AS (SELECT doc_id, $tokenListSql AS l FROM documents),
+         tk AS (SELECT doc_id, i, l[i] AS tok
+                FROM (SELECT doc_id, l,
+                  CAST(unnest(range(1, len(l) + 1)) AS BIGINT) AS i
+                  FROM tl)
+                WHERE l[i] <> ''),
+         d0 AS (SELECT doc_id, i, tok,
+             ' ' || trim(regexp_replace(tok, '(.)', '\\1  ', 'g')) || ' '
+               AS seq
+           FROM tk),
+         $encRounds,
+         per AS (SELECT doc_id, i, tok, trim(seq) AS enc,
+             CAST(len(string_split(trim(seq), '  ')) AS BIGINT) AS ns
+           FROM d$BpeRounds)
+         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
+           CAST(sum(len(tok)) AS BIGINT) AS n_chars,
+           CAST(sum(ns) AS BIGINT) AS n_subwords,
+           md5(array_to_string(list(enc ORDER BY i), ' | ')) AS enc_md5
+         FROM per GROUP BY doc_id ORDER BY doc_id"""
     }),
     // Luhn-validated card-number detection (Checksum.luhnValid, one
     // codegen'd scan-side check): regex candidates become findings only
@@ -1490,7 +2368,7 @@ object TextQueries {
     // redaction pass needs before rewriting text. Last digit of the
     // synthetic candidate is doc_id % 10, so ~10% verify (both
     // branches at every SF).
-    "q121_luhn_pii" -> ((s, dir) => {
+    Query("q121_luhn_pii", (s, dir) => {
       docs(s, dir)
         .select(col("doc_id"), col("source"), cardText.as("t2"))
         .withColumn("candidate",
@@ -1499,8 +2377,30 @@ object TextQueries {
           graft.functions.Checksum.luhnValid(col("candidate")))
         .select("doc_id", "source", "candidate", "luhn_ok")
         .orderBy("doc_id")
-    }),
-    "q73_pii_scrub" -> ((s, dir) => {
+    },
+      // full Luhn recompute in SQL over the extracted candidate: digit
+      // at 1-based position i is doubled iff (len - i) is odd (every
+      // second from the RIGHT), minus 9 on overflow, sum % 10 = 0
+      """WITH base AS (
+           SELECT doc_id, source,
+             text || ' card 4'
+               || lpad(CAST((doc_id * 7919) % 100000000000 AS VARCHAR), 11, '0')
+               || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
+               || CAST(doc_id % 10 AS VARCHAR) || ' end' AS t2
+           FROM documents),
+         c AS (SELECT doc_id, source,
+                 regexp_extract(t2, '[0-9]{13,19}') AS candidate
+               FROM base)
+         SELECT doc_id, source, candidate,
+           len(candidate) > 0 AND
+           list_sum([CASE WHEN (len(candidate) - i) % 2 = 1 THEN
+               CASE WHEN 2 * CAST(candidate[i] AS INT) > 9
+                    THEN 2 * CAST(candidate[i] AS INT) - 9
+                    ELSE 2 * CAST(candidate[i] AS INT) END
+             ELSE CAST(candidate[i] AS INT) END
+             FOR i IN range(1, len(candidate) + 1)]) % 10 = 0 AS luhn_ok
+         FROM c ORDER BY doc_id"""),
+    Query("q73_pii_scrub", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), piiText.as("text"))
       val counts = TextFunctions.piiCounts(col("text"))
       d.select(col("doc_id"),
@@ -1508,6 +2408,28 @@ object TextQueries {
           counts(2).as("n_phones"),
           md5(TextFunctions.scrubPii(col("text"))).as("scrub_key"))
         .orderBy("doc_id")
+    }, {
+      import graft.functions.TextFunctions.{EmailRe, Ipv4Re, PhoneRe}
+      s"""WITH base AS (
+           SELECT doc_id,
+             text || ' contact user' || CAST(doc_id % 50 AS VARCHAR) || '@example.com'
+               || CASE WHEN doc_id % 3 = 0
+                    THEN ' from 10.0.' || CAST(doc_id % 250 AS VARCHAR) || '.7'
+                    ELSE '' END
+               || CASE WHEN doc_id % 5 = 1
+                    THEN ' call +1-555-' || CAST(doc_id % 9000 + 1000 AS VARCHAR)
+                    ELSE '' END AS t
+           FROM documents),
+         p1 AS (SELECT doc_id, t,
+             regexp_replace(t, '$EmailRe', '<EMAIL>', 'g') AS t1 FROM base),
+         p2 AS (SELECT doc_id, t, t1,
+             regexp_replace(t1, '$Ipv4Re', '<IP>', 'g') AS t2 FROM p1)
+         SELECT doc_id,
+           CAST(len(regexp_extract_all(t, '$EmailRe')) AS BIGINT) AS n_emails,
+           CAST(len(regexp_extract_all(t1, '$Ipv4Re')) AS BIGINT) AS n_ips,
+           CAST(len(regexp_extract_all(t2, '$PhoneRe')) AS BIGINT) AS n_phones,
+           md5(regexp_replace(t2, '$PhoneRe', '<PHONE>', 'g')) AS scrub_key
+         FROM p2 ORDER BY doc_id"""
     }),
 
     // Token-budget quality selection (data mixing): per lang, keep docs
@@ -1515,7 +2437,7 @@ object TextQueries {
     // stays within BudgetSelectTokens. Engine side is the two-phase
     // histogram design; the oracle is the naive per-stratum window —
     // row-identical by construction, which is exactly the claim gated.
-    "q74_budget_select" -> ((s, dir) => {
+    Query("q74_budget_select", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.qualityScoreMills(col("text")).as("q_mills"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
@@ -1527,7 +2449,27 @@ object TextQueries {
           min(col("q_mills")).as("min_quality"),
           sum(col("doc_id")).as("id_sum"))
         .orderBy("lang")
-    }),
+    },
+      // naive per-stratum ordered window — the semantic definition the
+      // engine's two-phase histogram design must reproduce row-for-row.
+      // Quality formula copied the q31 contract (same CTE shape).
+      s"""WITH m AS (
+           SELECT doc_id, lang, length(text) AS len,
+             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
+             CAST($sqlTokenCount AS BIGINT) AS toks
+           FROM documents),
+         t AS (
+           SELECT doc_id, lang, $sqlQualityMills AS q_mills,
+             toks AS n_tokens
+           FROM m),
+         c AS (
+           SELECT *, sum(n_tokens) OVER (PARTITION BY lang
+             ORDER BY q_mills DESC, doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+           FROM t)
+         SELECT lang, count(*) AS n_kept, CAST(sum(n_tokens) AS BIGINT) AS tok_sum,
+           min(q_mills) AS min_quality, CAST(sum(doc_id) AS BIGINT) AS id_sum
+         FROM c WHERE cum <= $BudgetSelectTokens GROUP BY lang ORDER BY lang"""),
 
     // Unicode canonicalization: NFC (native Catalyst expression — the
     // codegen'd twin of DuckDB's nfc_normalize) + Cc/Cf strip +
@@ -1535,14 +2477,32 @@ object TextQueries {
     // hash-based dedup (byte-different composed/decomposed equals hash
     // apart). The fixture is ASCII, so the gate synthesizes decomposed
     // accents, a ZWJ, and a BEL from doc_id — see unicodeMessyText.
-    "q77_unicode_clean" -> ((s, dir) => {
+    Query("q77_unicode_clean", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), unicodeMessyText.as("t"))
       d.select(col("doc_id"),
           length(col("t")).cast("long").as("n_raw"),
           length(UnicodeNorm.nfc_normalize(col("t"))).cast("long").as("n_nfc"),
           md5(UnicodeNorm.cleanText(col("t"))).as("clean_key"))
         .orderBy("doc_id")
-    }),
+    },
+      // chr(769)=U+0301 combining acute, chr(776)=U+0308 combining
+      // diaeresis, chr(8205)=U+200D ZWJ (Cf), chr(7)=BEL (Cc); DuckDB's
+      // nfc_normalize is utf8proc NFC — same canonical composition the
+      // engine's java.text.Normalizer NFC expression performs
+      s"""WITH base AS (
+           SELECT doc_id,
+             text || ' cafe' || chr(769) || ' no' || chr(776) || 'el'
+               || CASE WHEN doc_id % 2 = 0
+                    THEN ' zero' || chr(8205) || 'width' ELSE '' END
+               || CASE WHEN doc_id % 3 = 0
+                    THEN ' bell' || chr(7) || 'tone' ELSE '' END AS t
+           FROM documents)
+         SELECT doc_id,
+           CAST(length(t) AS BIGINT) AS n_raw,
+           CAST(length(nfc_normalize(t)) AS BIGINT) AS n_nfc,
+           md5(trim(regexp_replace(regexp_replace(nfc_normalize(t),
+             '${UnicodeNorm.StripRe}', ' ', 'g'), '\\s+', ' ', 'g'))) AS clean_key
+         FROM base ORDER BY doc_id"""),
 
     // Frequency-based vocabulary building: the top-K corpus tokens by
     // occurrence count (with multiplicity — a vocab reflects token
@@ -1556,15 +2516,39 @@ object TextQueries {
     // (no full-cardinality shuffle); the provably_exact flag
     // (cnt_k > N/m) is pinned TRUE by the oracle, so an undersized
     // budget fails loud.
-    "q83_heavy_hitters" -> ((s, dir) => {
+    Query("q83_heavy_hitters", (s, dir) => {
       import s.implicits._
       graft.operators.HeavyHitters
         .topKExact(tokStream(s, dir).as[String], VocabTopK, HhCounters)
         .withColumnRenamed("item", "tok")
         .orderBy(col("cnt").desc, col("tok"))
-    }),
+    },
+      // the semantic definition is q75's exact top-k; provably_exact is
+      // RECOMPUTED with the engine's own arithmetic (cnt_k · counters >
+      // N — HeavyHitters.topKExact's gate), not pinned TRUE: a fixture
+      // change that legitimately flips the provability flag must stay
+      // in agreement on both sides (q84's fixture-sensitivity rule),
+      // while a broken two-pass run still fails through the rows
+      // themselves
+      s"""WITH t AS (SELECT tok FROM $sqlTokRows WHERE tok <> ''),
+         tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM t),
+         k AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM t
+               GROUP BY tok ORDER BY cnt DESC, tok LIMIT $VocabTopK)
+         SELECT tok, cnt,
+           -- HUGEINT product: the twin of the Spark side's
+           -- DECIMAL(38,0) overflow-proof gate arithmetic
+           CAST(min(cnt) OVER () AS HUGEINT) * $HhCounters
+             > CAST(tot.n AS HUGEINT) AS provably_exact
+         FROM k CROSS JOIN tot
+         ORDER BY cnt DESC, tok"""),
 
-    "q75_vocab_topk" -> ((s, dir) => vocabTopK(s, dir)),
+    Query("q75_vocab_topk", (s, dir) => vocabTopK(s, dir),
+      // deterministic despite the LIMIT: the tie-break (cnt DESC, tok)
+      // is a total order because tok is unique after the group-by
+      s"""SELECT tok, CAST(count(*) AS BIGINT) AS cnt
+         FROM $sqlTokRows
+         WHERE tok <> ''
+         GROUP BY tok ORDER BY cnt DESC, tok LIMIT $VocabTopK"""),
 
     // Count-Min sketch point queries: build the depth×width sketch in
     // one bounded-key-space counting shuffle, then estimate the exact
@@ -1572,7 +2556,7 @@ object TextQueries {
     // and the estimates are bit-deterministic (shared md5 bucket
     // contract), so the oracle recomputes them exactly; over_ok pins
     // the structural estimate>=exact guarantee.
-    "q84_cms_counts" -> ((s, dir) => {
+    Query("q84_cms_counts", (s, dir) => {
       val toks = tokStream(s, dir)
       val sk = graft.operators.CountMin.sketch(toks, "tok", CmsDepth, CmsWidth)
       // 1-row total-occurrence count N for the ε bound, read from the
@@ -1590,17 +2574,83 @@ object TextQueries {
           col("cms_est") <= col("cnt") + col("eps_bound"))
         .drop("n_tok")
         .orderBy(col("cnt").desc, col("tok"))
-    }),
+    },
+      // full bit-for-bit recompute of the sketch AND the estimates via
+      // the shared sqlCmsBucket hash contract — an engine-side bucket
+      // drift, count drift, or min-row mistake all hash-fail; over_ok
+      // pins the structural overcount guarantee, and within_eps is
+      // RECOMPUTED with the engine's own derivation (est ≤ cnt +
+      // ceil((e/width)·N), same rational-e integer math as
+      // CountMin.epsBound) — NOT pinned TRUE, so a fixture or
+      // VocabTopK change that legitimately flips a probe (violation
+      // probability ≤ e^-depth ≈ 1.8% per probe at CmsDepth=4) stays
+      // in agreement on both sides, while an engine-side geometry
+      // regression still hash-fails through cms_est/eps_bound parity.
+      // CountMinSpec's undersized-width canary keeps the flag honest.
+      s"""WITH tokrows AS (SELECT tok FROM $sqlTokRows WHERE tok <> ''),
+         rows_d AS (SELECT CAST(unnest(range($CmsDepth)) AS INT) AS r),
+         tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tok FROM tokrows),
+         sk AS (
+           SELECT r, ${sqlCmsBucket("tok", "r")} AS bucket,
+             CAST(count(*) AS BIGINT) AS bcnt
+           FROM tokrows, rows_d GROUP BY 1, 2),
+         exact AS (
+           SELECT tok, CAST(count(*) AS BIGINT) AS cnt
+           FROM tokrows GROUP BY tok ORDER BY cnt DESC, tok LIMIT $VocabTopK),
+         probes AS (
+           SELECT e.tok, e.cnt, r, ${sqlCmsBucket("e.tok", "r")} AS bucket
+           FROM exact e, rows_d),
+         est AS (
+           SELECT p.tok, p.cnt,
+             min(coalesce(sk.bcnt, 0)) AS cms_est,
+             CAST((${graft.operators.CountMin.EpsNum} * tot.n_tok
+                   + ${graft.operators.CountMin.EpsDen * CmsWidth - 1})
+                  // ${graft.operators.CountMin.EpsDen * CmsWidth} AS BIGINT) AS eps_bound
+           FROM probes p LEFT JOIN sk ON p.r = sk.r AND p.bucket = sk.bucket
+           CROSS JOIN tot
+           GROUP BY p.tok, p.cnt, tot.n_tok)
+         SELECT tok, cnt, cms_est, eps_bound,
+           cms_est >= cnt AS over_ok,
+           cms_est <= cnt + eps_bound AS within_eps
+         FROM est
+         ORDER BY cnt DESC, tok"""),
 
     // Sliding-window chunking: every document cut into ChunkTokens-token
     // windows advancing by ChunkTokens - ChunkOverlap; pure projection +
     // explode (no join/agg — pinned as a plan contract), digest-gated
     // bit-for-bit per window. Case-preserving (the digest is content-
     // faithful), so the oracle tokenizes WITHOUT lower().
-    "q85_chunk_windows" -> ((s, dir) =>
+    Query("q85_chunk_windows", (s, dir) =>
       graft.operators.TextAnalysis.chunkDocs(
           docsSpread(s, dir), "text", "doc_id", ChunkTokens, ChunkOverlap)
-        .orderBy("doc_id", "chunk_no")),
+        .orderBy("doc_id", "chunk_no"),
+      // full window recompute: same whitespace tokenization as
+      // sqlTokRows but WITHOUT lower() (chunk digests are content-
+      // faithful); integer ceil via the shifted-numerator floor
+      // division, list_slice clamps the tail exactly like Spark's slice
+      s"""WITH t AS (
+           SELECT doc_id, list_filter(string_split(
+               regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
+             x -> x <> '') AS toks
+           FROM documents),
+         n AS (
+           SELECT doc_id, toks,
+             greatest(1, (len(toks) - $ChunkOverlap + ${ChunkTokens - ChunkOverlap} - 1)
+               // ${ChunkTokens - ChunkOverlap}) AS nchunks
+           FROM t WHERE len(toks) > 0),
+         c AS (
+           SELECT doc_id, toks,
+             CAST(unnest(range(nchunks)) AS BIGINT) AS chunk_no
+           FROM n)
+         SELECT doc_id, chunk_no,
+           chunk_no * ${ChunkTokens - ChunkOverlap} AS start_tok,
+           CAST(len(list_slice(toks,
+             chunk_no * ${ChunkTokens - ChunkOverlap} + 1,
+             chunk_no * ${ChunkTokens - ChunkOverlap} + $ChunkTokens)) AS BIGINT) AS n_toks,
+           md5(array_to_string(list_slice(toks,
+             chunk_no * ${ChunkTokens - ChunkOverlap} + 1,
+             chunk_no * ${ChunkTokens - ChunkOverlap} + $ChunkTokens), ' ')) AS chunk_md5
+         FROM c ORDER BY doc_id, chunk_no"""),
 
     // Cross-doc duplicated-passage stats: which fraction of each doc's
     // anchored 16-token windows exists verbatim in another document
@@ -1608,42 +2658,149 @@ object TextQueries {
     // collide). Text is lowered UPSTREAM of the operator (passage
     // matching is case-insensitive; the operator itself is content-
     // faithful). Docs with no anchored full window emit no row.
-    "q86_dup_passages" -> ((s, dir) =>
+    Query("q86_dup_passages", (s, dir) =>
       graft.operators.TextAnalysis.dupPassageStats(
           docsSpread(s, dir)
             .select(col("doc_id"), lower(col("text")).as("text")),
           "text", "doc_id", DupWindowTokens, DupAnchorMod)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // full recompute: lowered tokenization (case-insensitive passage
+      // matching), content-defined anchors (md5(token) first 15 hex as
+      // a 60-bit int, ≡ 0 mod anchorMod — the unsalted sibling of
+      // sqlCmsBucket), full-width windows only, window doc-frequency
+      // over distinct docs, dup = frequency > 1. The mills division
+      // runs the same integer pair through double division in both
+      // engines.
+      s"""WITH t AS (
+           SELECT doc_id, list_filter(string_split(
+               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
+             x -> x <> '') AS toks
+           FROM documents),
+         n AS (
+           SELECT doc_id, toks, len(toks) AS n
+           FROM t WHERE len(toks) >= $DupWindowTokens),
+         pos AS (
+           SELECT doc_id, toks,
+             CAST(unnest(range(n - $DupWindowTokens + 1)) AS BIGINT) AS i
+           FROM n),
+         w AS (
+           SELECT doc_id, md5(array_to_string(list_slice(toks,
+             i + 1, i + $DupWindowTokens), ' ')) AS h
+           FROM pos
+           WHERE CAST(('0x' || substr(md5(toks[i + 1]), 1, 15)) AS BIGINT)
+             % $DupAnchorMod = 0),
+         f AS (SELECT h, count(DISTINCT doc_id) AS nd FROM w GROUP BY h)
+         SELECT w.doc_id,
+           CAST(count(*) AS BIGINT) AS n_windows,
+           CAST(count(*) FILTER (f.nd > 1) AS BIGINT) AS n_dup_windows,
+           CAST(floor(CAST(1000 AS DOUBLE) * count(*) FILTER (f.nd > 1)
+             / count(*)) AS BIGINT) AS dup_mills
+         FROM w JOIN f USING (h)
+         GROUP BY w.doc_id ORDER BY w.doc_id"""),
 
     // Gopher rule-based quality flags: every A1.1 rule metric in exact
     // integer mills plus the conjunction, a pure scan-side projection.
     // Stopword gate uses the fixture-exercising list so both
     // gopher_ok branches are hash-pinned.
-    "q91_gopher_flags" -> ((s, dir) =>
+    Query("q91_gopher_flags", (s, dir) =>
       graft.operators.TextAnalysis.gopherQualityFlags(
           docsSpread(s, dir), "text", "doc_id",
           stopwords = GopherQStops, minStopHits = 2)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // full rule recompute: same token/line splits, char-count symbol
+      // occurrences (the '...' count divides exactly, so DuckDB's
+      // rounding CAST equals Spark's truncation), mills via the shared
+      // same-double-division trick, distinct-stopword intersection
+      s"""WITH base AS (
+           SELECT doc_id, text,
+             list_filter(string_split(
+               regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
+               x -> x <> '') AS toks,
+             string_split(text, chr(10)) AS lines
+           FROM documents)
+         SELECT doc_id,
+           CAST(len(toks) AS BIGINT) AS n_words,
+           CASE WHEN len(toks) = 0 THEN 0 ELSE
+             CAST(floor(CAST(1000 AS DOUBLE)
+               * length(regexp_replace(text, '\\s+', '', 'g'))
+               / len(toks)) AS BIGINT) END AS mean_word_len_mills,
+           CASE WHEN len(toks) = 0 THEN 0 ELSE
+             CAST(floor(CAST(1000 AS DOUBLE) * (
+                 (length(text) - length(replace(text, '#', '')))
+               + (length(text) - length(replace(text, '...', ''))) // 3
+               + (length(text) - length(replace(text, '…', ''))))
+               / len(toks)) AS BIGINT) END AS symbol_mills,
+           CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(lines,
+               x -> regexp_matches(x, '^\\s*[-*•]')))
+             / len(lines)) AS BIGINT) AS bullet_mills,
+           CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(lines,
+               x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$$')))
+             / len(lines)) AS BIGINT) AS ellipsis_mills,
+           CASE WHEN len(toks) = 0 THEN 0 ELSE
+             CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(toks,
+               x -> regexp_matches(x, '[A-Za-z]')))
+             / len(toks)) AS BIGINT) END AS alpha_word_mills,
+           CAST(len(list_intersect(
+             list_distinct(list_transform(toks, x -> lower(x))),
+             [${GopherQStops.map(w => s"'$w'").mkString(", ")}])) AS BIGINT)
+             AS stop_hits,
+           (len(toks) BETWEEN 50 AND 100000)
+             AND (CASE WHEN len(toks) = 0 THEN 0 ELSE
+               CAST(floor(CAST(1000 AS DOUBLE)
+                 * length(regexp_replace(text, '\\s+', '', 'g'))
+                 / len(toks)) AS BIGINT) END BETWEEN 3000 AND 10000)
+             AND (CASE WHEN len(toks) = 0 THEN 0 ELSE
+               CAST(floor(CAST(1000 AS DOUBLE) * (
+                   (length(text) - length(replace(text, '#', '')))
+                 + (length(text) - length(replace(text, '...', ''))) // 3
+                 + (length(text) - length(replace(text, '…', ''))))
+                 / len(toks)) AS BIGINT) END <= 100)
+             AND (CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(lines,
+                 x -> regexp_matches(x, '^\\s*[-*•]')))
+               / len(lines)) AS BIGINT) <= 900)
+             AND (CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(lines,
+                 x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$$')))
+               / len(lines)) AS BIGINT) <= 300)
+             AND (CASE WHEN len(toks) = 0 THEN 0 ELSE
+               CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(toks,
+                 x -> regexp_matches(x, '[A-Za-z]')))
+               / len(toks)) AS BIGINT) END >= 800)
+             AND (len(list_intersect(
+               list_distinct(list_transform(toks, x -> lower(x))),
+               [${GopherQStops.map(w => s"'$w'").mkString(", ")}])) >= 2)
+             AS gopher_ok
+         FROM base ORDER BY doc_id"""),
 
     // DSIR-style importance scoring: every doc scored by hashed-bigram
     // target-vs-source likeness in exact integer mills (rational
     // ratio, the BM25 determinism trade), target = the doc_id % 7
     // exemplar slice. Weight table bounded by DsirBuckets and
     // broadcast; the only corpus-sized shuffle is the per-doc sum.
-    "q90_dsir_score" -> ((s, dir) => {
+    Query("q90_dsir_score", (s, dir) => {
       val src = docsSpread(s, dir)
         .select(col("doc_id"), lower(col("text")).as("text"))
       graft.operators.TextAnalysis.importanceScore(
           src, src.where(col("doc_id") % 7 === 0),
           "text", "doc_id", DsirBuckets)
         .orderBy("doc_id")
-    }),
+    },
+      // full recompute: lowered bigram multiset, the '#dsir' salted
+      // md5 bucket contract, add-one-smoothed totals-normalized
+      // rational weights in HUGEINT (the DECIMAL(38,0) twin), per-doc
+      // occurrence-weighted sums; target grams reuse the source gram
+      // table filtered (target ⊆ source by construction)
+      s"""WITH $sqlDsirScoredCtes
+         SELECT d.doc_id, coalesce(s.n_grams, 0) AS n_grams,
+           coalesce(s.dsir_mills, 0) AS dsir_mills,
+           coalesce(CAST(s.dsir_mills // s.n_grams AS BIGINT), 0) AS dsir_avg_mills
+         FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
+         ORDER BY d.doc_id"""),
 
     // DSIR selection applied (the paper's data-selection step): the
     // K most target-like docs per stratum by the per-gram-mean key,
     // rank window with a deterministic (score DESC, doc_id) tie-break
     // — planner executes the k-cut as a partial WindowGroupLimit.
-    "q92_dsir_select" -> ((s, dir) => {
+    Query("q92_dsir_select", (s, dir) => {
       val src = docsSpread(s, dir)
         .select(col("doc_id"), lower(col("text")).as("text"))
       val scored = graft.operators.TextAnalysis.importanceScore(
@@ -1662,32 +2819,125 @@ object TextQueries {
         .where(col("rank") <= DsirSelectK)
         .select("lang", "rank", "doc_id", "dsir_avg_mills")
         .orderBy("lang", "rank")
-    }),
+    },
+      // the q90 scoring CTEs + a per-stratum rank window on the
+      // selection key with the same (avg DESC, doc_id) tie-break
+      s"""WITH $sqlDsirScoredCtes,
+         av AS (SELECT d.doc_id, d.lang,
+                  coalesce(CAST(s.dsir_mills // s.n_grams AS BIGINT), 0)
+                    AS dsir_avg_mills
+                FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id),
+         rk AS (SELECT lang,
+                  CAST(row_number() OVER (PARTITION BY lang
+                    ORDER BY dsir_avg_mills DESC, doc_id) AS BIGINT) AS rank,
+                  doc_id, dsir_avg_mills
+                FROM av)
+         SELECT lang, rank, doc_id, dsir_avg_mills
+         FROM rk WHERE rank <= $DsirSelectK
+         ORDER BY lang, rank"""),
 
     // Duplicated-passage REMOVAL (q86 applied): every cross-doc
     // duplicated anchored window cut from every doc except its
     // min-doc_id canonical holder; gated on the full rebuilt-text md5
     // plus exact token accounting, so a single kept/cut token anywhere
     // in the corpus hash-fails. Row-preserving (one row per doc).
-    "q89_dup_removal" -> ((s, dir) =>
+    Query("q89_dup_removal", (s, dir) =>
       graft.operators.TextAnalysis.removeDupPassages(
           docsSpread(s, dir)
             .select(col("doc_id"), lower(col("text")).as("text")),
           "text", "doc_id", DupWindowTokens, DupAnchorMod)
         .select("doc_id", "n_toks", "n_removed", "clean_md5")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // full removal recompute: same anchored-window CTEs as q86, plus
+      // the keeper rule (min doc_id per window survives), positional
+      // span coverage (union of removed windows), kept-token anti-join
+      // and an order-preserving rebuild — md5 of the rebuilt text must
+      // match the engine's bit-for-bit
+      s"""WITH t AS (
+           SELECT doc_id, list_filter(string_split(
+               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
+             x -> x <> '') AS toks
+           FROM documents),
+         n AS (
+           SELECT doc_id, toks, len(toks) AS n
+           FROM t WHERE len(toks) >= $DupWindowTokens),
+         pos AS (
+           SELECT doc_id, toks,
+             CAST(unnest(range(n - $DupWindowTokens + 1)) AS BIGINT) AS i
+           FROM n),
+         w AS (
+           SELECT doc_id, i, md5(array_to_string(list_slice(toks,
+             i + 1, i + $DupWindowTokens), ' ')) AS h
+           FROM pos
+           WHERE CAST(('0x' || substr(md5(toks[i + 1]), 1, 15)) AS BIGINT)
+             % $DupAnchorMod = 0),
+         f AS (SELECT h, count(DISTINCT doc_id) AS nd,
+                 min(doc_id) AS keeper FROM w GROUP BY h),
+         dup AS (SELECT w.doc_id, w.i FROM w JOIN f USING (h)
+                 WHERE f.nd > 1 AND w.doc_id <> f.keeper),
+         cov AS (SELECT DISTINCT doc_id,
+                   i + CAST(unnest(range($DupWindowTokens)) AS BIGINT) AS cp
+                 FROM dup),
+         ap AS (SELECT doc_id, toks[p + 1] AS tok, p FROM (
+                  SELECT doc_id, toks,
+                    CAST(unnest(range(len(toks))) AS BIGINT) AS p FROM t)),
+         kept AS (SELECT ap.doc_id, ap.p, ap.tok FROM ap
+                  LEFT JOIN cov ON ap.doc_id = cov.doc_id AND ap.p = cov.cp
+                  WHERE cov.doc_id IS NULL),
+         reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS kept,
+                   array_to_string(list(tok ORDER BY p), ' ') AS ct
+                 FROM kept GROUP BY doc_id)
+         SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_toks,
+           CAST(len(t.toks) - coalesce(reb.kept, 0) AS BIGINT) AS n_removed,
+           md5(coalesce(reb.ct, '')) AS clean_md5
+         FROM t LEFT JOIN reb USING (doc_id)
+         ORDER BY t.doc_id"""),
 
     // word2phrase collocations (Mikolov et al. 2013): top-K bigrams by
     // the discounted phrase score in exact integer mills, Dice along.
     // orderBy + limit over the unique (phrase_mills, w1, w2) total
     // order plans as a partial TakeOrdered — no global sort survives.
-    "q94_collocations" -> ((s, dir) =>
+    Query("q94_collocations", (s, dir) =>
       graft.operators.TextAnalysis.phraseScores(
           docsSpread(s, dir)
             .select(col("doc_id"), lower(col("text")).as("text")),
           "text", minCount = PhraseMinCount, discount = PhraseDiscount)
         .orderBy(col("phrase_mills").desc, col("w1"), col("w2"))
-        .limit(PhraseTopK)),
+        .limit(PhraseTopK),
+      // full recompute: lowered per-doc token lists, order-aware
+      // bigrams WITH multiplicity (the wordNGrams twin: l[i]||' '||
+      // l[i+1] over 1-based i), minCount prefilter, then the two
+      // exact-integer scores — the phrase score through HUGEINT floor
+      // division (the DECIMAL(38,0) div twin), Dice in int64. The
+      // (phrase_mills DESC, w1, w2) total order is unique, so the
+      // LIMIT is deterministic in both engines.
+      s"""WITH t AS (
+           SELECT list_filter(string_split(
+               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
+             x -> x <> '') AS l
+           FROM documents),
+         unis AS (SELECT unnest(l) AS tok FROM t),
+         u AS (SELECT tok, CAST(count(*) AS BIGINT) AS n
+               FROM unis GROUP BY tok),
+         n1 AS (SELECT CAST(count(*) AS BIGINT) AS c FROM unis),
+         bis AS (
+           SELECT unnest($wordBigramsAllSql) AS bi FROM t),
+         b AS (
+           SELECT string_split(bi, ' ')[1] AS w1,
+             string_split(bi, ' ')[2] AS w2,
+             CAST(count(*) AS BIGINT) AS n_pair
+           FROM bis GROUP BY 1, 2 HAVING count(*) >= $PhraseMinCount)
+         SELECT b.w1, b.w2, b.n_pair, u1.n AS n_w1, u2.n AS n_w2,
+           CAST(greatest(
+             (CAST(1000 AS HUGEINT) * (b.n_pair - $PhraseDiscount) * n1.c)
+               // (CAST(u1.n AS HUGEINT) * u2.n),
+             CAST(0 AS HUGEINT)) AS BIGINT) AS phrase_mills,
+           (2000 * b.n_pair) // (u1.n + u2.n) AS dice_mills
+         FROM b
+         JOIN u u1 ON b.w1 = u1.tok
+         JOIN u u2 ON b.w2 = u2.tok
+         CROSS JOIN n1
+         ORDER BY phrase_mills DESC, w1, w2 LIMIT $PhraseTopK"""),
 
     // CCNet-style unigram LM quality scoring (Wenzek et al. 2020) in
     // exact integer code-length bits: the model trains on the 'en'
@@ -1695,42 +2945,143 @@ object TextQueries {
     // Laplace-smoothed OOV path is exercised by the non-en strata's
     // disjoint vocabulary slices. Lower avg_bits_mills = more
     // target-like.
-    "q95_unigram_ce" -> ((s, dir) => {
+    Query("q95_unigram_ce", (s, dir) => {
       val lowered = docsSpread(s, dir)
         .select(col("doc_id"), col("lang"), lower(col("text")).as("text"))
       graft.operators.TextAnalysis.unigramCodeLength(
           lowered, lowered.where(col("lang") === "en"), "text", "doc_id")
         .orderBy("doc_id")
-    }),
+    },
+      // full recompute: Laplace-smoothed unigram costs over the 'en'
+      // stratum in EXACT integer millibits — Mitchell's log2:
+      // floor_log2 as the length of the base-2 digit string
+      // (printf('%b') here, conv(_,10,2) in the engine; both exact),
+      // 2^e via integer shift, linear fraction via integer floor
+      // division; no float log anywhere, and the same left-join +
+      // coalesce row-preserving shape as the engine
+      s"""WITH $unigramCeCtes
+         SELECT d.doc_id, coalesce(sc.n_toks, CAST(0 AS BIGINT)) AS n_toks,
+           coalesce(sc.total_bits_mills, CAST(0 AS BIGINT))
+             AS total_bits_mills,
+           sc.total_bits_mills // sc.n_toks AS avg_bits_mills
+         FROM documents d LEFT JOIN sc USING (doc_id)
+         ORDER BY doc_id"""),
 
     // Interpolated bigram LM code length (Jelinek–Mercer λ=1/2, the
     // next CCNet-ladder model above q95): first token pays unigram,
     // later tokens pay the interpolated bigram-given-context cost,
     // unseen contexts back off to unigram — all exact integer
     // millibits through the shared Mitchell kernel.
-    "q110_bigram_ce" -> ((s, dir) => {
+    Query("q110_bigram_ce", (s, dir) => {
       val lowered = docsSpread(s, dir)
         .select(col("doc_id"), col("lang"), lower(col("text")).as("text"))
       graft.operators.TextAnalysis.bigramCodeLength(
           lowered, lowered.where(col("lang") === "en"), "text", "doc_id")
         .orderBy("doc_id")
-    }),
+    },
+      // full recompute: LM unigram/bigram count tables over the 'en'
+      // stratum, per-position interpolated rational 1/P through
+      // HUGEINT floor division (the DECIMAL(38,0) twin), Mitchell's
+      // log2 in exact integer millibits, unseen-context backoff to
+      // the q95 unigram kernel — no float anywhere
+      s"""WITH t AS (
+           SELECT doc_id, lang, list_filter(string_split(
+               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
+             x -> x <> '') AS l
+           FROM documents),
+         lmtoks AS (SELECT unnest(l) AS tok FROM t WHERE lang = 'en'),
+         tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+                   CAST(count(DISTINCT tok) AS BIGINT) AS v
+                 FROM lmtoks),
+         uni AS (SELECT tok, CAST(count(*) AS BIGINT) AS c
+                 FROM lmtoks GROUP BY tok),
+         lmbg AS (
+           SELECT unnest($wordBigramsAllSql) AS bg FROM t WHERE lang = 'en'),
+         bi AS (SELECT bg, CAST(count(*) AS BIGINT) AS c12
+                FROM lmbg GROUP BY bg),
+         firstq AS (
+           SELECT doc_id,
+             (1024 * (tot.n + tot.v)) // (coalesce(u.c, 0) + 1) AS q
+           FROM (SELECT doc_id, l[1] AS tok FROM t WHERE len(l) >= 1) f
+           LEFT JOIN uni u ON f.tok = u.tok CROSS JOIN tot),
+         prs AS (SELECT doc_id, unnest($wordBigramsAllSql) AS bg FROM t),
+         pq AS (
+           SELECT p.doc_id,
+             CASE WHEN coalesce(u1.c, 0) = 0
+               THEN (1024 * (tot.n + tot.v)) // (coalesce(u2.c, 0) + 1)
+               ELSE CAST((CAST(2048 AS HUGEINT) * u1.c * (tot.n + tot.v))
+                 // (CAST(coalesce(b.c12, 0) AS HUGEINT) * (tot.n + tot.v)
+                     + (coalesce(u2.c, 0) + 1) * u1.c) AS BIGINT)
+             END AS q
+           FROM (SELECT doc_id, bg, split_part(bg, ' ', 1) AS w1,
+                   split_part(bg, ' ', 2) AS w2 FROM prs) p
+           LEFT JOIN uni u1 ON p.w1 = u1.tok
+           LEFT JOIN uni u2 ON p.w2 = u2.tok
+           LEFT JOIN bi b ON p.bg = b.bg
+           CROSS JOIN tot),
+         allq AS (SELECT doc_id, q FROM firstq
+                  UNION ALL SELECT doc_id, q FROM pq),
+         costs AS (
+           SELECT doc_id, 1000 * e + (1000 * (q - p)) // p - 10000 AS cost
+           FROM (
+             SELECT doc_id, q, e, (CAST(1 AS BIGINT) << CAST(e AS INT)) AS p
+             FROM (
+               SELECT doc_id, q, length(printf('%b', q)) - 1 AS e
+               FROM allq))),
+         sc AS (
+           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
+             CAST(sum(cost) AS BIGINT) AS total_bits_mills
+           FROM costs GROUP BY doc_id)
+         SELECT d.doc_id, coalesce(sc.n_toks, CAST(0 AS BIGINT)) AS n_toks,
+           coalesce(sc.total_bits_mills, CAST(0 AS BIGINT))
+             AS total_bits_mills,
+           sc.total_bits_mills // sc.n_toks AS avg_bits_mills
+         FROM documents d LEFT JOIN sc USING (doc_id)
+         ORDER BY doc_id"""),
 
     // tf-idf keyword extraction (rational idf, exact integer mills):
     // top-3 terms per doc with the (score DESC, term ASC) tie-break —
     // the WindowGroupLimit k-cut binds on every doc of the fixture.
-    "q96_tfidf_keywords" -> ((s, dir) =>
+    Query("q96_tfidf_keywords", (s, dir) =>
       graft.operators.Retrieval.tfidfKeywords(
           docsSpread(s, dir)
             .select(col("doc_id"), lower(col("text")).as("text")),
           "doc_id", "text", KeywordTopK)
-        .orderBy("doc_id", "rank")),
+        .orderBy("doc_id", "rank"),
+      // full recompute: per-doc tf with multiplicity, df over the
+      // distinct (doc, term) frame, rational idf through HUGEINT floor
+      // division (the DECIMAL(38,0) div twin), and the same
+      // (score DESC, term ASC) row_number cut
+      s"""WITH t AS (
+           SELECT doc_id, list_filter(string_split(
+               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
+             x -> x <> '') AS l
+           FROM documents),
+         dt AS (SELECT doc_id, unnest(l) AS term FROM t),
+         tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+                FROM dt GROUP BY doc_id, term),
+         dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df_docs
+                 FROM tf GROUP BY term),
+         nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+         sc AS (
+           SELECT tf.doc_id, tf.term, tf.tf, dfq.df_docs,
+             CAST((CAST(1000 AS HUGEINT) * tf.tf * nd.n) // dfq.df_docs
+               AS BIGINT) AS tfidf_mills
+           FROM tf JOIN dfq USING (term) CROSS JOIN nd),
+         rk AS (
+           SELECT doc_id, CAST(row_number() OVER (PARTITION BY doc_id
+               ORDER BY tfidf_mills DESC, term) AS BIGINT) AS rank,
+             term, tf, df_docs, tfidf_mills
+           FROM sc)
+         SELECT doc_id, rank, term, tf, df_docs, tfidf_mills
+         FROM rk WHERE rank <= $KeywordTopK
+         ORDER BY doc_id, rank"""),
 
     // Token-aligned blocklist filtering (C4 §2.2 / RefinedWeb): the
     // engine runs the blocked first-token candidate join; the oracle
     // runs the NAIVE phrases x docs contains scan — parity proves the
     // blocking lossless, not just self-consistent.
-    "q98_blocklist" -> ((s, dir) => {
+    Query("q98_blocklist", (s, dir) => {
       import s.implicits._
       graft.operators.TextAnalysis.blocklistMatches(
           docsSpread(s, dir)
@@ -1738,43 +3089,167 @@ object TextQueries {
           BlocklistPhrases.toDF("pid", "phrase"),
           "text", "doc_id", "pid", "phrase")
         .orderBy("doc_id")
-    }),
+    },
+      // the NAIVE twin: every phrase against every doc's normalized
+      // text via padded contains — independently proving the engine's
+      // first-token blocking drops no token-aligned match
+      s"""WITH p AS (
+           SELECT * FROM (VALUES ${BlocklistPhrases
+             .map { case (id, ph) => s"(CAST($id AS BIGINT), '$ph')" }
+             .mkString(", ")}) AS v(pid, phrase)),
+         n AS (
+           SELECT doc_id,
+             regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm
+           FROM documents),
+         m AS (
+           SELECT n.doc_id, p.pid
+           FROM n JOIN p
+             ON contains(' ' || n.norm || ' ', ' ' || p.phrase || ' ')),
+         agg AS (
+           SELECT doc_id, CAST(count(DISTINCT pid) AS BIGINT) AS n_matched,
+             array_to_string(list_sort(list(DISTINCT CAST(pid AS VARCHAR))),
+               ',') AS matched_ids
+           FROM m GROUP BY doc_id)
+         SELECT d.doc_id,
+           coalesce(agg.n_matched, CAST(0 AS BIGINT)) AS n_matched,
+           coalesce(agg.n_matched, 0) > 0 AS blocked,
+           coalesce(agg.matched_ids, '') AS matched_ids
+         FROM documents d LEFT JOIN agg USING (doc_id)
+         ORDER BY doc_id"""),
 
     // URL canonicalization (UrlNorm): the web-corpus dedup key.
     // Pure codegen'd regexp projection — no shuffle, no join.
-    "q99_url_canon" -> ((s, dir) =>
+    Query("q99_url_canon", (s, dir) =>
       docs(s, dir)
         .select(col("doc_id"), urlText.as("url"))
         .select(col("doc_id"),
           graft.functions.UrlNorm.canonicalizeUrl(col("url")).as("url_canon"))
         .withColumn("host", graft.functions.UrlNorm.urlHost(col("url_canon")))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // the same RE2-safe, literal-replacement regex chain, step for
+      // step (DuckDB needs the 'g' flag for replace-all; patterns are
+      // interpolated from UrlNorm.TrackingParams so they can't drift)
+      s"""WITH u AS (
+           SELECT doc_id,
+             'HTTPS://WWW.Example' || CAST(doc_id % 7 AS VARCHAR)
+               || '.COM/Docs/Item' || CAST(doc_id AS VARCHAR)
+               || CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END
+               || CASE WHEN doc_id % 3 = 0
+                    THEN '?utm_source=feed&q=1&fbclid=abc'
+                  WHEN doc_id % 3 = 1 THEN '?gclid=xyz'
+                  ELSE '?q=2&utm_campaign=c' END
+               || CASE WHEN doc_id % 5 = 0 THEN '#Section-2' ELSE '' END
+               AS url
+           FROM documents),
+         c1 AS (SELECT doc_id,
+                  regexp_replace(lower(trim(url)), '#.*', '', 'g') AS u
+                FROM u),
+         -- query-scoped tracking removal, the engine's split/clean/
+         -- reassemble shape: '&' is legal in path segments
+         c2 AS (SELECT doc_id,
+                  regexp_extract(u, '^[^?]*') AS b,
+                  regexp_extract(u, '^[^?]*\\?(.*)$$', 1) AS q
+                FROM c1),
+         c3 AS (SELECT doc_id, b, regexp_replace(q,
+                  '&${graft.functions.UrlNorm.TrackingParams}=[^&]*', '', 'g')
+                  AS q FROM c2),
+         c4 AS (SELECT doc_id, b, regexp_replace(q,
+                  '^${graft.functions.UrlNorm.TrackingParams}=[^&]*&?', '',
+                  'g') AS q FROM c3),
+         c5 AS (SELECT doc_id, regexp_replace(
+                  CASE WHEN q = '' THEN b ELSE b || '?' || q END,
+                  '[?&]+$$', '', 'g') AS u
+                FROM c4),
+         c6 AS (SELECT doc_id, regexp_replace(u,
+                  '^([a-z0-9+.-]+)://www\\.', '\\1://', 'g') AS u
+                FROM c5),
+         c7 AS (SELECT doc_id, regexp_replace(u, '/+$$', '', 'g') AS u
+                FROM c6)
+         SELECT doc_id, u AS url_canon,
+           regexp_extract(u, '^[a-z0-9+.-]+://([^/?#]+)', 1) AS host
+         FROM c7 ORDER BY doc_id"""),
 
     // Exact-k priority sampling (Duffield et al. 2007, md5 priority):
     // exactly 25 docs per lang stratum, rank cut by WindowGroupLimit.
-    "q100_priority_sample" -> ((s, dir) =>
+    Query("q100_priority_sample", (s, dir) =>
       graft.operators.TextAnalysis.prioritySample(
           docs(s, dir).select("doc_id", "lang"), "lang", "doc_id",
           PrioritySampleK)
         .select("lang", "sample_rank", "doc_id")
-        .orderBy("lang", "sample_rank")),
+        .orderBy("lang", "sample_rank"),
+      // identical (md5, id) priority order and rank cut
+      s"""WITH rk AS (
+           SELECT lang,
+             CAST(row_number() OVER (PARTITION BY lang
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT)
+               AS sample_rank,
+             doc_id
+           FROM documents)
+         SELECT lang, sample_rank, doc_id
+         FROM rk WHERE sample_rank <= $PrioritySampleK
+         ORDER BY lang, sample_rank"""),
 
     // Skip-gram PMI (Church & Hanks 1990 over a Mikolov-style window):
     // top-30 associated pairs in exact Mitchell-log2 millibits.
-    "q102_skipgram_pmi" -> ((s, dir) =>
+    Query("q102_skipgram_pmi", (s, dir) =>
       graft.operators.TextAnalysis.skipgramPmi(
           docsSpread(s, dir)
             .select(col("doc_id"), lower(col("text")).as("text")),
           "text", window = SkipgramWindow, minCount = SkipgramMinCount)
         .orderBy(col("pmi_mills").desc, col("w1"), col("w2"))
-        .limit(SkipgramTopK)),
+        .limit(SkipgramTopK),
+      // full recompute: positional pairs at every distance 1..window
+      // (least/greatest canonical order — binary string compare in
+      // both engines), HUGEINT 1024-scaled ratio, Mitchell log2 via
+      // printf('%b') + shift + floor division — the q95 kernel twin
+      s"""WITH t AS (
+           SELECT list_filter(string_split(
+               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
+             x -> x <> '') AS l
+           FROM documents),
+         pos AS (
+           SELECT l, CAST(unnest(range(1, len(l) + 1)) AS INT) AS i
+           FROM t),
+         prs AS (
+           SELECT least(l[i], l[i + d]) AS w1,
+             greatest(l[i], l[i + d]) AS w2
+           FROM pos, (SELECT CAST(unnest(range(1, $SkipgramWindow + 1))
+                        AS INT) AS d)
+           WHERE i + d <= len(l)),
+         uni AS (
+           SELECT tok, CAST(count(*) AS BIGINT) AS n
+           FROM (SELECT unnest(l) AS tok FROM t) GROUP BY tok),
+         tot AS (
+           SELECT
+             (SELECT CAST(count(*) AS BIGINT)
+              FROM (SELECT unnest(l) AS x FROM t)) AS nt,
+             (SELECT CAST(count(*) AS BIGINT) FROM prs) AS np),
+         p AS (
+           SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_pair
+           FROM prs GROUP BY 1, 2 HAVING count(*) >= $SkipgramMinCount),
+         qv AS (
+           SELECT p.w1, p.w2, p.n_pair, u1.n AS n_w1, u2.n AS n_w2,
+             CAST((CAST(1024 AS HUGEINT) * p.n_pair * tot.nt * tot.nt)
+               // (CAST(tot.np AS HUGEINT) * u1.n * u2.n) AS BIGINT) AS q
+           FROM p
+           JOIN uni u1 ON p.w1 = u1.tok
+           JOIN uni u2 ON p.w2 = u2.tok
+           CROSS JOIN tot),
+         sc AS (
+           SELECT w1, w2, n_pair, n_w1, n_w2,
+             1000 * e + (1000 * (q - pw)) // pw - 10000 AS pmi_mills
+           FROM (
+             SELECT *, (CAST(1 AS BIGINT) << CAST(e AS INT)) AS pw
+             FROM (SELECT *, length(printf('%b', q)) - 1 AS e FROM qv)))
+         SELECT w1, w2, n_pair, n_w1, n_w2, pmi_mills
+         FROM sc ORDER BY pmi_mills DESC, w1, w2 LIMIT $SkipgramTopK"""),
 
     // MinHash Jaccard ESTIMATE vs exact — the estimator the whole LSH
     // family banks on, pinned per candidate pair: est = 125·(matching
     // components of the 8-hash signature), exact = floored set
     // Jaccard; both deterministic given the md5 signature contract,
     // so the error column itself is oracle-checkable.
-    "q108_minhash_estimate" -> ((s, dir) => {
+    Query("q108_minhash_estimate", (s, dir) => {
       val d = docsSpread(s, dir).where(col("doc_id") % 5 === 0)
         .select(col("doc_id"),
           TextFunctions.tokenSetSorted(col("text")).as("toks"),
@@ -1796,13 +3271,34 @@ object TextQueries {
         .select(col("id_a"), col("id_b"), col("est_mills"), col("jac_mills"),
           abs(col("est_mills") - col("jac_mills")).as("abs_err"))
         .orderBy("id_a", "id_b")
+    }, {
+      val matches = (0 until 8).map(i =>
+        s"(CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END)").mkString(" + ")
+      s"""WITH $lshPairsCtes,
+         ts AS (SELECT doc_id, $sqlTokSet AS tset
+                FROM documents WHERE doc_id % 5 = 0),
+         j AS (
+           SELECT p.id_a, p.id_b,
+             CAST(125 * ($matches) AS BIGINT) AS est_mills,
+             CAST(floor(1000 * len(list_intersect(x.tset, y.tset))
+               / (len(x.tset) + len(y.tset)
+                  - len(list_intersect(x.tset, y.tset)))) AS BIGINT)
+               AS jac_mills
+           FROM pairs p
+           JOIN sig a ON p.id_a = a.doc_id
+           JOIN sig b ON p.id_b = b.doc_id
+           JOIN ts x ON p.id_a = x.doc_id
+           JOIN ts y ON p.id_b = y.doc_id)
+         SELECT id_a, id_b, est_mills, jac_mills,
+           abs(est_mills - jac_mills) AS abs_err
+         FROM j ORDER BY id_a, id_b"""
     }),
 
     // Mixture-budget selection — the execution half of q113's plan:
     // per-stratum alloc_tokens drive the q74 histogram-selection
     // kernel (zh's zero weight → zero budget → nothing kept from a
     // populated stratum — exercised on the real data).
-    "q116_mixture_select" -> ((s, dir) => {
+    Query("q116_mixture_select", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.qualityScoreMills(col("text")).as("q_mills"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
@@ -1818,29 +3314,138 @@ object TextQueries {
           min(col("q_mills")).as("min_quality"),
           sum(col("doc_id")).as("id_sum"))
         .orderBy("lang")
+    }, {
+      val totalW = MixtureWeights.map(_._2).sum
+      val vals = MixtureWeights
+        .map { case (l, w) => s"('$l', CAST($w AS BIGINT))" }.mkString(", ")
+      // the q74 naive ordered window, budget-joined per stratum from an
+      // independent recompute of q113's allocation
+      s"""WITH m AS (
+           SELECT doc_id, lang, length(text) AS len,
+             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
+             CAST($sqlTokenCount AS BIGINT) AS toks
+           FROM documents),
+         t AS (
+           SELECT doc_id, lang, $sqlQualityMills AS q_mills,
+             toks AS n_tokens
+           FROM m),
+         w AS (SELECT * FROM (VALUES $vals) AS v(lang, w)),
+         av AS (SELECT lang, CAST(sum(toks) AS BIGINT) AS avail FROM m
+                GROUP BY lang),
+         b AS (
+           SELECT av.lang,
+             least(av.avail,
+               CAST((CAST($MixtureBudget AS HUGEINT) * coalesce(w.w, 0))
+                 // $totalW AS BIGINT)) AS alloc
+           FROM av LEFT JOIN w ON av.lang = w.lang),
+         c AS (
+           SELECT t.*, b.alloc, sum(n_tokens) OVER (PARTITION BY t.lang
+             ORDER BY q_mills DESC, doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+           FROM t JOIN b ON t.lang IS NOT DISTINCT FROM b.lang)
+         SELECT lang, count(*) AS n_kept,
+           CAST(sum(n_tokens) AS BIGINT) AS tok_sum,
+           min(q_mills) AS min_quality, CAST(sum(doc_id) AS BIGINT) AS id_sum
+         FROM c WHERE cum <= alloc GROUP BY lang ORDER BY lang"""
     }),
 
     // Robust winsorization: per-lang exact [p05, p95] clipping of
     // n_chars with outlier flags — the q57/q81 histogram-selection
     // kernel plus a broadcast bounds join back onto the rows.
-    "q115_winsorize" -> ((s, dir) =>
+    Query("q115_winsorize", (s, dir) =>
       graft.operators.Robust.winsorize(
           docs(s, dir).select("doc_id", "lang", "n_chars")
             .where(col("n_chars").isNotNull),
           "lang", "n_chars", loNum = 1, loDen = 20, hiNum = 19, hiDen = 20)
         .select("doc_id", "lang", "n_chars", "lo", "hi", "clipped",
           "is_outlier")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // independent recompute of the exact rank-(n·p ceil) bounds
+      // (the q81 arithmetic) and the clip/flag application
+      """WITH h AS (
+           SELECT lang, n_chars, count(*) AS cnt
+           FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
+         r AS (
+           SELECT lang, n_chars, cnt,
+             sum(cnt) OVER (PARTITION BY lang ORDER BY n_chars
+               ROWS UNBOUNDED PRECEDING) AS cum,
+             sum(cnt) OVER (PARTITION BY lang) AS n
+           FROM h),
+         b AS (
+           SELECT lang,
+             CAST(min(CASE WHEN cum >= (n * 1 + 19) // 20
+               THEN n_chars END) AS BIGINT) AS lo,
+             CAST(min(CASE WHEN cum >= (n * 19 + 19) // 20
+               THEN n_chars END) AS BIGINT) AS hi
+           FROM r GROUP BY lang)
+         SELECT d.doc_id, d.lang, d.n_chars, b.lo, b.hi,
+           least(greatest(d.n_chars, b.lo), b.hi) AS clipped,
+           (d.n_chars < b.lo OR d.n_chars > b.hi) AS is_outlier
+         FROM documents d LEFT JOIN b ON d.lang IS NOT DISTINCT FROM b.lang
+         WHERE d.n_chars IS NOT NULL
+         ORDER BY d.doc_id"""),
 
     // Mixture planning: per-stratum token supply vs a target-weight
     // recipe — available / target / allocatable / deficit plus the
     // signed Mitchell log2 of (observed share / target share). One
     // corpus hash agg; the weight table is a broadcast dimension.
-    "q113_mixture_plan" -> ((s, dir) =>
+    Query("q113_mixture_plan", (s, dir) =>
       graft.operators.TextAnalysis.mixturePlan(
           docsSpread(s, dir).select(col("lang"), col("text")),
           "lang", "text", MixtureWeights, MixtureBudget)
-        .orderBy("lang")),
+        .orderBy("lang"), {
+      val totalW = MixtureWeights.map(_._2).sum
+      val vals = MixtureWeights
+        .map { case (l, w) => s"('$l', CAST($w AS BIGINT))" }.mkString(", ")
+      // full recompute: token supply per stratum, HUGEINT target split,
+      // and the signed Mitchell log2 of the share ratio — the q95
+      // kernel twin, with the zero-supply/zero-weight pins
+      s"""WITH w AS (SELECT * FROM (VALUES $vals) AS v(lang, w)),
+         a AS (SELECT lang, CAST(sum($sqlTokenCount) AS BIGINT)
+                 AS avail_tokens
+               FROM documents GROUP BY lang),
+         nn AS (SELECT CAST(coalesce(sum(avail_tokens), 0) AS BIGINT) AS n
+                FROM a),
+         j AS (
+           SELECT coalesce(a.lang, w.lang) AS lang,
+             coalesce(a.avail_tokens, 0) AS avail_tokens,
+             coalesce(w.w, 0) AS w
+           FROM a FULL OUTER JOIN w ON a.lang = w.lang),
+         t AS (
+           SELECT j.*, nn.n,
+             CAST((CAST($MixtureBudget AS HUGEINT) * w) // $totalW
+               AS BIGINT) AS target_tokens
+           FROM j CROSS JOIN nn),
+         r AS (
+           SELECT *,
+             CASE WHEN avail_tokens > 0 AND w > 0
+                   AND CAST(avail_tokens AS HUGEINT) * $totalW
+                       >= CAST(n AS HUGEINT) * w
+               THEN CAST((CAST(1024 AS HUGEINT) * avail_tokens * $totalW)
+                 // (CAST(n AS HUGEINT) * w) AS BIGINT)
+             WHEN avail_tokens > 0 AND w > 0
+               THEN CAST((CAST(1024 AS HUGEINT) * n * w)
+                 // (CAST(avail_tokens AS HUGEINT) * $totalW) AS BIGINT)
+             ELSE NULL END AS q,
+             CASE WHEN CAST(avail_tokens AS HUGEINT) * $totalW
+                       >= CAST(n AS HUGEINT) * w
+               THEN 1 ELSE -1 END AS sgn
+           FROM t),
+         m AS (
+           SELECT *, 1000 * e + (1000 * (q - p)) // p - 10000 AS lm
+           FROM (
+             SELECT *, (CAST(1 AS BIGINT) << CAST(e AS INT)) AS p
+             FROM (SELECT *, length(printf('%b', q)) - 1 AS e FROM r)))
+         SELECT lang, avail_tokens, target_tokens,
+           least(avail_tokens, target_tokens) AS alloc_tokens,
+           target_tokens - least(avail_tokens, target_tokens)
+             AS deficit_tokens,
+           CAST(CASE WHEN avail_tokens = 0 AND w = 0 THEN 0
+             WHEN avail_tokens = 0 THEN -10000 * $totalW
+             WHEN w = 0 THEN 10000 * $totalW
+             ELSE sgn * lm END AS BIGINT) AS log2_ratio_mills
+         FROM m ORDER BY lang"""
+    }),
 
     // Ordered containment pairs (overlap coefficient toward the
     // contained side): the asymmetric near-dup pass that catches a
@@ -1848,12 +3453,24 @@ object TextQueries {
     // Jaccard. Engine runs the lossless asymmetric prefix filter; the
     // oracle is the NAIVE within-block ordered-pair scan, so parity
     // proves the blocking lossless on the real corpus.
-    "q112_containment_pairs" -> ((s, dir) =>
+    Query("q112_containment_pairs", (s, dir) =>
       graft.operators.Dedup.containmentPairs(
           docsSpread(s, dir).where(col("doc_id") % 3 === 0),
           "text", "doc_id", minContainMills = 700,
           blockCols = Seq("source"))
-        .orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b"),
+      // the NAIVE ordered-pair twin within (subset, source) blocks —
+      // parity proves the engine's asymmetric prefix filter lossless
+      s"""WITH d AS (
+           SELECT doc_id, source, $sqlTokSet AS toks
+           FROM documents WHERE doc_id % 3 = 0)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           CAST(floor(1000 * len(list_intersect(a.toks, b.toks))
+             / len(a.toks)) AS BIGINT) AS contain_mills
+         FROM d a JOIN d b ON a.source = b.source AND a.doc_id <> b.doc_id
+         WHERE floor(1000 * len(list_intersect(a.toks, b.toks))
+             / len(a.toks)) >= 700
+         ORDER BY id_a, id_b"""),
 
     // Incremental cross-corpus dedup: classify the incoming batch
     // (doc_id % 3 = 0) against the standing corpus (doc_id % 3 <> 0) —
@@ -1861,7 +3478,7 @@ object TextQueries {
     // hashes, exhaustive Jaccard verify ≥ 0.5), or new. The corpus
     // side is the 100 TB side: one key aggregate + one band index
     // scan, equi-joined; text is only compared on LSH candidates.
-    "q109_dedup_against" -> ((s, dir) => {
+    Query("q109_dedup_against", (s, dir) => {
       // round-13 OPT: the corpus side used to be derived INLINE
       // (Dedup.dedupAgainst), which scans the corpus parquet three
       // times — content-key aggregate, band index, token sets — each
@@ -1886,6 +3503,58 @@ object TextQueries {
           corpusIdx, "text", "doc_id", bands = 2, rowsPerBand = 4,
           minJaccardMills = 500, maxCandidates = Int.MaxValue)
         .orderBy("doc_id")
+    }, {
+      val sig = (0 until 8).map(i => s"${sqlMinhash(i)} AS mh$i").mkString(", ")
+      // independent recompute of the split, the key match, the 2×4
+      // band index, and the exhaustive candidate verify
+      s"""WITH toks AS (
+           SELECT doc_id, unnest($sqlTokSet) AS tok FROM documents),
+         sig AS (SELECT doc_id, $sig FROM toks GROUP BY doc_id),
+         bands AS (
+           SELECT doc_id, 0 AS band_no,
+             mh0 || '|' || mh1 || '|' || mh2 || '|' || mh3 AS sig_s FROM sig
+           UNION ALL
+           SELECT doc_id, 1,
+             mh4 || '|' || mh5 || '|' || mh6 || '|' || mh7 FROM sig),
+         ck AS (SELECT doc_id, md5(lower(trim(text))) AS k FROM documents),
+         exact AS (
+           SELECT b.doc_id AS bid, min(c.doc_id) AS exact_id
+           FROM ck b JOIN ck c ON b.k = c.k AND c.doc_id % 3 <> 0
+           WHERE b.doc_id % 3 = 0 GROUP BY 1),
+         cand AS (
+           SELECT b.doc_id AS bid, c.doc_id AS cid
+           FROM bands b JOIN bands c
+             ON b.band_no = c.band_no AND b.sig_s = c.sig_s
+           WHERE b.doc_id % 3 = 0 AND c.doc_id % 3 <> 0
+             AND b.doc_id NOT IN (SELECT bid FROM exact)
+           GROUP BY 1, 2),
+         ts AS (SELECT doc_id, $sqlTokSet AS t FROM documents),
+         ver AS (
+           SELECT bid, cid,
+             CAST(floor(1000 * len(list_intersect(x.t, y.t))
+               / (len(x.t) + len(y.t) - len(list_intersect(x.t, y.t))))
+               AS BIGINT) AS jm
+           FROM cand JOIN ts x ON bid = x.doc_id JOIN ts y ON cid = y.doc_id),
+         best AS (
+           SELECT bid, cid, jm,
+             row_number() OVER (PARTITION BY bid ORDER BY jm DESC, cid) AS rn
+           FROM ver WHERE jm >= 500)
+         SELECT d.doc_id,
+           CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
+                WHEN b.cid IS NOT NULL THEN 'near_dup'
+                ELSE 'new' END AS verdict,
+           CAST(coalesce(e.exact_id, b.cid, -1) AS BIGINT) AS matched_id,
+           CAST(CASE WHEN e.exact_id IS NOT NULL THEN 1000
+                ELSE coalesce(b.jm, -1) END AS BIGINT) AS jaccard_mills,
+           -- q109 runs LOSSLESS (maxCandidates = Int.MaxValue): the
+           -- operator's capped observability flag must be false on
+           -- EVERY row — the q43 literal-flag pattern: a spuriously
+           -- capped engine row hash-fails here
+           FALSE AS capped
+         FROM documents d
+         LEFT JOIN exact e ON d.doc_id = e.bid
+         LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON d.doc_id = b.bid
+         WHERE d.doc_id % 3 = 0 ORDER BY d.doc_id"""
     }),
 
     // Per-source corpus health report — the ANALYZE surface a curation
@@ -1893,7 +3562,7 @@ object TextQueries {
     // cleaned content key), distinct content, token/quality sums, lang
     // spread. Two hash-agg shuffles (content key, source) + one
     // equi-join back on the key.
-    "q107_source_report" -> ((s, dir) => {
+    Query("q107_source_report", (s, dir) => {
       val d = docsSpread(s, dir)
         .select(col("doc_id"), col("source"), col("lang"),
           lower(col("text")).as("text"))
@@ -1914,14 +3583,41 @@ object TextQueries {
           sum("q").as("q_sum"),
           countDistinct("lang").as("n_langs"))
         .orderBy("source")
-    }),
+    },
+      // same keeper rule, quality contract (over LOWERED text — len
+      // and alpha are case-invariant, so the m-triple carries over),
+      // and rollup recomputed independently
+      s"""WITH d AS (
+           SELECT doc_id, source, lang,
+             lower(text) AS text, md5(lower(trim(text))) AS ck
+           FROM documents),
+         m AS (
+           SELECT doc_id, length(text) AS len,
+             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
+             CASE WHEN length(trim(text)) = 0 THEN 0
+               ELSE len(list_filter(string_split(
+                 regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
+                 t -> t <> '')) END
+               AS toks
+           FROM d),
+         qq AS (SELECT doc_id, toks, $sqlQualityMills AS q FROM m),
+         k AS (SELECT ck, min(doc_id) AS keep_id FROM d GROUP BY ck)
+         SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(CASE WHEN d.doc_id <> k.keep_id THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_dup_docs,
+           CAST(count(DISTINCT d.ck) AS BIGINT) AS n_distinct,
+           CAST(sum(qq.toks) AS BIGINT) AS tok_sum,
+           CAST(sum(qq.q) AS BIGINT) AS q_sum,
+           CAST(count(DISTINCT d.lang) AS BIGINT) AS n_langs
+         FROM d JOIN k USING (ck) JOIN qq ON d.doc_id = qq.doc_id
+         GROUP BY d.source ORDER BY d.source"""),
 
     // Dedup GROUP RESOLUTION — the step after q53's components that a
     // real pipeline actually ships: per near-dup component keep the
     // best-quality member (argmax quality_mills, ties to min id);
     // singleton docs are their own keepers. One rank window per
     // component over the (component, quality) frame.
-    "q106_dedup_keepers" -> ((s, dir) => {
+    Query("q106_dedup_keepers", (s, dir) => {
       val slice = docsSpread(s, dir).where(col("doc_id") % 5 === 0)
         .select(col("doc_id"),
           TextFunctions.qualityScoreMills(col("text")).as("q"))
@@ -1939,14 +3635,50 @@ object TextQueries {
           min(when(col("rk") === 1, col("q"))).as("keeper_quality"),
           sum("q").as("quality_sum"))
         .orderBy("component")
-    }),
+    },
+      // q53's transitive closure + the q31-contract quality formula +
+      // an independent argmax derivation; singletons self-keep
+      s"""WITH RECURSIVE $lshPairsCtes,
+         edges AS (
+           SELECT id_a AS src, id_b AS dst FROM pairs
+           UNION
+           SELECT id_b AS src, id_a AS dst FROM pairs),
+         reach AS (
+           SELECT src AS id, src AS comp FROM edges
+           UNION
+           SELECT e.dst AS id, r.comp FROM reach r JOIN edges e ON e.src = r.id),
+         compo AS (SELECT id AS doc_id, min(comp) AS component
+                   FROM reach GROUP BY id),
+         m AS (
+           SELECT doc_id, length(text) AS len,
+             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
+             CASE WHEN length(trim(text)) = 0 THEN 0
+               ELSE len(list_filter(string_split(
+                 regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
+                 t -> t <> '')) END
+               AS toks
+           FROM documents WHERE doc_id % 5 = 0),
+         qq AS (SELECT doc_id, $sqlQualityMills AS q FROM m),
+         lab AS (
+           SELECT qq.doc_id, coalesce(c.component, qq.doc_id) AS component,
+             qq.q
+           FROM qq LEFT JOIN compo c USING (doc_id)),
+         rk AS (
+           SELECT *, row_number() OVER (PARTITION BY component
+             ORDER BY q DESC, doc_id) AS rk
+           FROM lab)
+         SELECT component, CAST(count(*) AS BIGINT) AS n_members,
+           min(CASE WHEN rk = 1 THEN doc_id END) AS keeper,
+           min(CASE WHEN rk = 1 THEN q END) AS keeper_quality,
+           CAST(sum(q) AS BIGINT) AS quality_sum
+         FROM rk GROUP BY component ORDER BY component"""),
 
     // Multi-index Hamming join (Norouzi et al. 2012): near-dup pairs
     // at Hamming <= 2 over a 24-bit simhash via pigeonhole block
     // equi-joins — the distance regime the single-bit-flip probe
     // expansion (q48) cannot reach. Summary form: per-distance pair
     // counts + id checksums pin the full pair set.
-    "q105_hamming2_pairs" -> ((s, dir) =>
+    Query("q105_hamming2_pairs", (s, dir) =>
       graft.operators.Dedup.hammingNearDupPairs(
           docsSpread(s, dir).select(col("doc_id"),
             TextFunctions.simhash(col("text"), HammingBits).as("h")),
@@ -1955,7 +3687,30 @@ object TextQueries {
         .agg(count(lit(1)).as("n_pairs"),
           sum("id_a").as("sum_a"), sum("id_b").as("sum_b"),
           min("id_a").as("min_a"), max("id_b").as("max_b"))
-        .orderBy("hamming")),
+        .orderBy("hamming"), {
+      // the NAIVE all-pairs twin over the q33-contract simhash at 24
+      // bits — parity proves the pigeonhole blocking lossless and
+      // duplicate-free
+      val sums = (0 until HammingBits).map(i =>
+        s"sum(CASE WHEN ascii(substr(md5(tok), ${i + 1}, 1)) % 2 = 1 THEN 1 ELSE -1 END) AS s$i")
+        .mkString(", ")
+      val pack = (0 until HammingBits).map(i =>
+        s"(CASE WHEN s$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")
+      s"""WITH toks AS (
+           SELECT doc_id, unnest($sqlTokSet) AS tok FROM documents),
+         bits AS (SELECT doc_id, $sums FROM toks GROUP BY doc_id),
+         h AS (SELECT doc_id, CAST($pack AS BIGINT) AS hh FROM bits),
+         p AS (
+           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+             CAST(bit_count(xor(a.hh, b.hh)) AS BIGINT) AS hamming
+           FROM h a JOIN h b ON a.doc_id < b.doc_id
+           WHERE bit_count(xor(a.hh, b.hh)) <= $HammingMaxDist)
+         SELECT hamming, CAST(count(*) AS BIGINT) AS n_pairs,
+           CAST(sum(id_a) AS BIGINT) AS sum_a,
+           CAST(sum(id_b) AS BIGINT) AS sum_b,
+           min(id_a) AS min_a, max(id_b) AS max_b
+         FROM p GROUP BY hamming ORDER BY hamming"""
+    }),
 
     // CCNet's head/middle/tail split (Wenzek et al. 2020 §4.3): the
     // q95 scores cut at EXACT per-stratum terciles — boundary b_k =
@@ -1963,7 +3718,7 @@ object TextQueries {
     // computed over the (stratum, score) HISTOGRAM (the q74/q57
     // pattern: the cumsum window runs over distinct integer scores,
     // never the corpus). Lower bits = more target-like = head.
-    "q104_ccnet_split" -> ((s, dir) => {
+    Query("q104_ccnet_split", (s, dir) => {
       val lowered = docsSpread(s, dir)
         .select(col("doc_id"), col("lang"), lower(col("text")).as("text"))
       // round-13 OPT: `scored` feeds three consumers (per-lang totals,
@@ -1992,7 +3747,33 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs"), min("s").as("min_mills"),
           max("s").as("max_mills"), sum("s").as("sum_mills"))
         .orderBy("lang", "bucket")
-    }))
+    },
+      // the shared q95 score recompute + an independent exact-tercile
+      // derivation over the (lang, score) histogram
+      s"""WITH $unigramCeCtes,
+         scored AS (
+           SELECT t.doc_id, t.lang,
+             sc.total_bits_mills // sc.n_toks AS s
+           FROM t JOIN sc USING (doc_id) WHERE sc.n_toks > 0),
+         tot2 AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
+                  FROM scored GROUP BY lang),
+         h AS (SELECT lang, s, CAST(count(*) AS BIGINT) AS c
+               FROM scored GROUP BY 1, 2),
+         cum AS (SELECT lang, s,
+                   sum(c) OVER (PARTITION BY lang ORDER BY s) AS cum
+                 FROM h),
+         b AS (SELECT cum.lang,
+                 min(CASE WHEN cum >= (n + 2) // 3 THEN s END) AS b1,
+                 min(CASE WHEN cum >= (2 * n + 2) // 3 THEN s END) AS b2
+               FROM cum JOIN tot2 USING (lang) GROUP BY cum.lang),
+         a AS (SELECT scored.lang,
+                 CASE WHEN s <= b1 THEN 'head'
+                   WHEN s <= b2 THEN 'middle' ELSE 'tail' END AS bucket, s
+               FROM scored JOIN b USING (lang))
+         SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
+           min(s) AS min_mills, max(s) AS max_mills,
+           CAST(sum(s) AS BIGINT) AS sum_mills
+         FROM a GROUP BY 1, 2 ORDER BY 1, 2"""))
 
   /** The corpus token MULTISET (one `tok` row per occurrence; tokens()
     * never emits empties post-migration) — the Spark side of the
@@ -2121,1856 +3902,4 @@ object TextQueries {
        SELECT qid, rank, doc_id, score_mills FROM r WHERE rank <= $Bm25K
        ORDER BY qid, rank"""
   }
-
-  val oracle: Map[String, String] = Map(
-    "q29_dedup_exact" ->
-      """SELECT md5(lower(trim(text))) AS content_key,
-         min(doc_id) AS keep_id, count(*) AS dup_count
-         FROM documents GROUP BY 1 ORDER BY keep_id""",
-    "q81_quantile_sketch" -> {
-      val per = QuantilePercentiles.map {
-        case (pm, num, den) =>
-          s"""SELECT lang, CAST($pm AS BIGINT) AS p_mills,
-             CAST(min(CASE WHEN cum >= (n * $num + ${den - 1}) // $den
-               THEN n_chars END) AS BIGINT) AS exact_val,
-             TRUE AS sketch_in_bound
-             FROM r GROUP BY lang"""
-      }.mkString(" UNION ALL ")
-      s"""WITH h AS (
-           SELECT lang, n_chars, count(*) AS cnt
-           FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-         r AS (
-           SELECT lang, n_chars, cnt,
-             sum(cnt) OVER (PARTITION BY lang ORDER BY n_chars
-               ROWS UNBOUNDED PRECEDING) AS cum,
-             sum(cnt) OVER (PARTITION BY lang) AS n
-           FROM h)
-         $per ORDER BY lang, p_mills"""
-    },
-    "q79_bm25_topk" -> bm25OracleSql,
-    "q117_hybrid_rrf" -> {
-      // the SAME factored lexical SQL as q79's oracle rides as a
-      // subquery; semantic side mirrors q37's quantized-cosine twin;
-      // fusion is pure integer floor-division (DuckDB `//` ≡ Spark
-      // `div` on positive BIGINTs)
-      val vecIds = Bm25Queries.map(_._1 * HybridVecStride).mkString(", ")
-      val quant = VectorQueries.quant
-      s"""WITH lex AS (
-           SELECT qid, doc_id, rank AS rank_lex FROM ($bm25OracleSql)),
-         qv AS (SELECT vec_id // $HybridVecStride AS qid, $quant AS qv
-                FROM embeddings WHERE vec_id IN ($vecIds)),
-         c AS (SELECT vec_id AS doc_id, $quant AS cv FROM embeddings),
-         ss AS (SELECT qid, doc_id, ${VectorQueries.cossq("qv", "cv")} AS cos
-                FROM c CROSS JOIN qv),
-         sr AS (SELECT qid, doc_id, row_number() OVER (PARTITION BY qid
-                  ORDER BY cos DESC, doc_id) AS rank_sem FROM ss),
-         sem AS (SELECT qid, doc_id, rank_sem FROM sr
-                 WHERE rank_sem <= $Bm25K),
-         u AS (SELECT coalesce(l.qid, s.qid) AS qid,
-                 coalesce(l.doc_id, s.doc_id) AS doc_id,
-                 l.rank_lex, s.rank_sem
-               FROM lex l FULL OUTER JOIN sem s
-                 ON l.qid = s.qid AND l.doc_id = s.doc_id),
-         f AS (SELECT qid, doc_id, rank_lex, rank_sem,
-                 CAST(coalesce(1000000 // ($RrfK0 + rank_lex), 0)
-                    + coalesce(1000000 // ($RrfK0 + rank_sem), 0)
-                   AS BIGINT) AS rrf_mills
-               FROM u),
-         rr AS (SELECT *, row_number() OVER (PARTITION BY qid
-                  ORDER BY rrf_mills DESC, doc_id) AS rank FROM f)
-         SELECT qid, rank, doc_id, rrf_mills, rank_lex, rank_sem
-         FROM rr WHERE rank <= $Bm25K ORDER BY qid, rank"""
-    },
-    "q72_line_dedup" ->
-      s"""WITH base AS (
-           SELECT doc_id,
-             text || chr(10) || 'shared footer variant ' || CAST(doc_id % 4 AS VARCHAR)
-                  || chr(10) || 'doc marker ' || CAST(doc_id AS VARCHAR) AS t2
-           FROM documents),
-         lx AS (SELECT doc_id, string_split(t2, chr(10)) AS l FROM base),
-         flat AS (
-           SELECT doc_id, CAST(struct_extract(s, 'i') AS BIGINT) AS line_no,
-             struct_extract(s, 'ln') AS line
-           FROM (SELECT doc_id,
-               unnest([{'i': i, 'ln': l[CAST(i AS INT)]} FOR i IN range(1, len(l) + 1)]) AS s
-             FROM lx)),
-         freq AS (
-           SELECT md5(trim(line)) AS lk, count(DISTINCT doc_id) AS ndocs
-           FROM flat WHERE trim(line) <> '' GROUP BY 1),
-         kept AS (
-           SELECT f.doc_id, f.line_no, f.line
-           FROM flat f LEFT JOIN freq ON md5(trim(f.line)) = freq.lk
-           WHERE freq.ndocs IS NULL OR freq.ndocs <= $LineDedupMaxDf),
-         reb AS (
-           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-             md5(string_agg(line, chr(10) ORDER BY line_no)) AS ck
-           FROM kept GROUP BY doc_id)
-         SELECT b.doc_id, CAST(len(string_split(b.t2, chr(10))) AS BIGINT) AS n_lines,
-           coalesce(r.n_kept, 0) AS n_kept, coalesce(r.ck, md5('')) AS clean_key
-         FROM base b LEFT JOIN reb r USING (doc_id) ORDER BY b.doc_id""",
-    "q129_source_overlap" ->
-      // the naive key self-join twin — parity proves the bounded
-      // array-side pair generation lossless and duplicate-free
-      """WITH ks AS (
-           SELECT DISTINCT source,
-             md5(array_to_string(
-               (list_filter(string_split(regexp_replace(trim(lower(text)),
-                  '\s+', ' ', 'g'), ' '), t -> t <> ''))[1:8], ' ')) AS k
-           FROM documents)
-         SELECT a.source AS source_a, b.source AS source_b,
-           CAST(count(*) AS BIGINT) AS n_shared_keys
-         FROM ks a JOIN ks b ON a.k = b.k AND a.source < b.source
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q188_source_jsd" -> {
-      // the naive token self-join twin of the array-side pair
-      // generation; the IDENTICAL Mitchell algebra on integer args,
-      // HUGEINT sums, the same closed-form one-sided correction and
-      // sign-split divisions
-      def mitchell(x: String) =
-        s"""(1000 * (length(printf('%b', $x)) - 1)
-           + (1000 * (($x) - (CAST(1 AS BIGINT)
-               << CAST(length(printf('%b', $x)) - 1 AS INT))))
-             // (CAST(1 AS BIGINT)
-               << CAST(length(printf('%b', $x)) - 1 AS INT)))"""
-      def signDiv(x: String, d: String) =
-        s"""CASE WHEN $x >= 0 THEN CAST(($x) // ($d) AS BIGINT)
-            ELSE -CAST((-($x)) // ($d) AS BIGINT) END"""
-      s"""WITH dt AS (
-           SELECT source, unnest($tokenListSql) AS tok FROM documents),
-         tc AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS cnt
-                FROM dt WHERE tok <> '' GROUP BY 1, 2),
-         tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n
-                 FROM tc GROUP BY 1),
-         pr AS (SELECT a.source AS source_a, b.source AS source_b,
-                  a.cnt AS ca, b.cnt AS cb
-                FROM tc a JOIN tc b
-                  ON a.tok = b.tok AND a.source < b.source),
-         wt AS (SELECT pr.*, ta.n AS na, tb.n AS nb FROM pr
-                JOIN tot ta ON pr.source_a = ta.source
-                JOIN tot tb ON pr.source_b = tb.source),
-         ag AS (SELECT source_a, source_b,
-                  CAST(count(*) AS BIGINT) AS n_shared_toks,
-                  CAST(sum(ca) AS BIGINT) AS sca,
-                  CAST(sum(cb) AS BIGINT) AS scb,
-                  sum(CAST(ca AS HUGEINT) * (${mitchell("2*ca*nb")}
-                    - ${mitchell("ca*nb + cb*na")})) AS da,
-                  sum(CAST(cb AS HUGEINT) * (${mitchell("2*cb*na")}
-                    - ${mitchell("ca*nb + cb*na")})) AS db,
-                  max(na) AS na, max(nb) AS nb
-                FROM wt GROUP BY 1, 2),
-         fin AS (SELECT source_a, source_b, n_shared_toks, na, nb,
-                   da + CAST(1000 AS HUGEINT) * (na - sca) AS sum_a,
-                   db + CAST(1000 AS HUGEINT) * (nb - scb) AS sum_b
-                 FROM ag)
-         SELECT source_a, source_b, n_shared_toks,
-           ${signDiv("sum_a", "na")} AS kl_a_mills,
-           ${signDiv("sum_b", "nb")} AS kl_b_mills,
-           ${signDiv("sum_a * nb + sum_b * na",
-             "2 * CAST(na AS HUGEINT) * nb")} AS jsd_mills
-         FROM fin ORDER BY source_a, source_b"""
-    },
-    "q127_token_entropy" -> {
-      // the shared Mitchell twin (printf('%b') / << / //) applied to
-      // cnt and n; entropy re-derived through the same n·L(n) − Σ c·L(c)
-      // algebra, flag as an exact integer compare
-      def mitchell(x: String) =
-        s"""(1000 * (length(printf('%b', $x)) - 1)
-           + (1000 * ($x - (CAST(1 AS BIGINT)
-               << CAST(length(printf('%b', $x)) - 1 AS INT))))
-             // (CAST(1 AS BIGINT)
-               << CAST(length(printf('%b', $x)) - 1 AS INT)))"""
-      s"""WITH dt AS (
-           SELECT doc_id, unnest($tokenListSql) AS tok FROM documents),
-         tc AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt
-                FROM dt WHERE tok <> '' GROUP BY 1, 2),
-         per AS (
-           SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_toks,
-             CAST(count(*) AS BIGINT) AS n_distinct,
-             CAST(sum(cnt * ${mitchell("cnt")}) AS BIGINT) AS s
-           FROM tc GROUP BY 1)
-         SELECT doc_id, n_toks, n_distinct,
-           n_toks * ${mitchell("n_toks")} - s AS ent_total_mills,
-           n_toks * ${mitchell("n_toks")} - s < n_toks * $EntMinMills
-             AS low_diversity
-         FROM per ORDER BY doc_id"""
-    },
-    "q135_c4_filters" ->
-      // same construction (c4TextSql interpolates the shared lists),
-      // same line lambda (terminal punct incl. optional closing quote,
-      // EMPTY-DROPPING word count over a \s+ split of the trimmed
-      // line, no 'javascript'), same sentence proxy (terminal marks in
-      // the retained text, 'g'-flagged replace), same page verdict
-      s"""WITH base AS (SELECT doc_id, $c4TextSql AS t FROM documents),
-         f AS (
-           SELECT doc_id, t, string_split(t, chr(10)) AS ls,
-             list_filter(string_split(t, chr(10)), l ->
-               regexp_matches(rtrim(l), '[.!?]"?$$')
-               AND len(list_filter(regexp_split_to_array(trim(l), '\\s+'),
-                 w -> w <> '')) >= ${TextAnalysis.C4MinWords}
-               AND NOT contains(lower(l), 'javascript')) AS ks
-           FROM base),
-         k AS (
-           SELECT doc_id, t, ls, ks,
-             array_to_string(ks, chr(10)) AS kt FROM f)
-         SELECT doc_id,
-           CAST(len(ls) AS BIGINT) AS n_lines,
-           CAST(len(ks) AS BIGINT) AS n_kept,
-           md5(kt) AS kept_md5,
-           CAST(length(regexp_replace(kt, '[^.!?]', '', 'g')) AS BIGINT)
-             AS n_sentences,
-           contains(lower(t), 'lorem ipsum') AS has_lorem,
-           contains(t, '{') AS has_brace,
-           (NOT contains(lower(t), 'lorem ipsum')
-             AND NOT contains(t, '{')
-             AND length(regexp_replace(kt, '[^.!?]', '', 'g'))
-               >= ${TextAnalysis.C4MinSentences}) AS page_keep
-         FROM k ORDER BY doc_id""",
-    "q136_unimax_alloc" ->
-      // identical water-filling algebra: capacity-ascending prefix
-      // inequality for the capped test, integer floor share + remainder
-      // to the smallest uncapped strata (CASE keeps the // lazy when
-      // every stratum is capped)
-      s"""WITH $unimaxCtes
-         SELECT stratum, n_tokens, capacity, capped,
-           CAST(allocated AS BIGINT) AS allocated,
-           CAST(coalesce((1000 * allocated) // nullif(n_tokens, 0), 0)
-             AS BIGINT) AS epochs_mills
-         FROM uni ORDER BY stratum""",
-    "q145_temperature_mix" ->
-      // identical algebra: corrected isqrt, floor split, remainder by
-      // (w desc, stratum) rank
-      s"""WITH caps AS (
-           SELECT lang AS stratum,
-             CAST(sum($sqlTokenCount) AS BIGINT) AS n_tokens
-           FROM documents GROUP BY 1),
-         iw AS (
-           SELECT stratum, n_tokens,
-             CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
-               - CASE WHEN CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
-                           * CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
-                           > n_tokens THEN 1 ELSE 0 END
-               + CASE WHEN (CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) + 1)
-                           * (CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) + 1)
-                           <= n_tokens THEN 1 ELSE 0 END AS w
-           FROM caps),
-         g AS (
-           SELECT *, sum(w) OVER () AS sw,
-             ($TempPerMille * sum(n_tokens) OVER ()) // 1000 AS b,
-             (($TempPerMille * sum(n_tokens) OVER ()) // 1000) * w
-               // nullif(sum(w) OVER (), 0) AS fl,
-             CAST(row_number() OVER (ORDER BY w DESC, stratum)
-               AS BIGINT) AS rk
-           FROM iw),
-         h AS (
-           SELECT *, b - sum(fl) OVER () AS rem FROM g),
-         a AS (
-           SELECT stratum, n_tokens, w,
-             CAST((1000 * w) // nullif(sw, 0) AS BIGINT) AS share_mills,
-             CAST(coalesce(fl, 0)
-               + (CASE WHEN rk <= rem THEN 1 ELSE 0 END) AS BIGINT)
-               AS target_tokens
-           FROM h)
-         SELECT stratum, n_tokens, w, share_mills, target_tokens,
-           least(n_tokens, target_tokens) AS alloc_tokens,
-           target_tokens - least(n_tokens, target_tokens)
-             AS deficit_tokens
-         FROM a ORDER BY stratum""",
-    "q137_unimax_select" ->
-      // the SHARED water-filling CTE chain feeding the q74/q116 naive
-      // ordered window — capped strata keep everything (alloc ≥
-      // supply), the waterlined stratum cuts on quality
-      s"""WITH $unimaxCtes,
-         m AS (
-           SELECT doc_id, lang, length(text) AS len,
-             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-             CAST($sqlTokenCount AS BIGINT) AS toks
-           FROM documents),
-         t AS (
-           SELECT doc_id, lang, $sqlQualityMills AS q_mills,
-             toks AS n_tokens
-           FROM m),
-         c AS (
-           SELECT t.*, uni.allocated, sum(t.n_tokens) OVER (
-             PARTITION BY t.lang ORDER BY t.q_mills DESC, t.doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM t JOIN uni ON t.lang IS NOT DISTINCT FROM uni.stratum)
-         SELECT lang, count(*) AS n_kept,
-           CAST(sum(n_tokens) AS BIGINT) AS tok_sum,
-           min(q_mills) AS min_quality, CAST(sum(doc_id) AS BIGINT) AS id_sum
-         FROM c WHERE cum <= allocated GROUP BY lang ORDER BY lang""",
-    "q123_snapshot_diff" ->
-      """WITH v1 AS (SELECT doc_id, text FROM documents),
-         v2 AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 13 = 5 THEN text || ' rev2'
-                  WHEN doc_id % 11 = 2 THEN upper(text)
-                  ELSE text END AS text
-           FROM v1 WHERE doc_id % 17 <> 3
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id,
-             'new doc ' || CAST(doc_id AS VARCHAR) AS text
-           FROM v1 WHERE doc_id % 19 = 7),
-         o AS (SELECT doc_id, md5(lower(trim(text))) AS old_key FROM v1),
-         n AS (SELECT doc_id, md5(lower(trim(text))) AS new_key FROM v2)
-         SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-           CASE WHEN o.doc_id IS NULL THEN 'added'
-                WHEN n.doc_id IS NULL THEN 'removed'
-                WHEN o.old_key IS NOT DISTINCT FROM n.new_key THEN 'unchanged'
-                ELSE 'changed' END AS status,
-           coalesce(old_key, '') AS old_key,
-           coalesce(new_key, '') AS new_key
-         FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-         ORDER BY doc_id""",
-    "q124_hard_negatives" -> {
-      val qids = Bm25Queries.map { case (id, _) =>
-        s"(CAST($id AS BIGINT))" }.mkString(", ")
-      s"""WITH lex AS (SELECT qid, doc_id, rank FROM ($bm25OracleSql)),
-         qd AS (SELECT * FROM (VALUES $qids) AS t(qid)),
-         pool AS (
-           SELECT qd.qid, d.doc_id
-           FROM qd CROSS JOIN (SELECT doc_id FROM documents) d
-           WHERE NOT EXISTS (SELECT 1 FROM lex
-             WHERE lex.qid = qd.qid AND lex.doc_id = d.doc_id)),
-         rnd AS (
-           SELECT qid, doc_id, 'rand_neg' AS role,
-             row_number() OVER (PARTITION BY qid ORDER BY
-               md5(CAST(qid AS VARCHAR) || '#' || CAST(doc_id AS VARCHAR)),
-               doc_id) AS rank
-           FROM pool)
-         SELECT qid, doc_id, role, rank FROM (
-           SELECT qid, doc_id, 'pos' AS role, rank FROM lex
-           WHERE rank <= $HnPos
-           UNION ALL
-           SELECT qid, doc_id, 'hard_neg' AS role, rank - $HnPos AS rank
-           FROM lex WHERE rank > $HnPos
-           UNION ALL
-           SELECT qid, doc_id, role, rank FROM rnd WHERE rank <= $HnRand)
-         ORDER BY qid, role, rank"""
-    },
-    "q122_bpe_merges" -> {
-      // the shared merge-learning chain; each round's argmax pair sits
-      // in t$r
-      val out = (1 to BpeRounds).map { r =>
-        s"""SELECT CAST($r AS BIGINT) AS round,
-              string_split(pair, ' ')[1] AS "left",
-              string_split(pair, ' ')[2] AS "right",
-              replace(pair, ' ', '') AS merged, w AS weight FROM t$r"""
-      }.mkString(" UNION ALL ")
-      s"""WITH $bpeLearnCtes
-         SELECT * FROM ($out) ORDER BY round"""
-    },
-    "q140_bpe_encode" -> {
-      // the SAME learning chain derives the merge table, then every
-      // document token is char-segmented and pushed through the k
-      // replaces in rank order — identical greedy literal-replace
-      // semantics, rebuilt per token and rejoined in token order for
-      // the md5
-      val encRounds = (1 to BpeRounds).map { r =>
-        s"""d$r AS (SELECT doc_id, i, tok, replace(seq,
-               ' ' || replace((SELECT pair FROM t$r), ' ', '  ') || ' ',
-               ' ' || replace((SELECT pair FROM t$r), ' ', '') || ' ')
-               AS seq
-             FROM d${r - 1})"""
-      }.mkString(",\n")
-      s"""WITH $bpeLearnCtes,
-         tl AS (SELECT doc_id, $tokenListSql AS l FROM documents),
-         tk AS (SELECT doc_id, i, l[i] AS tok
-                FROM (SELECT doc_id, l,
-                  CAST(unnest(range(1, len(l) + 1)) AS BIGINT) AS i
-                  FROM tl)
-                WHERE l[i] <> ''),
-         d0 AS (SELECT doc_id, i, tok,
-             ' ' || trim(regexp_replace(tok, '(.)', '\\1  ', 'g')) || ' '
-               AS seq
-           FROM tk),
-         $encRounds,
-         per AS (SELECT doc_id, i, tok, trim(seq) AS enc,
-             CAST(len(string_split(trim(seq), '  ')) AS BIGINT) AS ns
-           FROM d$BpeRounds)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-           CAST(sum(len(tok)) AS BIGINT) AS n_chars,
-           CAST(sum(ns) AS BIGINT) AS n_subwords,
-           md5(array_to_string(list(enc ORDER BY i), ' | ')) AS enc_md5
-         FROM per GROUP BY doc_id ORDER BY doc_id"""
-    },
-    "q121_luhn_pii" ->
-      // full Luhn recompute in SQL over the extracted candidate: digit
-      // at 1-based position i is doubled iff (len - i) is odd (every
-      // second from the RIGHT), minus 9 on overflow, sum % 10 = 0
-      """WITH base AS (
-           SELECT doc_id, source,
-             text || ' card 4'
-               || lpad(CAST((doc_id * 7919) % 100000000000 AS VARCHAR), 11, '0')
-               || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-               || CAST(doc_id % 10 AS VARCHAR) || ' end' AS t2
-           FROM documents),
-         c AS (SELECT doc_id, source,
-                 regexp_extract(t2, '[0-9]{13,19}') AS candidate
-               FROM base)
-         SELECT doc_id, source, candidate,
-           len(candidate) > 0 AND
-           list_sum([CASE WHEN (len(candidate) - i) % 2 = 1 THEN
-               CASE WHEN 2 * CAST(candidate[i] AS INT) > 9
-                    THEN 2 * CAST(candidate[i] AS INT) - 9
-                    ELSE 2 * CAST(candidate[i] AS INT) END
-             ELSE CAST(candidate[i] AS INT) END
-             FOR i IN range(1, len(candidate) + 1)]) % 10 = 0 AS luhn_ok
-         FROM c ORDER BY doc_id""",
-    "q73_pii_scrub" -> {
-      import graft.functions.TextFunctions.{EmailRe, Ipv4Re, PhoneRe}
-      s"""WITH base AS (
-           SELECT doc_id,
-             text || ' contact user' || CAST(doc_id % 50 AS VARCHAR) || '@example.com'
-               || CASE WHEN doc_id % 3 = 0
-                    THEN ' from 10.0.' || CAST(doc_id % 250 AS VARCHAR) || '.7'
-                    ELSE '' END
-               || CASE WHEN doc_id % 5 = 1
-                    THEN ' call +1-555-' || CAST(doc_id % 9000 + 1000 AS VARCHAR)
-                    ELSE '' END AS t
-           FROM documents),
-         p1 AS (SELECT doc_id, t,
-             regexp_replace(t, '$EmailRe', '<EMAIL>', 'g') AS t1 FROM base),
-         p2 AS (SELECT doc_id, t, t1,
-             regexp_replace(t1, '$Ipv4Re', '<IP>', 'g') AS t2 FROM p1)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(t, '$EmailRe')) AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(t1, '$Ipv4Re')) AS BIGINT) AS n_ips,
-           CAST(len(regexp_extract_all(t2, '$PhoneRe')) AS BIGINT) AS n_phones,
-           md5(regexp_replace(t2, '$PhoneRe', '<PHONE>', 'g')) AS scrub_key
-         FROM p2 ORDER BY doc_id"""
-    },
-    "q77_unicode_clean" ->
-      // chr(769)=U+0301 combining acute, chr(776)=U+0308 combining
-      // diaeresis, chr(8205)=U+200D ZWJ (Cf), chr(7)=BEL (Cc); DuckDB's
-      // nfc_normalize is utf8proc NFC — same canonical composition the
-      // engine's java.text.Normalizer NFC expression performs
-      s"""WITH base AS (
-           SELECT doc_id,
-             text || ' cafe' || chr(769) || ' no' || chr(776) || 'el'
-               || CASE WHEN doc_id % 2 = 0
-                    THEN ' zero' || chr(8205) || 'width' ELSE '' END
-               || CASE WHEN doc_id % 3 = 0
-                    THEN ' bell' || chr(7) || 'tone' ELSE '' END AS t
-           FROM documents)
-         SELECT doc_id,
-           CAST(length(t) AS BIGINT) AS n_raw,
-           CAST(length(nfc_normalize(t)) AS BIGINT) AS n_nfc,
-           md5(trim(regexp_replace(regexp_replace(nfc_normalize(t),
-             '${UnicodeNorm.StripRe}', ' ', 'g'), '\\s+', ' ', 'g'))) AS clean_key
-         FROM base ORDER BY doc_id""",
-    "q75_vocab_topk" ->
-      // deterministic despite the LIMIT: the tie-break (cnt DESC, tok)
-      // is a total order because tok is unique after the group-by
-      s"""SELECT tok, CAST(count(*) AS BIGINT) AS cnt
-         FROM $sqlTokRows
-         WHERE tok <> ''
-         GROUP BY tok ORDER BY cnt DESC, tok LIMIT $VocabTopK""",
-    "q83_heavy_hitters" ->
-      // the semantic definition is q75's exact top-k; provably_exact is
-      // RECOMPUTED with the engine's own arithmetic (cnt_k · counters >
-      // N — HeavyHitters.topKExact's gate), not pinned TRUE: a fixture
-      // change that legitimately flips the provability flag must stay
-      // in agreement on both sides (q84's fixture-sensitivity rule),
-      // while a broken two-pass run still fails through the rows
-      // themselves
-      s"""WITH t AS (SELECT tok FROM $sqlTokRows WHERE tok <> ''),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM t),
-         k AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM t
-               GROUP BY tok ORDER BY cnt DESC, tok LIMIT $VocabTopK)
-         SELECT tok, cnt,
-           -- HUGEINT product: the twin of the Spark side's
-           -- DECIMAL(38,0) overflow-proof gate arithmetic
-           CAST(min(cnt) OVER () AS HUGEINT) * $HhCounters
-             > CAST(tot.n AS HUGEINT) AS provably_exact
-         FROM k CROSS JOIN tot
-         ORDER BY cnt DESC, tok""",
-    "q84_cms_counts" ->
-      // full bit-for-bit recompute of the sketch AND the estimates via
-      // the shared sqlCmsBucket hash contract — an engine-side bucket
-      // drift, count drift, or min-row mistake all hash-fail; over_ok
-      // pins the structural overcount guarantee, and within_eps is
-      // RECOMPUTED with the engine's own derivation (est ≤ cnt +
-      // ceil((e/width)·N), same rational-e integer math as
-      // CountMin.epsBound) — NOT pinned TRUE, so a fixture or
-      // VocabTopK change that legitimately flips a probe (violation
-      // probability ≤ e^-depth ≈ 1.8% per probe at CmsDepth=4) stays
-      // in agreement on both sides, while an engine-side geometry
-      // regression still hash-fails through cms_est/eps_bound parity.
-      // CountMinSpec's undersized-width canary keeps the flag honest.
-      s"""WITH tokrows AS (SELECT tok FROM $sqlTokRows WHERE tok <> ''),
-         rows_d AS (SELECT CAST(unnest(range($CmsDepth)) AS INT) AS r),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tok FROM tokrows),
-         sk AS (
-           SELECT r, ${sqlCmsBucket("tok", "r")} AS bucket,
-             CAST(count(*) AS BIGINT) AS bcnt
-           FROM tokrows, rows_d GROUP BY 1, 2),
-         exact AS (
-           SELECT tok, CAST(count(*) AS BIGINT) AS cnt
-           FROM tokrows GROUP BY tok ORDER BY cnt DESC, tok LIMIT $VocabTopK),
-         probes AS (
-           SELECT e.tok, e.cnt, r, ${sqlCmsBucket("e.tok", "r")} AS bucket
-           FROM exact e, rows_d),
-         est AS (
-           SELECT p.tok, p.cnt,
-             min(coalesce(sk.bcnt, 0)) AS cms_est,
-             CAST((${graft.operators.CountMin.EpsNum} * tot.n_tok
-                   + ${graft.operators.CountMin.EpsDen * CmsWidth - 1})
-                  // ${graft.operators.CountMin.EpsDen * CmsWidth} AS BIGINT) AS eps_bound
-           FROM probes p LEFT JOIN sk ON p.r = sk.r AND p.bucket = sk.bucket
-           CROSS JOIN tot
-           GROUP BY p.tok, p.cnt, tot.n_tok)
-         SELECT tok, cnt, cms_est, eps_bound,
-           cms_est >= cnt AS over_ok,
-           cms_est <= cnt + eps_bound AS within_eps
-         FROM est
-         ORDER BY cnt DESC, tok""",
-    "q162_cms_joinsize" ->
-      // full bit-for-bit recompute of BOTH sketches, the min-row inner
-      // product (densified over all depth rows), the exact Σ fA·fB and
-      // both guarantee flags via the shared sqlCmsBucket contract —
-      // the flags are RECOMPUTED with the engine's own arithmetic
-      // (q84's fixture-sensitivity note applied), so parity never
-      // depends on the probabilistic bound holding
-      s"""WITH tokrows AS (
-            SELECT side, tok FROM $sqlTokRowsSided WHERE tok <> ''),
-          rows_d AS (SELECT CAST(unnest(range($CmsDepth)) AS INT) AS r),
-          ska AS (
-            SELECT r, ${sqlCmsBucket("tok", "r")} AS bucket,
-              CAST(count(*) AS BIGINT) AS cnt
-            FROM tokrows, rows_d WHERE side = 0 GROUP BY 1, 2),
-          skb AS (
-            SELECT r, ${sqlCmsBucket("tok", "r")} AS bucket,
-              CAST(count(*) AS BIGINT) AS cnt
-            FROM tokrows, rows_d WHERE side = 1 GROUP BY 1, 2),
-          prod AS (
-            SELECT a.r AS r, sum(CAST(a.cnt AS HUGEINT) * b.cnt) AS ip
-            FROM ska a JOIN skb b ON a.r = b.r AND a.bucket = b.bucket
-            GROUP BY 1),
-          est AS (
-            SELECT CAST(least(min(coalesce(prod.ip, 0)),
-                CAST(9223372036854775807 AS HUGEINT)) AS BIGINT) AS est_join
-            FROM rows_d LEFT JOIN prod ON rows_d.r = prod.r),
-          ex AS (
-            SELECT CAST(coalesce(sum(CAST(x.ca AS HUGEINT) * y.cb), 0)
-              AS BIGINT) AS exact_join
-            FROM (SELECT tok, count(*) AS ca FROM tokrows
-                  WHERE side = 0 GROUP BY 1) x
-            JOIN (SELECT tok, count(*) AS cb FROM tokrows
-                  WHERE side = 1 GROUP BY 1) y USING (tok)),
-          tot AS (
-            SELECT
-              (SELECT CAST(count(*) AS BIGINT) FROM tokrows WHERE side = 0)
-                AS n_a,
-              (SELECT CAST(count(*) AS BIGINT) FROM tokrows WHERE side = 1)
-                AS n_b),
-          sel AS (
-            SELECT n_a, n_b, exact_join, est_join,
-              CAST((${graft.operators.CountMin.EpsNum}
-                    * CAST(n_a AS HUGEINT) * n_b
-                    + ${graft.operators.CountMin.EpsDen * CmsWidth - 1})
-                   // ${graft.operators.CountMin.EpsDen * CmsWidth}
-                AS BIGINT) AS eps_bound
-            FROM est, ex, tot)
-          SELECT n_a, n_b, exact_join, est_join, eps_bound,
-            est_join >= exact_join AS ge_exact,
-            est_join <= exact_join + eps_bound AS within_eps
-          FROM sel""",
-    "q85_chunk_windows" ->
-      // full window recompute: same whitespace tokenization as
-      // sqlTokRows but WITHOUT lower() (chunk digests are content-
-      // faithful); integer ceil via the shifted-numerator floor
-      // division, list_slice clamps the tail exactly like Spark's slice
-      s"""WITH t AS (
-           SELECT doc_id, list_filter(string_split(
-               regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
-             x -> x <> '') AS toks
-           FROM documents),
-         n AS (
-           SELECT doc_id, toks,
-             greatest(1, (len(toks) - $ChunkOverlap + ${ChunkTokens - ChunkOverlap} - 1)
-               // ${ChunkTokens - ChunkOverlap}) AS nchunks
-           FROM t WHERE len(toks) > 0),
-         c AS (
-           SELECT doc_id, toks,
-             CAST(unnest(range(nchunks)) AS BIGINT) AS chunk_no
-           FROM n)
-         SELECT doc_id, chunk_no,
-           chunk_no * ${ChunkTokens - ChunkOverlap} AS start_tok,
-           CAST(len(list_slice(toks,
-             chunk_no * ${ChunkTokens - ChunkOverlap} + 1,
-             chunk_no * ${ChunkTokens - ChunkOverlap} + $ChunkTokens)) AS BIGINT) AS n_toks,
-           md5(array_to_string(list_slice(toks,
-             chunk_no * ${ChunkTokens - ChunkOverlap} + 1,
-             chunk_no * ${ChunkTokens - ChunkOverlap} + $ChunkTokens), ' ')) AS chunk_md5
-         FROM c ORDER BY doc_id, chunk_no""",
-    "q86_dup_passages" ->
-      // full recompute: lowered tokenization (case-insensitive passage
-      // matching), content-defined anchors (md5(token) first 15 hex as
-      // a 60-bit int, ≡ 0 mod anchorMod — the unsalted sibling of
-      // sqlCmsBucket), full-width windows only, window doc-frequency
-      // over distinct docs, dup = frequency > 1. The mills division
-      // runs the same integer pair through double division in both
-      // engines.
-      s"""WITH t AS (
-           SELECT doc_id, list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-             x -> x <> '') AS toks
-           FROM documents),
-         n AS (
-           SELECT doc_id, toks, len(toks) AS n
-           FROM t WHERE len(toks) >= $DupWindowTokens),
-         pos AS (
-           SELECT doc_id, toks,
-             CAST(unnest(range(n - $DupWindowTokens + 1)) AS BIGINT) AS i
-           FROM n),
-         w AS (
-           SELECT doc_id, md5(array_to_string(list_slice(toks,
-             i + 1, i + $DupWindowTokens), ' ')) AS h
-           FROM pos
-           WHERE CAST(('0x' || substr(md5(toks[i + 1]), 1, 15)) AS BIGINT)
-             % $DupAnchorMod = 0),
-         f AS (SELECT h, count(DISTINCT doc_id) AS nd FROM w GROUP BY h)
-         SELECT w.doc_id,
-           CAST(count(*) AS BIGINT) AS n_windows,
-           CAST(count(*) FILTER (f.nd > 1) AS BIGINT) AS n_dup_windows,
-           CAST(floor(CAST(1000 AS DOUBLE) * count(*) FILTER (f.nd > 1)
-             / count(*)) AS BIGINT) AS dup_mills
-         FROM w JOIN f USING (h)
-         GROUP BY w.doc_id ORDER BY w.doc_id""",
-    "q91_gopher_flags" ->
-      // full rule recompute: same token/line splits, char-count symbol
-      // occurrences (the '...' count divides exactly, so DuckDB's
-      // rounding CAST equals Spark's truncation), mills via the shared
-      // same-double-division trick, distinct-stopword intersection
-      s"""WITH base AS (
-           SELECT doc_id, text,
-             list_filter(string_split(
-               regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
-               x -> x <> '') AS toks,
-             string_split(text, chr(10)) AS lines
-           FROM documents)
-         SELECT doc_id,
-           CAST(len(toks) AS BIGINT) AS n_words,
-           CASE WHEN len(toks) = 0 THEN 0 ELSE
-             CAST(floor(CAST(1000 AS DOUBLE)
-               * length(regexp_replace(text, '\\s+', '', 'g'))
-               / len(toks)) AS BIGINT) END AS mean_word_len_mills,
-           CASE WHEN len(toks) = 0 THEN 0 ELSE
-             CAST(floor(CAST(1000 AS DOUBLE) * (
-                 (length(text) - length(replace(text, '#', '')))
-               + (length(text) - length(replace(text, '...', ''))) // 3
-               + (length(text) - length(replace(text, '…', ''))))
-               / len(toks)) AS BIGINT) END AS symbol_mills,
-           CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(lines,
-               x -> regexp_matches(x, '^\\s*[-*•]')))
-             / len(lines)) AS BIGINT) AS bullet_mills,
-           CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(lines,
-               x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$$')))
-             / len(lines)) AS BIGINT) AS ellipsis_mills,
-           CASE WHEN len(toks) = 0 THEN 0 ELSE
-             CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(toks,
-               x -> regexp_matches(x, '[A-Za-z]')))
-             / len(toks)) AS BIGINT) END AS alpha_word_mills,
-           CAST(len(list_intersect(
-             list_distinct(list_transform(toks, x -> lower(x))),
-             [${GopherQStops.map(w => s"'$w'").mkString(", ")}])) AS BIGINT)
-             AS stop_hits,
-           (len(toks) BETWEEN 50 AND 100000)
-             AND (CASE WHEN len(toks) = 0 THEN 0 ELSE
-               CAST(floor(CAST(1000 AS DOUBLE)
-                 * length(regexp_replace(text, '\\s+', '', 'g'))
-                 / len(toks)) AS BIGINT) END BETWEEN 3000 AND 10000)
-             AND (CASE WHEN len(toks) = 0 THEN 0 ELSE
-               CAST(floor(CAST(1000 AS DOUBLE) * (
-                   (length(text) - length(replace(text, '#', '')))
-                 + (length(text) - length(replace(text, '...', ''))) // 3
-                 + (length(text) - length(replace(text, '…', ''))))
-                 / len(toks)) AS BIGINT) END <= 100)
-             AND (CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(lines,
-                 x -> regexp_matches(x, '^\\s*[-*•]')))
-               / len(lines)) AS BIGINT) <= 900)
-             AND (CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(lines,
-                 x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$$')))
-               / len(lines)) AS BIGINT) <= 300)
-             AND (CASE WHEN len(toks) = 0 THEN 0 ELSE
-               CAST(floor(CAST(1000 AS DOUBLE) * len(list_filter(toks,
-                 x -> regexp_matches(x, '[A-Za-z]')))
-               / len(toks)) AS BIGINT) END >= 800)
-             AND (len(list_intersect(
-               list_distinct(list_transform(toks, x -> lower(x))),
-               [${GopherQStops.map(w => s"'$w'").mkString(", ")}])) >= 2)
-             AS gopher_ok
-         FROM base ORDER BY doc_id""",
-    "q90_dsir_score" ->
-      // full recompute: lowered bigram multiset, the '#dsir' salted
-      // md5 bucket contract, add-one-smoothed totals-normalized
-      // rational weights in HUGEINT (the DECIMAL(38,0) twin), per-doc
-      // occurrence-weighted sums; target grams reuse the source gram
-      // table filtered (target ⊆ source by construction)
-      s"""WITH $sqlDsirScoredCtes
-         SELECT d.doc_id, coalesce(s.n_grams, 0) AS n_grams,
-           coalesce(s.dsir_mills, 0) AS dsir_mills,
-           coalesce(CAST(s.dsir_mills // s.n_grams AS BIGINT), 0) AS dsir_avg_mills
-         FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
-         ORDER BY d.doc_id""",
-    "q92_dsir_select" ->
-      // the q90 scoring CTEs + a per-stratum rank window on the
-      // selection key with the same (avg DESC, doc_id) tie-break
-      s"""WITH $sqlDsirScoredCtes,
-         av AS (SELECT d.doc_id, d.lang,
-                  coalesce(CAST(s.dsir_mills // s.n_grams AS BIGINT), 0)
-                    AS dsir_avg_mills
-                FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id),
-         rk AS (SELECT lang,
-                  CAST(row_number() OVER (PARTITION BY lang
-                    ORDER BY dsir_avg_mills DESC, doc_id) AS BIGINT) AS rank,
-                  doc_id, dsir_avg_mills
-                FROM av)
-         SELECT lang, rank, doc_id, dsir_avg_mills
-         FROM rk WHERE rank <= $DsirSelectK
-         ORDER BY lang, rank""",
-    "q94_collocations" ->
-      // full recompute: lowered per-doc token lists, order-aware
-      // bigrams WITH multiplicity (the wordNGrams twin: l[i]||' '||
-      // l[i+1] over 1-based i), minCount prefilter, then the two
-      // exact-integer scores — the phrase score through HUGEINT floor
-      // division (the DECIMAL(38,0) div twin), Dice in int64. The
-      // (phrase_mills DESC, w1, w2) total order is unique, so the
-      // LIMIT is deterministic in both engines.
-      s"""WITH t AS (
-           SELECT list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-             x -> x <> '') AS l
-           FROM documents),
-         unis AS (SELECT unnest(l) AS tok FROM t),
-         u AS (SELECT tok, CAST(count(*) AS BIGINT) AS n
-               FROM unis GROUP BY tok),
-         n1 AS (SELECT CAST(count(*) AS BIGINT) AS c FROM unis),
-         bis AS (
-           SELECT unnest($wordBigramsAllSql) AS bi FROM t),
-         b AS (
-           SELECT string_split(bi, ' ')[1] AS w1,
-             string_split(bi, ' ')[2] AS w2,
-             CAST(count(*) AS BIGINT) AS n_pair
-           FROM bis GROUP BY 1, 2 HAVING count(*) >= $PhraseMinCount)
-         SELECT b.w1, b.w2, b.n_pair, u1.n AS n_w1, u2.n AS n_w2,
-           CAST(greatest(
-             (CAST(1000 AS HUGEINT) * (b.n_pair - $PhraseDiscount) * n1.c)
-               // (CAST(u1.n AS HUGEINT) * u2.n),
-             CAST(0 AS HUGEINT)) AS BIGINT) AS phrase_mills,
-           (2000 * b.n_pair) // (u1.n + u2.n) AS dice_mills
-         FROM b
-         JOIN u u1 ON b.w1 = u1.tok
-         JOIN u u2 ON b.w2 = u2.tok
-         CROSS JOIN n1
-         ORDER BY phrase_mills DESC, w1, w2 LIMIT $PhraseTopK""",
-    "q95_unigram_ce" ->
-      // full recompute: Laplace-smoothed unigram costs over the 'en'
-      // stratum in EXACT integer millibits — Mitchell's log2:
-      // floor_log2 as the length of the base-2 digit string
-      // (printf('%b') here, conv(_,10,2) in the engine; both exact),
-      // 2^e via integer shift, linear fraction via integer floor
-      // division; no float log anywhere, and the same left-join +
-      // coalesce row-preserving shape as the engine
-      s"""WITH $unigramCeCtes
-         SELECT d.doc_id, coalesce(sc.n_toks, CAST(0 AS BIGINT)) AS n_toks,
-           coalesce(sc.total_bits_mills, CAST(0 AS BIGINT))
-             AS total_bits_mills,
-           sc.total_bits_mills // sc.n_toks AS avg_bits_mills
-         FROM documents d LEFT JOIN sc USING (doc_id)
-         ORDER BY doc_id""",
-    "q110_bigram_ce" ->
-      // full recompute: LM unigram/bigram count tables over the 'en'
-      // stratum, per-position interpolated rational 1/P through
-      // HUGEINT floor division (the DECIMAL(38,0) twin), Mitchell's
-      // log2 in exact integer millibits, unseen-context backoff to
-      // the q95 unigram kernel — no float anywhere
-      s"""WITH t AS (
-           SELECT doc_id, lang, list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-             x -> x <> '') AS l
-           FROM documents),
-         lmtoks AS (SELECT unnest(l) AS tok FROM t WHERE lang = 'en'),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(count(DISTINCT tok) AS BIGINT) AS v
-                 FROM lmtoks),
-         uni AS (SELECT tok, CAST(count(*) AS BIGINT) AS c
-                 FROM lmtoks GROUP BY tok),
-         lmbg AS (
-           SELECT unnest($wordBigramsAllSql) AS bg FROM t WHERE lang = 'en'),
-         bi AS (SELECT bg, CAST(count(*) AS BIGINT) AS c12
-                FROM lmbg GROUP BY bg),
-         firstq AS (
-           SELECT doc_id,
-             (1024 * (tot.n + tot.v)) // (coalesce(u.c, 0) + 1) AS q
-           FROM (SELECT doc_id, l[1] AS tok FROM t WHERE len(l) >= 1) f
-           LEFT JOIN uni u ON f.tok = u.tok CROSS JOIN tot),
-         prs AS (SELECT doc_id, unnest($wordBigramsAllSql) AS bg FROM t),
-         pq AS (
-           SELECT p.doc_id,
-             CASE WHEN coalesce(u1.c, 0) = 0
-               THEN (1024 * (tot.n + tot.v)) // (coalesce(u2.c, 0) + 1)
-               ELSE CAST((CAST(2048 AS HUGEINT) * u1.c * (tot.n + tot.v))
-                 // (CAST(coalesce(b.c12, 0) AS HUGEINT) * (tot.n + tot.v)
-                     + (coalesce(u2.c, 0) + 1) * u1.c) AS BIGINT)
-             END AS q
-           FROM (SELECT doc_id, bg, split_part(bg, ' ', 1) AS w1,
-                   split_part(bg, ' ', 2) AS w2 FROM prs) p
-           LEFT JOIN uni u1 ON p.w1 = u1.tok
-           LEFT JOIN uni u2 ON p.w2 = u2.tok
-           LEFT JOIN bi b ON p.bg = b.bg
-           CROSS JOIN tot),
-         allq AS (SELECT doc_id, q FROM firstq
-                  UNION ALL SELECT doc_id, q FROM pq),
-         costs AS (
-           SELECT doc_id, 1000 * e + (1000 * (q - p)) // p - 10000 AS cost
-           FROM (
-             SELECT doc_id, q, e, (CAST(1 AS BIGINT) << CAST(e AS INT)) AS p
-             FROM (
-               SELECT doc_id, q, length(printf('%b', q)) - 1 AS e
-               FROM allq))),
-         sc AS (
-           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-             CAST(sum(cost) AS BIGINT) AS total_bits_mills
-           FROM costs GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(sc.n_toks, CAST(0 AS BIGINT)) AS n_toks,
-           coalesce(sc.total_bits_mills, CAST(0 AS BIGINT))
-             AS total_bits_mills,
-           sc.total_bits_mills // sc.n_toks AS avg_bits_mills
-         FROM documents d LEFT JOIN sc USING (doc_id)
-         ORDER BY doc_id""",
-    "q96_tfidf_keywords" ->
-      // full recompute: per-doc tf with multiplicity, df over the
-      // distinct (doc, term) frame, rational idf through HUGEINT floor
-      // division (the DECIMAL(38,0) div twin), and the same
-      // (score DESC, term ASC) row_number cut
-      s"""WITH t AS (
-           SELECT doc_id, list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-             x -> x <> '') AS l
-           FROM documents),
-         dt AS (SELECT doc_id, unnest(l) AS term FROM t),
-         tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-                FROM dt GROUP BY doc_id, term),
-         dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df_docs
-                 FROM tf GROUP BY term),
-         nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         sc AS (
-           SELECT tf.doc_id, tf.term, tf.tf, dfq.df_docs,
-             CAST((CAST(1000 AS HUGEINT) * tf.tf * nd.n) // dfq.df_docs
-               AS BIGINT) AS tfidf_mills
-           FROM tf JOIN dfq USING (term) CROSS JOIN nd),
-         rk AS (
-           SELECT doc_id, CAST(row_number() OVER (PARTITION BY doc_id
-               ORDER BY tfidf_mills DESC, term) AS BIGINT) AS rank,
-             term, tf, df_docs, tfidf_mills
-           FROM sc)
-         SELECT doc_id, rank, term, tf, df_docs, tfidf_mills
-         FROM rk WHERE rank <= $KeywordTopK
-         ORDER BY doc_id, rank""",
-    "q98_blocklist" ->
-      // the NAIVE twin: every phrase against every doc's normalized
-      // text via padded contains — independently proving the engine's
-      // first-token blocking drops no token-aligned match
-      s"""WITH p AS (
-           SELECT * FROM (VALUES ${BlocklistPhrases
-             .map { case (id, ph) => s"(CAST($id AS BIGINT), '$ph')" }
-             .mkString(", ")}) AS v(pid, phrase)),
-         n AS (
-           SELECT doc_id,
-             regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm
-           FROM documents),
-         m AS (
-           SELECT n.doc_id, p.pid
-           FROM n JOIN p
-             ON contains(' ' || n.norm || ' ', ' ' || p.phrase || ' ')),
-         agg AS (
-           SELECT doc_id, CAST(count(DISTINCT pid) AS BIGINT) AS n_matched,
-             array_to_string(list_sort(list(DISTINCT CAST(pid AS VARCHAR))),
-               ',') AS matched_ids
-           FROM m GROUP BY doc_id)
-         SELECT d.doc_id,
-           coalesce(agg.n_matched, CAST(0 AS BIGINT)) AS n_matched,
-           coalesce(agg.n_matched, 0) > 0 AS blocked,
-           coalesce(agg.matched_ids, '') AS matched_ids
-         FROM documents d LEFT JOIN agg USING (doc_id)
-         ORDER BY doc_id""",
-    "q99_url_canon" ->
-      // the same RE2-safe, literal-replacement regex chain, step for
-      // step (DuckDB needs the 'g' flag for replace-all; patterns are
-      // interpolated from UrlNorm.TrackingParams so they can't drift)
-      s"""WITH u AS (
-           SELECT doc_id,
-             'HTTPS://WWW.Example' || CAST(doc_id % 7 AS VARCHAR)
-               || '.COM/Docs/Item' || CAST(doc_id AS VARCHAR)
-               || CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END
-               || CASE WHEN doc_id % 3 = 0
-                    THEN '?utm_source=feed&q=1&fbclid=abc'
-                  WHEN doc_id % 3 = 1 THEN '?gclid=xyz'
-                  ELSE '?q=2&utm_campaign=c' END
-               || CASE WHEN doc_id % 5 = 0 THEN '#Section-2' ELSE '' END
-               AS url
-           FROM documents),
-         c1 AS (SELECT doc_id,
-                  regexp_replace(lower(trim(url)), '#.*', '', 'g') AS u
-                FROM u),
-         -- query-scoped tracking removal, the engine's split/clean/
-         -- reassemble shape: '&' is legal in path segments
-         c2 AS (SELECT doc_id,
-                  regexp_extract(u, '^[^?]*') AS b,
-                  regexp_extract(u, '^[^?]*\\?(.*)$$', 1) AS q
-                FROM c1),
-         c3 AS (SELECT doc_id, b, regexp_replace(q,
-                  '&${graft.functions.UrlNorm.TrackingParams}=[^&]*', '', 'g')
-                  AS q FROM c2),
-         c4 AS (SELECT doc_id, b, regexp_replace(q,
-                  '^${graft.functions.UrlNorm.TrackingParams}=[^&]*&?', '',
-                  'g') AS q FROM c3),
-         c5 AS (SELECT doc_id, regexp_replace(
-                  CASE WHEN q = '' THEN b ELSE b || '?' || q END,
-                  '[?&]+$$', '', 'g') AS u
-                FROM c4),
-         c6 AS (SELECT doc_id, regexp_replace(u,
-                  '^([a-z0-9+.-]+)://www\\.', '\\1://', 'g') AS u
-                FROM c5),
-         c7 AS (SELECT doc_id, regexp_replace(u, '/+$$', '', 'g') AS u
-                FROM c6)
-         SELECT doc_id, u AS url_canon,
-           regexp_extract(u, '^[a-z0-9+.-]+://([^/?#]+)', 1) AS host
-         FROM c7 ORDER BY doc_id""",
-    "q100_priority_sample" ->
-      // identical (md5, id) priority order and rank cut
-      s"""WITH rk AS (
-           SELECT lang,
-             CAST(row_number() OVER (PARTITION BY lang
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT)
-               AS sample_rank,
-             doc_id
-           FROM documents)
-         SELECT lang, sample_rank, doc_id
-         FROM rk WHERE sample_rank <= $PrioritySampleK
-         ORDER BY lang, sample_rank""",
-    "q102_skipgram_pmi" ->
-      // full recompute: positional pairs at every distance 1..window
-      // (least/greatest canonical order — binary string compare in
-      // both engines), HUGEINT 1024-scaled ratio, Mitchell log2 via
-      // printf('%b') + shift + floor division — the q95 kernel twin
-      s"""WITH t AS (
-           SELECT list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-             x -> x <> '') AS l
-           FROM documents),
-         pos AS (
-           SELECT l, CAST(unnest(range(1, len(l) + 1)) AS INT) AS i
-           FROM t),
-         prs AS (
-           SELECT least(l[i], l[i + d]) AS w1,
-             greatest(l[i], l[i + d]) AS w2
-           FROM pos, (SELECT CAST(unnest(range(1, $SkipgramWindow + 1))
-                        AS INT) AS d)
-           WHERE i + d <= len(l)),
-         uni AS (
-           SELECT tok, CAST(count(*) AS BIGINT) AS n
-           FROM (SELECT unnest(l) AS tok FROM t) GROUP BY tok),
-         tot AS (
-           SELECT
-             (SELECT CAST(count(*) AS BIGINT)
-              FROM (SELECT unnest(l) AS x FROM t)) AS nt,
-             (SELECT CAST(count(*) AS BIGINT) FROM prs) AS np),
-         p AS (
-           SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_pair
-           FROM prs GROUP BY 1, 2 HAVING count(*) >= $SkipgramMinCount),
-         qv AS (
-           SELECT p.w1, p.w2, p.n_pair, u1.n AS n_w1, u2.n AS n_w2,
-             CAST((CAST(1024 AS HUGEINT) * p.n_pair * tot.nt * tot.nt)
-               // (CAST(tot.np AS HUGEINT) * u1.n * u2.n) AS BIGINT) AS q
-           FROM p
-           JOIN uni u1 ON p.w1 = u1.tok
-           JOIN uni u2 ON p.w2 = u2.tok
-           CROSS JOIN tot),
-         sc AS (
-           SELECT w1, w2, n_pair, n_w1, n_w2,
-             1000 * e + (1000 * (q - pw)) // pw - 10000 AS pmi_mills
-           FROM (
-             SELECT *, (CAST(1 AS BIGINT) << CAST(e AS INT)) AS pw
-             FROM (SELECT *, length(printf('%b', q)) - 1 AS e FROM qv)))
-         SELECT w1, w2, n_pair, n_w1, n_w2, pmi_mills
-         FROM sc ORDER BY pmi_mills DESC, w1, w2 LIMIT $SkipgramTopK""",
-    "q108_minhash_estimate" -> {
-      val matches = (0 until 8).map(i =>
-        s"(CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END)").mkString(" + ")
-      s"""WITH $lshPairsCtes,
-         ts AS (SELECT doc_id, $sqlTokSet AS tset
-                FROM documents WHERE doc_id % 5 = 0),
-         j AS (
-           SELECT p.id_a, p.id_b,
-             CAST(125 * ($matches) AS BIGINT) AS est_mills,
-             CAST(floor(1000 * len(list_intersect(x.tset, y.tset))
-               / (len(x.tset) + len(y.tset)
-                  - len(list_intersect(x.tset, y.tset)))) AS BIGINT)
-               AS jac_mills
-           FROM pairs p
-           JOIN sig a ON p.id_a = a.doc_id
-           JOIN sig b ON p.id_b = b.doc_id
-           JOIN ts x ON p.id_a = x.doc_id
-           JOIN ts y ON p.id_b = y.doc_id)
-         SELECT id_a, id_b, est_mills, jac_mills,
-           abs(est_mills - jac_mills) AS abs_err
-         FROM j ORDER BY id_a, id_b"""
-    },
-    "q116_mixture_select" -> {
-      val totalW = MixtureWeights.map(_._2).sum
-      val vals = MixtureWeights
-        .map { case (l, w) => s"('$l', CAST($w AS BIGINT))" }.mkString(", ")
-      // the q74 naive ordered window, budget-joined per stratum from an
-      // independent recompute of q113's allocation
-      s"""WITH m AS (
-           SELECT doc_id, lang, length(text) AS len,
-             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-             CAST($sqlTokenCount AS BIGINT) AS toks
-           FROM documents),
-         t AS (
-           SELECT doc_id, lang, $sqlQualityMills AS q_mills,
-             toks AS n_tokens
-           FROM m),
-         w AS (SELECT * FROM (VALUES $vals) AS v(lang, w)),
-         av AS (SELECT lang, CAST(sum(toks) AS BIGINT) AS avail FROM m
-                GROUP BY lang),
-         b AS (
-           SELECT av.lang,
-             least(av.avail,
-               CAST((CAST($MixtureBudget AS HUGEINT) * coalesce(w.w, 0))
-                 // $totalW AS BIGINT)) AS alloc
-           FROM av LEFT JOIN w ON av.lang = w.lang),
-         c AS (
-           SELECT t.*, b.alloc, sum(n_tokens) OVER (PARTITION BY t.lang
-             ORDER BY q_mills DESC, doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM t JOIN b ON t.lang IS NOT DISTINCT FROM b.lang)
-         SELECT lang, count(*) AS n_kept,
-           CAST(sum(n_tokens) AS BIGINT) AS tok_sum,
-           min(q_mills) AS min_quality, CAST(sum(doc_id) AS BIGINT) AS id_sum
-         FROM c WHERE cum <= alloc GROUP BY lang ORDER BY lang"""
-    },
-    "q115_winsorize" ->
-      // independent recompute of the exact rank-(n·p ceil) bounds
-      // (the q81 arithmetic) and the clip/flag application
-      """WITH h AS (
-           SELECT lang, n_chars, count(*) AS cnt
-           FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-         r AS (
-           SELECT lang, n_chars, cnt,
-             sum(cnt) OVER (PARTITION BY lang ORDER BY n_chars
-               ROWS UNBOUNDED PRECEDING) AS cum,
-             sum(cnt) OVER (PARTITION BY lang) AS n
-           FROM h),
-         b AS (
-           SELECT lang,
-             CAST(min(CASE WHEN cum >= (n * 1 + 19) // 20
-               THEN n_chars END) AS BIGINT) AS lo,
-             CAST(min(CASE WHEN cum >= (n * 19 + 19) // 20
-               THEN n_chars END) AS BIGINT) AS hi
-           FROM r GROUP BY lang)
-         SELECT d.doc_id, d.lang, d.n_chars, b.lo, b.hi,
-           least(greatest(d.n_chars, b.lo), b.hi) AS clipped,
-           (d.n_chars < b.lo OR d.n_chars > b.hi) AS is_outlier
-         FROM documents d LEFT JOIN b ON d.lang IS NOT DISTINCT FROM b.lang
-         WHERE d.n_chars IS NOT NULL
-         ORDER BY d.doc_id""",
-    "q113_mixture_plan" -> {
-      val totalW = MixtureWeights.map(_._2).sum
-      val vals = MixtureWeights
-        .map { case (l, w) => s"('$l', CAST($w AS BIGINT))" }.mkString(", ")
-      // full recompute: token supply per stratum, HUGEINT target split,
-      // and the signed Mitchell log2 of the share ratio — the q95
-      // kernel twin, with the zero-supply/zero-weight pins
-      s"""WITH w AS (SELECT * FROM (VALUES $vals) AS v(lang, w)),
-         a AS (SELECT lang, CAST(sum($sqlTokenCount) AS BIGINT)
-                 AS avail_tokens
-               FROM documents GROUP BY lang),
-         nn AS (SELECT CAST(coalesce(sum(avail_tokens), 0) AS BIGINT) AS n
-                FROM a),
-         j AS (
-           SELECT coalesce(a.lang, w.lang) AS lang,
-             coalesce(a.avail_tokens, 0) AS avail_tokens,
-             coalesce(w.w, 0) AS w
-           FROM a FULL OUTER JOIN w ON a.lang = w.lang),
-         t AS (
-           SELECT j.*, nn.n,
-             CAST((CAST($MixtureBudget AS HUGEINT) * w) // $totalW
-               AS BIGINT) AS target_tokens
-           FROM j CROSS JOIN nn),
-         r AS (
-           SELECT *,
-             CASE WHEN avail_tokens > 0 AND w > 0
-                   AND CAST(avail_tokens AS HUGEINT) * $totalW
-                       >= CAST(n AS HUGEINT) * w
-               THEN CAST((CAST(1024 AS HUGEINT) * avail_tokens * $totalW)
-                 // (CAST(n AS HUGEINT) * w) AS BIGINT)
-             WHEN avail_tokens > 0 AND w > 0
-               THEN CAST((CAST(1024 AS HUGEINT) * n * w)
-                 // (CAST(avail_tokens AS HUGEINT) * $totalW) AS BIGINT)
-             ELSE NULL END AS q,
-             CASE WHEN CAST(avail_tokens AS HUGEINT) * $totalW
-                       >= CAST(n AS HUGEINT) * w
-               THEN 1 ELSE -1 END AS sgn
-           FROM t),
-         m AS (
-           SELECT *, 1000 * e + (1000 * (q - p)) // p - 10000 AS lm
-           FROM (
-             SELECT *, (CAST(1 AS BIGINT) << CAST(e AS INT)) AS p
-             FROM (SELECT *, length(printf('%b', q)) - 1 AS e FROM r)))
-         SELECT lang, avail_tokens, target_tokens,
-           least(avail_tokens, target_tokens) AS alloc_tokens,
-           target_tokens - least(avail_tokens, target_tokens)
-             AS deficit_tokens,
-           CAST(CASE WHEN avail_tokens = 0 AND w = 0 THEN 0
-             WHEN avail_tokens = 0 THEN -10000 * $totalW
-             WHEN w = 0 THEN 10000 * $totalW
-             ELSE sgn * lm END AS BIGINT) AS log2_ratio_mills
-         FROM m ORDER BY lang"""
-    },
-    "q112_containment_pairs" ->
-      // the NAIVE ordered-pair twin within (subset, source) blocks —
-      // parity proves the engine's asymmetric prefix filter lossless
-      s"""WITH d AS (
-           SELECT doc_id, source, $sqlTokSet AS toks
-           FROM documents WHERE doc_id % 3 = 0)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(floor(1000 * len(list_intersect(a.toks, b.toks))
-             / len(a.toks)) AS BIGINT) AS contain_mills
-         FROM d a JOIN d b ON a.source = b.source AND a.doc_id <> b.doc_id
-         WHERE floor(1000 * len(list_intersect(a.toks, b.toks))
-             / len(a.toks)) >= 700
-         ORDER BY id_a, id_b""",
-    "q109_dedup_against" -> {
-      val sig = (0 until 8).map(i => s"${sqlMinhash(i)} AS mh$i").mkString(", ")
-      // independent recompute of the split, the key match, the 2×4
-      // band index, and the exhaustive candidate verify
-      s"""WITH toks AS (
-           SELECT doc_id, unnest($sqlTokSet) AS tok FROM documents),
-         sig AS (SELECT doc_id, $sig FROM toks GROUP BY doc_id),
-         bands AS (
-           SELECT doc_id, 0 AS band_no,
-             mh0 || '|' || mh1 || '|' || mh2 || '|' || mh3 AS sig_s FROM sig
-           UNION ALL
-           SELECT doc_id, 1,
-             mh4 || '|' || mh5 || '|' || mh6 || '|' || mh7 FROM sig),
-         ck AS (SELECT doc_id, md5(lower(trim(text))) AS k FROM documents),
-         exact AS (
-           SELECT b.doc_id AS bid, min(c.doc_id) AS exact_id
-           FROM ck b JOIN ck c ON b.k = c.k AND c.doc_id % 3 <> 0
-           WHERE b.doc_id % 3 = 0 GROUP BY 1),
-         cand AS (
-           SELECT b.doc_id AS bid, c.doc_id AS cid
-           FROM bands b JOIN bands c
-             ON b.band_no = c.band_no AND b.sig_s = c.sig_s
-           WHERE b.doc_id % 3 = 0 AND c.doc_id % 3 <> 0
-             AND b.doc_id NOT IN (SELECT bid FROM exact)
-           GROUP BY 1, 2),
-         ts AS (SELECT doc_id, $sqlTokSet AS t FROM documents),
-         ver AS (
-           SELECT bid, cid,
-             CAST(floor(1000 * len(list_intersect(x.t, y.t))
-               / (len(x.t) + len(y.t) - len(list_intersect(x.t, y.t))))
-               AS BIGINT) AS jm
-           FROM cand JOIN ts x ON bid = x.doc_id JOIN ts y ON cid = y.doc_id),
-         best AS (
-           SELECT bid, cid, jm,
-             row_number() OVER (PARTITION BY bid ORDER BY jm DESC, cid) AS rn
-           FROM ver WHERE jm >= 500)
-         SELECT d.doc_id,
-           CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-                WHEN b.cid IS NOT NULL THEN 'near_dup'
-                ELSE 'new' END AS verdict,
-           CAST(coalesce(e.exact_id, b.cid, -1) AS BIGINT) AS matched_id,
-           CAST(CASE WHEN e.exact_id IS NOT NULL THEN 1000
-                ELSE coalesce(b.jm, -1) END AS BIGINT) AS jaccard_mills,
-           -- q109 runs LOSSLESS (maxCandidates = Int.MaxValue): the
-           -- operator's capped observability flag must be false on
-           -- EVERY row — the q43 literal-flag pattern: a spuriously
-           -- capped engine row hash-fails here
-           FALSE AS capped
-         FROM documents d
-         LEFT JOIN exact e ON d.doc_id = e.bid
-         LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON d.doc_id = b.bid
-         WHERE d.doc_id % 3 = 0 ORDER BY d.doc_id"""
-    },
-    "q107_source_report" ->
-      // same keeper rule, quality contract (over LOWERED text — len
-      // and alpha are case-invariant, so the m-triple carries over),
-      // and rollup recomputed independently
-      s"""WITH d AS (
-           SELECT doc_id, source, lang,
-             lower(text) AS text, md5(lower(trim(text))) AS ck
-           FROM documents),
-         m AS (
-           SELECT doc_id, length(text) AS len,
-             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-               ELSE len(list_filter(string_split(
-                 regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
-                 t -> t <> '')) END
-               AS toks
-           FROM d),
-         qq AS (SELECT doc_id, toks, $sqlQualityMills AS q FROM m),
-         k AS (SELECT ck, min(doc_id) AS keep_id FROM d GROUP BY ck)
-         SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN d.doc_id <> k.keep_id THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_dup_docs,
-           CAST(count(DISTINCT d.ck) AS BIGINT) AS n_distinct,
-           CAST(sum(qq.toks) AS BIGINT) AS tok_sum,
-           CAST(sum(qq.q) AS BIGINT) AS q_sum,
-           CAST(count(DISTINCT d.lang) AS BIGINT) AS n_langs
-         FROM d JOIN k USING (ck) JOIN qq ON d.doc_id = qq.doc_id
-         GROUP BY d.source ORDER BY d.source""",
-    "q106_dedup_keepers" ->
-      // q53's transitive closure + the q31-contract quality formula +
-      // an independent argmax derivation; singletons self-keep
-      s"""WITH RECURSIVE $lshPairsCtes,
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION
-           SELECT id_b AS src, id_a AS dst FROM pairs),
-         reach AS (
-           SELECT src AS id, src AS comp FROM edges
-           UNION
-           SELECT e.dst AS id, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-         compo AS (SELECT id AS doc_id, min(comp) AS component
-                   FROM reach GROUP BY id),
-         m AS (
-           SELECT doc_id, length(text) AS len,
-             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-               ELSE len(list_filter(string_split(
-                 regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
-                 t -> t <> '')) END
-               AS toks
-           FROM documents WHERE doc_id % 5 = 0),
-         qq AS (SELECT doc_id, $sqlQualityMills AS q FROM m),
-         lab AS (
-           SELECT qq.doc_id, coalesce(c.component, qq.doc_id) AS component,
-             qq.q
-           FROM qq LEFT JOIN compo c USING (doc_id)),
-         rk AS (
-           SELECT *, row_number() OVER (PARTITION BY component
-             ORDER BY q DESC, doc_id) AS rk
-           FROM lab)
-         SELECT component, CAST(count(*) AS BIGINT) AS n_members,
-           min(CASE WHEN rk = 1 THEN doc_id END) AS keeper,
-           min(CASE WHEN rk = 1 THEN q END) AS keeper_quality,
-           CAST(sum(q) AS BIGINT) AS quality_sum
-         FROM rk GROUP BY component ORDER BY component""",
-    "q105_hamming2_pairs" -> {
-      // the NAIVE all-pairs twin over the q33-contract simhash at 24
-      // bits — parity proves the pigeonhole blocking lossless and
-      // duplicate-free
-      val sums = (0 until HammingBits).map(i =>
-        s"sum(CASE WHEN ascii(substr(md5(tok), ${i + 1}, 1)) % 2 = 1 THEN 1 ELSE -1 END) AS s$i")
-        .mkString(", ")
-      val pack = (0 until HammingBits).map(i =>
-        s"(CASE WHEN s$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")
-      s"""WITH toks AS (
-           SELECT doc_id, unnest($sqlTokSet) AS tok FROM documents),
-         bits AS (SELECT doc_id, $sums FROM toks GROUP BY doc_id),
-         h AS (SELECT doc_id, CAST($pack AS BIGINT) AS hh FROM bits),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(bit_count(xor(a.hh, b.hh)) AS BIGINT) AS hamming
-           FROM h a JOIN h b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.hh, b.hh)) <= $HammingMaxDist)
-         SELECT hamming, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(id_a) AS BIGINT) AS sum_a,
-           CAST(sum(id_b) AS BIGINT) AS sum_b,
-           min(id_a) AS min_a, max(id_b) AS max_b
-         FROM p GROUP BY hamming ORDER BY hamming"""
-    },
-    "q104_ccnet_split" ->
-      // the shared q95 score recompute + an independent exact-tercile
-      // derivation over the (lang, score) histogram
-      s"""WITH $unigramCeCtes,
-         scored AS (
-           SELECT t.doc_id, t.lang,
-             sc.total_bits_mills // sc.n_toks AS s
-           FROM t JOIN sc USING (doc_id) WHERE sc.n_toks > 0),
-         tot2 AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-                  FROM scored GROUP BY lang),
-         h AS (SELECT lang, s, CAST(count(*) AS BIGINT) AS c
-               FROM scored GROUP BY 1, 2),
-         cum AS (SELECT lang, s,
-                   sum(c) OVER (PARTITION BY lang ORDER BY s) AS cum
-                 FROM h),
-         b AS (SELECT cum.lang,
-                 min(CASE WHEN cum >= (n + 2) // 3 THEN s END) AS b1,
-                 min(CASE WHEN cum >= (2 * n + 2) // 3 THEN s END) AS b2
-               FROM cum JOIN tot2 USING (lang) GROUP BY cum.lang),
-         a AS (SELECT scored.lang,
-                 CASE WHEN s <= b1 THEN 'head'
-                   WHEN s <= b2 THEN 'middle' ELSE 'tail' END AS bucket, s
-               FROM scored JOIN b USING (lang))
-         SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-           min(s) AS min_mills, max(s) AS max_mills,
-           CAST(sum(s) AS BIGINT) AS sum_mills
-         FROM a GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q89_dup_removal" ->
-      // full removal recompute: same anchored-window CTEs as q86, plus
-      // the keeper rule (min doc_id per window survives), positional
-      // span coverage (union of removed windows), kept-token anti-join
-      // and an order-preserving rebuild — md5 of the rebuilt text must
-      // match the engine's bit-for-bit
-      s"""WITH t AS (
-           SELECT doc_id, list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-             x -> x <> '') AS toks
-           FROM documents),
-         n AS (
-           SELECT doc_id, toks, len(toks) AS n
-           FROM t WHERE len(toks) >= $DupWindowTokens),
-         pos AS (
-           SELECT doc_id, toks,
-             CAST(unnest(range(n - $DupWindowTokens + 1)) AS BIGINT) AS i
-           FROM n),
-         w AS (
-           SELECT doc_id, i, md5(array_to_string(list_slice(toks,
-             i + 1, i + $DupWindowTokens), ' ')) AS h
-           FROM pos
-           WHERE CAST(('0x' || substr(md5(toks[i + 1]), 1, 15)) AS BIGINT)
-             % $DupAnchorMod = 0),
-         f AS (SELECT h, count(DISTINCT doc_id) AS nd,
-                 min(doc_id) AS keeper FROM w GROUP BY h),
-         dup AS (SELECT w.doc_id, w.i FROM w JOIN f USING (h)
-                 WHERE f.nd > 1 AND w.doc_id <> f.keeper),
-         cov AS (SELECT DISTINCT doc_id,
-                   i + CAST(unnest(range($DupWindowTokens)) AS BIGINT) AS cp
-                 FROM dup),
-         ap AS (SELECT doc_id, toks[p + 1] AS tok, p FROM (
-                  SELECT doc_id, toks,
-                    CAST(unnest(range(len(toks))) AS BIGINT) AS p FROM t)),
-         kept AS (SELECT ap.doc_id, ap.p, ap.tok FROM ap
-                  LEFT JOIN cov ON ap.doc_id = cov.doc_id AND ap.p = cov.cp
-                  WHERE cov.doc_id IS NULL),
-         reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS kept,
-                   array_to_string(list(tok ORDER BY p), ' ') AS ct
-                 FROM kept GROUP BY doc_id)
-         SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_toks,
-           CAST(len(t.toks) - coalesce(reb.kept, 0) AS BIGINT) AS n_removed,
-           md5(coalesce(reb.ct, '')) AS clean_md5
-         FROM t LEFT JOIN reb USING (doc_id)
-         ORDER BY t.doc_id""",
-    "q74_budget_select" ->
-      // naive per-stratum ordered window — the semantic definition the
-      // engine's two-phase histogram design must reproduce row-for-row.
-      // Quality formula copied the q31 contract (same CTE shape).
-      s"""WITH m AS (
-           SELECT doc_id, lang, length(text) AS len,
-             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-             CAST($sqlTokenCount AS BIGINT) AS toks
-           FROM documents),
-         t AS (
-           SELECT doc_id, lang, $sqlQualityMills AS q_mills,
-             toks AS n_tokens
-           FROM m),
-         c AS (
-           SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-             ORDER BY q_mills DESC, doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM t)
-         SELECT lang, count(*) AS n_kept, CAST(sum(n_tokens) AS BIGINT) AS tok_sum,
-           min(q_mills) AS min_quality, CAST(sum(doc_id) AS BIGINT) AS id_sum
-         FROM c WHERE cum <= $BudgetSelectTokens GROUP BY lang ORDER BY lang""",
-    "q70_stratified_sample" -> {
-      // thresholds generated FROM SampleRates — oracle and operator
-      // share one rate table (and one threshold arithmetic)
-      def th(r: Double) = (r * 4294967296.0).toLong
-      val whens = SampleRates.toSeq.sortBy(_._1)
-        .map { case (l, r) => s"WHEN '$l' THEN ${th(r)}" }.mkString(" ")
-      s"""SELECT lang, count(*) AS n_kept, min(doc_id) AS min_id,
-         CAST(sum(doc_id) AS BIGINT) AS id_sum
-         FROM documents
-         WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-           < CASE lang $whens ELSE ${th(0.25)} END
-         GROUP BY lang ORDER BY lang"""
-    },
-    "q69_sequence_pack" ->
-      s"""WITH t AS (
-           SELECT source, doc_id, CAST($sqlTokenCount AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source
-             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             0) AS cum_before
-           FROM t)
-         SELECT source, doc_id, n_tokens,
-           CAST(floor(cum_before / $PackBudget) AS BIGINT) AS seq_no,
-           CAST(cum_before % $PackBudget AS BIGINT) AS seq_offset
-         FROM c ORDER BY doc_id""",
-    "q93_pack_stats" ->
-      // same packing CTE as q69, rolled up: integer-ceil sequence
-      // count, same-double-division fill mills (zero-token shards
-      // guarded — DuckDB would error on the 0/0), distinct start chunks
-      s"""WITH t AS (
-           SELECT source, doc_id, CAST($sqlTokenCount AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source
-             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             0) AS cum_before
-           FROM t),
-         g AS (
-           SELECT source,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-             CAST((sum(n_tokens) + ${PackBudget - 1}) // $PackBudget
-               AS BIGINT) AS n_seqs,
-             CAST(count(DISTINCT CAST(floor(cum_before / $PackBudget)
-               AS BIGINT)) AS BIGINT) AS n_start_seqs,
-             CAST(max(n_tokens) AS BIGINT) AS max_doc_tokens
-           FROM c GROUP BY source)
-         SELECT source, n_docs, total_tokens, n_seqs, n_start_seqs,
-           max_doc_tokens,
-           CASE WHEN n_seqs = 0 THEN 0 ELSE
-             CAST(floor(CAST(1000 AS DOUBLE) * total_tokens
-               / (n_seqs * $PackBudget)) AS BIGINT) END AS fill_mills
-         FROM g ORDER BY source""",
-    "q30_token_stats" ->
-      s"""SELECT doc_id,
-         CAST($sqlTokenCount AS BIGINT) AS n_tokens,
-         CAST(len($sqlTokSet) AS BIGINT) AS n_distinct_tokens,
-         CAST(length(trim(text)) AS BIGINT) AS n_chars_trim,
-         md5(array_to_string($sqlTokSet, ' ')) AS fingerprint
-         FROM documents ORDER BY doc_id""",
-    "q31_quality_score" ->
-      ("""WITH m AS (
-           SELECT doc_id, length(text) AS len,
-             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-               ELSE len(list_filter(string_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ' '), t -> t <> '')) END AS toks
-           FROM documents),
-         sw AS (
-           -- stopword list interpolated from TextAnalysis.DefaultStopwords
-           -- (the engine's source) -- never hand-sync it here
-           SELECT doc_id, CAST(count(*) FILTER (WHERE lower(tok) IN
-             (""" +
-        graft.operators.TextAnalysis.DefaultStopwords
-          .map(w => s"'$w'").mkString(",") +
-        """)) AS BIGINT) AS hits
-           FROM (SELECT doc_id,
-                   unnest(list_filter(string_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ' '), t -> t <> '')) AS tok
-                 FROM documents) u
-           GROUP BY doc_id)
-         SELECT m.doc_id,
-           """ + sqlQualityMills + """ AS quality_mills,
-           coalesce(sw.hits, 0) AS stopword_hits
-         FROM m LEFT JOIN sw USING (doc_id) ORDER BY doc_id"""),
-    "q32_lang_id" -> {
-      // marker tables interpolated from TextAnalysis.DefaultMarkers
-      // (the engine's source) — never hand-sync them here
-      def markers(l: String) = graft.operators.TextAnalysis
-        .DefaultMarkers(l).map(w => s"'$w'").mkString(",")
-      """WITH toks AS (
-           SELECT doc_id, lang,
-             unnest(list_filter(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '), t -> t <> '')) AS tok
-           FROM documents),
-         hits AS (
-           SELECT doc_id, lang,
-             CAST(sum(CASE WHEN tok IN (""" + markers("en") + """) THEN 1 ELSE 0 END) AS BIGINT) AS h_en,
-             CAST(sum(CASE WHEN tok IN (""" + markers("es") + """) THEN 1 ELSE 0 END) AS BIGINT) AS h_es,
-             CAST(sum(CASE WHEN tok IN (""" + markers("de") + """) THEN 1 ELSE 0 END) AS BIGINT) AS h_de,
-             CAST(sum(CASE WHEN tok IN (""" + markers("fr") + """) THEN 1 ELSE 0 END) AS BIGINT) AS h_fr
-           FROM toks GROUP BY doc_id, lang)
-         SELECT doc_id, lang,
-           CASE WHEN greatest(h_en, h_es, h_de, h_fr) = 0 THEN 'und'
-                WHEN h_fr = greatest(h_en, h_es, h_de, h_fr) THEN 'fr'
-                WHEN h_es = greatest(h_en, h_es, h_de, h_fr) THEN 'es'
-                WHEN h_en = greatest(h_en, h_es, h_de, h_fr) THEN 'en'
-                ELSE 'de' END AS lang_pred
-         FROM hits ORDER BY doc_id"""
-    },
-    "q33_simhash" -> {
-      val sums = (0 until 8).map(i =>
-        s"sum(CASE WHEN ascii(substr(md5(tok), ${i + 1}, 1)) % 2 = 1 THEN 1 ELSE -1 END) AS s$i")
-        .mkString(", ")
-      val pack = (0 until 8).map(i =>
-        s"(CASE WHEN s$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")
-      // row-preserving like the engine's projection: a token-less doc
-      // simhashes to 0 (all bit sums zero), a NULL text to NULL — the
-      // bare GROUP BY would DROP such docs and row-count-diverge
-      s"""WITH toks AS (
-           SELECT doc_id, unnest($sqlTokSet) AS tok FROM documents),
-         bits AS (SELECT doc_id, $sums FROM toks GROUP BY doc_id),
-         packed AS (SELECT doc_id, CAST($pack AS BIGINT) AS simhash FROM bits)
-         SELECT d.doc_id,
-           CASE WHEN d.text IS NULL THEN NULL
-                ELSE coalesce(p.simhash, 0) END AS simhash
-         FROM documents d LEFT JOIN packed p USING (doc_id)
-         ORDER BY doc_id"""
-    },
-    "q34_minhash_sig" ->
-      // row-preserving, q33's rule: empty token set min-hashes to ''
-      // per seed (TextHash.minhashKernel), NULL text to NULL
-      s"""WITH toks AS (
-           SELECT doc_id, unnest($sqlTokSet) AS tok FROM documents),
-         m AS (
-           SELECT doc_id, ${sqlMinhash(0)} AS mh0, ${sqlMinhash(1)} AS mh1,
-             ${sqlMinhash(2)} AS mh2, ${sqlMinhash(3)} AS mh3
-           FROM toks GROUP BY doc_id)
-         SELECT d.doc_id,
-           CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(m.mh0, '') END AS mh0,
-           CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(m.mh1, '') END AS mh1,
-           CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(m.mh2, '') END AS mh2,
-           CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(m.mh3, '') END AS mh3
-         FROM documents d LEFT JOIN m USING (doc_id)
-         ORDER BY doc_id""",
-    "q35_lsh_pairs" ->
-      s"""WITH $lshPairsCtes
-         SELECT id_a, id_b FROM pairs ORDER BY id_a, id_b""",
-    "q192_lsh_scurve" -> {
-      // ground truth is the NAIVE all-pairs Jaccard twin (parity
-      // proves the PPJoin prefix lossless at the audit floor); the LSH
-      // side is the shared q35 CTE chain and q53's recursive-closure
-      // twin, so the capped banding AND the label propagation are
-      // what's audited on both engines
-      val jm = "floor(1000 * len(list_intersect(a.toks, b.toks)) " +
-        "/ (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))))"
-      s"""WITH RECURSIVE $lshPairsCtes,
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION
-           SELECT id_b AS src, id_a AS dst FROM pairs),
-         reach AS (
-           SELECT src AS id, src AS comp FROM edges
-           UNION
-           SELECT e.dst AS id, r.comp FROM reach r
-           JOIN edges e ON e.src = r.id),
-         cmp AS (SELECT id, min(comp) AS comp FROM reach GROUP BY 1),
-         d AS (SELECT doc_id, $sqlTokSet AS toks
-               FROM documents WHERE doc_id % 5 = 0),
-         tr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  CAST($jm AS BIGINT) AS jac_mills
-                FROM d a JOIN d b ON a.doc_id < b.doc_id
-                WHERE $jm >= $LshAuditMinJac),
-         au AS (SELECT tr.jac_mills // 100 AS bucket_lo_hmills,
-                  CAST(count(*) AS BIGINT) AS n_true,
-                  CAST(sum(CASE WHEN p.id_a IS NOT NULL THEN 1 ELSE 0
-                    END) AS BIGINT) AS n_pair,
-                  CAST(sum(CASE WHEN ca.comp IS NOT NULL
-                    AND ca.comp = cb.comp THEN 1 ELSE 0
-                    END) AS BIGINT) AS n_closure
-                FROM tr
-                LEFT JOIN pairs p
-                  ON tr.id_a = p.id_a AND tr.id_b = p.id_b
-                LEFT JOIN cmp ca ON tr.id_a = ca.id
-                LEFT JOIN cmp cb ON tr.id_b = cb.id
-                GROUP BY 1)
-         SELECT bucket_lo_hmills, n_true, n_pair, n_closure,
-           (1000 * n_pair) // n_true AS recall_pair_mills,
-           (1000 * n_closure) // n_true AS recall_closure_mills
-         FROM au ORDER BY bucket_lo_hmills"""
-    },
-    "q194_lsh_scurve_sampled" -> {
-      // the q192 chain verbatim, restricted to the shared md5-threshold
-      // sample filter (ground truth, banding AND closure all inside the
-      // sample), plus the coverage fraction recomputed independently
-      val jm = "floor(1000 * len(list_intersect(a.toks, b.toks)) " +
-        "/ (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))))"
-      s"""WITH RECURSIVE ${lshPairsCtesWhere(scurveSampleFilter)},
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION
-           SELECT id_b AS src, id_a AS dst FROM pairs),
-         reach AS (
-           SELECT src AS id, src AS comp FROM edges
-           UNION
-           SELECT e.dst AS id, r.comp FROM reach r
-           JOIN edges e ON e.src = r.id),
-         cmp AS (SELECT id, min(comp) AS comp FROM reach GROUP BY 1),
-         d AS (SELECT doc_id, $sqlTokSet AS toks
-               FROM documents WHERE $scurveSampleFilter),
-         tr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  CAST($jm AS BIGINT) AS jac_mills
-                FROM d a JOIN d b ON a.doc_id < b.doc_id
-                WHERE $jm >= $LshAuditMinJac),
-         cov AS (SELECT
-                  (SELECT count(*) FROM documents
-                   WHERE $scurveSampleFilter) AS n_sample_docs,
-                  (SELECT count(*) FROM documents
-                   WHERE doc_id % 5 = 0) AS n_subset_docs),
-         au AS (SELECT tr.jac_mills // 100 AS bucket_lo_hmills,
-                  CAST(count(*) AS BIGINT) AS n_true,
-                  CAST(sum(CASE WHEN p.id_a IS NOT NULL THEN 1 ELSE 0
-                    END) AS BIGINT) AS n_pair,
-                  CAST(sum(CASE WHEN ca.comp IS NOT NULL
-                    AND ca.comp = cb.comp THEN 1 ELSE 0
-                    END) AS BIGINT) AS n_closure
-                FROM tr
-                LEFT JOIN pairs p
-                  ON tr.id_a = p.id_a AND tr.id_b = p.id_b
-                LEFT JOIN cmp ca ON tr.id_a = ca.id
-                LEFT JOIN cmp cb ON tr.id_b = cb.id
-                GROUP BY 1)
-         SELECT bucket_lo_hmills, n_true, n_pair, n_closure,
-           (1000 * n_pair) // n_true AS recall_pair_mills,
-           (1000 * n_closure) // n_true AS recall_closure_mills,
-           CAST(cov.n_sample_docs AS BIGINT) AS n_sample_docs,
-           CAST(cov.n_subset_docs AS BIGINT) AS n_subset_docs,
-           (1000 * cov.n_sample_docs) // cov.n_subset_docs
-             AS coverage_mills
-         FROM au, cov ORDER BY bucket_lo_hmills"""
-    },
-    "q53_dedup_components" ->
-      // transitive closure by label propagation: every node reaches its
-      // whole component through the bidirectional edge list; min over
-      // reached labels = canonical component id. Feasible at oracle
-      // scale; the engine side does the same by iterated min-shuffles.
-      s"""WITH RECURSIVE $lshPairsCtes,
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION
-           SELECT id_b AS src, id_a AS dst FROM pairs),
-         reach AS (
-           SELECT src AS id, src AS comp FROM edges
-           UNION
-           SELECT e.dst AS id, r.comp FROM reach r JOIN edges e ON e.src = r.id)
-         SELECT id AS doc_id, min(comp) AS component
-         FROM reach GROUP BY id ORDER BY doc_id""",
-    "q196_near_dedup" ->
-      // q53's closure pattern over the VERIFIED edge set: the q35 pair
-      // graph is cut to pairs whose exact token-set Jaccard (q108's
-      // list_intersect arithmetic — float division then floor, the
-      // engine's exact shape) reaches NearDedupMinJac, then min-label
-      // closure + the keeper projection. Universe docs never reached
-      // by a verified edge keep their own id (LEFT JOIN + coalesce).
-      s"""WITH RECURSIVE $lshPairsCtes,
-         ts AS (SELECT doc_id, $sqlTokSet AS tset
-                FROM documents WHERE doc_id % 5 = 0),
-         verified AS (
-           SELECT p.id_a, p.id_b
-           FROM pairs p
-           JOIN ts x ON p.id_a = x.doc_id
-           JOIN ts y ON p.id_b = y.doc_id
-           WHERE floor(1000 * len(list_intersect(x.tset, y.tset))
-               / (len(x.tset) + len(y.tset)
-                  - len(list_intersect(x.tset, y.tset))))
-             >= $NearDedupMinJac),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM verified
-           UNION
-           SELECT id_b AS src, id_a AS dst FROM verified),
-         reach AS (
-           SELECT src AS id, src AS comp FROM edges
-           UNION
-           SELECT e.dst AS id, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-         comp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id)
-         SELECT d.doc_id,
-           CAST(coalesce(c.component, d.doc_id) AS BIGINT) AS component,
-           (coalesce(c.component, d.doc_id) = d.doc_id) AS kept
-         FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
-         LEFT JOIN comp c ON c.id = d.doc_id
-         ORDER BY d.doc_id""",
-    "q158_vocab_growth" ->
-      // same first-seen attribution + decile arithmetic on the SAME
-      // lowered bigram constructor; the min/max subquery twins the
-      // 1-row broadcast
-      s"""WITH dt AS (
-           SELECT doc_id,
-             list_filter(string_split(regexp_replace(lower(trim(text)),
-               '\\s+', ' ', 'g'), ' '), t -> t <> '') AS l
-           FROM documents),
-         fs AS (
-           SELECT g, CAST(min(doc_id) AS BIGINT) AS first_doc
-           FROM (SELECT doc_id, unnest($wordBigramsAllSql) AS g FROM dt)
-           GROUP BY g),
-         b AS (
-           SELECT CAST(min(doc_id) AS BIGINT) AS mn,
-             CAST(max(doc_id) AS BIGINT) AS mx
-           FROM documents),
-         d AS (
-           SELECT least(9, ((first_doc - mn) * 10) // (mx - mn + 1))
-               AS bucket
-           FROM fs CROSS JOIN b)
-         SELECT CAST(bucket AS BIGINT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n_new_grams,
-           CAST(sum(count(*)) OVER (ORDER BY bucket
-             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_vocab
-         FROM d GROUP BY bucket ORDER BY bucket""",
-    "q156_zipf_fit" -> {
-      // the shared Mitchell twin on rank and count + the q154 OLS
-      // algebra in HUGEINT — zero float math on either side
-      def mitchell(x: String) =
-        s"""(1000 * (length(printf('%b', $x)) - 1)
-           + (1000 * ($x - (CAST(1 AS BIGINT)
-               << CAST(length(printf('%b', $x)) - 1 AS INT))))
-             // (CAST(1 AS BIGINT)
-               << CAST(length(printf('%b', $x)) - 1 AS INT)))"""
-      s"""WITH tc AS (
-           SELECT tok, CAST(count(*) AS BIGINT) AS cnt
-           FROM $sqlTokRows WHERE tok <> '' GROUP BY tok),
-         top AS (
-           SELECT cnt,
-             CAST(row_number() OVER (ORDER BY cnt DESC, tok) AS BIGINT)
-               AS rk
-           FROM tc ORDER BY cnt DESC, tok LIMIT $ZipfK),
-         pts AS (
-           SELECT CAST(${mitchell("rk")} AS BIGINT) AS x,
-             CAST(${mitchell("cnt")} AS BIGINT) AS y
-           FROM top),
-         a AS (
-           SELECT CAST(count(*) AS BIGINT) AS k_fit,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x * y) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(y * y) AS BIGINT) AS syy
-           FROM pts HAVING count(*) >= 2)
-         SELECT k_fit,
-           CAST(((CAST(k_fit AS HUGEINT) * sxy
-                 - CAST(sx AS HUGEINT) * sy) * 1000)
-             // (CAST(k_fit AS HUGEINT) * sxx
-                 - CAST(sx AS HUGEINT) * sx) AS BIGINT)
-             AS zipf_slope_mills,
-           CASE WHEN CAST(k_fit AS HUGEINT) * syy
-                 - CAST(sy AS HUGEINT) * sy = 0
-             THEN 1000
-             ELSE CAST(((CAST(k_fit AS HUGEINT) * sxy
-                   - CAST(sx AS HUGEINT) * sy)
-                 * (CAST(k_fit AS HUGEINT) * sxy
-                   - CAST(sx AS HUGEINT) * sy) * 1000)
-               // ((CAST(k_fit AS HUGEINT) * sxx
-                   - CAST(sx AS HUGEINT) * sx)
-                 * (CAST(k_fit AS HUGEINT) * syy
-                   - CAST(sy AS HUGEINT) * sy)) AS BIGINT)
-             END AS r2_mills
-         FROM a"""
-    },
-    "q150_vocab_coverage" ->
-      // identical rank/cumsum over the full vocab (bounded at oracle
-      // scale), cut to the same checkpoints
-      s"""WITH tc AS (
-           SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM (
-             SELECT unnest($tokenListSql) AS tok FROM documents)
-           WHERE tok <> '' GROUP BY 1),
-         tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM tc),
-         r AS (
-           SELECT tok, cnt,
-             CAST(row_number() OVER (ORDER BY cnt DESC, tok) AS BIGINT)
-               AS k,
-             sum(cnt) OVER (ORDER BY cnt DESC, tok
-               ROWS UNBOUNDED PRECEDING) AS mass
-           FROM tc)
-         SELECT k, CAST(mass AS BIGINT) AS mass,
-           CAST((1000 * mass) // total AS BIGINT) AS coverage_mills
-         FROM r CROSS JOIN tot
-         WHERE k IN (${CovKs.mkString(", ")}) ORDER BY k""",
-    "q146_dedup_mass" ->
-      // the SAME transitive-closure chain, rolled to the size histogram
-      s"""WITH RECURSIVE $lshPairsCtes,
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION
-           SELECT id_b AS src, id_a AS dst FROM pairs),
-         reach AS (
-           SELECT src AS id, src AS comp FROM edges
-           UNION
-           SELECT e.dst AS id, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-         comps AS (
-           SELECT id, min(comp) AS comp FROM reach GROUP BY id),
-         sz AS (
-           SELECT comp, CAST(count(*) AS BIGINT) AS cluster_size
-           FROM comps GROUP BY comp)
-         SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
-           cluster_size * CAST(count(*) AS BIGINT) AS n_docs,
-           (cluster_size - 1) * CAST(count(*) AS BIGINT) AS n_dup_docs
-         FROM sz GROUP BY cluster_size ORDER BY cluster_size""",
-    "q36_jaccard_pairs" ->
-      s"""WITH d AS (
-           SELECT doc_id, source, $sqlTokSet AS toks
-           FROM documents WHERE doc_id % 3 = 0)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(floor(1000 * len(list_intersect(a.toks, b.toks))
-             / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) AS BIGINT) AS jac_mills
-         FROM d a JOIN d b ON a.source = b.source AND a.doc_id < b.doc_id
-         WHERE floor(1000 * len(list_intersect(a.toks, b.toks))
-             / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) >= 600
-         ORDER BY id_a, id_b""",
-    "q68_capped_jaccard" -> {
-      // full replica of the CAPPED PPJoin: global-df-ordered prefix
-      // (identical ceil arithmetic to Dedup.jaccardPairs), per-shingle
-      // bucket star-reduction at CappedJaccardBucket, then exact
-      // verification — so the star semantics are what's hash-gated.
-      val jm = "floor(1000 * len(list_intersect(a.toks, b.toks)) " +
-        "/ (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))))"
-      s"""WITH d0 AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0 THEN 'mass duplicated boilerplate row'
-                  ELSE text END AS text
-           FROM documents WHERE doc_id % 7 = 3),
-         d AS (SELECT doc_id, $sqlTokSet AS toks FROM d0),
-         tk AS (SELECT doc_id, unnest(toks) AS shingle FROM d),
-         dfreq AS (SELECT shingle, count(*) AS gdf FROM tk GROUP BY shingle),
-         pre AS (
-           SELECT doc_id, shingle FROM (
-             SELECT t.doc_id, t.shingle,
-               row_number() OVER (PARTITION BY t.doc_id
-                 ORDER BY f.gdf, t.shingle) AS rnk,
-               count(*) OVER (PARTITION BY t.doc_id) AS sz
-             FROM tk t JOIN dfreq f USING (shingle))
-           WHERE rnk <= sz - ceil(sz * 600 / 1000.0) + 1),
-         bkt AS (SELECT shingle, count(*) AS bsz, min(doc_id) AS bmin
-                 FROM pre GROUP BY shingle),
-         cand AS (
-           SELECT DISTINCT id_a, id_b FROM (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM pre a JOIN pre b USING (shingle) JOIN bkt USING (shingle)
-             WHERE bsz <= $CappedJaccardBucket AND a.doc_id < b.doc_id
-             UNION ALL
-             SELECT bmin AS id_a, doc_id AS id_b
-             FROM pre JOIN bkt USING (shingle)
-             WHERE bsz > $CappedJaccardBucket AND doc_id <> bmin))
-         SELECT c.id_a, c.id_b, CAST($jm AS BIGINT) AS jac_mills
-         FROM cand c JOIN d a ON c.id_a = a.doc_id
-                     JOIN d b ON c.id_b = b.doc_id
-         WHERE $jm >= 600
-         ORDER BY id_a, id_b"""
-    },
-    "q65_repetition_stats" -> {
-      val triAllSql =
-        "[l[CAST(i AS INT)] || ' ' || l[CAST(i + 1 AS INT)] || ' ' || l[CAST(i + 2 AS INT)] FOR i IN range(1, len(l) - 1)]"
-      s"""WITH t AS (
-           SELECT doc_id, $tokenListSql AS l FROM documents
-           WHERE text IS NOT NULL),
-         eligible AS (SELECT * FROM t WHERE len(l) >= 3),
-         b AS (
-           SELECT doc_id,
-             CAST(floor(1000 * max(c) / sum(c)) AS BIGINT) AS top_bigram_share_mills
-           FROM (SELECT doc_id, g, count(*) AS c
-                 FROM (SELECT doc_id, unnest($wordBigramsAllSql) AS g FROM eligible) u
-                 GROUP BY doc_id, g) gc
-           GROUP BY doc_id),
-         tr AS (
-           SELECT doc_id,
-             CAST(floor(1000 * sum(CASE WHEN c > 1 THEN c ELSE 0 END) / sum(c)) AS BIGINT)
-               AS dup_trigram_mills
-           FROM (SELECT doc_id, g, count(*) AS c
-                 FROM (SELECT doc_id, unnest($triAllSql) AS g FROM eligible) u
-                 GROUP BY doc_id, g) gc
-           GROUP BY doc_id)
-         SELECT b.doc_id, top_bigram_share_mills, dup_trigram_mills,
-           (top_bigram_share_mills < ${graft.operators.TextAnalysis.MaxTopBigramShareMills}
-            AND dup_trigram_mills < ${graft.operators.TextAnalysis.MaxDupTrigramMills})
-             AS repetition_ok
-         FROM b JOIN tr USING (doc_id) ORDER BY doc_id"""
-    },
-    "q47_bigram_jaccard" ->
-      s"""WITH t AS (
-           SELECT doc_id, source, $tokenListSql AS l
-           FROM documents WHERE doc_id % 4 = 1),
-         d AS (
-           SELECT doc_id, source, list_sort($wordBigramsSql) AS sh
-           FROM t)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(floor(1000 * len(list_intersect(a.sh, b.sh))
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))) AS BIGINT) AS jac_mills
-         FROM d a JOIN d b ON a.source = b.source AND a.doc_id < b.doc_id
-         WHERE floor(1000 * len(list_intersect(a.sh, b.sh))
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))) >= 60
-         ORDER BY id_a, id_b""")
 }

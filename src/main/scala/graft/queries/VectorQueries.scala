@@ -32,22 +32,35 @@ object VectorQueries {
     * oracle SQL interpolates this value. */
   private[graft] val NearDupCosSqScaledMin = 50000L
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // Brute-force cosine top-5 per query vector — THE exact ANN
     // baseline, delegated to the one shared kernel
     // (SimilaritySearch.bruteForceTopK) so the spec-verified recall
     // oracle and this gated twin can never drift.
-    "q37_knn_bruteforce" -> ((s, dir) => {
+    Query("q37_knn_bruteforce", (s, dir) => {
       graft.operators.SimilaritySearch.bruteForceTopK(
           emb(s, dir).where(col("vec_id") % 100 === 0),
           graft.Tables.spread(s, dir, "embeddings"), "vec_id", "embedding", k = 5)
         .select("query_id", "rank", "neighbor_id", "cos_sq_scaled")
         .orderBy("query_id", "rank")
-    }),
+    },
+      s"""WITH q AS (
+           SELECT vec_id AS query_id, $quant AS qv
+           FROM embeddings WHERE vec_id % 100 = 0),
+         c AS (SELECT vec_id AS neighbor_id, $quant AS cv FROM embeddings),
+         scored AS (
+           SELECT query_id, neighbor_id,
+             ${cossq("qv", "cv")} AS cos_sq_scaled
+           FROM c JOIN q ON query_id <> neighbor_id),
+         ranked AS (
+           SELECT *, row_number() OVER (PARTITION BY query_id
+             ORDER BY cos_sq_scaled DESC, neighbor_id) AS rank FROM scored)
+         SELECT query_id, rank, neighbor_id, cos_sq_scaled
+         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""),
 
     // Embedding near-dup pairs, blocked by label, verified by exact
     // quantized cosine (floor: [[NearDupCosSqScaledMin]]).
-    "q38_embedding_dups" -> ((s, dir) => {
+    Query("q38_embedding_dups", (s, dir) => {
       val e = graft.Tables.spread(s, dir, "embeddings").where(col("vec_id") % 4 === 0)
         .select(col("label"), col("vec_id"),
           VectorFunctions.quantize(col("embedding")).as("q"))
@@ -59,11 +72,19 @@ object VectorQueries {
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
           col("cos_sq_scaled"))
         .orderBy("id_a", "id_b")
-    }),
+    },
+      s"""WITH e AS (
+           SELECT label, vec_id, $quant AS q
+           FROM embeddings WHERE vec_id % 4 = 0)
+         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           ${cossq("a.q", "b.q")} AS cos_sq_scaled
+         FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
+         WHERE ${cossq("a.q", "b.q")} >= $NearDupCosSqScaledMin
+         ORDER BY id_a, id_b"""),
 
     // Per-label aggregate statistics of quantized vectors (position-free
     // integer sums — exact in every engine).
-    "q39_label_stats" -> ((s, dir) => {
+    Query("q39_label_stats", (s, dir) => {
       val e = emb(s, dir)
         .select(col("label").cast("long").as("label"),
           VectorFunctions.quantize(col("embedding")).as("q"))
@@ -73,7 +94,11 @@ object VectorQueries {
           sum(aggregate(col("q"), lit(0L), (acc, v) => acc + v)).as("sum_components"),
           sum(VectorFunctions.normSqQ(col("q"))).as("sum_norm_sq"))
         .orderBy("label")
-    }))
+    },
+      s"""SELECT CAST(label AS BIGINT) AS label, count(*) AS n,
+         CAST(sum(list_sum($quant)) AS BIGINT) AS sum_components,
+         CAST(sum(list_dot_product($quant, $quant)) AS BIGINT) AS sum_norm_sq
+         FROM embeddings GROUP BY 1 ORDER BY label"""))
 
   /** DuckDB twin of `VectorFunctions.quantize` — THE shared parity
     * contract for every quantized-vector oracle (q37/q38/q39 here,
@@ -94,34 +119,4 @@ object VectorQueries {
         ELSE CAST(floor(1000000.0 * sign(${dotq(a, b)})
           * ${dotq(a, b)} * ${dotq(a, b)}
           / (${dotq(a, a)} * ${dotq(b, b)})) AS BIGINT) END"""
-
-  val oracle: Map[String, String] = Map(
-    "q37_knn_bruteforce" ->
-      s"""WITH q AS (
-           SELECT vec_id AS query_id, $quant AS qv
-           FROM embeddings WHERE vec_id % 100 = 0),
-         c AS (SELECT vec_id AS neighbor_id, $quant AS cv FROM embeddings),
-         scored AS (
-           SELECT query_id, neighbor_id,
-             ${cossq("qv", "cv")} AS cos_sq_scaled
-           FROM c JOIN q ON query_id <> neighbor_id),
-         ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY query_id
-             ORDER BY cos_sq_scaled DESC, neighbor_id) AS rank FROM scored)
-         SELECT query_id, rank, neighbor_id, cos_sq_scaled
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    "q38_embedding_dups" ->
-      s"""WITH e AS (
-           SELECT label, vec_id, $quant AS q
-           FROM embeddings WHERE vec_id % 4 = 0)
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ${cossq("a.q", "b.q")} AS cos_sq_scaled
-         FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-         WHERE ${cossq("a.q", "b.q")} >= $NearDupCosSqScaledMin
-         ORDER BY id_a, id_b""",
-    "q39_label_stats" ->
-      s"""SELECT CAST(label AS BIGINT) AS label, count(*) AS n,
-         CAST(sum(list_sum($quant)) AS BIGINT) AS sum_components,
-         CAST(sum(list_dot_product($quant, $quant)) AS BIGINT) AS sum_norm_sq
-         FROM embeddings GROUP BY 1 ORDER BY label""")
 }

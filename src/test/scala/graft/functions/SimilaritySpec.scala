@@ -47,7 +47,7 @@ class SimilaritySpec extends AnyFunSuite {
     val scores = df.select(Similarity.token_set_ratio($"a", $"b").as("s"))
       .as[Double].collect()
     assert(scores(0) == 100.0 && scores(1) < 50.0)
-    Similarity.register(spark)
+    graft.plans.GraftExtensions.registerInto(spark)
     val sqlScore = spark.sql(
       "SELECT token_set_ratio('organic tea', 'tea organic') s").as[Double].head()
     assert(sqlScore == 100.0)

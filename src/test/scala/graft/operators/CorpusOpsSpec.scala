@@ -291,6 +291,13 @@ class CorpusOpsSpec extends AnyFunSuite {
       TextAnalysis.importanceScore(
         src.withColumnRenamed("doc_id", "__b"), tgt, "text", "__b", B)
     }
+    // `__bs` is budgetSelectPerStratum's column, not this operator's:
+    // an id column of that name is accepted and scores like doc_id
+    val asBs = TextAnalysis.importanceScore(
+        src.withColumnRenamed("doc_id", "__bs"), tgt, "text", "__bs", B)
+      .orderBy("__bs").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(asBs.toSeq == want)
   }
 
   test("importanceScore keeps the smoothed weights on an EMPTY target corpus") {

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Authoring-time oracle TYPE lint (round-9 verdict item 3): binds every
-oracle twin in DuckDB (DESCRIBE — no execution, instant for all 192) and
+oracle twin in DuckDB (DESCRIBE — no execution, instant for all 196) and
 checks each output column's type FAMILY against the checked-in snapshot
 tools/oracle_schema.json, which records the Spark side's output families.
 Any parquet dumps present in <verify_out_dir> are also cross-checked

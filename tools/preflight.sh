@@ -20,7 +20,7 @@ shift || true
 SF_DIR="/root/testdata/$SF"
 OUT_DIR="/tmp/preflight_verify_$SF"
 
-echo "== preflight 1/5: table-access guard (only Tables.scala opens a testdata <table>.parquet)"
+echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query)"
 # every testdata read goes through graft.Tables: a read(Stream) whose
 # path literal names a .parquet file anywhere else in src/main is a
 # second table-access path
@@ -29,6 +29,11 @@ STRAY=$(find src/main -name '*.scala' ! -path src/main/scala/graft/Tables.scala 
       printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }')
 [ -z "$STRAY" ] \
   || { echo "$STRAY"; echo "PREFLIGHT FAIL: testdata read outside graft.Tables (use Tables(spark, dir, name))"; exit 1; }
+# a query is one graft.queries.Query(name, plan, oracle): a name-keyed
+# "q<N>_<name>" -> map entry is a second plan or twin map coming back
+KEYED=$(grep -rnE '"q[0-9]+_[a-z0-9_]+"\s*->' src/main || true)
+[ -z "$KEYED" ] \
+  || { echo "$KEYED"; echo "PREFLIGHT FAIL: name-keyed query map entry (add a Query(name, plan, oracle) to a family sequence instead)"; exit 1; }
 
 echo "== preflight 2/5: sbt Test/compile (main + test must compile at HEAD+worktree)"
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 \
