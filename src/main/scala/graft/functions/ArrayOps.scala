@@ -2,11 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
+  StructType}
 
 /** Set-algebra kernels over SORTED string arrays.
   *
@@ -41,23 +40,11 @@ object ArrayOps {
     n
   }
 
-  case class SortedIntersectSize(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = left.nullable || right.nullable
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      sortedIntersectSizeKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.ArrayOps.sortedIntersectSizeKernel($a, $b);")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
   /** |a ∩ b| for sorted distinct string arrays (bigint). */
   def sortedIntersectSize(a: Column, b: Column): Column =
-    column(SortedIntersectSize(expression(a), expression(b)))
+    column(StaticInvoke(ArrayOps.getClass, LongType, "sortedIntersectSizeKernel",
+      Seq(expression(a), expression(b)),
+      Seq(ArrayType(StringType), ArrayType(StringType)), returnNullable = false))
 
   /** Round-14 OPT (guide step-2 per-task work): ordered within-array
     * pair/triple generation for the co-purchase kernels. The former
@@ -106,42 +93,18 @@ object ArrayOps {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  private def pairStruct(names: Seq[String]) =
-    org.apache.spark.sql.types.StructType(names.map(n =>
-      org.apache.spark.sql.types.StructField(n, LongType, nullable = false)))
-
-  case class OrderedPairs(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-      pairStruct(Seq("part_a", "part_b")), containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(a: Any): Any =
-      orderedPairsKernel(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, a =>
-        s"graft.functions.ArrayOps.orderedPairsKernel($a)")
-    override protected def withNewChildInternal(
-        newChild: Expression): Expression = copy(child = newChild)
-  }
-
-  case class OrderedTriples(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-      pairStruct(Seq("part_a", "part_b", "part_c")), containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(a: Any): Any =
-      orderedTriplesKernel(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, a =>
-        s"graft.functions.ArrayOps.orderedTriplesKernel($a)")
-    override protected def withNewChildInternal(
-        newChild: Expression): Expression = copy(child = newChild)
-  }
+  private def tuplesOf(ps: Column, kernel: String, names: String*): Column =
+    column(StaticInvoke(ArrayOps.getClass,
+      ArrayType(StructType(names.map(StructField(_, LongType, nullable = false))),
+        containsNull = false),
+      kernel, Seq(expression(ps)), Seq(ArrayType(LongType)),
+      returnNullable = false))
 
   /** All (ps[i], ps[j]) with i < j as array<struct<part_a, part_b>>. */
-  def orderedPairs(ps: Column): Column = column(OrderedPairs(expression(ps)))
+  def orderedPairs(ps: Column): Column =
+    tuplesOf(ps, "orderedPairsKernel", "part_a", "part_b")
 
   /** All i<j<l triples as array<struct<part_a, part_b, part_c>>. */
   def orderedTriples(ps: Column): Column =
-    column(OrderedTriples(expression(ps)))
+    tuplesOf(ps, "orderedTriplesKernel", "part_a", "part_b", "part_c")
 }

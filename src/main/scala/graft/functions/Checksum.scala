@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Checksum validators for PII detection — the confirmation step that
@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * cuts false positives by ~90% (only 1 in 10 random digit strings
   * pass) before a scrub or a redaction pass commits to rewriting text.
   *
-  * Implemented as a codegen'd Catalyst expression (no UDF): the kernel
+  * Implemented as a codegen'd static kernel call (no UDF): the kernel
   * is one backward pass over the candidate's chars with integer ops
   * only, so it stays inside whole-stage codegen on the scan side —
   * the PII family's discipline (TextFunctions.piiCounts/scrubPii).
@@ -45,18 +45,11 @@ object Checksum {
     sum % 10 == 0
   }
 
-  case class LuhnValid(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BooleanType
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(v: Any): Any =
-      luhnKernel(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Checksum.luhnKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
+  /** SQL: `luhn_valid(s)` → boolean; an atomic argument casts to string. */
+  def luhnValidExpr(s: Expression): Expression =
+    StaticInvoke(Checksum.getClass, BooleanType, "luhnKernel", Seq(s),
+      Seq(StringType), returnNullable = false)
 
   /** Luhn check-digit validity of a digit string as a boolean column. */
-  def luhnValid(c: Column): Column = column(LuhnValid(expression(c)))
+  def luhnValid(c: Column): Column = column(luhnValidExpr(expression(c)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
-  ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fuzzy string-similarity kernels.
@@ -13,10 +13,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * The reference resolves entities with RapidFuzz `token_set_ratio`
   * scoring plus `ratio`/`partial_ratio` cross-checks (reference
   * `app/etl.py:1272-1294`). Spark has built-in `levenshtein` but no
-  * token-set/partial family, so those two are implemented as native
-  * Catalyst expressions (F2/F3 in SURVEY.md §2.7) — evaluated on
-  * `UTF8String` inputs inside the executor, no Python/serialization
-  * round-trip, registered as SQL functions by `graft.plans.GraftExtensions`.
+  * token-set/partial family, so those two are implemented as static
+  * kernels that Spark's `StaticInvoke` calls (F2/F3 in SURVEY.md §2.7)
+  * — evaluated on `UTF8String` inputs inside the executor, no
+  * Python/serialization round-trip, registered as SQL functions by
+  * `graft.plans.GraftExtensions`.
   *
   * Scores are 0..100 doubles like the reference. The elementary ratio is
   * the indel ratio `100 * (1 - indel(a,b) / (|a|+|b|))` (Levenshtein with
@@ -116,7 +117,7 @@ object Similarity {
   // ------------------------------------------ codegen-callable kernels
 
   /** Static entry points the generated Java calls (UTF8String in, score
-    * out) — keeps the expressions inside whole-stage codegen instead of
+    * out) — keeps the calls inside whole-stage codegen instead of
     * falling back to interpreted eval. */
   def tokenSetRatioU(a: UTF8String, b: UTF8String): Double =
     tokenSetRatio(a.toString, b.toString)
@@ -125,74 +126,35 @@ object Similarity {
   def indelRatioU(a: UTF8String, b: UTF8String): Double =
     ratio(preprocess(a.toString), preprocess(b.toString))
 
-  // ---------------------------------------------- Catalyst expressions
+  // ------------------------------------ SQL expressions and Column API
 
-  abstract class SimilarityExpression extends BinaryExpression
-      with ExpectsInputTypes {
-    override def dataType: DataType = DoubleType
-    override def nullable: Boolean = true
-    // string-typed contract at ANALYSIS time: without it a non-string
-    // argument from the SQL surface passes analysis and dies later in
-    // codegen (int where UTF8String expected); with it Spark coerces
-    // castables and rejects the rest with a clean AnalysisException,
-    // like the builtins
-    // (return type inferred: AbstractDataType is private[sql], so it
-    // cannot be named here — the override pins it structurally)
-    override def inputTypes = Seq(StringType, StringType)
-    /** FQN of the static kernel: graft.functions.Similarity.<name>U. */
-    protected def kernel: String
-    protected def score(a: String, b: String): Double
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      score(a.asInstanceOf[UTF8String].toString, b.asInstanceOf[UTF8String].toString)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.Similarity.$kernel($a, $b);")
-  }
+  // string-typed contract at ANALYSIS time: a castable argument (a
+  // bigint, a date) is cast to string like the builtins' arguments, and
+  // anything else fails with an AnalysisException, never in a task
+  private def ratioExpr(kernel: String, a: Expression, b: Expression): Expression =
+    StaticInvoke(Similarity.getClass, DoubleType, kernel, Seq(a, b),
+      Seq(StringType, StringType), returnNullable = false)
 
   /** SQL: `token_set_ratio(a, b)` → double 0..100. */
-  case class TokenSetRatio(left: Expression, right: Expression)
-      extends SimilarityExpression {
-    override protected val kernel = "tokenSetRatioU"
-    override protected def score(a: String, b: String): Double = tokenSetRatio(a, b)
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
+  def tokenSetRatioExpr(a: Expression, b: Expression): Expression =
+    ratioExpr("tokenSetRatioU", a, b)
 
   /** SQL: `partial_ratio(a, b)` → double 0..100. */
-  case class PartialRatio(left: Expression, right: Expression)
-      extends SimilarityExpression {
-    override protected val kernel = "partialRatioU"
-    override protected def score(a: String, b: String): Double =
-      partialRatio(preprocess(a), preprocess(b))
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
+  def partialRatioExpr(a: Expression, b: Expression): Expression =
+    ratioExpr("partialRatioU", a, b)
 
   /** SQL: `indel_ratio(a, b)` → double 0..100 (RapidFuzz `ratio`). */
-  case class IndelRatio(left: Expression, right: Expression)
-      extends SimilarityExpression {
-    override protected val kernel = "indelRatioU"
-    override protected def score(a: String, b: String): Double =
-      ratio(preprocess(a), preprocess(b))
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  // ------------------------------------------------------- Column API
-
-  import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+  def indelRatioExpr(a: Expression, b: Expression): Expression =
+    ratioExpr("indelRatioU", a, b)
 
   def token_set_ratio(a: Column, b: Column): Column =
-    column(TokenSetRatio(expression(a), expression(b)))
+    column(tokenSetRatioExpr(expression(a), expression(b)))
 
   def partial_ratio(a: Column, b: Column): Column =
-    column(PartialRatio(expression(a), expression(b)))
+    column(partialRatioExpr(expression(a), expression(b)))
 
   def indel_ratio(a: Column, b: Column): Column =
-    column(IndelRatio(expression(a), expression(b)))
+    column(indelRatioExpr(expression(a), expression(b)))
 
   /** Oracle-friendly integer Levenshtein ratio usable identically in any
     * ANSI engine: floor(100 * (maxlen - lev) / maxlen), 0..100 bigint. */

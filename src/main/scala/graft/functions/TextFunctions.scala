@@ -1,7 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 
 /** Text-analysis column functions for large-scale document pipelines:
   * tokenization, token counting, language-ID heuristics, quality scoring,
@@ -58,8 +62,8 @@ object TextFunctions {
     * n-gram constructor (TextQueries' distinct bigrams and the
     * repetition stats both derive from it).
     *
-    * Round-14 OPT (guide step-2 per-task work): rides the codegen'd
-    * [[WordNGramsQ]] — the former zip_with fold was a higher-order
+    * Round-14 OPT (guide step-2 per-task work): calls the codegen'd
+    * [[wordNGramsKernel]] — the former zip_with fold was a higher-order
     * CodegenFallback interpreted per element on every DSIR / PMI /
     * repetition / cross-entropy / decontam scan. The kernel replicates
     * the old chain bit-for-bit: trim of ASCII spaces only (Spark
@@ -68,8 +72,10 @@ object TextFunctions {
     * zip_with fold produced. NULL text still yields NULL. */
   def wordNGrams(c: Column, n: Int): Column = {
     require(n >= 1, s"n=$n must be >= 1")
-    org.apache.spark.sql.GraftColumnBridge.column(
-      WordNGramsQ(org.apache.spark.sql.GraftColumnBridge.expression(c), n))
+    column(StaticInvoke(TextFunctions.getClass,
+      ArrayType(StringType, containsNull = false), "wordNGramsKernel",
+      Seq(expression(c), Literal(n)), Seq(StringType, IntegerType),
+      returnNullable = false))
   }
 
   private val NGramWsRe = java.util.regex.Pattern.compile("\\s+")
@@ -95,30 +101,6 @@ object TextFunctions {
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Catalyst expression form of [[wordNGramsKernel]] — whole-stage
-    * codegen, one tokenization per row. */
-  case class WordNGramsQ(
-      child: org.apache.spark.sql.catalyst.expressions.Expression, n: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    override def dataType: org.apache.spark.sql.types.DataType =
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(t: Any): Any =
-      wordNGramsKernel(
-        t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev, t =>
-        s"graft.functions.TextFunctions.wordNGramsKernel($t, $n)")
-    override protected def withNewChildInternal(
-        newChild: org.apache.spark.sql.catalyst.expressions.Expression)
-        : org.apache.spark.sql.catalyst.expressions.Expression =
-      copy(child = newChild)
   }
 
   /** Distinct lowercase token array (sorted — canonical form; no ""

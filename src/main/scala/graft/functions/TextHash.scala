@@ -2,20 +2,23 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType,
+  StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass MinHash / SimHash Catalyst expressions.
+/** Single-pass MinHash / SimHash kernels.
   *
   * A composable column form (one MinHash per salt, one SimHash
   * bit-weight per bit) would re-tokenize and re-hash the document for
   * every salt/bit — 8 salts means 8 tokenizations and 8·|tokens| md5
-  * calls, all in interpreted higher-order functions. These expressions
+  * calls, all in interpreted higher-order functions. These kernels
   * tokenize once, hash each token once per salt (minhash) or once total
-  * (simhash), and stay inside whole-stage codegen via static kernels.
+  * (simhash), and stay inside whole-stage codegen: each is a static
+  * method that Spark's `StaticInvoke` calls, its constant arguments
+  * passed as value literals.
   *
   * Value parity is exact: identical tokenization (trim → lower →
   * `\s+`-split → drop empties → distinct, the round-10 migrated rule
@@ -89,7 +92,7 @@ object TextHash {
     * strings, hex being monotone per nibble) and only the winning
     * digest is hex-formatted. Values are unchanged; the hex formatting
     * and string-concat work drops from O(tokens·seeds) to O(seeds). */
-  def minhashKernel(text: UTF8String, seeds: Array[Int]): ArrayData = {
+  def minhashKernel(text: UTF8String, seeds: ArrayData): ArrayData = {
     val toks = tokensOf(text.toString)
     val md = mdLocal.get()
     val tokBytes = new Array[Array[Byte]](toks.length)
@@ -98,10 +101,10 @@ object TextHash {
       tokBytes(j) = toks(j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
       j += 1
     }
-    val out = new Array[AnyRef](seeds.length)
+    val out = new Array[AnyRef](seeds.numElements())
     var i = 0
-    while (i < seeds.length) {
-      val salt = ("#" + seeds(i))
+    while (i < out.length) {
+      val salt = ("#" + seeds.getInt(i))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       var best: Array[Byte] = null
       var k = 0
@@ -156,27 +159,6 @@ object TextHash {
     sig
   }
 
-  case class MinhashSignature(child: Expression, seeds: Seq[Int])
-      extends UnaryExpression {
-    // empty seeds would make every band the identical "" (the
-    // element_at(sig, 1) null-band guard falls through on an empty
-    // array) and bucket the ENTIRE corpus into one LSH band — the
-    // classic rowsPerBand = 0 integer-division mistake; fail at PLAN
-    // time like Simhash's bits check
-    require(seeds.nonEmpty, "minhash signature needs at least one seed")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-    private lazy val seedArr = seeds.toArray
-    override protected def nullSafeEval(v: Any): Any =
-      minhashKernel(v.asInstanceOf[UTF8String], seedArr)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("seeds", seedArr, "int[]")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHash.minhashKernel($c, $ref);")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   /** Codegen-callable kernel: the per-gram hash bucket of every word
     * n-gram of `text`, in order, WITH multiplicity — one tokenization
     * and one md5 per gram, no hex formatting. Replicates exactly the
@@ -222,28 +204,19 @@ object TextHash {
     new GenericArrayData(out)
   }
 
-  case class GramBuckets(child: Expression, n: Int, salt: String, buckets: Int)
-      extends UnaryExpression {
-    require(n >= 1, s"n=$n must be >= 1")
-    require(buckets >= 1, s"buckets=$buckets must be >= 1")
-    private lazy val saltBytes =
-      salt.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(v: Any): Any =
-      gramBucketsKernel(v.asInstanceOf[UTF8String], n, saltBytes, buckets)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("salt", saltBytes, "byte[]")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHash.gramBucketsKernel($c, $n, $ref, $buckets);")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   /** Per-gram hash buckets of the word n-grams of `c` (with
     * multiplicity, in order) — the DSIR feature-hash projection. */
-  def gramBuckets(c: Column, n: Int, salt: String, buckets: Int): Column =
-    column(GramBuckets(expression(c), n, salt, buckets))
+  def gramBuckets(c: Column, n: Int, salt: String, buckets: Int): Column = {
+    require(n >= 1, s"n=$n must be >= 1")
+    require(buckets >= 1, s"buckets=$buckets must be >= 1")
+    column(StaticInvoke(TextHash.getClass, ArrayType(LongType, containsNull = false),
+      "gramBucketsKernel",
+      Seq(expression(c), Literal(n),
+        Literal(salt.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+        Literal(buckets)),
+      Seq(StringType, IntegerType, BinaryType, IntegerType),
+      returnNullable = false))
+  }
 
   /** Kernel: Rabin-Karp polynomial rolling hash of the whole normalized
     * text (base 257 over the Mersenne prime 2^61-1). The window-shift
@@ -273,42 +246,48 @@ object TextHash {
     h
   }
 
-  case class RollingFingerprint(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(v: Any): Any =
-      rollingHashKernel(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHash.rollingHashKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  /** SQL: `rolling_fingerprint(text)` → Rabin-Karp rolling fingerprint
+    * of the trimmed text as bigint. */
+  def rollingFingerprintExpr(t: Expression): Expression =
+    StaticInvoke(TextHash.getClass, LongType, "rollingHashKernel", Seq(t),
+      Seq(StringType), returnNullable = false)
+
+  def rollingFingerprint(c: Column): Column =
+    column(rollingFingerprintExpr(expression(c)))
+
+  /** SQL: `minhash_sig(text[, n])` → array of min-hashes for `seeds`,
+    * in order. The seeds travel as an int-array value literal (printed
+    * `[0,1,…]` in the plan), so two equal calls compare equal. */
+  def minhashSignatureExpr(t: Expression, seeds: Seq[Int]): Expression = {
+    // empty seeds would make every band the identical "" (the
+    // element_at(sig, 1) null-band guard falls through on an empty
+    // array) and bucket the ENTIRE corpus into one LSH band — the
+    // classic rowsPerBand = 0 integer-division mistake; fail at PLAN
+    // time like simhash's bits check
+    require(seeds.nonEmpty, "minhash signature needs at least one seed")
+    StaticInvoke(TextHash.getClass, ArrayType(StringType, containsNull = false),
+      "minhashKernel",
+      Seq(t, Literal(new GenericArrayData(seeds.toArray),
+        ArrayType(IntegerType, containsNull = false))),
+      Seq(StringType, ArrayType(IntegerType)), returnNullable = false)
   }
 
-  /** Rabin-Karp rolling fingerprint of the trimmed text as bigint. */
-  def rollingFingerprint(c: Column): Column =
-    column(RollingFingerprint(expression(c)))
-
-  case class Simhash(child: Expression, bits: Int) extends UnaryExpression {
+  /** SQL: `simhash(text[, bits])` → SimHash as a bigint of `bits` bits. */
+  def simhashExpr(t: Expression, bits: Int): Expression = {
     // md5 hex has 32 chars — one parity bit each; fail at PLAN time,
-    // not with a StringIndexOutOfBounds mid-job in generated code
+    // not with an index error mid-job in generated code
     require(bits >= 1 && bits <= 32, s"bits=$bits must be in 1..32")
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(v: Any): Any =
-      simhashKernel(v.asInstanceOf[UTF8String], bits)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.TextHash.simhashKernel($c, $bits);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+    StaticInvoke(TextHash.getClass, LongType, "simhashKernel",
+      Seq(t, Literal(bits)), Seq(StringType, IntegerType), returnNullable = false)
   }
 
   /** Array of min-hashes for `seeds`, in order. */
   def minhashSignature(c: Column, seeds: Seq[Int]): Column =
-    column(MinhashSignature(expression(c), seeds))
+    column(minhashSignatureExpr(expression(c), seeds))
 
   /** SimHash as a bigint of `bits` bits. */
   def simhash(c: Column, bits: Int = 16): Column =
-    column(Simhash(expression(c), bits))
+    column(simhashExpr(expression(c), bits))
 
   /** One LSH band string: the `seeds` min-hashes joined with '|' —
     * NULL for a token-less document. An empty token set min-hashes to

@@ -4,10 +4,10 @@ import java.text.Normalizer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode text normalization for training corpora.
@@ -21,10 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * do; DuckDB exposes the same NFC as `nfc_normalize`, which is the
   * oracle twin).
   *
-  * NFC runs as a native Catalyst `UnaryExpression` over `UTF8String`
-  * (no UDF, stays inside whole-stage codegen); the already-normalized
-  * fast path — all of ASCII — returns the input buffer without
-  * allocating.
+  * NFC runs as a static kernel over `UTF8String` called through
+  * `StaticInvoke` (no UDF, stays inside whole-stage codegen); the
+  * already-normalized fast path — all of ASCII — returns the input
+  * buffer without allocating.
   */
 object UnicodeNorm {
 
@@ -40,17 +40,11 @@ object UnicodeNorm {
   }
 
   /** SQL: `nfc_normalize(s)` — Unicode NFC canonical composition. */
-  case class NfcNormalize(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override protected def nullSafeEval(input: Any): Any =
-      nfcU(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.UnicodeNorm.nfcU($c)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
+  def nfcNormalizeExpr(s: Expression): Expression =
+    StaticInvoke(UnicodeNorm.getClass, StringType, "nfcU", Seq(s),
+      Seq(StringType), returnNullable = false)
 
-  def nfc_normalize(c: Column): Column = column(NfcNormalize(expression(c)))
+  def nfc_normalize(c: Column): Column = column(nfcNormalizeExpr(expression(c)))
 
   /** Control (Cc) + format (Cf) strip pattern — shared with the q77
     * oracle SQL (RE2 supports the same two-letter categories). */

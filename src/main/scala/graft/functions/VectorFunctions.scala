@@ -2,11 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType,
+  LongType}
 
 /** Vector (embedding) column functions for similarity search and
   * embedding-based near-dup detection over `Array[Float]` columns.
@@ -88,29 +90,25 @@ object VectorFunctions {
     else math.floor(1000000.0 * math.signum(d.toDouble) * d * d / den).toLong
   }
 
-  /** Catalyst expression form of the kernel — stays inside whole-stage
-    * codegen (the higher-order-function composition would be interpreted
-    * per pair, which dominates KNN/near-dup inner loops). */
-  case class CosineSqScaledQ(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      cosineSqScaledKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.VectorFunctions.cosineSqScaledKernel($a, $b);")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
+  /** A bigint-vector kernel call: `inputTypes` casts an array<int>
+    * argument to array<bigint> and rejects a non-array at analysis. */
+  private def vectorKernel(dataType: DataType, kernel: String,
+      args: Expression*): Expression =
+    StaticInvoke(VectorFunctions.getClass, dataType, kernel, args,
+      args.map(_ => ArrayType(LongType)), returnNullable = false)
+
+  /** SQL: `cosine_sq_scaled(qa, qb)` — the kernel stays inside
+    * whole-stage codegen (the higher-order-function composition would
+    * be interpreted per pair, which dominates KNN/near-dup inner loops). */
+  def cosineSqScaledQExpr(a: Expression, b: Expression): Expression =
+    vectorKernel(LongType, "cosineSqScaledKernel", a, b)
 
   /** Deterministic scaled cosine over quantized vectors:
     * floor(1e6 * sign · dotQ² / (|a|² * |b|²)) — all-integer inputs to
     * one IEEE multiply chain + divide + floor, identical across engines.
     * Preserves cosine ordering (squares, sign-corrected). */
   def cosineSqScaledQ(a: Column, b: Column): Column =
-    column(CosineSqScaledQ(expression(a), expression(b)))
+    column(cosineSqScaledQExpr(expression(a), expression(b)))
 
   /** Codegen-callable kernel: exact integer squared L2 of two quantized
     * arrays, Σ(aᵢ−bᵢ)². Replaces the interpreted HOF composition
@@ -134,25 +132,9 @@ object VectorFunctions {
     s
   }
 
-  /** Catalyst expression form of [[l2SqQKernel]] — stays inside
-    * whole-stage codegen like [[CosineSqScaledQ]]. */
-  case class L2SqQ(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      l2SqQKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.VectorFunctions.l2SqQKernel($a, $b);")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
   /** Exact integer squared L2 over quantized vectors (codegen'd). */
   def l2SqQ(a: Column, b: Column): Column =
-    column(L2SqQ(expression(a), expression(b)))
+    column(vectorKernel(LongType, "l2SqQKernel", expression(a), expression(b)))
 
   /** Codegen-callable kernel twin of [[quantize]]'s HOF body: per
     * element floor(double(x) · scale) → long, null elements preserved.
@@ -225,7 +207,7 @@ object VectorFunctions {
     * On a Long-overflow projection sum the old ANSI form raises where
     * this wraps — unreachable from quantize() outputs (dim ±1 terms of
     * |component·scale| ≲ 3e9), the only callers. */
-  def rademacherBucketKernel(qv: ArrayData, signs: Array[Long],
+  def rademacherBucketKernel(qv: ArrayData, signs: Array[Byte],
       nPlanes: Int, dim: Int): Long = {
     val n = qv.numElements()
     if (n != dim) return 0L
@@ -250,40 +232,29 @@ object VectorFunctions {
     bucket
   }
 
-  /** Catalyst expression form of [[rademacherBucketKernel]] — the
-    * bucket projection sits on every LSH ANN corpus/query scan, where
-    * the per-plane interpreted fold was nPlanes·dim lambda evaluations
-    * per row (round-14 OPT, guide step-2 per-task work). */
-  case class RademacherBucketQ(child: Expression, nPlanes: Int, dim: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    require(nPlanes >= 1 && nPlanes <= 63 && dim >= 1,
-      s"nPlanes=$nPlanes must be in 1..63, dim=$dim must be >= 1")
-    private lazy val signs: Array[Long] = Array.tabulate(nPlanes * dim) {
-      i => rademacherSign(i / dim, i % dim).toLong
-    }
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(a: Any): Any =
-      rademacherBucketKernel(a.asInstanceOf[ArrayData], signs, nPlanes, dim)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("signs", signs, "long[]")
-      defineCodeGen(ctx, ev, a =>
-        s"graft.functions.VectorFunctions.rademacherBucketKernel($a, $ref, $nPlanes, $dim)")
-    }
-    override protected def withNewChildInternal(
-        newChild: Expression): Expression = copy(child = newChild)
-  }
-
   /** Sign-LSH bucket over a QUANTIZED (bigint) vector with Rademacher
     * planes: bit p = [sum_d qv[d]·s(p,d) >= 0]. All-integer math —
     * bit-exact in every engine, unlike float projections whose
-    * accumulation order is engine-specific. Round-14 OPT: rides the
-    * codegen'd [[RademacherBucketQ]]; the coalesce replicates the old
-    * column form's NULL-vector edge (NULL proj → every plane's
-    * otherwise(0) → bucket 0, never NULL). */
-  def rademacherLshBucket(qv: Column, nPlanes: Int, dim: Int): Column =
-    coalesce(
-      column(RademacherBucketQ(expression(qv), nPlanes, dim)), lit(0L))
+    * accumulation order is engine-specific. Round-14 OPT: calls the
+    * codegen'd [[rademacherBucketKernel]] — the per-plane interpreted
+    * fold was nPlanes·dim lambda evaluations per row on every LSH ANN
+    * corpus/query scan. The ±1 sign matrix travels as a binary value
+    * literal, one signed byte per entry, which the kernel reads in place
+    * (no per-row copy); the coalesce replicates the old column form's
+    * NULL-vector edge (NULL proj → every plane's otherwise(0) → bucket
+    * 0, never NULL). */
+  def rademacherLshBucket(qv: Column, nPlanes: Int, dim: Int): Column = {
+    require(nPlanes >= 1 && nPlanes <= 63 && dim >= 1,
+      s"nPlanes=$nPlanes must be in 1..63, dim=$dim must be >= 1")
+    val signs = Array.tabulate(nPlanes * dim) { i =>
+      rademacherSign(i / dim, i % dim).toByte
+    }
+    coalesce(column(StaticInvoke(VectorFunctions.getClass, LongType,
+      "rademacherBucketKernel",
+      Seq(expression(qv), Literal(signs), Literal(nPlanes), Literal(dim)),
+      Seq(ArrayType(LongType), BinaryType, IntegerType, IntegerType),
+      returnNullable = false)), lit(0L))
+  }
 
   /** Codegen-callable kernel: elementwise difference of two quantized
     * (bigint) arrays with `zip_with(a, b, (x, y) => x - y)` semantics —
@@ -304,26 +275,8 @@ object VectorFunctions {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Catalyst expression form of [[arraySubKernel]] — the IVFADC
-    * residual (vector − cell centroid) projection, formerly an
-    * interpreted zip_with per corpus row / probed query (round-14
-    * OPT). */
-  case class ArraySubQ(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(LongType, containsNull = true)
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      arraySubKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.VectorFunctions.arraySubKernel($a, $b);")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
   /** Elementwise a − b over quantized arrays (codegen'd zip_with twin). */
   def arraySubQ(a: Column, b: Column): Column =
-    column(ArraySubQ(expression(a), expression(b)))
+    column(vectorKernel(ArrayType(LongType, containsNull = true), "arraySubKernel",
+      expression(a), expression(b)))
 }

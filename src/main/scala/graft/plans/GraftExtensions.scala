@@ -17,6 +17,13 @@ import org.apache.spark.sql.types.IntegerType
   * `zorder2` available to plain SQL — including spark-sql
   * shells and JDBC/Thrift sessions where no Scala code runs.
   *
+  * Argument types are checked at analysis, as for Spark's builtins:
+  * each kernel call declares its input types (string for the text and
+  * similarity kernels, array<bigint> for `cosine_sq_scaled`), so an
+  * atomic argument is implicitly cast (`luhn_valid(4111111111111111)`
+  * checks the digits of the bigint) and an argument that cannot be
+  * cast fails with an `AnalysisException`, never inside a task.
+  *
   * Deliberately NO custom `Rule[LogicalPlan]` or `SparkStrategy` is
   * injected: the survey's conclusion (SURVEY.md §4, §7.3) is that every
   * reference semantic is expressible at the public DataFrame/expression
@@ -49,29 +56,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(e: SparkSessionExtensions): Unit = {
+    // every builder reuses the library's Expression-level function —
+    // one implementation, no SQL-surface fork to drift (a Column-bridge
+    // wrapper here would inject an unanalyzed ColumnNodeExpression,
+    // which the SQL path never resolves)
     e.injectFunction((
       FunctionIdentifier("token_set_ratio"),
       info("token_set_ratio", "token_set_ratio(a, b) - RapidFuzz-style token-set similarity 0..100"),
-      arity2("token_set_ratio")(Similarity.TokenSetRatio(_, _))))
+      arity2("token_set_ratio")(Similarity.tokenSetRatioExpr)))
     e.injectFunction((
       FunctionIdentifier("partial_ratio"),
       info("partial_ratio", "partial_ratio(a, b) - best-window indel similarity 0..100"),
-      arity2("partial_ratio")(Similarity.PartialRatio(_, _))))
+      arity2("partial_ratio")(Similarity.partialRatioExpr)))
     e.injectFunction((
       FunctionIdentifier("indel_ratio"),
       info("indel_ratio", "indel_ratio(a, b) - whole-string indel similarity 0..100"),
-      arity2("indel_ratio")(Similarity.IndelRatio(_, _))))
+      arity2("indel_ratio")(Similarity.indelRatioExpr)))
     e.injectFunction((
       FunctionIdentifier("cosine_sq_scaled"),
       info("cosine_sq_scaled", "cosine_sq_scaled(qa, qb) - sign-corrected scaled cosine^2 of quantized bigint vectors"),
-      arity2("cosine_sq_scaled")(VectorFunctions.CosineSqScaledQ(_, _))))
+      arity2("cosine_sq_scaled")(VectorFunctions.cosineSqScaledQExpr)))
     e.injectFunction((
       FunctionIdentifier("simhash"),
       info("simhash", "simhash(text[, bits]) - SimHash of the token set as bigint; bits is a literal int, default 16, max 32 (md5-hex parity bits)"),
       (es: Seq[Expression]) => es match {
-        case Seq(t) => TextHash.Simhash(t, 16)
+        case Seq(t) => TextHash.simhashExpr(t, 16)
         case Seq(t, Literal(b: Int, IntegerType)) if b >= 1 && b <= 32 =>
-          TextHash.Simhash(t, b)
+          TextHash.simhashExpr(t, b)
         case _ => throw new IllegalArgumentException(
           "simhash(text[, bits]) requires a literal int bits in 1..32")
       }))
@@ -79,28 +90,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("minhash_sig"),
       info("minhash_sig", "minhash_sig(text[, n]) - array of n md5 min-hashes over the token set (seeds 0..n-1); n is a literal int, default 8"),
       (es: Seq[Expression]) => es match {
-        case Seq(t) => TextHash.MinhashSignature(t, 0 until 8)
+        case Seq(t) => TextHash.minhashSignatureExpr(t, 0 until 8)
         case Seq(t, Literal(n: Int, IntegerType)) if n >= 1 && n <= 512 =>
-          TextHash.MinhashSignature(t, 0 until n)
+          TextHash.minhashSignatureExpr(t, 0 until n)
         case _ => throw new IllegalArgumentException(
           "minhash_sig(text[, n]) requires a literal int n in 1..512")
       }))
     e.injectFunction((
       FunctionIdentifier("rolling_fingerprint"),
       info("rolling_fingerprint", "rolling_fingerprint(text) - Rabin-Karp rolling hash of the trimmed text as bigint"),
-      arity1("rolling_fingerprint")(TextHash.RollingFingerprint(_))))
+      arity1("rolling_fingerprint")(TextHash.rollingFingerprintExpr)))
     e.injectFunction((
       FunctionIdentifier("luhn_valid"),
       info("luhn_valid", "luhn_valid(digits) - Luhn mod-10 check-digit validity of a digit string (false on empty/non-digit input)"),
-      arity1("luhn_valid")(Checksum.LuhnValid(_))))
+      arity1("luhn_valid")(Checksum.luhnValidExpr)))
     e.injectFunction((
       FunctionIdentifier("nfc_normalize"),
       info("nfc_normalize", "nfc_normalize(s) - Unicode NFC canonical composition (same semantics as DuckDB's nfc_normalize)"),
-      arity1("nfc_normalize")(UnicodeNorm.NfcNormalize(_))))
-    // the remaining three reuse the library's Expression-level chains —
-    // one implementation, no SQL-surface fork to drift (a Column-bridge
-    // wrapper here would inject an unanalyzed ColumnNodeExpression,
-    // which the SQL path never resolves)
+      arity1("nfc_normalize")(UnicodeNorm.nfcNormalizeExpr)))
     e.injectFunction((
       FunctionIdentifier("url_canonicalize"),
       info("url_canonicalize", "url_canonicalize(u) - web-corpus dedup-key URL canonicalization (lowercase, fragment/tracking-param strip, www/trailing-slash strip)"),

@@ -143,9 +143,6 @@ object CorpusTimer {
     val ledger = c.stages.map { case (k, v) => s""""$k":$v""" }
     val byStage = c.stages.toMap.withDefault(k => sys.error(
       s"accounting stage '$k' missing — Engine.processCorpus stage labels changed?"))
-    // Locale.ROOT: a comma-decimal default locale would corrupt the JSON
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     // JSON-escape the interpolated path (quotes/backslashes in a dir
     // name must not corrupt the single-line artifact)
     val dirS = args(0).flatMap {
@@ -158,7 +155,7 @@ object CorpusTimer {
     // full-corpus storage passes (the eval slice rides the same
     // parquet, so the ratio is a slight upper bound on semantic
     // passes)
-    println(s"""{"tool":"corpus-timer","dir":"$dirS","policy":"$policy","stages":{${ledger.mkString(",")}},"chunks":${byStage("chunks")},"packed":${byStage("packed_docs")},"scan_rows":${c.scanRows},"n_docs":${c.nDocs},"corpus_scans":${fmt(c.scans)},"sec":${fmt(c.sec)}}""")
+    println(s"""{"tool":"corpus-timer","dir":"$dirS","policy":"$policy","stages":{${ledger.mkString(",")}},"chunks":${byStage("chunks")},"packed":${byStage("packed_docs")},"scan_rows":${c.scanRows},"n_docs":${c.nDocs},"corpus_scans":${graft.Timing.cs(c.scans)},"sec":${graft.Timing.cs(c.sec)}}""")
     spark.stop()
   }
 }

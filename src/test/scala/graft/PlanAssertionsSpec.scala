@@ -72,7 +72,7 @@ class PlanAssertionsSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q37_knn_bruteforce")(spark, dir)
     df.collect() // count() would execute a DIFFERENT QueryExecution
     val lines = df.queryExecution.executedPlan.toString.split("\n")
-    assert(lines.exists(l => l.contains("cosinesqscaledq") && l.contains("*(")),
+    assert(lines.exists(l => l.contains("cosineSqScaledKernel") && l.contains("*(")),
       "custom kernel fell out of codegen:\n" + lines.take(40).mkString("\n"))
   }
 
@@ -103,11 +103,17 @@ class PlanAssertionsSpec extends AnyFunSuite {
   }
 
   test("q36: candidates come from the prefix-shingle join; verify is exact") {
-    val p = plan("q36_jaccard_pairs")
     // the sorted-intersect kernel runs only on candidate pairs produced
     // by the prefix-filtered shingle equi-join — never on a block×block
-    // pair space (no nested-loop/cartesian join anywhere in the plan)
-    assert(p.contains("sortedintersectsize") || p.contains("SortedIntersectSize"))
+    // pair space (no nested-loop/cartesian join anywhere in the plan) —
+    // and inside a whole-stage codegen span (read from the FINAL
+    // adaptive plan, so execute first)
+    val df = SparkEntry.queries("q36_jaccard_pairs")(spark, dir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.split("\n").exists(l =>
+      l.contains("sortedIntersectSizeKernel") && l.contains("*(")),
+      "sorted-intersect kernel missing or out of codegen:\n" + p.take(3000))
     assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"))
   }
 

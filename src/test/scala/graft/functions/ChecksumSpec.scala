@@ -43,9 +43,9 @@ class ChecksumSpec extends AnyFunSuite {
       == Map("79927398713" -> true, "79927398710" -> false,
         "4532015112830366" -> true, "x" -> false))
     // the `*(n)` star prefix marks the whole-stage-codegen region in
-    // the AQE plan string — the luhnvalid projection must carry it
+    // the AQE plan string — the luhnKernel projection must carry it
     val plan = out.queryExecution.executedPlan.toString
-    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project.*luhnvalid.*"), plan)
+    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project.*luhnKernel.*"), plan)
   }
 
 }

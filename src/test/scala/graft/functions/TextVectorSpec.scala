@@ -130,7 +130,7 @@ class TextVectorSpec extends AnyFunSuite {
   // bit-for-bit, on randomized inputs plus the edge cases the old
   // forms defined (NULL vector -> bucket 0, zip_with length padding).
 
-  test("RademacherBucketQ == per-plane aggregate/zip_with fold (parity)") {
+  test("rademacherLshBucket == per-plane aggregate/zip_with fold (parity)") {
     val nPlanes = 12; val dim = 16
     val rnd = new scala.util.Random(42)
     val vecs = (0 until 200).map(i =>

@@ -108,4 +108,35 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // leave the shared session for other suites
     }
   }
+
+  test("a wrong-typed argument casts or fails at analysis, never in a task") {
+    val spark = graft.SparkTestSession.spark
+    GraftExtensions.registerInto(spark)
+    // Right(v): an atomic argument is implicitly cast to the declared
+    // input type and the call returns v; Left: spark.sql itself throws
+    // an AnalysisException, i.e. the call never reaches an executor
+    val cases: Seq[(String, Either[Unit, Any])] = Seq(
+      "luhn_valid(4111111111111111)" -> Right(true),
+      "simhash(123) = simhash('123')" -> Right(true),
+      "minhash_sig(123, 2) = minhash_sig('123', 2)" -> Right(true),
+      "rolling_fingerprint(42) = rolling_fingerprint('42')" -> Right(true),
+      "nfc_normalize(1.5)" -> Right("1.5"),
+      "cosine_sq_scaled(array(1, 0), array(1, 0))" -> Right(1000000L),
+      "cosine_sq_scaled('1,0', '1,0')" -> Left(()),
+      "rolling_fingerprint(array('a'))" -> Left(()),
+      "token_set_ratio(12, '12')" -> Right(100.0),
+      "partial_ratio(map(1, 2), 'x')" -> Left(()),
+      "indel_ratio(DATE'2024-01-02', '2024-01-02')" -> Right(100.0))
+    cases.foreach { case (call, expected) =>
+      expected match {
+        case Right(v) =>
+          val got = spark.sql(s"SELECT $call AS v").head().get(0)
+          assert(got == v, s"$call returned $got, expected $v")
+        case Left(_) =>
+          intercept[org.apache.spark.sql.AnalysisException] {
+            spark.sql(s"SELECT $call AS v")
+          }
+      }
+    }
+  }
 }

@@ -20,7 +20,7 @@ shift || true
 SF_DIR="/root/testdata/$SF"
 OUT_DIR="/tmp/preflight_verify_$SF"
 
-echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query)"
+echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern)"
 # every testdata read goes through graft.Tables: a read(Stream) whose
 # path literal names a .parquet file anywhere else in src/main is a
 # second table-access path
@@ -34,6 +34,17 @@ STRAY=$(find src/main -name '*.scala' ! -path src/main/scala/graft/Tables.scala 
 KEYED=$(grep -rnE '"q[0-9]+_[a-z0-9_]+"\s*->' src/main || true)
 [ -z "$KEYED" ] \
   || { echo "$KEYED"; echo "PREFLIGHT FAIL: name-keyed query map entry (add a Query(name, plan, oracle) to a family sequence instead)"; exit 1; }
+# a codegen kernel is a static method that Spark's StaticInvoke calls: a
+# hand-written doGenCode in src/main is a second kernel-call pattern
+# coming back. The one exception is QuantizeQ, whose result type follows
+# the resolved input type, which a StaticInvoke cannot declare up front.
+GENCODE=$(find src/main -name '*.scala' -print0 \
+  | xargs -0 perl -0777 -ne 'while (/\bdef\s+doGenCode\b/g) {
+      my $pre = substr($_, 0, $-[0]); my ($cls) = $pre =~ /.*\bclass\s+(\w+)/s;
+      printf "%s:%d (class %s)\n", $ARGV, 1 + ($pre =~ tr/\n//), $cls // "?"
+        unless ($cls // "") eq "QuantizeQ" }')
+[ -z "$GENCODE" ] \
+  || { echo "$GENCODE"; echo "PREFLIGHT FAIL: hand-written doGenCode (call the static kernel through StaticInvoke instead)"; exit 1; }
 
 echo "== preflight 2/5: sbt Test/compile (main + test must compile at HEAD+worktree)"
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 \
