@@ -290,25 +290,24 @@ object Engine {
     *                      (TextAnalysis.removeDupPassages — row-
     *                      preserving, text shrinks)
     * @param nearDedup     when Some(minJaccardMills), within-corpus
-    *                      FUZZY dedup runs after exact dedup: MinHash-
-    *                      LSH candidate pairs (the q35 banding, star-
-    *                      capped at `nearDedupMaxBucket`), exact
-    *                      token-set Jaccard verification at the given
-    *                      threshold, connected components over the
-    *                      verified edges (the q53 kernel), then each
-    *                      component keeps only its min-id canonical
-    *                      (the q106 keeper cut with id priority).
-    *                      Adds a `near_deduped` ledger stage
+    *                      FUZZY dedup runs after exact dedup through
+    *                      `Dedup.verifiedComponents` (the q196
+    *                      operator): MinHash-LSH candidate pairs (the
+    *                      q35 banding, star-capped at
+    *                      `nearDedupMaxBucket`), exact token-set Jaccard
+    *                      verification at the given threshold,
+    *                      connected components over the verified edges
+    *                      (the q53 kernel), then each component keeps
+    *                      only its min-id canonical (the q106 keeper cut
+    *                      with id priority). Adds a `near_deduped`
+    *                      ledger stage
     * @param nearDedupMaxBucket star cap on degenerate LSH buckets
     *                      (default: the gated q35 cap). NOTE the
-    *                      verify-after-star trade: the star reduction
-    *                      preserves the RAW banding closure exactly,
-    *                      but a star edge that fails verification can
-    *                      split a component a full clique would have
-    *                      kept whole — in a degenerate bucket (near-
-    *                      identical boilerplate) star edges verify in
-    *                      practice; pass `Int.MaxValue` for the
-    *                      lossless all-pairs verify
+    *                      verify-after-star trade documented on
+    *                      `Dedup.verifiedComponents` — in a degenerate
+    *                      bucket (near-identical boilerplate) star edges
+    *                      verify in practice; pass `Int.MaxValue` for
+    *                      the lossless all-pairs verify
     * @param againstCorpus when Some(standing corpus of the same
     *                      `idCol`/`textCol` shape, in this pipeline's
     *                      cleaned text form), batch docs the corpus
@@ -451,58 +450,24 @@ object Engine {
     val exactDeduped = boundary(Dedup.exact(nonEmpty, textCol, idCol)
       .drop("content_key", "dup_count"))
 
-    // 4n. optional within-corpus fuzzy dedup: the q35 banding (star-
-    // capped candidate pairs), q36-style exact token-set Jaccard
-    // verify, the q53 closure, then the q106 keeper cut (min id per
-    // component). Runs BEFORE the against-corpus gate so the standing-
-    // corpus probe sees only canonical survivors. Scale shape: pair
-    // mass is linear by the star cap, verification is two equi-joins
-    // of sorted token sets onto the pair list, and the components loop
-    // is the eager-checkpoint kernel — no all-pairs anywhere.
+    // 4n. optional within-corpus fuzzy dedup (Dedup.verifiedComponents,
+    // the q196 composition): star-capped q35 banding, exact token-set
+    // Jaccard verify, the q53 closure over verified edges, then the q106
+    // keeper cut (min id per component). Runs BEFORE the against-corpus
+    // gate so the standing-corpus probe sees only canonical survivors.
     val nearDeduped = nearDedup match {
       case None => exactDeduped
       case Some(minJacMills) =>
-        // round-13 OPT: one pass over the exact-dedup survivors computes
-        // the token sets AND both band signatures, materialized once —
-        // the banding and the two verify joins each used to re-execute
-        // the whole upstream pipeline (from the nearest boundary) plus a
-        // re-tokenization. This stage is ALREADY documented eager (the
-        // components loop checkpoints by contract), so the extra eager
-        // cut changes no laziness anyone relies on. Same kernels, same
-        // geometry (bands = 2 × rowsPerBand = 4 through the shared
-        // star-cap kernel), identical output.
-        // boundary(), not an unconditional localCheckpoint: the frame
-        // persists full sorted token sets + band signatures for every
-        // exact-dedup survivor, a footprint materializeBoundaries=false
-        // callers opted out of (ADVICE r13). Under the flag the eager
-        // cut stands exactly as before; without it the three consumers
-        // share the lazy subtree (the components loop still makes the
-        // stage eager through its own checkpoint contract).
-        val slim = boundary(exactDeduped
-          .select(col(idCol).as("__id"),
-            TextFunctions.tokenSetSorted(col(textCol)).as("__tok"),
-            array(
-              TextFunctions.minhashBand(col(textCol), 0 until 4),
-              TextFunctions.minhashBand(col(textCol), 4 until 8))
-              .as("__bands")))
-        val byBand = slim.select(col("__id"),
-          posexplode(col("__bands")).as(Seq("band_no", "band_sig")))
-        val cand = Dedup.cappedBucketPairs(
-          byBand, Seq("band_no", "band_sig"), "__id", nearDedupMaxBucket)
-        val verified = cand
-          .join(slim.select(col("__id").as("id_a"), col("__tok").as("__ta")),
-            Seq("id_a"))
-          .join(slim.select(col("__id").as("id_b"), col("__tok").as("__tb")),
-            Seq("id_b"))
-          .withColumn("__common", graft.functions.ArrayOps
-            .sortedIntersectSize(col("__ta"), col("__tb")))
-          .where(floor(lit(1000) * col("__common") /
-            (size(col("__ta")) + size(col("__tb")) - col("__common")))
-            >= minJacMills)
-          .select("id_a", "id_b")
-        // components over VERIFIED edges (Lee et al. 2022 NearDup
-        // semantics); non-canonical members (comp ≠ own id) drop
-        val losers = Dedup.connectedComponents(verified)
+        // the token sets and bands of every exact-dedup survivor feed the
+        // banding and both verify joins: boundary(), not an unconditional
+        // localCheckpoint, because the frame holds full token sets — a
+        // footprint materializeBoundaries=false callers opted out of (the
+        // components loop still makes the stage eager through its own
+        // checkpoint contract)
+        val slim = boundary(Dedup.nearDupFrame(exactDeduped, textCol, idCol))
+        // non-canonical members (comp ≠ own id) drop
+        val losers = Dedup.verifiedComponents(slim, minJacMills,
+            nearDedupMaxBucket)
           .where(col("comp") =!= col("id"))
           .select(col("id").as(idCol))
         exactDeduped.join(losers, Seq(idCol), "left_anti")

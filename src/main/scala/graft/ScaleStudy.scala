@@ -726,11 +726,6 @@ object ScaleStudy {
         .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
     }
 
-  private def bestOf(runs: Int)(body: => Unit): Double =
-    Timing.bestOf(runs)(body)
-
-  private def cs(v: Double): String = Timing.cs(v)
-
   /** warm + best-of-3 at both dirs; returns the JSON fragment. One
     * failing query (OOM at the 10× dir, a synth table it can't read)
     * must NOT discard every measurement already taken — the study's
@@ -747,15 +742,15 @@ object ScaleStudy {
       try {
         val fn = fns(name)
         fn(spark, baseDir).count() // warm: codegen + planning
-        val t0 = bestOf(3)(fn(spark, baseDir).count())
+        val t0 = Timing.bestOf(3)(fn(spark, baseDir).count())
         fn(spark, synthDir).count()
-        val t1 = bestOf(3)(fn(spark, synthDir).count())
+        val t1 = Timing.bestOf(3)(fn(spark, synthDir).count())
         // a base time rounding to 0 would format the exponent as
         // 'Infinity'/'NaN' — invalid JSON; emit null for unmeasurable
         val exp = math.log10(t1 / t0)
         val expS =
-          if (t0 > 0 && java.lang.Double.isFinite(exp)) cs(exp) else "null"
-        s"""$key:{"base":${cs(t0)},"synth":${cs(t1)},"exp":$expS}"""
+          if (t0 > 0 && java.lang.Double.isFinite(exp)) Timing.cs(exp) else "null"
+        s"""$key:{"base":${Timing.cs(t0)},"synth":${Timing.cs(t1)},"exp":$expS}"""
       } catch {
         // NonFatal ONLY: a fatal JVM error (OutOfMemoryError,
         // LinkageError) must kill the study — degrading it to an
@@ -785,7 +780,7 @@ object ScaleStudy {
     // load gauge on the full-table sf0.1 dir (the Bench convention)
     val q01 = SparkEntry.queries("q01_pricing_summary")
     q01(spark, sfDir).count()
-    val gauge = bestOf(3)(q01(spark, sfDir).count())
+    val gauge = Timing.bestOf(3)(q01(spark, sfDir).count())
 
     // `docs:q158_vocab_growth,q156_zipf_fit` runs only the listed
     // queries of a family (they must already be queued in the family's
@@ -872,8 +867,8 @@ object ScaleStudy {
     // clean startup gauge) would otherwise masquerade as super-linear
     // exponents with a "clean" gauge in the artifact (the round-4/5
     // misadjudication mode)
-    val gaugeEnd = bestOf(3)(q01(spark, sfDir).count())
-    println(s"""{"study":"10x-data-dominant","gauge_q01":${cs(gauge)},"gauge_q01_end":${cs(gaugeEnd)},$out}""")
+    val gaugeEnd = Timing.bestOf(3)(q01(spark, sfDir).count())
+    println(s"""{"study":"10x-data-dominant","gauge_q01":${Timing.cs(gauge)},"gauge_q01_end":${Timing.cs(gaugeEnd)},$out}""")
     spark.stop()
   }
 }

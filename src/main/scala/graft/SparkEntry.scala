@@ -550,7 +550,7 @@ object SparkEntry {
       // not leak to concurrent queries on the caller's session, and the
       // memory-sink table dies with the clone instead of piling up
       // across bench reruns.
-      val s2 = streamClone(s)
+      val s2 = graft.streaming.Incremental.isolatedClone(s)
       val stream = graft.Tables.stream(s2, dir, "events")
       // state shuffle width = f(keyspace), not a constant: hours ×
       // event types bounds the window-count state. Set on the
@@ -592,7 +592,7 @@ object SparkEntry {
     // against a batch DuckDB twin of the same rule (q23 gates the
     // batch-window sessionizer; this gates the streaming state path).
     Query("q71_stream_sessions", (s, dir) => {
-      val s2 = streamClone(s)
+      val s2 = graft.streaming.Incremental.isolatedClone(s)
       import s2.implicits._
       val events = graft.Tables.stream(s2, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"))
@@ -1779,20 +1779,6 @@ object SparkEntry {
     * at its real cardinality estimate instead. */
   private val Q44WindowKeyspace = 1024L
   private val Q71UserKeyspace = 16384L
-
-  /** The isolated session clone the streaming gates drain in (own
-    * SQLConf + temp-view catalog, shared SparkContext): state-store
-    * sizing must not leak to concurrent queries on the caller's
-    * session, and the memory-sink table dies with the clone instead of
-    * piling up across bench reruns. `newSession` starts from the
-    * CONTEXT defaults, so session-level state-store configuration the
-    * caller may legitimately vary — the provider class (memory vs
-    * RocksDB, the 100 TB state backend) AND its tuning knobs
-    * (spark.sql.streaming.stateStore.rocksdb.* etc.) — is copied
-    * through as the whole conf prefix; the RocksDB twin spec drives
-    * q44/q71 through this exact path. */
-  private def streamClone(s: SparkSession): SparkSession =
-    graft.streaming.Incremental.isolatedClone(s)
 
   /** Drain a streaming DataFrame into a memory sink with AvailableNow
     * on a throwaway checkpoint and return the sink table (the shared

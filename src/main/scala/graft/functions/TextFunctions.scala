@@ -148,10 +148,15 @@ object TextFunctions {
   /** Exact-content key for hash dedup: md5 of lowercased trimmed text. */
   def contentKey(c: Column): Column = md5(lower(trim(c)))
 
-  /** MinHash signature as one concatenated band string (for LSH banding:
-    * equal band string => candidate duplicate pair). */
-  def minhashBand(c: Column, seeds: Seq[Int]): Column =
-    TextHash.minhashBand(c, seeds)
+  /** The LSH band signatures of `c` as one array column, position = band
+    * number: band b is the `TextHash.minhashBand` string over seeds
+    * [b·rowsPerBand, (b+1)·rowsPerBand). Equal band string at the same
+    * position => candidate duplicate pair. Every banding consumer builds
+    * its bands here, so build and probe sides agree by construction. */
+  def minhashBands(c: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      TextHash.minhashBand(c, (b * rowsPerBand) until ((b + 1) * rowsPerBand))
+    }: _*)
 
   /** SimHash of `bits` bits as a bigint (bit i set iff weight_i > 0).
     * Backed by the single-pass TextHash expression (one md5 per token

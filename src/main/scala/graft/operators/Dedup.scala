@@ -77,24 +77,29 @@ object Dedup {
   def minhashLshPairs(
       df: DataFrame, textCol: String, idCol: String,
       bands: Int = 4, rowsPerBand: Int = 2,
-      maxBucket: Int): DataFrame = {
-    // one scan: all band signatures in an array, posexploded to
-    // (band_no, band_sig) rows — not a per-band union of re-scans.
-    val byBand = df.select(
-      col(idCol).as("__id"),
-      posexplode(array((0 until bands).map { b =>
-        TextFunctions.minhashBand(
-          col(textCol), (b * rowsPerBand) until ((b + 1) * rowsPerBand))
-      }: _*)).as(Seq("band_no", "band_sig")))
-    cappedBucketPairs(byBand, Seq("band_no", "band_sig"), "__id", maxBucket)
-  }
+      maxBucket: Int): DataFrame =
+    bandPairs(df.select(col(idCol).as("__id"),
+      TextFunctions.minhashBands(col(textCol), bands, rowsPerBand).as("bands")),
+      maxBucket)
 
-  /** THE star-cap kernel (single-sourced: `minhashLshPairs` and the q35
-    * query both ride through here — a cap or tie-break tweak must never
-    * fork between the library and the oracle-checked query). Buckets of
-    * `byKey` rows sharing `keyCols`: ≤ `maxBucket` members emit all
-    * within-bucket pairs; larger (degenerate) buckets emit the star
-    * (bucket-min, member) — identical transitive closure, linear
+  /** [[minhashLshPairs]] over precomputed band arrays — (__id, bands),
+    * bands = `TextFunctions.minhashBands` — for a caller that already
+    * holds them next to its token sets ([[nearDupFrame]]). One scan: the
+    * band array is posexploded to (band_no, band_sig) rows, not a
+    * per-band union of re-scans. Same cap contract and output. */
+  def bandPairs(d: DataFrame, maxBucket: Int): DataFrame =
+    cappedBucketPairs(
+      d.select(col("__id"),
+        posexplode(col("bands")).as(Seq("band_no", "band_sig"))),
+      Seq("band_no", "band_sig"), "__id", maxBucket)
+
+  /** THE star-cap kernel: every LSH banding ([[bandPairs]], so the q35
+    * family, the near-dup pipeline and the S-curve audits) and the
+    * capped prefix-shingle candidates of [[jaccardPairsFromTokens]] ride
+    * through here, so a cap or tie-break tweak changes them together.
+    * Buckets of `byKey` rows sharing `keyCols`: ≤ `maxBucket` members
+    * emit all within-bucket pairs; larger (degenerate) buckets emit the
+    * star (bucket-min, member) — identical transitive closure, linear
     * output. Returns distinct (id_a < id_b). */
   def cappedBucketPairs(byKey0: DataFrame, keyCols: Seq[String], idCol: String,
       maxBucket: Int): DataFrame = {
@@ -285,19 +290,40 @@ object Dedup {
       .select(("shingle" +: blockCols :+ "__id").map(col): _*)
     // candidate pairs ride the shared star-cap kernel (uncapped by
     // default, in which case it reduces to the plain within-bucket join)
-    val cand = cappedBucketPairs(
-      prefix, "shingle" +: blockCols, "__id", maxCandBucket)
-    cand
+    verifiedPairs(
+      cappedBucketPairs(prefix, "shingle" +: blockCols, "__id", maxCandBucket),
+      d, minJaccardMills)
+  }
+
+  /** THE token-set Jaccard in integer mills, ⌊1000·|A∩B| / |A∪B|⌋ with
+    * |A∪B| = |A| + |B| − |A∩B| — the one definition every near-dup
+    * verify (and every Jaccard-reporting query) evaluates, so the
+    * floor-of-double shape the DuckDB twins replicate cannot fork.
+    * Takes the intersection size and both set sizes as columns: callers
+    * count `common` their own way (a sorted-array intersection, a
+    * shingle-collision count, `array_intersect`). */
+  def jaccardMills(common: Column, sizeA: Column, sizeB: Column): Column =
+    floor(lit(1000) * common / (sizeA + sizeB - common)).cast("long")
+
+  /** Exact verify of candidate pairs (id_a, id_b) against the token sets
+    * of `d` (__id, toks): (id_a, id_b, jac_mills ≥ `minJaccardMills`). */
+  private def verifiedPairs(cand: DataFrame, d: DataFrame,
+      minJaccardMills: Int): DataFrame =
+    keepJaccard(cand
       .join(d.select(col("__id").as("id_a"), col("toks").as("ta")), "id_a")
-      .join(d.select(col("__id").as("id_b"), col("toks").as("tb")), "id_b")
+      .join(d.select(col("__id").as("id_b"), col("toks").as("tb")), "id_b"),
+      minJaccardMills)
+
+  /** Pairs carrying both token sets (ta, tb) → (id_a, id_b, jac_mills),
+    * cut at `minJaccardMills`. */
+  private def keepJaccard(pairs: DataFrame, minJaccardMills: Int): DataFrame =
+    pairs
       .withColumn("common",
         graft.functions.ArrayOps.sortedIntersectSize(col("ta"), col("tb")))
       .withColumn("jac_mills",
-        floor(lit(1000) * col("common")
-          / (size(col("ta")) + size(col("tb")) - col("common"))).cast("long"))
+        jaccardMills(col("common"), size(col("ta")), size(col("tb"))))
       .where(col("jac_mills") >= minJaccardMills)
       .select("id_a", "id_b", "jac_mills")
-  }
 
   /** Exact Jaccard pairs by DIRECT all-pairs enumeration over a
     * BOUNDED, pre-tokenized universe (__id, toks) — the ground-truth
@@ -315,16 +341,43 @@ object Dedup {
     * Corpus-scale dedup paths must keep using the prefix-filtered
     * kernel — this one never prunes. */
   def jaccardPairsAllPairs(d: DataFrame, minJaccardMills: Int): DataFrame =
-    d.select(col("__id").as("id_a"), col("toks").as("ta"))
+    keepJaccard(d.select(col("__id").as("id_a"), col("toks").as("ta"))
       .join(broadcast(d.select(col("__id").as("id_b"), col("toks").as("tb"))),
-        col("id_a") < col("id_b"))
-      .withColumn("common",
-        graft.functions.ArrayOps.sortedIntersectSize(col("ta"), col("tb")))
-      .withColumn("jac_mills",
-        floor(lit(1000) * col("common")
-          / (size(col("ta")) + size(col("tb")) - col("common"))).cast("long"))
-      .where(col("jac_mills") >= minJaccardMills)
-      .select("id_a", "id_b", "jac_mills")
+        col("id_a") < col("id_b")),
+      minJaccardMills)
+
+  /** The frame the within-corpus near-dup pipeline reads: one row per
+    * doc of `df` with its sorted token set and its LSH bands —
+    * (__id, toks, bands), one scan, in the q35 geometry (2 bands × 4
+    * rows). [[verifiedComponents]] reads it three times (banding and
+    * both verify joins), so callers materialize it first. */
+  def nearDupFrame(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    df.select(col(idCol).as("__id"),
+      TextFunctions.tokenSetSorted(col(textCol)).as("toks"),
+      TextFunctions.minhashBands(col(textCol), bands = 2, rowsPerBand = 4)
+        .as("bands"))
+
+  /** Within-corpus near-dup groups (Lee et al. 2022 NearDup semantics)
+    * over a [[nearDupFrame]]: star-capped LSH candidate pairs
+    * ([[bandPairs]] at `maxBucket`), exact token-set Jaccard verify of
+    * each candidate at `minJaccardMills`, then [[connectedComponents]]
+    * over the VERIFIED edges only. Returns (id, comp) for every doc on a
+    * verified edge; a doc absent from the result is a singleton. The
+    * one composition behind `Engine.processCorpus(nearDedup = …)` and
+    * the oracle-gated q196; each caller keeps its own materialization of
+    * `d` and its own keeper projection. Scale shape: pair mass is linear
+    * by the star cap, verification is two equi-joins of token sets onto
+    * the pair list, and the components loop is the eager-checkpoint
+    * kernel — no all-pairs anywhere. NOTE the verify-after-star trade:
+    * the star preserves the RAW banding closure exactly, but a star edge
+    * that fails verification can split a component a full clique would
+    * have kept whole; pass `Int.MaxValue` for the lossless all-pairs
+    * verify. */
+  def verifiedComponents(d: DataFrame, minJaccardMills: Int,
+      maxBucket: Int): DataFrame =
+    connectedComponents(
+      verifiedPairs(bandPairs(d, maxBucket), d, minJaccardMills)
+        .select("id_a", "id_b"))
 
   /** Ordered containment (overlap-coefficient-toward-the-left) pairs:
     * (id_a, id_b, contain_mills) where contain_mills =
@@ -471,6 +524,26 @@ object Dedup {
     labels
   }
 
+  /** The reusable corpus-side index [[dedupAgainst]] probes: one row
+    * per corpus doc with the content key, the LSH band signatures
+    * (array, position = band number) and the sorted token set — ONE
+    * corpus scan. At steady state persist this (bucketed by
+    * `content_key` / band signature) and maintain it incrementally;
+    * every incoming batch then classifies against the stored index
+    * instead of re-deriving it from corpus text (the inline
+    * [[dedupAgainst]] overload scans the corpus once per derived
+    * frame). Feed it to [[dedupAgainstIndex]]; `bands`/`rowsPerBand`
+    * must match between build and probe. */
+  def buildDedupIndex(
+      corpus: DataFrame, textCol: String, idCol: String,
+      bands: Int = 2, rowsPerBand: Int = 4): DataFrame =
+    corpus.select(
+      col(idCol).as("corpus_id"),
+      TextFunctions.contentKey(col(textCol)).as("content_key"),
+      TextFunctions.minhashBands(col(textCol), bands, rowsPerBand)
+        .as("band_sigs"),
+      TextFunctions.tokenSetSorted(col(textCol)).as("toks"))
+
   /** Incremental cross-corpus dedup — classify each incoming batch doc
     * against an existing reference corpus (the "don't re-ingest what the
     * corpus already holds" path of a continuously-fed training-data
@@ -513,28 +586,6 @@ object Dedup {
     * `new`/`near_dup` verdict can be lossy), so a 100 TB run reports
     * how often the lossy path fired with `sum(capped)`; always false
     * on the lossless path and for exact dups. */
-  /** The reusable corpus-side index [[dedupAgainst]] probes: one row
-    * per corpus doc with the content key, the LSH band signatures
-    * (array, position = band number) and the sorted token set — ONE
-    * corpus scan. At steady state persist this (bucketed by
-    * `content_key` / band signature) and maintain it incrementally;
-    * every incoming batch then classifies against the stored index
-    * instead of re-deriving it from corpus text (the inline
-    * [[dedupAgainst]] overload scans the corpus once per derived
-    * frame). Feed it to [[dedupAgainstIndex]]; `bands`/`rowsPerBand`
-    * must match between build and probe. */
-  def buildDedupIndex(
-      corpus: DataFrame, textCol: String, idCol: String,
-      bands: Int = 2, rowsPerBand: Int = 4): DataFrame =
-    corpus.select(
-      col(idCol).as("corpus_id"),
-      TextFunctions.contentKey(col(textCol)).as("content_key"),
-      array((0 until bands).map { bn =>
-        TextFunctions.minhashBand(
-          col(textCol), (bn * rowsPerBand) until ((bn + 1) * rowsPerBand))
-      }: _*).as("band_sigs"),
-      TextFunctions.tokenSetSorted(col(textCol)).as("toks"))
-
   def dedupAgainst(
       batch: DataFrame, corpus: DataFrame, textCol: String, idCol: String,
       bands: Int = 2, rowsPerBand: Int = 4,
@@ -547,10 +598,8 @@ object Dedup {
         .groupBy("__ck").agg(min("__cid").as("__exact_id")),
       corpusBands = corpus.select(
         col(idCol).as("__c"),
-        posexplode(array((0 until bands).map { bn =>
-          TextFunctions.minhashBand(
-            col(textCol), (bn * rowsPerBand) until ((bn + 1) * rowsPerBand))
-        }: _*)).as(Seq("band_no", "band_sig"))),
+        posexplode(TextFunctions.minhashBands(col(textCol), bands, rowsPerBand))
+          .as(Seq("band_no", "band_sig"))),
       corpusToks = corpus.select(col(idCol).as("__cid"),
         TextFunctions.tokenSetSorted(col(textCol)).as("__ct")),
       bands, rowsPerBand, minJaccardMills, maxCandidates)
@@ -597,10 +646,8 @@ object Dedup {
 
     val cand = rest.select(
         col("__bid").as("__b"),
-        posexplode(array((0 until bands).map { bn =>
-          TextFunctions.minhashBand(
-            col("__btext"), (bn * rowsPerBand) until ((bn + 1) * rowsPerBand))
-        }: _*)).as(Seq("band_no", "band_sig")))
+        posexplode(TextFunctions.minhashBands(col("__btext"), bands, rowsPerBand))
+          .as(Seq("band_no", "band_sig")))
       .join(corpusBands, Seq("band_no", "band_sig"))
       .groupBy("__b", "__c").agg(count(lit(1)).as("__nb"))
     // (capped candidates, per-doc lossy-path flags): when the cap can
@@ -635,9 +682,7 @@ object Dedup {
       .withColumn("__common",
         graft.functions.ArrayOps.sortedIntersectSize(col("__bt"), col("__ct")))
       .withColumn("__jm",
-        floor(lit(1000) * col("__common")
-          / (size(col("__bt")) + size(col("__ct")) - col("__common")))
-          .cast("long"))
+        jaccardMills(col("__common"), size(col("__bt")), size(col("__ct"))))
       .where(col("__jm") >= minJaccardMills)
       .withColumn("__rn", row_number().over(
         Window.partitionBy("__bid").orderBy(col("__jm").desc, col("__cid"))))

@@ -568,46 +568,34 @@ object TextQueries {
     * the candidate graph stays linear in the corpus. The cap is part of
     * the query's contract and is encoded in the DuckDB twin. */
   private def lshPairs(s: SparkSession, dir: String): DataFrame =
-    lshPairsOf(docsSpread(s, dir).where(col("doc_id") % 5 === 0))
+    graft.operators.Dedup.minhashLshPairs(
+      docsSpread(s, dir).where(col("doc_id") % 5 === 0), "text", "doc_id",
+      bands = 2, rowsPerBand = 4, maxBucket = LshBucketCap)
 
   /** The q192/q194 S-curve audit body over an arbitrary audit
-    * universe: exact-Jaccard ground truth (the lossless PPJoin kernel
-    * at [[LshAuditMinJac]]) vs the REAL q35 banding at both semantics
-    * — direct pair recall and q53-closure recall — per similarity
-    * decile. One shared implementation so the full audit and its
+    * universe: exact-Jaccard ground truth (the direct all-pairs
+    * kernel at [[LshAuditMinJac]]) vs the REAL q35 banding at both
+    * semantics — direct pair recall and q53-closure recall — per
+    * similarity decile. One shared implementation so the full audit and its
     * at-scale sampled variant can never drift. Unordered output; the
     * caller sorts. */
   private def scurveAudit(universe: DataFrame): DataFrame = {
-    // round-13 OPT: ONE scan of the audit universe computes the sorted
-    // token sets AND both band signatures, materialized once — the
-    // ground-truth kernel reads the doc frame three times (shingle
-    // explode + the two verify joins) and the banding a fourth; each
-    // read used to be a separate parquet scan + repartition +
-    // re-tokenization. Values are identical (same kernels, same
-    // universe); only the number of storage passes changes (4+ → 1).
-    val d = universe.select(
-      col("doc_id"),
-      TextFunctions.tokenSetSorted(col("text")).as("toks"),
-      array(
-        TextFunctions.minhashBand(col("text"), 0 until 4),
-        TextFunctions.minhashBand(col("text"), 4 until 8)).as("__bands"))
+    // ONE scan of the audit universe computes the sorted token sets AND
+    // the q35 bands, materialized once: the ground truth and the banding
+    // both read it
+    val d = graft.operators.Dedup.nearDupFrame(universe, "text", "doc_id")
       .localCheckpoint(true)
-    // round-14 OPT: the ground truth rides the direct all-pairs kernel
-    // — at LshAuditMinJac the prefix filter kept >99.9% of pairs as
-    // candidates, so the PPJoin shingle join + pair distinct were
-    // overhead on an all-pairs verify; the pair set (and therefore
-    // every audit number) is identical (lossless blocking). The
-    // broadcast is bounded by the audit universe, which must be
-    // protocol-bounded for an exact O(N²) audit to be computable.
-    val truth = graft.operators.Dedup.jaccardPairsAllPairs(
-      d.select(col("doc_id").as("__id"), col("toks")),
+    // the ground truth rides the direct all-pairs kernel — at
+    // LshAuditMinJac the prefix filter keeps >99.9% of pairs as
+    // candidates, and the pair set (so every audit number) is identical
+    // (lossless blocking). The broadcast is bounded by the audit
+    // universe, which must be protocol-bounded for an exact O(N²) audit
+    // to be computable.
+    val truth = graft.operators.Dedup.jaccardPairsAllPairs(d,
       minJaccardMills = LshAuditMinJac)
     // the LSH pair graph feeds BOTH the direct-hit join and the
     // closure computation — checkpoint it once (the q153 rule)
-    val byBand = d.select(col("doc_id"),
-      posexplode(col("__bands")).as(Seq("band_no", "sig")))
-    val lp = graft.operators.Dedup.cappedBucketPairs(
-      byBand, Seq("band_no", "sig"), "doc_id", LshBucketCap)
+    val lp = graft.operators.Dedup.bandPairs(d, LshBucketCap)
       .localCheckpoint(true)
     val lsh = lp.select(col("id_a"), col("id_b"), lit(1L).as("hit"))
     val comp = graft.operators.Dedup.connectedComponents(lp)
@@ -626,19 +614,6 @@ object TextQueries {
       .withColumn("recall_pair_mills", expr("(1000 * n_pair) div n_true"))
       .withColumn("recall_closure_mills",
         expr("(1000 * n_closure) div n_true"))
-  }
-
-  /** The q35 banding over an arbitrary document frame — factored so
-    * q194's sampled audit runs the IDENTICAL kernel on its sample. */
-  private def lshPairsOf(d: DataFrame): DataFrame = {
-    val byBand = d.select(
-      col("doc_id"),
-      posexplode(array(
-        TextFunctions.minhashBand(col("text"), 0 until 4),
-        TextFunctions.minhashBand(col("text"), 4 until 8)))
-        .as(Seq("band_no", "sig")))
-    graft.operators.Dedup.cappedBucketPairs(
-      byBand, Seq("band_no", "sig"), "doc_id", LshBucketCap)
   }
 
   val queries: Seq[Query] = Seq(
@@ -964,10 +939,11 @@ object TextQueries {
     // semantics the pipeline offers: direct pair recall (was the pair
     // itself emitted) and CLOSURE recall (did the two docs land in the
     // same q53 component — the dedup contract the star-cap actually
-    // preserves). Ground truth is the lossless PPJoin kernel (q36's)
-    // at the LOW [[LshAuditMinJac]] floor so the curve spans the
-    // S-curve's knee (pairwise theory p(J) = 1−(1−J⁴)²; closure
-    // recall dominates it, and the GAP between the two columns is the
+    // preserves). Ground truth is exact all-pairs Jaccard (the same
+    // pair set as q36's PPJoin kernel) at the LOW [[LshAuditMinJac]]
+    // floor so the curve spans the S-curve's knee (pairwise theory
+    // p(J) = 1−(1−J⁴)²; closure recall dominates it, and the GAP
+    // between the two columns is the
     // measured price of star-capping — pair-completeness traded for
     // closure, visible per bucket). The LSH side is the IDENTICAL q35
     // helper and the q53 components kernel — caps, salts and label
@@ -1141,42 +1117,20 @@ object TextQueries {
     // edges only), the q53 min-label closure, then the q106-style
     // min-id keeper. One row per universe doc: its verified-closure
     // component (own id for singletons) and whether the cut keeps it.
-    // EngineSpec's parity test pins the facade stage to this exact
-    // composition, so processCorpus's near-dedup is transitively
-    // oracle-gated through this entry.
+    // The composition is `Dedup.verifiedComponents`, which the facade
+    // stage calls too, so processCorpus's near-dedup is oracle-gated
+    // through this entry (EngineSpec pins the facade's survivor set).
     Query("q196_near_dedup", (s, dir) => {
-      // round-13 OPT: one scan of the universe computes the token sets
-      // AND the two q35 band signatures, materialized once — the
-      // banding, both verify joins and the final universe projection
-      // each used to re-scan parquet + re-tokenize (5 passes → 1).
-      // Identical kernels and geometry (the banding below IS
-      // minhashLshPairs' body at bands = 2 × rowsPerBand = 4, riding
-      // the same cappedBucketPairs); output unchanged.
-      val d = docsSpread(s, dir).where(col("doc_id") % 5 === 0)
-        .select(col("doc_id"),
-          TextFunctions.tokenSetSorted(col("text")).as("__tok"),
-          array(
-            TextFunctions.minhashBand(col("text"), 0 until 4),
-            TextFunctions.minhashBand(col("text"), 4 until 8)).as("__bands"))
+      // one scan of the universe computes the token sets and bands,
+      // materialized once: the banding, both verify joins and the final
+      // universe projection all read it
+      val d = graft.operators.Dedup.nearDupFrame(
+          docsSpread(s, dir).where(col("doc_id") % 5 === 0), "text", "doc_id")
         .localCheckpoint(true)
-      val byBand = d.select(col("doc_id"),
-        posexplode(col("__bands")).as(Seq("band_no", "band_sig")))
-      val cand = graft.operators.Dedup.cappedBucketPairs(
-        byBand, Seq("band_no", "band_sig"), "doc_id", LshBucketCap)
-      val verified = cand
-        .join(d.select(col("doc_id").as("id_a"), col("__tok").as("__ta")),
-          Seq("id_a"))
-        .join(d.select(col("doc_id").as("id_b"), col("__tok").as("__tb")),
-          Seq("id_b"))
-        .withColumn("__common", graft.functions.ArrayOps
-          .sortedIntersectSize(col("__ta"), col("__tb")))
-        .where(floor(lit(1000) * col("__common") /
-          (size(col("__ta")) + size(col("__tb")) - col("__common")))
-          >= NearDedupMinJac)
-        .select("id_a", "id_b")
-      val comps = graft.operators.Dedup.connectedComponents(verified)
+      val comps = graft.operators.Dedup.verifiedComponents(
+          d, NearDedupMinJac, LshBucketCap)
         .withColumnRenamed("id", "doc_id")
-      d.select("doc_id").join(comps, Seq("doc_id"), "left")
+      d.select(col("__id").as("doc_id")).join(comps, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("comp"), col("doc_id")).as("component"))
         .withColumn("kept", col("component") === col("doc_id"))
@@ -1776,9 +1730,8 @@ object TextQueries {
       common
         .join(sizes.select(col("doc_id").as("id_a"), col("ns").as("na")), "id_a")
         .join(sizes.select(col("doc_id").as("id_b"), col("ns").as("nb")), "id_b")
-        .withColumn("jac_mills",
-          floor(lit(1000) * col("common")
-            / (col("na") + col("nb") - col("common"))).cast("long"))
+        .withColumn("jac_mills", graft.operators.Dedup.jaccardMills(
+          col("common"), col("na"), col("nb")))
         .where(col("jac_mills") >= 60)
         .select("id_a", "id_b", "jac_mills")
         .orderBy("id_a", "id_b")
@@ -3265,9 +3218,8 @@ object TextQueries {
             zip_with(col("sa"), col("sb"), (a, b) => a === b),
             x => x))).cast("long"))
         .withColumn("__i", size(array_intersect(col("ta"), col("tb"))))
-        .withColumn("jac_mills",
-          floor(lit(1000) * col("__i") /
-            (size(col("ta")) + size(col("tb")) - col("__i"))).cast("long"))
+        .withColumn("jac_mills", graft.operators.Dedup.jaccardMills(
+          col("__i"), size(col("ta")), size(col("tb"))))
         .select(col("id_a"), col("id_b"), col("est_mills"), col("jac_mills"),
           abs(col("est_mills") - col("jac_mills")).as("abs_err"))
         .orderBy("id_a", "id_b")

@@ -511,10 +511,8 @@ object Incremental {
         // stream-static joins; the price is ONE extra banding pass
         // over the corpus when the observability aggregate below runs
         val cBandsAll = corpus.select(col("doc_id").as("__cid"),
-          posexplode(array((0 until bands).map { b =>
-            TextFunctions.minhashBand(
-              col("text"), (b * rowsPerBand) until ((b + 1) * rowsPerBand))
-          }: _*)).as(Seq("__bno", "__bsig")))
+          posexplode(TextFunctions.minhashBands(col("text"), bands, rowsPerBand))
+            .as(Seq("__bno", "__bsig")))
           .withColumn("__rn", row_number().over(wBucket))
         // verdict r11: the cap's recall trade must be observable — a
         // drain reports how many degenerate buckets were truncated
@@ -537,19 +535,16 @@ object Incremental {
           .withColumn("__bt", TextFunctions.tokenSetSorted(col("text")))
           .select(col("doc_id"), col("lang"), col("text"),
             col("content_key"), col("__bt"),
-            posexplode(array((0 until bands).map { b =>
-              TextFunctions.minhashBand(
-                col("text"), (b * rowsPerBand) until ((b + 1) * rowsPerBand))
-            }: _*)).as(Seq("__bno", "__bsig")))
+            posexplode(TextFunctions.minhashBands(col("text"), bands, rowsPerBand))
+              .as(Seq("__bno", "__bsig")))
           .join(cBands, Seq("__bno", "__bsig"), "left")
           .join(cToks, Seq("__cid"), "left")
           .withColumn("__common", when(col("__ct").isNull, lit(null))
             .otherwise(graft.functions.ArrayOps
               .sortedIntersectSize(col("__bt"), col("__ct"))))
           .withColumn("__jm", when(col("__common").isNull, lit(null))
-            .otherwise(floor(lit(1000) * col("__common")
-              / (size(col("__bt")) + size(col("__ct")) - col("__common")))
-              .cast("long")))
+            .otherwise(graft.operators.Dedup.jaccardMills(col("__common"),
+              size(col("__bt")), size(col("__ct")))))
           .join(cKeys, Seq("content_key"), "left")
           .select(col("doc_id"), col("lang"), col("text"),
             col("content_key"), col("__exact_id").as("exact_id"),

@@ -548,15 +548,16 @@ class EngineSpec extends AnyFunSuite {
       .contains("c4_cleaned"))
   }
 
-  test("processCorpus near-dedup stage collapses verified LSH components " +
-    "to their min-id canonical") {
+  /** The fixture corpus plus four planted near-duplicates that exact
+    * dedup CANNOT collapse: each appends a token its source already
+    * contains — the text (and so the content key) changes, the token SET
+    * does not, so the MinHash bands match verbatim and the verified
+    * Jaccard is exactly 1000. Returns (corpus, the four sources). */
+  private def plantedNearDups()
+      : (org.apache.spark.sql.DataFrame, Array[org.apache.spark.sql.Row]) = {
     val baseDocs = spark.read.parquet(
         s"${SparkTestSession.sfDir}/documents.parquet")
       .select("doc_id", "lang", "text")
-    // plant near-duplicates that exact dedup CANNOT collapse: append a
-    // token the doc already contains — the text (and so the content
-    // key) changes, the token SET does not, so the MinHash bands match
-    // verbatim and the verified Jaccard is exactly 1000
     val sources = baseDocs.where(col("doc_id") % 100 === 7).limit(4)
       .select("doc_id", "lang", "text").collect()
     assert(sources.length == 4, "fixture too small")
@@ -565,7 +566,12 @@ class EngineSpec extends AnyFunSuite {
       (r.getLong(0) + 3000000L, r.getString(1),
         t + " " + t.trim.split("\\s+").head)
     }.toSeq.toDF("doc_id", "lang", "text")
-    val docs = baseDocs.unionByName(planted)
+    (baseDocs.unionByName(planted), sources)
+  }
+
+  test("processCorpus near-dedup stage collapses verified LSH components " +
+    "to their min-id canonical") {
+    val (docs, sources) = plantedNearDups()
     val r = Engine.processCorpus(docs, nearDedup = Some(800),
       materializeBoundaries = true)
     val ledger = r.accounting.collect()
@@ -617,5 +623,25 @@ class EngineSpec extends AnyFunSuite {
       .map(_.getLong(0)).toSet -- losers
     assert(kept == expected,
       s"missing=${expected -- kept}, extra=${kept -- expected}")
+  }
+
+  test("processCorpus near-dedup gives the same survivors and ledger " +
+    "with lazy and materialized stage boundaries") {
+    val (docs, _) = plantedNearDups()
+    def run(materialize: Boolean) = {
+      val r = Engine.processCorpus(docs, nearDedup = Some(800),
+        materializeBoundaries = materialize)
+      (r.deduped.select("doc_id").collect().map(_.getLong(0)).toSet,
+        r.accounting.collect()
+          .map(row => (row.getInt(0), row.getString(1), row.getLong(2)))
+          .sortBy(_._1).toSeq)
+    }
+    val (lazyKept, lazyLedger) = run(materialize = false)
+    val (eagerKept, eagerLedger) = run(materialize = true)
+    assert(lazyLedger.map(_._2).contains("near_deduped"),
+      s"stages: $lazyLedger")
+    assert(lazyKept == eagerKept,
+      s"lazy-only=${lazyKept -- eagerKept}, eager-only=${eagerKept -- lazyKept}")
+    assert(lazyLedger == eagerLedger)
   }
 }

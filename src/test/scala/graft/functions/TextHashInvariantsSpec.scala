@@ -44,7 +44,7 @@ class TextHashInvariantsSpec extends AnyFunSuite {
     val df = Seq("green tea extract", "extract tea green", "black tea")
       .toDF("text").select(
         col("text"),
-        TextFunctions.minhashBand(col("text"), 0 until 4).as("band"),
+        TextHash.minhashBand(col("text"), 0 until 4).as("band"),
         TextHash.minhashSignature(col("text"), 0 until 4).as("sig"))
     val rows = df.collect().map(r =>
       (r.getString(0), r.getString(1), r.getSeq[String](2)))

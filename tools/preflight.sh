@@ -20,7 +20,7 @@ shift || true
 SF_DIR="/root/testdata/$SF"
 OUT_DIR="/tmp/preflight_verify_$SF"
 
-echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern)"
+echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern, one near-dup pipeline)"
 # every testdata read goes through graft.Tables: a read(Stream) whose
 # path literal names a .parquet file anywhere else in src/main is a
 # second table-access path
@@ -45,6 +45,25 @@ GENCODE=$(find src/main -name '*.scala' -print0 \
         unless ($cls // "") eq "QuantizeQ" }')
 [ -z "$GENCODE" ] \
   || { echo "$GENCODE"; echo "PREFLIGHT FAIL: hand-written doGenCode (call the static kernel through StaticInvoke instead)"; exit 1; }
+# the near-dup building blocks each have one home: LSH band arrays are
+# built only by TextFunctions.minhashBands (a minhashBand( call anywhere
+# else is a hand-built band array that can drift from the probe side),
+# and the token-set Jaccard in mills, floor(1000*c / (a + b - c)), is
+# written only in Dedup.jaccardMills
+BANDS=$(find src/main -name '*.scala' -print0 \
+  | xargs -0 perl -0777 -ne 'while (/(?<!def )\bminhashBand\(/g) {
+      my $pre = substr($_, 0, $-[0]); my ($def) = $pre =~ /.*\bdef\s+(\w+)/s;
+      printf "%s:%d (def %s)\n", $ARGV, 1 + ($pre =~ tr/\n//), $def // "?"
+        unless ($def // "") eq "minhashBands" }')
+[ -z "$BANDS" ] \
+  || { echo "$BANDS"; echo "PREFLIGHT FAIL: hand-built LSH band array (call TextFunctions.minhashBands instead)"; exit 1; }
+JACCARD=$(find src/main -name '*.scala' -print0 \
+  | xargs -0 perl -0777 -ne 'while (/floor\(\s*lit\(1000\)\s*\*\s*(\S[^\/]{0,60}?)\s*\/\s*\((?:(?!floor\()[^;]){0,200}?-\s*\1\s*\)/gs) {
+      my $pre = substr($_, 0, $-[0]); my ($def) = $pre =~ /.*\bdef\s+(\w+)/s;
+      printf "%s:%d (def %s)\n", $ARGV, 1 + ($pre =~ tr/\n//), $def // "?"
+        unless ($def // "") eq "jaccardMills" }')
+[ -z "$JACCARD" ] \
+  || { echo "$JACCARD"; echo "PREFLIGHT FAIL: Jaccard-mills arithmetic outside Dedup.jaccardMills (call it instead)"; exit 1; }
 
 echo "== preflight 2/5: sbt Test/compile (main + test must compile at HEAD+worktree)"
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 \
