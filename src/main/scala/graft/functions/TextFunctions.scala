@@ -148,14 +148,22 @@ object TextFunctions {
   /** Exact-content key for hash dedup: md5 of lowercased trimmed text. */
   def contentKey(c: Column): Column = md5(lower(trim(c)))
 
+  /** The one LSH geometry: [[LshBands]] bands of [[LshRowsPerBand]]
+    * MinHash rows each (8 seeds). Every banding consumer (the q35
+    * family, the near-dup pipeline, q109's against-corpus dedup and
+    * `Incremental.corpusGate`) and every DuckDB band twin uses it. */
+  val LshBands = 2
+  val LshRowsPerBand = 4
+
   /** The LSH band signatures of `c` as one array column, position = band
     * number: band b is the `TextHash.minhashBand` string over seeds
-    * [b·rowsPerBand, (b+1)·rowsPerBand). Equal band string at the same
-    * position => candidate duplicate pair. Every banding consumer builds
-    * its bands here, so build and probe sides agree by construction. */
-  def minhashBands(c: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      TextHash.minhashBand(c, (b * rowsPerBand) until ((b + 1) * rowsPerBand))
+    * [b·[[LshRowsPerBand]], (b+1)·[[LshRowsPerBand]]). Equal band string
+    * at the same position => candidate duplicate pair. Every banding
+    * consumer builds its bands here, so build and probe sides agree by
+    * construction. */
+  def minhashBands(c: Column): Column =
+    array((0 until LshBands).map { b =>
+      TextHash.minhashBand(c, (b * LshRowsPerBand) until ((b + 1) * LshRowsPerBand))
     }: _*)
 
   /** SimHash of `bits` bits as a bigint (bit i set iff weight_i > 0).

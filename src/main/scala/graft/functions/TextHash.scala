@@ -262,7 +262,7 @@ object TextHash {
     // empty seeds would make every band the identical "" (the
     // element_at(sig, 1) null-band guard falls through on an empty
     // array) and bucket the ENTIRE corpus into one LSH band — the
-    // classic rowsPerBand = 0 integer-division mistake; fail at PLAN
+    // classic zero-rows-per-band integer-division mistake; fail at PLAN
     // time like simhash's bits check
     require(seeds.nonEmpty, "minhash signature needs at least one seed")
     StaticInvoke(TextHash.getClass, ArrayType(StringType, containsNull = false),

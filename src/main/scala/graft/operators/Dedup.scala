@@ -37,7 +37,7 @@ object Dedup {
     val keyed = df.withColumn("content_key", TextFunctions.contentKey(col(textCol)))
     // NULL text is NOT an equivalence class: contentKey(NULL) is NULL,
     // and a NULL-partitioned window would silently drop all but one
-    // unrelated null-text doc — classifyAgainst (same file) already
+    // unrelated null-text doc — dedupAgainstIndex (same file) already
     // treats a NULL key as never-matching, so exact() must agree
     val nn = keyed.where(col("content_key").isNotNull)
     val w = Window.partitionBy(col("content_key")).orderBy(col(idCol))
@@ -51,9 +51,10 @@ object Dedup {
         .withColumn("dup_count", lit(1L)))
   }
 
-  /** MinHash-LSH candidate pairs: band the signature into `bands` groups
-    * of `rowsPerBand` hashes; docs sharing any band string are
-    * candidates. Output: (id_a, id_b) with id_a < id_b, distinct.
+  /** MinHash-LSH candidate pairs: band the signature in the one
+    * `TextFunctions.minhashBands` geometry (2 bands × 4 rows); docs
+    * sharing any band string are candidates. Output: (id_a, id_b) with
+    * id_a < id_b, distinct.
     *
     * Hot-bucket guard (MMDS ch.3), OPT-IN via `maxBucket`: a degenerate
     * band bucket (boilerplate or mass-duplicated docs collapsing onto
@@ -74,13 +75,10 @@ object Dedup {
     * (closure-equivalent, linear on degenerate corpora — the 100 TB
     * dedup path) vs uncapped (pair-complete, O(|bucket|²) on degenerate
     * corpora) is a semantic choice the call site must make visibly. */
-  def minhashLshPairs(
-      df: DataFrame, textCol: String, idCol: String,
-      bands: Int = 4, rowsPerBand: Int = 2,
+  def minhashLshPairs(df: DataFrame, textCol: String, idCol: String,
       maxBucket: Int): DataFrame =
     bandPairs(df.select(col(idCol).as("__id"),
-      TextFunctions.minhashBands(col(textCol), bands, rowsPerBand).as("bands")),
-      maxBucket)
+      TextFunctions.minhashBands(col(textCol)).as("bands")), maxBucket)
 
   /** [[minhashLshPairs]] over precomputed band arrays — (__id, bands),
     * bands = `TextFunctions.minhashBands` — for a caller that already
@@ -133,10 +131,8 @@ object Dedup {
 
   /** Appends the `bits`-bit SimHash bucket column (`simhash`). This is
     * the BUCKETING step only — survivor selection (e.g. min id per
-    * bucket) is the caller's window over the result; `idCol` is kept
-    * in the signature for call-site symmetry with the other dedup
-    * entry points but plays no role here. */
-  def simhashBuckets(df: DataFrame, textCol: String, idCol: String,
+    * bucket) is the caller's window over the result. */
+  def simhashBuckets(df: DataFrame, textCol: String,
       bits: Int = 16): DataFrame =
     df.withColumn("simhash", TextFunctions.simhash(col(textCol), bits))
 
@@ -204,8 +200,7 @@ object Dedup {
     // the band key) and exact-dup detection of empty docs rides the
     // content-key path.
     val sig = simhashBuckets(
-        df.where(size(TextFunctions.tokens(col(textCol))) > 0),
-        textCol, idCol, bits)
+        df.where(size(TextFunctions.tokens(col(textCol))) > 0), textCol, bits)
       .select(col(idCol).as("__id"), col("simhash"))
     // probe keys: the signature itself + each single-bit flip
     val probes = sig.select(
@@ -278,6 +273,23 @@ object Dedup {
       d: DataFrame,
       minJaccardMills: Int = 500, blockCols: Seq[String] = Nil,
       maxCandBucket: Int = Int.MaxValue): DataFrame = {
+    val (_, prefix) = prefixShingles(d, minJaccardMills, blockCols)
+    // candidate pairs ride the shared star-cap kernel (uncapped by
+    // default, in which case it reduces to the plain within-bucket join)
+    verifiedPairs(
+      cappedBucketPairs(prefix, "shingle" +: blockCols, "__id", maxCandBucket),
+      d, minJaccardMills)
+  }
+
+  /** THE PPJoin prefix filter of [[jaccardPairsFromTokens]] and
+    * [[containmentPairs]] over a token-set frame `d` (__id, blockCols…,
+    * toks): a pair at similarity ≥ t (Jaccard or containment, in mills)
+    * shares one of each probe doc's (|x| − ⌈t·|x|⌉ + 1) globally-rarest
+    * tokens (ordered by corpus document frequency, ties by token).
+    * Returns (all token rows (__id, blockCols…, shingle), prefix rows
+    * (shingle, blockCols…, __id)). */
+  private def prefixShingles(d: DataFrame, minMills: Int,
+      blockCols: Seq[String]): (DataFrame, DataFrame) = {
     val toks = d.select(col("__id") +: blockCols.map(col) :+
       explode(col("toks")).as("shingle"): _*)
     val dfreq = toks.groupBy("shingle").agg(count(lit(1)).as("gdf"))
@@ -286,13 +298,9 @@ object Dedup {
       .withColumn("rnk", row_number().over(byDoc))
       .withColumn("sz", count(lit(1)).over(Window.partitionBy("__id")))
       .where(col("rnk") <=
-        col("sz") - ceil(col("sz") * minJaccardMills / lit(1000.0)) + 1)
+        col("sz") - ceil(col("sz") * minMills / lit(1000.0)) + 1)
       .select(("shingle" +: blockCols :+ "__id").map(col): _*)
-    // candidate pairs ride the shared star-cap kernel (uncapped by
-    // default, in which case it reduces to the plain within-bucket join)
-    verifiedPairs(
-      cappedBucketPairs(prefix, "shingle" +: blockCols, "__id", maxCandBucket),
-      d, minJaccardMills)
+    (toks, prefix)
   }
 
   /** THE token-set Jaccard in integer mills, ⌊1000·|A∩B| / |A∪B|⌋ with
@@ -309,10 +317,14 @@ object Dedup {
     * of `d` (__id, toks): (id_a, id_b, jac_mills ≥ `minJaccardMills`). */
   private def verifiedPairs(cand: DataFrame, d: DataFrame,
       minJaccardMills: Int): DataFrame =
-    keepJaccard(cand
+    keepJaccard(withTokenSets(cand, d), minJaccardMills)
+
+  /** Candidate pairs (id_a, id_b) with both token sets of `d`
+    * (__id, toks) joined on as (ta, tb). */
+  private def withTokenSets(cand: DataFrame, d: DataFrame): DataFrame =
+    cand
       .join(d.select(col("__id").as("id_a"), col("toks").as("ta")), "id_a")
-      .join(d.select(col("__id").as("id_b"), col("toks").as("tb")), "id_b"),
-      minJaccardMills)
+      .join(d.select(col("__id").as("id_b"), col("toks").as("tb")), "id_b")
 
   /** Pairs carrying both token sets (ta, tb) → (id_a, id_b, jac_mills),
     * cut at `minJaccardMills`. */
@@ -348,14 +360,14 @@ object Dedup {
 
   /** The frame the within-corpus near-dup pipeline reads: one row per
     * doc of `df` with its sorted token set and its LSH bands —
-    * (__id, toks, bands), one scan, in the q35 geometry (2 bands × 4
-    * rows). [[verifiedComponents]] reads it three times (banding and
-    * both verify joins), so callers materialize it first. */
+    * (__id, toks, bands), one scan, in the one LSH geometry
+    * (`TextFunctions.minhashBands`). [[verifiedComponents]] reads it
+    * three times (banding and both verify joins), so callers
+    * materialize it first. */
   def nearDupFrame(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.select(col(idCol).as("__id"),
       TextFunctions.tokenSetSorted(col(textCol)).as("toks"),
-      TextFunctions.minhashBands(col(textCol), bands = 2, rowsPerBand = 4)
-        .as("bands"))
+      TextFunctions.minhashBands(col(textCol)).as("bands"))
 
   /** Within-corpus near-dup groups (Lee et al. 2022 NearDup semantics)
     * over a [[nearDupFrame]]: star-capped LSH candidate pairs
@@ -405,23 +417,12 @@ object Dedup {
       minContainMills: Int = 700, blockCols: Seq[String] = Nil): DataFrame = {
     val d = df.select(col(idCol).as("__id") +: blockCols.map(col) :+
       TextFunctions.tokenSetSorted(col(textCol)).as("toks"): _*)
-    val toks = d.select(col("__id") +: blockCols.map(col) :+
-      explode(col("toks")).as("shingle"): _*)
-    val dfreq = toks.groupBy("shingle").agg(count(lit(1)).as("gdf"))
-    val byDoc = Window.partitionBy("__id").orderBy("gdf", "shingle")
-    val prefix = toks.join(dfreq, "shingle")
-      .withColumn("rnk", row_number().over(byDoc))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("__id")))
-      .where(col("rnk") <=
-        col("sz") - ceil(col("sz") * minContainMills / lit(1000.0)) + 1)
-      .select(("shingle" +: blockCols :+ "__id").map(col): _*)
+    val (toks, prefix) = prefixShingles(d, minContainMills, blockCols)
     val cand = prefix.withColumnRenamed("__id", "id_a")
       .join(toks.withColumnRenamed("__id", "id_b"), "shingle" +: blockCols)
       .where(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b").distinct()
-    cand
-      .join(d.select(col("__id").as("id_a"), col("toks").as("ta")), "id_a")
-      .join(d.select(col("__id").as("id_b"), col("toks").as("tb")), "id_b")
+    withTokenSets(cand, d)
       .withColumn("common",
         graft.functions.ArrayOps.sortedIntersectSize(col("ta"), col("tb")))
       .withColumn("contain_mills",
@@ -429,6 +430,10 @@ object Dedup {
       .where(col("contain_mills") >= minContainMills)
       .select("id_a", "id_b", "contain_mills")
   }
+
+  /** Round cap of [[connectedComponents]]: near-dup graphs converge in
+    * graph-diameter rounds (2-3 on clique-ish graphs). */
+  private val ComponentRounds = 20
 
   /** Connected components over a near-dup pair graph — the "dedup
     * groups" step that turns candidate pairs into keep/drop decisions
@@ -439,11 +444,10 @@ object Dedup {
     * converges in graph-diameter rounds (near-dup graphs are clique-ish,
     * so 2-3). Each round is one equi-shuffle on the edge list — no
     * driver-side graph, no O(V²) anything; `persist` caps lineage
-    * growth across rounds. Returns (id, component = min reachable id)
-    * for every node that appears in a pair. */
-  def connectedComponents(pairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b",
-      maxIter: Int = 20): DataFrame = {
+    * growth across rounds. Reads `pairs` (id_a, id_b); returns
+    * (id, component = min reachable id) for every node that appears in
+    * a pair, after at most [[ComponentRounds]] rounds. */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     // iterative plans MUST cut lineage every round with an EAGER local
     // checkpoint: plain persist/unpersist chains proved unreliable here
     // (dependent-cache eviction re-exposed the full lineage, making each
@@ -486,10 +490,10 @@ object Dedup {
     //    label column through the round.
     val edges = pairs
       .select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")),
-        struct(col(aCol).as("src"), col(aCol).as("dst")),
-        struct(col(bCol).as("src"), col(bCol).as("dst")))).as("e"))
+        struct(col("id_a").as("src"), col("id_b").as("dst")),
+        struct(col("id_b").as("src"), col("id_a").as("dst")),
+        struct(col("id_a").as("src"), col("id_a").as("dst")),
+        struct(col("id_b").as("src"), col("id_b").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("src")).sortWithinPartitions("src")
       .localCheckpoint(true)
@@ -504,7 +508,7 @@ object Dedup {
     var prevCkpt = labels // blocks the CURRENT labels projection reads
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && i < ComponentRounds) {
       val updated = edges.join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(min("comp").as("comp"))
         .localCheckpoint(true) // eager: materialized HERE, off the old blocks
@@ -518,8 +522,8 @@ object Dedup {
     }
     if (!converged)
       System.err.println(s"[dedup] connectedComponents: NOT converged after " +
-        s"$maxIter rounds (label sum still decreasing) — component ids " +
-        "beyond that radius are intermediate; raise maxIter")
+        s"$ComponentRounds rounds (label sum still decreasing) — component " +
+        "ids beyond that radius are intermediate")
     edges.unpersist() // the result projection reads only the last checkpoint
     labels
   }
@@ -532,17 +536,31 @@ object Dedup {
     * every incoming batch then classifies against the stored index
     * instead of re-deriving it from corpus text (the inline
     * [[dedupAgainst]] overload scans the corpus once per derived
-    * frame). Feed it to [[dedupAgainstIndex]]; `bands`/`rowsPerBand`
-    * must match between build and probe. */
-  def buildDedupIndex(
-      corpus: DataFrame, textCol: String, idCol: String,
-      bands: Int = 2, rowsPerBand: Int = 4): DataFrame =
+    * frame). Feed it to [[dedupAgainstIndex]]. */
+  def buildDedupIndex(corpus: DataFrame, textCol: String,
+      idCol: String): DataFrame =
     corpus.select(
       col(idCol).as("corpus_id"),
       TextFunctions.contentKey(col(textCol)).as("content_key"),
-      TextFunctions.minhashBands(col(textCol), bands, rowsPerBand)
-        .as("band_sigs"),
+      TextFunctions.minhashBands(col(textCol)).as("band_sigs"),
       TextFunctions.tokenSetSorted(col(textCol)).as("toks"))
+
+  /** The three corpus-side frames an against-corpus classification
+    * probes, read off a [[buildDedupIndex]] frame: the content-key set
+    * (__ck, __exact_id = min corpus id per key), the band rows
+    * (__c, band_no, band_sig) and the token sets (__cid, __ct). Each
+    * frame selects only the index columns it needs, so over an
+    * unmaterialized index column pruning leaves each one its own
+    * derivation and nothing more. [[dedupAgainstIndex]] (so
+    * [[dedupAgainst]]) and `Incremental.corpusGate` build their corpus
+    * side here. */
+  private[graft] def corpusFrames(
+      index: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    (index.select(col("content_key").as("__ck"), col("corpus_id").as("__cid"))
+       .groupBy("__ck").agg(min("__cid").as("__exact_id")),
+     index.select(col("corpus_id").as("__c"),
+       posexplode(col("band_sigs")).as(Seq("band_no", "band_sig"))),
+     index.select(col("corpus_id").as("__cid"), col("toks").as("__ct")))
 
   /** Incremental cross-corpus dedup — classify each incoming batch doc
     * against an existing reference corpus (the "don't re-ingest what the
@@ -564,11 +582,11 @@ object Dedup {
     * Scale contract: the corpus side is the 100 TB side. Its content-key
     * set is one hash aggregate (min id per key) and its band index one
     * scan — at steady state both would be maintained incrementally as
-    * bucketed tables; here they are derived inline from `corpus`. The
-    * batch joins the key set by content_key and the band index by
-    * (band_no, band_sig) — both plain equi-shuffles; full text is never
-    * compared across the corpus, and exact Jaccard runs only on distinct
-    * LSH candidates.
+    * bucketed tables; here they are derived from `corpus` through an
+    * unmaterialized [[buildDedupIndex]]. The batch joins the key set by
+    * content_key and the band index by (band_no, band_sig) — both plain
+    * equi-shuffles; full text is never compared across the corpus, and
+    * exact Jaccard runs only on distinct LSH candidates.
     *
     * Hot-band guard, OPT-IN via `maxCandidates` (same no-default
     * convention as `minhashLshPairs.maxBucket`): a degenerate band
@@ -588,55 +606,25 @@ object Dedup {
     * on the lossless path and for exact dups. */
   def dedupAgainst(
       batch: DataFrame, corpus: DataFrame, textCol: String, idCol: String,
-      bands: Int = 2, rowsPerBand: Int = 4,
       minJaccardMills: Int = 500,
       maxCandidates: Int): DataFrame =
-    classifyAgainst(batch, textCol, idCol,
-      corpusKeys = corpus
-        .select(TextFunctions.contentKey(col(textCol)).as("__ck"),
-          col(idCol).as("__cid"))
-        .groupBy("__ck").agg(min("__cid").as("__exact_id")),
-      corpusBands = corpus.select(
-        col(idCol).as("__c"),
-        posexplode(TextFunctions.minhashBands(col(textCol), bands, rowsPerBand))
-          .as(Seq("band_no", "band_sig"))),
-      corpusToks = corpus.select(col(idCol).as("__cid"),
-        TextFunctions.tokenSetSorted(col(textCol)).as("__ct")),
-      bands, rowsPerBand, minJaccardMills, maxCandidates)
+    dedupAgainstIndex(batch, buildDedupIndex(corpus, textCol, idCol),
+      textCol, idCol, minJaccardMills, maxCandidates)
 
   /** As [[dedupAgainst]], but against a PREBUILT (usually persisted)
     * [[buildDedupIndex]] frame — the steady-state shape where the
     * corpus index is maintained incrementally and only the batch is
-    * derived per run. */
+    * derived per run. The classification kernel both share: exact key
+    * probe, band-collision candidates, exhaustive-or-capped Jaccard
+    * verify, verdict assembly, over the three [[corpusFrames]] of the
+    * index (an index frame the caller materialized is scanned per
+    * consumer). */
   def dedupAgainstIndex(
       batch: DataFrame, corpusIndex: DataFrame,
       textCol: String, idCol: String,
-      bands: Int = 2, rowsPerBand: Int = 4,
       minJaccardMills: Int = 500,
-      maxCandidates: Int): DataFrame =
-    classifyAgainst(batch, textCol, idCol,
-      corpusKeys = corpusIndex
-        .select(col("content_key").as("__ck"), col("corpus_id").as("__cid"))
-        .groupBy("__ck").agg(min("__cid").as("__exact_id")),
-      corpusBands = corpusIndex.select(col("corpus_id").as("__c"),
-        posexplode(col("band_sigs")).as(Seq("band_no", "band_sig"))),
-      corpusToks = corpusIndex.select(col("corpus_id").as("__cid"),
-        col("toks").as("__ct")),
-      bands, rowsPerBand, minJaccardMills, maxCandidates)
-
-  /** The shared classification kernel behind [[dedupAgainst]] (inline
-    * corpus frames) and [[dedupAgainstIndex]] (prebuilt index frames):
-    * exact key probe, band-collision candidates, exhaustive-or-capped
-    * Jaccard verify, verdict assembly. Takes the three corpus-side
-    * frames pre-shaped — (__ck, __exact_id), (__c, band_no, band_sig),
-    * (__cid, __ct) — so both sources optimize to the same probe plan
-    * (the inline shapes keep their exchange-reuse pattern; an index
-    * frame the caller materialized is scanned per consumer). */
-  private def classifyAgainst(
-      batch: DataFrame, textCol: String, idCol: String,
-      corpusKeys: DataFrame, corpusBands: DataFrame, corpusToks: DataFrame,
-      bands: Int, rowsPerBand: Int,
-      minJaccardMills: Int, maxCandidates: Int): DataFrame = {
+      maxCandidates: Int): DataFrame = {
+    val (corpusKeys, corpusBands, corpusToks) = corpusFrames(corpusIndex)
     val b = batch.select(
       col(idCol).as("__bid"), col(textCol).as("__btext"),
       TextFunctions.contentKey(col(textCol)).as("__ck"))
@@ -646,7 +634,7 @@ object Dedup {
 
     val cand = rest.select(
         col("__bid").as("__b"),
-        posexplode(TextFunctions.minhashBands(col("__btext"), bands, rowsPerBand))
+        posexplode(TextFunctions.minhashBands(col("__btext")))
           .as(Seq("band_no", "band_sig")))
       .join(corpusBands, Seq("band_no", "band_sig"))
       .groupBy("__b", "__c").agg(count(lit(1)).as("__nb"))

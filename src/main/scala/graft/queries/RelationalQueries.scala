@@ -193,15 +193,15 @@ object RelationalQueries {
                 WHEN score >= 50 THEN 'review' ELSE 'rejected' END AS decision
          FROM ranked WHERE rn <= 3 ORDER BY item_id, rn"""),
 
-    // J4/J5 — semi/anti probe split (the upsert update-vs-insert fork).
+    // J4 — semi/anti probe split (the upsert update-vs-insert fork,
+    // Merge.splitUpsert).
     Query("q08_semi_anti_split", (s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      val upd = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .select(col("c_custkey"), lit("update").as("action"))
-      val ins = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), lit("insert").as("action"))
-      upd.unionByName(ins).orderBy("c_custkey")
+      val (upd, ins) = graft.operators.Merge.splitUpsert(t(s, dir, "customer"),
+        t(s, dir, "orders").select(col("o_custkey").as("c_custkey")),
+        Seq("c_custkey"))
+      upd.select(col("c_custkey"), lit("update").as("action"))
+        .unionByName(ins.select(col("c_custkey"), lit("insert").as("action")))
+        .orderBy("c_custkey")
     },
       """SELECT c_custkey, 'update' AS action FROM customer c
          WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)

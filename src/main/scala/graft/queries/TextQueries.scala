@@ -570,7 +570,7 @@ object TextQueries {
   private def lshPairs(s: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.minhashLshPairs(
       docsSpread(s, dir).where(col("doc_id") % 5 === 0), "text", "doc_id",
-      bands = 2, rowsPerBand = 4, maxBucket = LshBucketCap)
+      maxBucket = LshBucketCap)
 
   /** The q192/q194 S-curve audit body over an arbitrary audit
     * universe: exact-Jaccard ground truth (the direct all-pairs
@@ -3431,28 +3431,18 @@ object TextQueries {
     // side is the 100 TB side: one key aggregate + one band index
     // scan, equi-joined; text is only compared on LSH candidates.
     Query("q109_dedup_against", (s, dir) => {
-      // round-13 OPT: the corpus side used to be derived INLINE
-      // (Dedup.dedupAgainst), which scans the corpus parquet three
-      // times — content-key aggregate, band index, token sets — each
-      // pass re-running the expensive text kernels (md5 content key /
-      // 8-seed minhash / tokenize+sort). Build the q109 index ONCE
-      // (Dedup.buildDedupIndex: all three derived columns in a single
-      // scan, ONE tokenization) and materialize it — the steady-state
-      // shape the operator's own doc prescribes; dedupAgainstIndex is
-      // the identical classification kernel (DedupMergeSpec pins
-      // index-vs-inline verdict equality), so the output is unchanged.
-      // The batch side is checkpointed for the same reason: classify's
-      // exact-probe/band/verify branches each re-executed the batch
-      // scan + repartition per consumer.
+      // the corpus index is built in one scan (Dedup.buildDedupIndex:
+      // one md5 key, one minhash, one tokenization per doc) and
+      // materialized, the steady-state shape; the batch is checkpointed
+      // too, since the exact-probe, band and verify branches each read it
       val d = docsSpread(s, dir)
       val corpusIdx = graft.operators.Dedup.buildDedupIndex(
-          d.where(col("doc_id") % 3 =!= 0), "text", "doc_id",
-          bands = 2, rowsPerBand = 4)
+          d.where(col("doc_id") % 3 =!= 0), "text", "doc_id")
         .localCheckpoint(true)
       graft.operators.Dedup.dedupAgainstIndex(
           d.where(col("doc_id") % 3 === 0).select("doc_id", "text")
             .localCheckpoint(true),
-          corpusIdx, "text", "doc_id", bands = 2, rowsPerBand = 4,
+          corpusIdx, "text", "doc_id",
           minJaccardMills = 500, maxCandidates = Int.MaxValue)
         .orderBy("doc_id")
     }, {

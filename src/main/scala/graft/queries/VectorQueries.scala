@@ -59,20 +59,13 @@ object VectorQueries {
          FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""),
 
     // Embedding near-dup pairs, blocked by label, verified by exact
-    // quantized cosine (floor: [[NearDupCosSqScaledMin]]).
-    Query("q38_embedding_dups", (s, dir) => {
-      val e = graft.Tables.spread(s, dir, "embeddings").where(col("vec_id") % 4 === 0)
-        .select(col("label"), col("vec_id"),
-          VectorFunctions.quantize(col("embedding")).as("q"))
-      e.as("a").join(e.as("b"), Seq("label"))
-        .where(col("a.vec_id") < col("b.vec_id"))
-        .withColumn("cos_sq_scaled",
-          VectorFunctions.cosineSqScaledQ(col("a.q"), col("b.q")))
-        .where(col("cos_sq_scaled") >= NearDupCosSqScaledMin)
-        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-          col("cos_sq_scaled"))
-        .orderBy("id_a", "id_b")
-    },
+    // quantized cosine: the Dedup.embeddingNearDupPairs operator (floor:
+    // [[NearDupCosSqScaledMin]]).
+    Query("q38_embedding_dups", (s, dir) =>
+      graft.operators.Dedup.embeddingNearDupPairs(
+          graft.Tables.spread(s, dir, "embeddings").where(col("vec_id") % 4 === 0),
+          "embedding", "vec_id", "label", NearDupCosSqScaledMin)
+        .orderBy("id_a", "id_b"),
       s"""WITH e AS (
            SELECT label, vec_id, $quant AS q
            FROM embeddings WHERE vec_id % 4 = 0)

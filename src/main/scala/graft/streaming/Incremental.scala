@@ -363,7 +363,7 @@ object Incremental {
     * holds unconditionally; nonzero means the recall trade documented
     * on `againstBucketCap` was LIVE this drain (a near-dup hiding
     * beyond the cap in one of those buckets could slip through as
-    * novel), the streaming twin of `Dedup.classifyAgainst`'s per-row
+    * novel), the streaming twin of `Dedup.dedupAgainstIndex`'s per-row
     * `capped` flag. Computed once per drain from the static-side
     * window pass — no per-batch cost. */
   case class CorpusGateReport(cappedBuckets: Long, droppedIndexRows: Long)
@@ -391,24 +391,27 @@ object Incremental {
     * `againstCorpus`: the streaming twin of `Dedup.dedupAgainst` (the
     * q109 operator) — with a STANDING corpus given, each drain also
     * drops documents the corpus already holds, by exact content key or
-    * LSH-banded near-dup at `againstMinJaccardMills` (2×4 md5 bands,
-    * exhaustive verify). The corpus key set, band index and token sets
-    * are STREAM-STATIC joins — stateless per micro-batch, recomputed
-    * from the static frame each drain — and a corpus-held key is
-    * remembered in the first-seen state (-1), so re-submissions drop on
-    * the state path without re-probing the corpus.
+    * LSH-banded near-dup at `againstMinJaccardMills` (the one
+    * `TextFunctions.minhashBands` geometry, `LshBands` ×
+    * `LshRowsPerBand` = 2×4 md5 bands; exhaustive verify). The corpus
+    * key set, band index and token sets (`Dedup.corpusFrames`, the
+    * batch twin's) are STREAM-STATIC joins — stateless per
+    * micro-batch, recomputed from the static frame each drain — and a
+    * corpus-held key is remembered in the first-seen state (-1), so
+    * re-submissions drop on the state path without re-probing the
+    * corpus.
     *
     * `againstBucketCap`: per-(band, signature) cap on the corpus band
     * index (kept: the `againstBucketCap` lowest corpus doc_ids —
     * deterministic). A degenerate bucket of N near-identical corpus
     * docs would otherwise fan every colliding stream doc out to N
     * verifications per micro-batch with no bound; the stream side
-    * cannot apply `classifyAgainst`'s per-doc candidate cap (no
+    * cannot apply `dedupAgainstIndex`'s per-doc candidate cap (no
     * windows/groupBy before flatMapGroupsWithState). CONTRACT when the
     * cap binds (same recall trade as the batch path's
     * `maxCandidates`): verification is not exhaustive — a true
     * near-dup hiding beyond the cap in a degenerate bucket can slip
-    * through as novel, diverging from batch `classifyAgainst`. The
+    * through as novel, diverging from batch `dedupAgainstIndex`. The
     * default is far above any honest bucket; pass `Int.MaxValue` for
     * lossless parity with the batch twin. Whether the cap BOUND this
     * drain is not silent: the returned [[CorpusGateReport]] counts the
@@ -481,15 +484,15 @@ object Incremental {
               }
           }, CorpusGateReport(0L, 0L))
       case Some(corpus) =>
-        val (bands, rowsPerBand) = (2, 4)
+        // the corpus side is the batch twin's: the three corpusFrames of
+        // an unmaterialized buildDedupIndex (column pruning leaves each
+        // frame its own derivation)
+        val (keys, bandRows, tokSets) = graft.operators.Dedup.corpusFrames(
+          graft.operators.Dedup.buildDedupIndex(corpus, "text", "doc_id"))
         // the probe key IS content_key (already on every stream row) —
         // a second md5(lower(trim(text))) column would re-evaluate the
         // digest per row and ride redundantly through the joins
-        val cKeys = corpus
-          .select(TextFunctions.contentKey(col("text")).as("content_key"),
-            col("doc_id").as("__cid"))
-          .groupBy("content_key").agg(min("__cid").as("__exact_id"))
-          .persist()
+        val cKeys = keys.persist()
         corpusIndexPins += cKeys
         // persist the three corpus-side index frames: a stream-static
         // join re-executes the static side EVERY micro-batch — a
@@ -502,7 +505,7 @@ object Incremental {
         // verified twice — bounded ×2, accepted.)
         val bucketCap = againstBucketCap
         val wBucket = org.apache.spark.sql.expressions.Window
-          .partitionBy("__bno", "__bsig").orderBy("__cid")
+          .partitionBy("band_no", "band_sig").orderBy("__c")
         // the PRE-cap banded index stays UNPERSISTED: caching it would
         // pin exactly the over-cap rows the cap exists to discard in
         // executor memory for the whole drain — unbounded on a
@@ -510,42 +513,37 @@ object Incremental {
         // `bucketCap` rows per bucket) is pinned for the per-batch
         // stream-static joins; the price is ONE extra banding pass
         // over the corpus when the observability aggregate below runs
-        val cBandsAll = corpus.select(col("doc_id").as("__cid"),
-          posexplode(TextFunctions.minhashBands(col("text"), bands, rowsPerBand))
-            .as(Seq("__bno", "__bsig")))
-          .withColumn("__rn", row_number().over(wBucket))
+        val cBandsAll = bandRows.withColumn("__rn", row_number().over(wBucket))
         // verdict r11: the cap's recall trade must be observable — a
         // drain reports how many degenerate buckets were truncated
         // (computed once here on the static side; bounded collect, one
         // aggregate row, its own full pass — see the cache note above)
         val overCap = cBandsAll.where(col("__rn") > bucketCap)
-          .agg(countDistinct(col("__bno"), col("__bsig")).as("b"),
+          .agg(countDistinct(col("band_no"), col("band_sig")).as("b"),
             count(lit(1)).as("r"))
           .head()
         val gateReport = CorpusGateReport(overCap.getLong(0), overCap.getLong(1))
         val cBands = cBandsAll.where(col("__rn") <= bucketCap).drop("__rn")
           .persist()
         corpusIndexPins += cBands
-        val cToks = corpus.select(col("doc_id").as("__cid"),
-          TextFunctions.tokenSetSorted(col("text")).as("__ct"))
-          .persist()
+        val cToks = tokSets.persist()
         corpusIndexPins += cToks
         val minJac = againstMinJaccardMills
         (keyed
           .withColumn("__bt", TextFunctions.tokenSetSorted(col("text")))
           .select(col("doc_id"), col("lang"), col("text"),
             col("content_key"), col("__bt"),
-            posexplode(TextFunctions.minhashBands(col("text"), bands, rowsPerBand))
-              .as(Seq("__bno", "__bsig")))
-          .join(cBands, Seq("__bno", "__bsig"), "left")
-          .join(cToks, Seq("__cid"), "left")
+            posexplode(TextFunctions.minhashBands(col("text")))
+              .as(Seq("band_no", "band_sig")))
+          .join(cBands, Seq("band_no", "band_sig"), "left")
+          .join(cToks, col("__c") === col("__cid"), "left")
           .withColumn("__common", when(col("__ct").isNull, lit(null))
             .otherwise(graft.functions.ArrayOps
               .sortedIntersectSize(col("__bt"), col("__ct"))))
           .withColumn("__jm", when(col("__common").isNull, lit(null))
             .otherwise(graft.operators.Dedup.jaccardMills(col("__common"),
               size(col("__bt")), size(col("__ct")))))
-          .join(cKeys, Seq("content_key"), "left")
+          .join(cKeys, col("content_key") === col("__ck"), "left")
           .select(col("doc_id"), col("lang"), col("text"),
             col("content_key"), col("__exact_id").as("exact_id"),
             col("__jm").as("jm")).as[CandDoc]

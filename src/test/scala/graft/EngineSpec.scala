@@ -602,7 +602,6 @@ class EngineSpec extends AnyFunSuite {
     val slim = pool.deduped.select(col("doc_id").as("__id"),
       col("text").as("__t"))
     val cand = operators.Dedup.minhashLshPairs(slim, "__t", "__id",
-      bands = 2, rowsPerBand = 4,
       maxBucket = graft.queries.TextQueries.LshBucketCap)
     val toks = slim.select(col("__id"), graft.functions.TextFunctions
       .tokenSetSorted(col("__t")).as("__tok"))

@@ -355,6 +355,37 @@ class PlanAssertionsSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p.take(2000))
   }
 
+  test("dedupAgainst: the routed corpus index keeps the inline text-kernel count") {
+    // dedupAgainst reads its three corpus frames off one unmaterialized
+    // buildDedupIndex; column pruning must leave each frame only its own
+    // text kernel, so the optimized plan holds 8 minhash signature calls
+    // (one band array per side, two calls per band) and 6 md5 content
+    // keys (the keyed exact-probe join, both sides' key, is read by the
+    // verdict, candidate and verify branches) — the counts of deriving
+    // each frame straight from the corpus. The fixture is repartitioned
+    // so no projection folds into a local relation at optimization time.
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Md5}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    val s = spark
+    import s.implicits._
+    val corpus = Seq((1L, "the quick brown fox"), (2L, "a slow green turtle"),
+      (3L, "the quick brown dog")).toDF("doc_id", "text").repartition(2)
+    val batch = Seq((10L, "the quick brown fox"), (11L, "the quick brown cat"))
+      .toDF("doc_id", "text").repartition(2)
+    val df = operators.Dedup.dedupAgainst(batch, corpus, "text", "doc_id",
+      maxCandidates = Int.MaxValue)
+    val exprs: Seq[Expression] = df.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val minhash = exprs.count {
+      case si: StaticInvoke => si.functionName == "minhashKernel"
+      case _ => false
+    }
+    val md5 = exprs.count(_.isInstanceOf[Md5])
+    assert((minhash, md5) == (8, 6),
+      df.queryExecution.optimizedPlan.toString.take(4000))
+    assert(df.collect().length == 2)
+  }
+
   test("q111: the ADC scan broadcasts only the query LUTs; top-k stays partial") {
     // pqTopK's promise: the encoded corpus never shuffles for scoring —
     // the per-query lookup tables ride a broadcast into the scan, and

@@ -58,7 +58,7 @@ class SkewDrillSpec extends AnyFunSuite {
     df.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
 
   private lazy val pairs = operators.Dedup.minhashLshPairs(
-    docs, "text", "doc_id", bands = 2, rowsPerBand = 4, maxBucket = 32)
+    docs, "text", "doc_id", maxBucket = 32)
 
   test("star cap keeps a 50%-mass LSH bucket linear: O(bucket) pairs, " +
     "hash-spread output") {

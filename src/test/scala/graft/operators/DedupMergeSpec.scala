@@ -124,14 +124,14 @@ class DedupMergeSpec extends AnyFunSuite {
   }
 
   test("minhash LSH emits identical docs as candidates (dedup#minhash)") {
-    val pairs = Dedup.minhashLshPairs(docs, "text", "doc_id", bands = 2, rowsPerBand = 2,
+    val pairs = Dedup.minhashLshPairs(docs, "text", "doc_id",
       maxBucket = Int.MaxValue)
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 3L)))
   }
 
   test("simhash of identical token sets is identical (dedup#simhash)") {
-    val sh = Dedup.simhashBuckets(docs, "text", "doc_id")
+    val sh = Dedup.simhashBuckets(docs, "text")
       .select("doc_id", "simhash").as[(Long, Long)].collect().toMap
     assert(sh(1L) == sh(3L))
     assert(sh(1L) == sh(2L)) // token-set canonicalization unifies case/ws
@@ -326,7 +326,7 @@ class DedupMergeSpec extends AnyFunSuite {
       (3L, "completely novel subject matter nothing shared with anything")
     ).toDF("doc_id", "text")
     val out = Dedup.dedupAgainst(batch, corpus, "text", "doc_id",
-        bands = 2, rowsPerBand = 4, minJaccardMills = 500,
+        minJaccardMills = 500,
         maxCandidates = Int.MaxValue)
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
@@ -358,14 +358,14 @@ class DedupMergeSpec extends AnyFunSuite {
       val batch = batchTexts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val got = Dedup.dedupAgainst(batch, corpus, "text", "doc_id",
-          bands = 2, rowsPerBand = 4, minJaccardMills = 500,
+          minJaccardMills = 500,
           maxCandidates = Int.MaxValue)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           r.getLong(3))).toSet
       // the prebuilt-index path must classify identically on every trial
       val viaIdx = Dedup.dedupAgainstIndex(batch,
           Dedup.buildDedupIndex(corpus, "text", "doc_id"), "text", "doc_id",
-          bands = 2, rowsPerBand = 4, minJaccardMills = 500,
+          minJaccardMills = 500,
           maxCandidates = Int.MaxValue)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           r.getLong(3))).toSet
@@ -571,12 +571,12 @@ class DedupMergeSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val batch = Seq((1L, batchText)).toDF("doc_id", "text")
     val capped = Dedup.dedupAgainst(batch, corpus, "text", "doc_id",
-      bands = 2, rowsPerBand = 4, minJaccardMills = 500, maxCandidates = 1)
+      minJaccardMills = 500, maxCandidates = 1)
     val r = capped.collect().head
     assert(r.getString(1) == "near_dup" && r.getLong(2) == 20L)
     // and the capped verdict set is never larger than the lossless one
     val lossless = Dedup.dedupAgainst(batch, corpus, "text", "doc_id",
-      bands = 2, rowsPerBand = 4, minJaccardMills = 500,
+      minJaccardMills = 500,
       maxCandidates = Int.MaxValue)
     assert(capped.where($"verdict" === "near_dup").count() <=
       lossless.where($"verdict" === "near_dup").count())
@@ -611,7 +611,7 @@ class DedupMergeSpec extends AnyFunSuite {
     val batch = Seq((1L, batchText),
       (2L, "wholly unrelated novel content")).toDF("doc_id", "text")
     val capped = Dedup.dedupAgainst(batch, corpus, "text", "doc_id",
-        bands = 2, rowsPerBand = 4, minJaccardMills = 500, maxCandidates = 1)
+        minJaccardMills = 500, maxCandidates = 1)
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.getLong(2), r.getBoolean(4)))).toMap
     // doc 1: both candidates collide twice → tie to min id 50 (J=470,
@@ -622,7 +622,7 @@ class DedupMergeSpec extends AnyFunSuite {
     assert(capped(2L) == (("new", -1L, false)), s"got ${capped(2L)}")
     // lossless run on the same frames finds 51 and stays unflagged
     val lossless = Dedup.dedupAgainst(batch, corpus, "text", "doc_id",
-        bands = 2, rowsPerBand = 4, minJaccardMills = 500,
+        minJaccardMills = 500,
         maxCandidates = Int.MaxValue)
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.getLong(2), r.getBoolean(4)))).toMap
@@ -741,7 +741,7 @@ class DedupMergeSpec extends AnyFunSuite {
     val docs = (1L to 12L).map(i => (i, s"w$i alpha beta gamma delta"))
       .toDF("id", "text")
     def sigs(bits: Int): Map[Long, Long] =
-      Dedup.simhashBuckets(docs, "text", "id", bits)
+      Dedup.simhashBuckets(docs, "text", bits)
         .select("id", "simhash").as[(Long, Long)].collect().toMap
     val s4 = sigs(4); val s16 = sigs(16)
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)

@@ -20,7 +20,7 @@ shift || true
 SF_DIR="/root/testdata/$SF"
 OUT_DIR="/tmp/preflight_verify_$SF"
 
-echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern, one near-dup pipeline)"
+echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern, one near-dup pipeline, one similarity-join core)"
 # every testdata read goes through graft.Tables: a read(Stream) whose
 # path literal names a .parquet file anywhere else in src/main is a
 # second table-access path
@@ -64,6 +64,19 @@ JACCARD=$(find src/main -name '*.scala' -print0 \
         unless ($def // "") eq "jaccardMills" }')
 [ -z "$JACCARD" ] \
   || { echo "$JACCARD"; echo "PREFLIGHT FAIL: Jaccard-mills arithmetic outside Dedup.jaccardMills (call it instead)"; exit 1; }
+# the similarity-join core has one home each: the PPJoin prefix bound
+# col("sz") - ceil(col("sz") * t …) + 1 is written only in
+# Dedup.prefixShingles (the DuckDB twins recompute it in SQL on
+# purpose), and the LSH geometry (a rowsPerBand value) lives only with
+# TextFunctions.minhashBands
+SIMJOIN=$(find src/main -name '*.scala' -print0 \
+  | xargs -0 perl -0777 -ne 'while (/(\browsPerBand\b)|col\("(\w+)"\)\s*-\s*ceil\(\s*col\("\2"\)\s*\*/g) {
+      my $home = defined $1 ? "minhashBands" : "prefixShingles";
+      my $pre = substr($_, 0, $-[0]); my ($def) = $pre =~ /.*\bdef\s+(\w+)/s;
+      printf "%s:%d (def %s)\n", $ARGV, 1 + ($pre =~ tr/\n//), $def // "?"
+        unless ($def // "") eq $home }')
+[ -z "$SIMJOIN" ] \
+  || { echo "$SIMJOIN"; echo "PREFLIGHT FAIL: LSH geometry or PPJoin prefix bound outside its home (use TextFunctions.minhashBands / Dedup.prefixShingles)"; exit 1; }
 
 echo "== preflight 2/5: sbt Test/compile (main + test must compile at HEAD+worktree)"
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 \
