@@ -37,7 +37,9 @@ object Engine {
       resolved: DataFrame)     // items + ext_id/score/decision/alternatives
 
   /** Ingest + process one submission file (CSV or xlsx) end-to-end
-    * against a canonical dictionary `dict(title, ext_id)`.
+    * against a canonical dictionary `dict(title, ext_id)`. Items
+    * resolve through the unblocked (broadcast) [[EntityResolution
+    * .resolve]] at the `Normalize.AutoResolve`/`AutoReject` bands.
     *
     * Eager: the call reads the submission once and resolves its items
     * once. The validated rows, the valid members and the resolved items
@@ -58,8 +60,6 @@ object Engine {
       spark: SparkSession,
       path: String,
       dict: DataFrame,
-      thresholds: EntityResolution.Thresholds = EntityResolution.Thresholds(),
-      blocked: Boolean = false,
       uploadRoot: Option[String] = None): SubmissionResult = {
     if (!Ingest.allowedFile(path))
       throw Ingest.UnsupportedFormat(path,
@@ -97,12 +97,14 @@ object Engine {
 
     // contactEmail is a RequiredField and missingRequired was checked
     // empty above, so the column is guaranteed present — no fallback.
-    // Eager: the one read of the submission; valid and errors both
-    // derive from these stored rows.
-    val flagged = normed.withColumn("__valid",
-      Normalize.validBusinessName(col("businessName")) &&
-        col("country1").isNotNull &&
-        Normalize.validEmail(col("contactEmail")))
+    // The rejection rule: the first failed check names the row's error;
+    // a row that passes every check has none. Eager: the one read of
+    // the submission; valid and errors both derive from these stored
+    // rows.
+    val flagged = normed.withColumn("error_message",
+      when(!Normalize.validBusinessName(col("businessName")), "invalid business name")
+        .when(col("country1").isNull, "missing country")
+        .when(!Normalize.validEmail(col("contactEmail")), "invalid email"))
       .localCheckpoint(true)
     // member_id is derived from row content (xxhash64 over all columns),
     // not monotonically_increasing_id(), so the same file gets the same
@@ -116,17 +118,13 @@ object Engine {
     // so the suffix assignment is a function of the file alone.
     val wDup = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__h")).orderBy(contentCols: _*)
-    val valid = flagged.where(col("__valid")).drop("__valid")
+    val valid = flagged.where(col("error_message").isNull).drop("error_message")
       .withColumn("__h", xxhash64(contentCols: _*))
       .withColumn("member_id",
         concat_ws("-", col("__h"), row_number().over(wDup)))
       .drop("__h")
       .localCheckpoint(true)
-    val errors = flagged.where(!col("__valid")).drop("__valid")
-      .withColumn("error_message",
-        when(!Normalize.validBusinessName(col("businessName")), "invalid business name")
-          .when(col("country1").isNull, "missing country")
-          .otherwise("invalid email"))
+    val errors = flagged.where(col("error_message").isNotNull)
 
     val offerings = Offerings.offeringLinks(valid, Seq("member_id"))
 
@@ -140,7 +138,7 @@ object Engine {
     // Eager: the one resolution of this submission
     val resolved = EntityResolution.resolve(
       items, dict, Seq("member_id", "kind", "item_key"),
-      itemCol = "item_norm", t = thresholds, blocked = blocked)
+      itemCol = "item_norm")
       .localCheckpoint(true)
 
     SubmissionResult(mapping, valid, errors, offerings, items, resolved)
@@ -155,29 +153,23 @@ object Engine {
       accounting: DataFrame) // (stage_no, stage, n_rows) — counts run when actioned
 
   /** Which documents the quality-selection stage of [[processCorpus]]
-    * keeps. Every policy reuses an already-oracle-gated operator —
-    * the facade assembles, never forks, the data plane. */
+    * keeps instead of its default per-stratum token-budget selection.
+    * Every policy reuses an already-oracle-gated operator — the facade
+    * assembles, never forks, the data plane. */
   sealed trait SelectionPolicy
-
-  /** Per-stratum token-budget prefix-greedy selection under the
-    * quality ordering ([[operators.TextAnalysis.budgetSelect]], q74's
-    * operator) — the default. */
-  final case class BudgetSelection(budgetTokens: Long) extends SelectionPolicy
 
   /** DSIR data selection (Xie et al. 2023; q90 scoring + q92's rank
     * kernel): score every candidate by hashed-bigram target-likeness
-    * against `target` (same `idCol`/`textCol` schema as the corpus;
-    * both sides lowercased for gram statistics, the q90 convention)
+    * against `target` (same `doc_id`/`text` schema as the corpus;
+    * both sides lowercased for gram statistics, the q90 convention,
+    * hashed into q90's `DsirBuckets`)
     * and keep the `topK` most target-like documents per stratum with
     * the deterministic (dsir_avg_mills DESC, id) tie-break. The rank
     * runs over a slim (id, stratum, score) frame — full-text rows
     * never ride the rank exchange — and the kept set equi-joins back
     * (shuffle join: one-row-per-doc scores are never broadcastable at
     * corpus scale). `selected` gains a `dsir_avg_mills` column. */
-  final case class DsirSelection(
-      target: DataFrame,
-      topK: Int,
-      buckets: Int = graft.queries.TextQueries.DsirBuckets)
+  final case class DsirSelection(target: DataFrame, topK: Int)
     extends SelectionPolicy
 
   /** Corpus-mixture selection: drop documents under `minQualityMills`
@@ -207,33 +199,23 @@ object Engine {
     * best documents through the q74 histogram kernel
     * ([[operators.TextAnalysis.budgetSelectPerStratum]]). Capped
     * strata keep every document; waterlined strata cut on quality.
-    * Exactly one of `budgetTokens` (absolute) or `budgetPerMille`
-    * (share of total capacity) sets the budget. */
-  final case class UnimaxSelection(
-      maxEpochs: Int,
-      budgetTokens: Long = 0L,
-      budgetPerMille: Option[Long] = None) extends SelectionPolicy {
-    // "exactly one" is enforced, not just documented: omitting both
-    // would water-fill a zero budget and silently select nothing
-    require((budgetTokens > 0L) != budgetPerMille.isDefined,
-      "set exactly one of budgetTokens (> 0) or budgetPerMille")
-    budgetPerMille.foreach(p => require(p > 0L && p <= 1000L,
-      s"budgetPerMille=$p must be in (0, 1000]"))
+    * The budget is `budgetPerMille` of the total capacity. */
+  final case class UnimaxSelection(maxEpochs: Int, budgetPerMille: Long)
+    extends SelectionPolicy {
+    require(budgetPerMille > 0L && budgetPerMille <= 1000L,
+      s"budgetPerMille=$budgetPerMille must be in (0, 1000]")
   }
 
   /** Temperature-scaled selection (q145's α = ½ allocator + q137's
     * execution): strata weighted by exact integer isqrt(n_tokens) —
     * the mT5/XLM-R low-resource up-weighting — then each stratum's
     * allocation (target capped at supply) is filled with its best
-    * documents through the q74 histogram kernel. Exactly one of
-    * `budgetTokens` or `budgetPerMille` sets the budget. */
-  final case class TemperatureSelection(
-      budgetTokens: Long = 0L,
-      budgetPerMille: Option[Long] = None) extends SelectionPolicy {
-    require((budgetTokens > 0L) != budgetPerMille.isDefined,
-      "set exactly one of budgetTokens (> 0) or budgetPerMille")
-    budgetPerMille.foreach(p => require(p > 0L && p <= 1000L,
-      s"budgetPerMille=$p must be in (0, 1000]"))
+    * documents through the q74 histogram kernel. The budget is
+    * `budgetPerMille` of the corpus's tokens. */
+  final case class TemperatureSelection(budgetPerMille: Long)
+    extends SelectionPolicy {
+    require(budgetPerMille > 0L && budgetPerMille <= 1000L,
+      s"budgetPerMille=$budgetPerMille must be in (0, 1000]")
   }
 
   /** The LLM-corpus counterpart of [[processSubmission]]: one composed
@@ -265,25 +247,34 @@ object Engine {
     * the per-stage row ledger (one count job per stage when collected
     * — spec/audit surface, not a hot path).
     *
+    * Each stage runs its operator at the constants its oracle query
+    * gates: line dedup at `TextQueries.LineDedupMaxDf`, decontamination
+    * at `DecontamMinShared` shared bigrams, near-dedup banding at the
+    * `LshBucketCap` star cap, and the against-corpus gate at
+    * `Dedup.dedupAgainst`'s default Jaccard floor with an exhaustive
+    * candidate verify.
+    *
     * Scale shape: inherits each operator's documented shape (no pair
     * space, no global sort, bounded key spaces); the only cross-stage
     * addition is the keep-set semi-join after exact dedup, equi-keyed
     * on the id.
     *
-    * @param docs          corpus with `idCol` (unique), `textCol`, `strataCol`
+    * @param docs          corpus with `doc_id` (unique), `text` and the
+    *                      stratum column `lang`
     * @param c4Rules       when Some((minWords, minSentences)), the C4
     *                      page-cleaning recipe (TextAnalysis.c4Clean,
     *                      the q135 operator) runs FIRST — while the
     *                      page's line structure is still intact, before
     *                      line dedup and the whitespace-collapsing
-    *                      clean: line retention rewrites `textCol` to
+    *                      clean: line retention rewrites `text` to
     *                      the kept lines and pages failing the
     *                      lorem-ipsum / brace / min-sentences verdict
     *                      are dropped. Adds a `c4_cleaned` ledger stage
-    * @param decontamEval  held-out benchmark docs (same `idCol`/`textCol`
+    * @param decontamEval  held-out benchmark docs (same `doc_id`/`text`
     *                      schema); when given, training docs sharing >=
-    *                      `decontamMinShared` word bigrams with ANY eval
-    *                      doc are dropped (Bloom-prefiltered exact check)
+    *                      `TextQueries.DecontamMinShared` word bigrams
+    *                      with ANY eval doc are dropped (Bloom-
+    *                      prefiltered exact check)
     * @param removeDupWindows when Some((windowTokens, anchorMod)),
     *                      cross-doc duplicated passages are CUT from
     *                      every non-canonical holder after exact dedup
@@ -293,31 +284,23 @@ object Engine {
     *                      FUZZY dedup runs after exact dedup through
     *                      `Dedup.verifiedComponents` (the q196
     *                      operator): MinHash-LSH candidate pairs (the
-    *                      q35 banding, star-capped at
-    *                      `nearDedupMaxBucket`), exact token-set Jaccard
-    *                      verification at the given threshold,
-    *                      connected components over the verified edges
-    *                      (the q53 kernel), then each component keeps
-    *                      only its min-id canonical (the q106 keeper cut
-    *                      with id priority). Adds a `near_deduped`
-    *                      ledger stage
-    * @param nearDedupMaxBucket star cap on degenerate LSH buckets
-    *                      (default: the gated q35 cap). NOTE the
-    *                      verify-after-star trade documented on
-    *                      `Dedup.verifiedComponents` — in a degenerate
-    *                      bucket (near-identical boilerplate) star edges
-    *                      verify in practice; pass `Int.MaxValue` for
-    *                      the lossless all-pairs verify
+    *                      q35 banding, star-capped at the gated q35
+    *                      cap — see the verify-after-star trade
+    *                      documented on `Dedup.verifiedComponents`),
+    *                      exact token-set Jaccard verification at the
+    *                      given threshold, connected components over
+    *                      the verified edges (the q53 kernel), then each
+    *                      component keeps only its min-id canonical (the
+    *                      q106 keeper cut with id priority). Adds a
+    *                      `near_deduped` ledger stage
     * @param againstCorpus when Some(standing corpus of the same
-    *                      `idCol`/`textCol` shape, in this pipeline's
+    *                      `doc_id`/`text` shape, in this pipeline's
     *                      cleaned text form), batch docs the corpus
     *                      already holds — exact content key or LSH-
-    *                      verified near-dup at `againstMinJaccardMills`
-    *                      — are dropped after exact dedup
-    *                      (Dedup.dedupAgainst, the q109 operator);
-    *                      `againstMaxCandidates` is its documented
-    *                      lossy hot-band cap (default exhaustive).
-    *                      Adds an `incremental_new` ledger stage
+    *                      verified near-dup — are dropped after exact
+    *                      dedup (Dedup.dedupAgainst, the q109 operator,
+    *                      verifying every candidate). Adds an
+    *                      `incremental_new` ledger stage
     * @param gopherStops   when Some(list), documents failing the
     *                      Gopher A1.1 rule conjunction (with this
     *                      required-word list) are dropped between
@@ -329,13 +312,14 @@ object Engine {
     *                      (TextAnalysis.tokenEntropy, the q127
     *                      operator — the gibberish/template filter).
     *                      Adds an `entropy_filtered` ledger stage
-    * @param budgetTokens  per-stratum token budget for quality selection
-    *                      (the default [[BudgetSelection]] policy;
-    *                      ignored when `selection` is given)
-    * @param selection     which documents the quality-selection stage
-    *                      keeps: [[BudgetSelection]] (default, via
-    *                      `budgetTokens`), [[DsirSelection]] (per-
-    *                      stratum DSIR top-K against a target corpus),
+    * @param budgetTokens  per-stratum token budget for the default
+    *                      quality selection (TextAnalysis.budgetSelect,
+    *                      q74's operator; ignored when `selection` is
+    *                      given)
+    * @param selection     when Some(policy), which documents the
+    *                      quality-selection stage keeps instead:
+    *                      [[DsirSelection]] (per-stratum DSIR top-K
+    *                      against a target corpus),
     *                      [[MixtureSelection]] (quality threshold +
     *                      stratified mixture rates),
     *                      [[ExactKSelection]] (quality threshold +
@@ -356,24 +340,19 @@ object Engine {
     *                      persist-at-stage-boundaries shape a real run
     *                      at scale uses (and the ledger then costs one
     *                      cheap count per stage instead of a full
-    *                      upstream re-execution each). Default false
-    *                      keeps the everything-lazy contract.
+    *                      upstream re-execution each). A boundary whose
+    *                      frame is already stored (an upstream boundary
+    *                      passed through by the stages that are off)
+    *                      is not written again. Default false keeps the
+    *                      everything-lazy contract.
     */
   def processCorpus(
       docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      strataCol: String = "lang",
-      maxLineDocFreq: Int = graft.queries.TextQueries.LineDedupMaxDf,
       c4Rules: Option[(Int, Int)] = None,
       decontamEval: Option[DataFrame] = None,
-      decontamMinShared: Int = graft.queries.TextQueries.DecontamMinShared,
       removeDupWindows: Option[(Int, Int)] = None,
       nearDedup: Option[Int] = None,
-      nearDedupMaxBucket: Int = graft.queries.TextQueries.LshBucketCap,
       againstCorpus: Option[DataFrame] = None,
-      againstMinJaccardMills: Int = 500,
-      againstMaxCandidates: Int = Int.MaxValue,
       gopherStops: Option[Seq[String]] = None,
       minEntropyMillsPerTok: Option[Long] = None,
       budgetTokens: Long = 1000000L,
@@ -383,8 +362,20 @@ object Engine {
       packBudget: Int = 2048,
       materializeBoundaries: Boolean = false): CorpusResult = {
     import graft.functions.{TextFunctions, UnicodeNorm}
-    def boundary(df: DataFrame): DataFrame =
-      if (materializeBoundaries) df.localCheckpoint(true) else df
+    import graft.queries.TextQueries
+    val (idCol, textCol, strataCol) = ("doc_id", "text", "lang")
+    def boundary(df: DataFrame): DataFrame = df.queryExecution.logical match {
+      case _: org.apache.spark.sql.execution.LogicalRDD => df
+      case _ => if (materializeBoundaries) df.localCheckpoint(true) else df
+    }
+    // the ledger, in stage order: each stage enters it where it is
+    // built, so a stage that is off never appears — an audit consumer
+    // must be able to tell "ran and dropped nothing" from "was off"
+    val ledger = Seq.newBuilder[(String, DataFrame)]
+    def stage(name: String, df: DataFrame): DataFrame = {
+      ledger += name -> df
+      df
+    }
 
     // reserved intermediate names (dedupLines / c4Clean outputs join
     // back against the passthrough columns): an input corpus carrying
@@ -402,6 +393,7 @@ object Engine {
       case bad => throw new IllegalArgumentException(
         s"input corpus columns ${bad.mkString(", ")} are reserved by processCorpus")
     }
+    stage("input", docs)
 
     // 1-2. NFC first (so line hashing sees canonical bytes), line dedup
     // while newlines are still intact, THEN cleanText — its control-
@@ -415,12 +407,12 @@ object Engine {
     // drop vetoed pages — scan-side, zero shuffle
     val c4ed = c4Rules match {
       case None => washed
-      case Some((minW, minS)) =>
+      case Some((minW, minS)) => stage("c4_cleaned",
         TextAnalysis.c4Clean(washed, idCol, textCol, minW, minS)
           .where(col("page_keep"))
           .withColumn(textCol, col("kept_text"))
           .drop("n_lines", "n_kept", "kept_text", "n_sentences",
-            "has_lorem", "has_brace", "page_keep")
+            "has_lorem", "has_brace", "page_keep"))
     }
     // passthrough columns (strata and anything else) ride dedupLines'
     // own final projection — that scan happens anyway, so this costs
@@ -430,16 +422,17 @@ object Engine {
     val passCols = docs.columns.toSeq
       .filterNot(c => c == textCol || c == idCol)
     val lineDeduped = TextAnalysis
-      .dedupLines(c4ed, textCol, idCol, maxLineDocFreq, passCols)
+      .dedupLines(c4ed, textCol, idCol, TextQueries.LineDedupMaxDf, passCols)
       .withColumnRenamed("n_kept", "n_kept_lines")
-    val cleaned = boundary(lineDeduped
+    val cleaned = stage("cleaned", boundary(lineDeduped
       .withColumn(textCol,
         TextFunctions.scrubPii(UnicodeNorm.cleanText(col("clean_text"))))
-      .drop("clean_text"))
+      .drop("clean_text")))
 
     // 3. an all-boilerplate doc has no trainable content — and every
     // such doc shares the SAME empty content key, so drop before dedup
-    val nonEmpty = cleaned.where(TextFunctions.tokenCount(col(textCol)) > 0)
+    val nonEmpty = stage("non_empty",
+      cleaned.where(TextFunctions.tokenCount(col(textCol)) > 0))
 
     // 4. exact dedup: keep the min-id representative of each content key
     // (round-13 OPT: boundary-wrapped — under materializeBoundaries the
@@ -447,8 +440,8 @@ object Engine {
     // boundaries: the near-dedup banding build AND its keeper
     // anti-join, the against-corpus probe, and the ledger counts each
     // re-ran the content-key window from the cleaned checkpoint)
-    val exactDeduped = boundary(Dedup.exact(nonEmpty, textCol, idCol)
-      .drop("content_key", "dup_count"))
+    val exactDeduped = stage("exact_deduped", boundary(
+      Dedup.exact(nonEmpty, textCol, idCol).drop("content_key", "dup_count")))
 
     // 4n. optional within-corpus fuzzy dedup (Dedup.verifiedComponents,
     // the q196 composition): star-capped q35 banding, exact token-set
@@ -467,10 +460,11 @@ object Engine {
         val slim = boundary(Dedup.nearDupFrame(exactDeduped, textCol, idCol))
         // non-canonical members (comp ≠ own id) drop
         val losers = Dedup.verifiedComponents(slim, minJacMills,
-            nearDedupMaxBucket)
+            TextQueries.LshBucketCap)
           .where(col("comp") =!= col("id"))
           .select(col("id").as(idCol))
-        exactDeduped.join(losers, Seq(idCol), "left_anti")
+        stage("near_deduped",
+          exactDeduped.join(losers, Seq(idCol), "left_anti"))
     }
 
     // 4a. optional incremental gate vs a standing corpus (the q109
@@ -481,15 +475,13 @@ object Engine {
     // content keys disagree for trivial whitespace reasons).
     val incremental = againstCorpus match {
       case None => nearDeduped
-      case Some(corpus) =>
+      case Some(corpus) => stage("incremental_new",
         nearDeduped.join(
           Dedup.dedupAgainst(
             nearDeduped.select(col(idCol), col(textCol)), corpus,
-            textCol, idCol,
-            minJaccardMills = againstMinJaccardMills,
-            maxCandidates = againstMaxCandidates)
+            textCol, idCol, maxCandidates = Int.MaxValue)
             .where(col("verdict") === "new").select(idCol),
-          Seq(idCol), "left_semi")
+          Seq(idCol), "left_semi"))
     }
 
     // 4b. optional duplicated-passage surgery: cut cross-doc repeated
@@ -498,17 +490,20 @@ object Engine {
     // rule as stage 3) and is dropped here
     val passageClean = removeDupWindows match {
       case None => incremental
-      case Some((w, m)) =>
+      case Some((w, m)) => stage("passage_cleaned",
         boundary(incremental.drop(textCol).join(
           TextAnalysis.removeDupPassages(incremental, textCol, idCol, w, m)
             .select(col(idCol), col("clean_text").as(textCol)),
           Seq(idCol))
-          .where(TextFunctions.tokenCount(col(textCol)) > 0))
+          .where(TextFunctions.tokenCount(col(textCol)) > 0)))
     }
 
     // 5. optional benchmark decontamination (exact result, Bloom-
-    // prefiltered so the uncontaminated bulk never shuffles)
-    val deduped = decontamEval match {
+    // prefiltered so the uncontaminated bulk never shuffles). The
+    // outer boundary stores what the stages before it left lazy (the
+    // near-dedup and incremental gates); a frame an upstream boundary
+    // already stored passes through unwritten.
+    val deduped = boundary(decontamEval match {
       case None => passageClean
       case Some(ev) =>
         val grams = (d: DataFrame) => d.select(col(idCol),
@@ -516,28 +511,24 @@ object Engine {
             .as("__grams"))
         val contaminated = TextAnalysis.bloomDecontam(
           grams(passageClean), grams(ev), idCol, "__grams",
-          minShared = decontamMinShared,
-          mBits = graft.queries.TextQueries.DecontamBloomBits,
-          seeds = graft.queries.TextQueries.DecontamBloomSeeds)
-        passageClean.join(contaminated.select(idCol), Seq(idCol), "left_anti")
-    }
-    // when decontam is off but removal ran, `deduped` IS passageClean,
-    // which the match above already boundary-wrapped — a second eager
-    // checkpoint would write a full identical copy for nothing
-    val dedupedB =
-      if (decontamEval.isEmpty && removeDupWindows.isDefined) deduped
-      else boundary(deduped)
+          minShared = TextQueries.DecontamMinShared,
+          mBits = TextQueries.DecontamBloomBits,
+          seeds = TextQueries.DecontamBloomSeeds)
+        // the ledger counts the stored stage, not its lazy join
+        stage("decontaminated", boundary(
+          passageClean.join(contaminated.select(idCol), Seq(idCol), "left_anti")))
+    })
 
     // 5b. optional Gopher rule gate: the A1.1 conjunction as a
     // scan-side semi-filter (q91's operator; equi-join on the id so
     // the full metric projection never rides downstream)
     val gopherRuled = gopherStops match {
-      case None => dedupedB
-      case Some(stops) =>
-        dedupedB.join(
-          TextAnalysis.gopherQualityFlags(dedupedB, textCol, idCol, stops)
+      case None => deduped
+      case Some(stops) => stage("rule_filtered",
+        deduped.join(
+          TextAnalysis.gopherQualityFlags(deduped, textCol, idCol, stops)
             .where(col("gopher_ok")).select(idCol),
-          Seq(idCol), "left_semi")
+          Seq(idCol), "left_semi"))
     }
 
     // 5c. optional token-entropy gate (q127's operator): the
@@ -547,102 +538,79 @@ object Engine {
     // so only ids ride back
     val ruled = minEntropyMillsPerTok match {
       case None => gopherRuled
-      case Some(minMills) =>
+      case Some(minMills) => stage("entropy_filtered",
         gopherRuled.join(
           TextAnalysis.tokenEntropy(gopherRuled, idCol, textCol, minMills)
             .where(!col("low_diversity")).select(idCol),
-          Seq(idCol), "left_semi")
+          Seq(idCol), "left_semi"))
     }
 
     // 6-7. quality score + the configured selection policy
     val scored = ruled
       .withColumn("quality_mills", TextFunctions.qualityScoreMills(col(textCol)))
       .withColumn("n_tokens", TextFunctions.tokenCount(col(textCol)))
-    val (selLabel, selectedRaw) =
-      selection.getOrElse(BudgetSelection(budgetTokens)) match {
-        case BudgetSelection(budget) =>
-          ("budget_selected", TextAnalysis.budgetSelect(
-            scored, strataCol, "quality_mills", "n_tokens", idCol, budget))
-        case DsirSelection(target, topK, buckets) =>
-          val forGrams = (d: DataFrame) =>
-            d.select(col(idCol), lower(col(textCol)).as(textCol))
-          val imp = TextAnalysis.importanceScore(
-            forGrams(ruled), forGrams(target), textCol, idCol, buckets)
-          // q92's kernel: rank the SLIM (id, stratum, score) frame —
-          // text must not ride the rank exchange — then join back
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(strataCol))
-            .orderBy(col("dsir_avg_mills").desc, col(idCol))
-          val kept = scored.select(col(idCol), col(strataCol))
-            .join(imp.select(col(idCol), col("dsir_avg_mills")), Seq(idCol))
-            .withColumn("__rk", row_number().over(w))
-            .where(col("__rk") <= topK)
-            .select(col(idCol), col("dsir_avg_mills"))
-          ("dsir_selected", scored.join(kept, Seq(idCol)))
-        case MixtureSelection(minQ, rates, defaultRate) =>
-          ("mixture_selected", TextAnalysis.stratifiedSample(
-            scored.where(col("quality_mills") >= minQ),
-            strataCol, idCol, rates, defaultRate))
-        case ExactKSelection(minQ, k) =>
-          ("exact_k_selected", TextAnalysis.prioritySample(
-            scored.where(col("quality_mills") >= minQ),
-            strataCol, idCol, k))
-        case UnimaxSelection(epochs, budget, perMille) =>
-          val budgets = TextAnalysis.unimaxAllocate(
-              ruled.select(col(strataCol), col(textCol)), strataCol,
-              textCol, epochs, budget, perMille)
-            .select(col("stratum").as(strataCol), col("allocated"))
-          ("unimax_selected", TextAnalysis.budgetSelectPerStratum(
-            scored, strataCol, "quality_mills", "n_tokens", idCol,
-            budgets, "allocated"))
-        case TemperatureSelection(budget, perMille) =>
-          val budgets = TextAnalysis.temperatureAllocate(
-              ruled.select(col(strataCol), col(textCol)), strataCol,
-              textCol, budget, perMille)
-            .select(col("stratum").as(strataCol), col("alloc_tokens"))
-          ("temperature_selected", TextAnalysis.budgetSelectPerStratum(
-            scored, strataCol, "quality_mills", "n_tokens", idCol,
-            budgets, "alloc_tokens"))
-      }
-    val selected = boundary(selectedRaw)
+    val (selLabel, selectedRaw) = selection match {
+      case None =>
+        ("budget_selected", TextAnalysis.budgetSelect(
+          scored, strataCol, "quality_mills", "n_tokens", idCol, budgetTokens))
+      case Some(DsirSelection(target, topK)) =>
+        val forGrams = (d: DataFrame) =>
+          d.select(col(idCol), lower(col(textCol)).as(textCol))
+        val imp = TextAnalysis.importanceScore(
+          forGrams(ruled), forGrams(target), textCol, idCol,
+          TextQueries.DsirBuckets)
+        // q92's kernel: rank the SLIM (id, stratum, score) frame —
+        // text must not ride the rank exchange — then join back
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col(strataCol))
+          .orderBy(col("dsir_avg_mills").desc, col(idCol))
+        val kept = scored.select(col(idCol), col(strataCol))
+          .join(imp.select(col(idCol), col("dsir_avg_mills")), Seq(idCol))
+          .withColumn("__rk", row_number().over(w))
+          .where(col("__rk") <= topK)
+          .select(col(idCol), col("dsir_avg_mills"))
+        ("dsir_selected", scored.join(kept, Seq(idCol)))
+      case Some(MixtureSelection(minQ, rates, defaultRate)) =>
+        ("mixture_selected", TextAnalysis.stratifiedSample(
+          scored.where(col("quality_mills") >= minQ),
+          strataCol, idCol, rates, defaultRate))
+      case Some(ExactKSelection(minQ, k)) =>
+        ("exact_k_selected", TextAnalysis.prioritySample(
+          scored.where(col("quality_mills") >= minQ),
+          strataCol, idCol, k))
+      case Some(UnimaxSelection(epochs, perMille)) =>
+        val budgets = TextAnalysis.unimaxAllocate(
+            ruled.select(col(strataCol), col(textCol)), strataCol,
+            textCol, epochs, budgetPerMille = Some(perMille))
+          .select(col("stratum").as(strataCol), col("allocated"))
+        ("unimax_selected", TextAnalysis.budgetSelectPerStratum(
+          scored, strataCol, "quality_mills", "n_tokens", idCol,
+          budgets, "allocated"))
+      case Some(TemperatureSelection(perMille)) =>
+        val budgets = TextAnalysis.temperatureAllocate(
+            ruled.select(col(strataCol), col(textCol)), strataCol,
+            textCol, budgetPerMille = Some(perMille))
+          .select(col("stratum").as(strataCol), col("alloc_tokens"))
+        ("temperature_selected", TextAnalysis.budgetSelectPerStratum(
+          scored, strataCol, "quality_mills", "n_tokens", idCol,
+          budgets, "alloc_tokens"))
+    }
+    val selected = stage(selLabel, boundary(selectedRaw))
 
     // 8. training-ready units: overlapping windows AND packed sequences
-    val chunks = TextAnalysis.chunkDocs(
-      selected, textCol, idCol, chunkTokens, chunkOverlap)
-    val packed = TextAnalysis.packSequences(
-      selected, textCol, idCol, strataCol, packBudget)
+    val chunks = stage("chunks", TextAnalysis.chunkDocs(
+      selected, textCol, idCol, chunkTokens, chunkOverlap))
+    val packed = stage("packed_docs", TextAnalysis.packSequences(
+      selected, textCol, idCol, strataCol, packBudget))
 
-    // every OPTIONAL stage appears in the ledger only when it ran — an
-    // audit consumer must be able to tell "ran and dropped nothing"
-    // from "was off" for passage cleaning, decontamination and the
-    // Gopher rule gate exactly as it can for the C4/incremental/
-    // entropy gates
-    val accounting = (Seq(
-      ("input", docs)) ++
-      (if (c4Rules.isDefined) Seq(("c4_cleaned", c4ed)) else Nil) ++ Seq(
-      ("cleaned", cleaned),
-      ("non_empty", nonEmpty), ("exact_deduped", exactDeduped)) ++
-      (if (nearDedup.isDefined) Seq(("near_deduped", nearDeduped))
-       else Nil) ++
-      (if (againstCorpus.isDefined) Seq(("incremental_new", incremental))
-       else Nil) ++
-      (if (removeDupWindows.isDefined)
-        Seq(("passage_cleaned", passageClean)) else Nil) ++
-      (if (decontamEval.isDefined)
-        Seq(("decontaminated", dedupedB)) else Nil) ++
-      (if (gopherStops.isDefined)
-        Seq(("rule_filtered", gopherRuled)) else Nil) ++
-      (if (minEntropyMillsPerTok.isDefined)
-        Seq(("entropy_filtered", ruled)) else Nil) ++ Seq(
-      (selLabel, selected),
-      ("chunks", chunks), ("packed_docs", packed)))
+    val accounting = ledger.result()
       .zipWithIndex
       .map { case ((name, df), i) =>
         df.agg(lit(i).as("stage_no"), lit(name).as("stage"),
           count(lit(1)).as("n_rows"))
       }.reduce(_ unionByName _)
 
-    CorpusResult(cleaned, dedupedB, selected, chunks, packed, accounting)
+    CorpusResult(cleaned, deduped, selected, chunks, packed, accounting)
   }
 
   /** The review queue (pending band) with dashboard aggregates. */

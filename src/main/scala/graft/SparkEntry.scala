@@ -1131,8 +1131,8 @@ object SparkEntry {
                AS semantic_ok
            FROM reviews
            WHERE approved IS NULL AND NOT coalesce(ignored, false)
-             AND score >= ${graft.operators.SemanticGuard.DefaultHigh}
-             AND score < ${graft.operators.SemanticGuard.DefaultAutoResolve}
+             AND score >= ${graft.operators.SemanticGuard.HighConfidence}
+             AND score < ${graft.functions.Normalize.AutoResolve}
              AND suggested_title IS NOT NULL
            ORDER BY review_id"""
     }),
@@ -1883,7 +1883,7 @@ object SparkEntry {
          WHERE ${shareTok("n.item_name", "d.title")}),
        ${rawChain("tokp", "tk")},
        strong AS (SELECT DISTINCT item_name FROM tkraw
-         WHERE raw_score >= ${graft.operators.EntityResolution.Thresholds().autoResolve}),
+         WHERE raw_score >= ${graft.functions.Normalize.AutoResolve}),
        rescue AS (SELECT item_name FROM names
          EXCEPT SELECT item_name FROM strong),
        gramp AS (
@@ -1961,16 +1961,16 @@ object SparkEntry {
        altrows AS (SELECT *, row_number() OVER (PARTITION BY item_name
            ORDER BY raw_rn) AS alt_rn
          FROM bn WHERE cand_title <> best_name
-           AND score >= ${graft.operators.EntityResolution.Thresholds().autoReject}),
+           AND score >= ${graft.functions.Normalize.AutoReject}),
        alts AS (SELECT item_name, array_to_string(list(
              cand_title || '#' || cand_ext_id || '#'
                || CAST(CAST(floor(score * 100) AS BIGINT) AS VARCHAR)
              ORDER BY raw_rn), '|') AS alt_digest
          FROM altrows WHERE alt_rn <= 3 GROUP BY item_name),
        bestrow AS (SELECT item_name, cand_ext_id, score,
-           CASE WHEN score >= ${graft.operators.EntityResolution.Thresholds().autoResolve}
+           CASE WHEN score >= ${graft.functions.Normalize.AutoResolve}
                   THEN 'resolved'
-                WHEN score >= ${graft.operators.EntityResolution.Thresholds().autoReject}
+                WHEN score >= ${graft.functions.Normalize.AutoReject}
                   THEN 'review'
                 ELSE 'rejected' END AS decision
          FROM bn WHERE best_rn = 1),

@@ -67,18 +67,23 @@ object Normalize {
   def validEmail(c: Column): Column =
     c.isNull || c.rlike("^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}$")
 
+  /** The reference's decision bands (`app/etl.py:40-42`): a score at
+    * or above `AutoResolve` resolves automatically, one at or above
+    * `AutoReject` goes to human review, anything lower is rejected.
+    * Entity resolution, the batch-approve guard and the oracle twins
+    * all read them from here. */
+  val AutoResolve: Double = 97.0
+  val AutoReject: Double = 50.0
+
   /** F6 — three-band decision routing on a 0-100 score. A NULL score
     * falls through both comparisons into "rejected" — deliberately the
     * same convention as EntityResolution's zero-candidate path (no
     * candidates = score 0 = auto-reject); a caller that must
     * distinguish "unscored" from "scored low" should gate on
     * `score.isNull` BEFORE banding. */
-  def decisionBand(
-      score: Column,
-      autoResolve: Double = 97.0,
-      autoReject: Double = 50.0): Column =
-    when(score >= autoResolve, "resolved")
-      .when(score >= autoReject, "review")
+  def decisionBand(score: Column): Column =
+    when(score >= AutoResolve, "resolved")
+      .when(score >= AutoReject, "review")
       .otherwise("rejected")
 
   /** F8 — decision-status derivation from the review tri-state. */

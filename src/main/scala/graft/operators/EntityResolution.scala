@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * (score 100, resolved); misses are fuzzy-scored against the whole
   * dictionary with `token_set_ratio`, penalty-adjusted
   * (`app/etl.py:713-755`), top-10 candidates kept, and routed:
-  * score ≥ 97 auto-resolve, ≥ 50 human review with top-3 alternatives,
-  * else auto-reject (`app/etl.py:40-42`, `1318-1374`).
+  * score ≥ `Normalize.AutoResolve` auto-resolve, ≥ `Normalize.AutoReject`
+  * human review with top-3 alternatives, else auto-reject
+  * (`app/etl.py:40-42`, `1318-1374`).
   *
   * Spark-first plan shape:
   *  - exact phase = broadcast hash join on a lowercased key (J1);
@@ -29,13 +30,6 @@ import org.apache.spark.sql.functions._
   *    every candidate pair is scored once.
   */
 object EntityResolution {
-
-  /** The reference's decision constants (`app/etl.py:40-42`):
-    * candidate rescue keys off `autoResolve`, banding off
-    * `autoResolve`/`autoReject`. */
-  case class Thresholds(
-      autoResolve: Double = 97.0,
-      autoReject: Double = 50.0)
 
   /** Exact case-insensitive dictionary join. `dict(title, ext_id)`.
     * Returns items + (ext_id, exact_score) with null ext_id for misses. */
@@ -97,7 +91,8 @@ object EntityResolution {
     * partitions but cannot shrink the output). So the gram family is
     * GATED, two-phase: token candidates are raw-scored first, and grams
     * run only for names whose BEST token-blocked candidate raw-scores
-    * below `rescueFloor` (names with zero token candidates included).
+    * below `Normalize.AutoResolve` (names with zero token candidates
+    * included).
     * A name token-paired only with weak candidates ("green apple" vs
     * dict "green tea") therefore still reaches a gram-only true match
     * ("greenapple inc") — gating on zero-candidates alone would not pair
@@ -112,8 +107,7 @@ object EntityResolution {
       itemCol: String,
       titleCol: String,
       idCol: String,
-      blocked: Boolean,
-      rescueFloor: Double = 97.0): DataFrame = {
+      blocked: Boolean): DataFrame = {
     val d = dict.select(col(titleCol).as("cand_title"), col(idCol).as("cand_ext_id"))
     def rawScored(pairs: DataFrame) = pairs.withColumn("raw_score",
       Similarity.token_set_ratio(col(itemCol), col("cand_title")))
@@ -139,7 +133,7 @@ object EntityResolution {
         .localCheckpoint(true)
       // phase 2 — rescue set: misses with no token-blocked candidate at
       // or above the accept floor (subsumes names with zero candidates).
-      val strongNames = tokenPairs.where(col("raw_score") >= rescueFloor)
+      val strongNames = tokenPairs.where(col("raw_score") >= Normalize.AutoResolve)
         .select(col(itemCol)).distinct()
       val rescued = misses.join(strongNames, Seq(itemCol), "left_anti")
       val itemGram = rescued.withColumn("__gram", explode(charGrams(col(itemCol))))
@@ -214,7 +208,6 @@ object EntityResolution {
       itemCol: String = "item_name",
       titleCol: String = "title",
       idCol: String = "ext_id",
-      t: Thresholds = Thresholds(),
       topK: Int = 10,
       nAlternatives: Int = 3,
       blocked: Boolean = false): DataFrame = {
@@ -241,8 +234,7 @@ object EntityResolution {
     // raw-best candidate; the final match is the argmax of the adjusted
     // score, ties broken by raw rank (the reference's strict `>` keeps
     // the earlier candidate).
-    val scored = fuzzyCandidates(names, dict, itemCol, titleCol, idCol, blocked,
-      rescueFloor = t.autoResolve)
+    val scored = fuzzyCandidates(names, dict, itemCol, titleCol, idCol, blocked)
 
     // cand_title completes a TOTAL order: two dict rows can share an
     // ext_id (case-variant titles), and a non-total tiebreak would make
@@ -267,7 +259,7 @@ object EntityResolution {
     // name, score ≥ reject floor, first `nAlternatives`. Only the review
     // band carries them (`app/etl.py:1336-1357`), null when none are left.
     val alts = transform(slice(filter(col("cands"), x =>
-        x.getField("name") =!= col("best.title") && x.getField("score") >= t.autoReject),
+        x.getField("name") =!= col("best.title") && x.getField("score") >= Normalize.AutoReject),
       1, nAlternatives), _.dropFields("rn"))
     // One aggregate per name takes the winner and its alternatives, so
     // the scored pairs have one consumer: two window chains joined back
@@ -279,8 +271,7 @@ object EntityResolution {
       max(col("score")).as("score"),
       sort_array(collect_list(struct(col("raw_rn").as("rn"), col("cand_title").as("name"),
         col("score"), col("cand_ext_id").as("ext_id")))).as("cands"))
-      .withColumn("decision",
-        Normalize.decisionBand(col("score"), t.autoResolve, t.autoReject))
+      .withColumn("decision", Normalize.decisionBand(col("score")))
       .select(col(itemCol),
         when(col("decision") =!= "rejected", col("best.ext_id")).as("ext_id"),
         col("score"), col("decision"),

@@ -4,7 +4,7 @@ import graft.functions.Normalize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Report generation + dashboard aggregates (J7, A1-A10, S7/S8).
+/** Report generation + dashboard aggregates (A1-A10, S7/S8).
   *
   * The reference builds three CSV reports (processed rows, errors,
   * created items) and dashboard counts (reference `app/report_utils.py`,
@@ -13,22 +13,6 @@ import org.apache.spark.sql.functions._
   * `Ingest.writeCsvReport`.
   */
 object Reports {
-
-  /** J7/F8: processed-rows report —
-    * submissions ⋈ members ⋈ items ⋈ reviews (left). */
-  def processedRows(
-      submissions: DataFrame, members: DataFrame,
-      items: DataFrame, reviews: DataFrame): DataFrame =
-    submissions
-      .join(members, Seq("submission_id"))
-      .join(items, Seq("member_id"))
-      .join(reviews, Seq("new_item_id"), "left")
-      .withColumn("decision_status", Normalize.decisionStatus(
-        coalesce(col("ignored"), lit(false)),
-        coalesce(col("approved"), lit(false)),
-        coalesce(col("resolved"), lit(false))))
-      .withColumn("processed_at_str",
-        date_format(col("processed_at"), "yyyy-MM-dd HH:mm:ss"))
 
   /** U1: error report — ETL validation errors ∪ push errors. */
   def errorReport(etlErrors: DataFrame, pushErrors: DataFrame): DataFrame =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Normalize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,10 +35,11 @@ object SemanticGuard {
     "rice" -> "rice paper", "bean" -> "vanilla bean", "salt" -> "sea salt",
     "oil" -> "essential oil")
 
-  /** Guard thresholds (shared with q60's oracle SQL — edit HERE). */
+  /** Guard thresholds (shared with q60's oracle SQL — edit HERE). The
+    * batch-approve band runs from `HighConfidence` up to the resolve
+    * band, `Normalize.AutoResolve`. */
   val MinLenRatio: Double = 0.5
-  val DefaultHigh: Double = 90.0
-  val DefaultAutoResolve: Double = 97.0
+  val HighConfidence: Double = 90.0
 
   private def hitsCategory(c: Column, words: Seq[String]): Column =
     words.map(w => lower(c).contains(w)).reduce(_ || _)
@@ -56,21 +58,17 @@ object SemanticGuard {
     !categoryMismatch && !pairHit && lenRatio >= MinLenRatio
   }
 
-  /** P10 + F7: the batch-approve set — pending reviews in
-    * [high, autoResolve) with a suggested id that pass the guard. */
-  def batchApprovable(
-      reviews: DataFrame,
-      itemCol: String = "item_name",
-      suggestedCol: String = "suggested_title",
-      scoreCol: String = "score",
-      high: Double = DefaultHigh,
-      autoResolve: Double = DefaultAutoResolve): DataFrame =
+  /** P10 + F7: the batch-approve set — pending reviews
+    * (`item_name`, `suggested_title`, `score`, `approved`, `ignored`)
+    * scored in [`HighConfidence`, `Normalize.AutoResolve`) with a
+    * suggested title, flagged `semantic_ok` when they pass the guard. */
+  def batchApprovable(reviews: DataFrame): DataFrame =
     reviews
-      // a never-populated ignored flag means "not ignored" — the same
-      // coalesce Reports.processedRows applies; !NULL would be NULL and
-      // silently drop an approvable row from the batch-approve set
+      // a never-populated ignored flag means "not ignored": !NULL would
+      // be NULL and silently drop an approvable row from the set
       .where(col("approved").isNull && !coalesce(col("ignored"), lit(false)))
-      .where(col(scoreCol) >= high && col(scoreCol) < autoResolve)
-      .where(col(suggestedCol).isNotNull)
-      .withColumn("semantic_ok", isSemanticallyValid(col(itemCol), col(suggestedCol)))
+      .where(col("score") >= HighConfidence && col("score") < Normalize.AutoResolve)
+      .where(col("suggested_title").isNotNull)
+      .withColumn("semantic_ok",
+        isSemanticallyValid(col("item_name"), col("suggested_title")))
 }

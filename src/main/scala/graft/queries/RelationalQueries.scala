@@ -168,7 +168,7 @@ object RelationalQueries {
       val w = Window.partitionBy("item_name").orderBy(col("score").desc, col("ext_id"))
       val ranked = scored.withColumn("rn", row_number().over(w).cast("long"))
         .where(col("rn") <= 3)
-        .withColumn("decision", Normalize.decisionBand(col("score"), 97, 50))
+        .withColumn("decision", Normalize.decisionBand(col("score")))
       items.join(ranked, "item_name")
         .select("item_id", "rn", "title", "ext_id", "score", "decision")
         .orderBy("item_id", "rn")

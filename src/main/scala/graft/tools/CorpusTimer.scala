@@ -71,7 +71,7 @@ object CorpusTimer {
       // actually measured (the q136/q137 geometry would cap the small
       // strata and skip their cut)
       case "unimax" => Some(graft.Engine.UnimaxSelection(
-        maxEpochs = 2, budgetPerMille = Some(400L)))
+        maxEpochs = 2, budgetPerMille = 400L))
       case other => sys.error(s"unknown policy '$other'")
     }
     // scan meter: sum parquet-scan-node output rows over every plan

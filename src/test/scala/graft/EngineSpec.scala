@@ -196,12 +196,12 @@ class EngineSpec extends AnyFunSuite {
       df.select(col("doc_id"),
           graft.functions.TextFunctions.tokenCount(col("text")).as("t"))
         .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
-    // removal-on + decontam-off + materialized: the one config where
-    // the dedupedB checkpoint-skip branch is live — deduped aliases
-    // the boundary-wrapped passage-cleaned frame, so it must STILL be
-    // checkpointed (its plan is a LogicalRDD scan); if a refactor ever
-    // stops boundary-wrapping passageClean, this assertion fails
-    // before the per-stage re-execution regression can return
+    // removal-on + decontam-off + materialized: deduped is the stored
+    // passage-cleaned frame, which the decontamination boundary passes
+    // through unwritten — so it must be checkpoint-backed (its plan is
+    // a LogicalRDD scan); if a refactor ever stops boundary-wrapping
+    // passageClean, this assertion fails before the per-stage
+    // re-execution regression can return
     val remOnly = Engine.processCorpus(docs,
       removeDupWindows = Some((8, 1)), budgetTokens = budget,
       materializeBoundaries = true)
@@ -371,7 +371,7 @@ class EngineSpec extends AnyFunSuite {
     // UniMax water-filled budgets (q136's allocator + q137's kernel)
     val uni = Engine.processCorpus(docs,
       selection = Some(Engine.UnimaxSelection(
-        maxEpochs = 2, budgetPerMille = Some(750L))),
+        maxEpochs = 2, budgetPerMille = 750L)),
       materializeBoundaries = true)
     val uLedger = uni.accounting.collect()
       .map(row => row.getString(1) -> row.getLong(2)).toMap
@@ -409,7 +409,7 @@ class EngineSpec extends AnyFunSuite {
     // 50% budget under √-flattened shares thins EVERY stratum
     val temp = Engine.processCorpus(docs,
       selection = Some(Engine.TemperatureSelection(
-        budgetPerMille = Some(500L))),
+        budgetPerMille = 500L)),
       materializeBoundaries = true)
     val tLedger = temp.accounting.collect()
       .map(row => row.getString(1) -> row.getLong(2)).toMap
@@ -501,6 +501,15 @@ class EngineSpec extends AnyFunSuite {
     // and without the gate there is no entropy stage
     assert(!plain.accounting.collect().map(_.getString(1))
       .contains("entropy_filtered"))
+    // every optional stage off: deduped IS the stored exact-dedup
+    // boundary the ledger counts, not a second checkpoint of it
+    def rdds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+    val dedupedRdd = rdds(plain.deduped)
+    assert(dedupedRdd.size == 1 && dedupedRdd.subsetOf(rdds(plain.accounting)),
+      s"deduped reads ${dedupedRdd}, the ledger ${rdds(plain.accounting)}")
   }
 
   test("processCorpus C4 gate reuses the q135 operator, first, lines intact") {

@@ -117,7 +117,7 @@ class TextVectorSpec extends AnyFunSuite {
       (2L, "whole milk", "skim milk", 92.0, Option.empty[Boolean],
         Some(true)),                       // explicitly ignored -> dropped
       (3L, "whole milk", "skim milk", 99.0, Option.empty[Boolean],
-        Option.empty[Boolean]))            // above autoResolve -> dropped
+        Option.empty[Boolean]))            // above AutoResolve -> dropped
       .toDF("review_id", "item_name", "suggested_title", "score",
         "approved", "ignored")
     val got = SemanticGuard.batchApprovable(reviews)

@@ -23,7 +23,6 @@ class EntityResolutionParitySpec extends AnyFunSuite {
   private def reference(items: DataFrame, dict: DataFrame, topK: Int,
       nAlternatives: Int, blocked: Boolean): DataFrame = {
     val itemCol = "item_name"
-    val t = EntityResolution.Thresholds()
     val exact = EntityResolution.exactMatch(items, dict, itemCol, "title", "ext_id")
     val hits = exact.where(col("exact_ext_id").isNotNull)
       .select(items.columns.toIndexedSeq.map(col) :+
@@ -34,7 +33,7 @@ class EntityResolutionParitySpec extends AnyFunSuite {
           .as("alternatives"): _*)
     val misses = exact.where(col("exact_ext_id").isNull).drop("exact_ext_id")
     val scored = EntityResolution.fuzzyCandidates(misses.select(col(itemCol)).distinct(),
-      dict, itemCol, "title", "ext_id", blocked, rescueFloor = t.autoResolve)
+      dict, itemCol, "title", "ext_id", blocked)
     val wRaw = Window.partitionBy(col(itemCol))
       .orderBy(col("raw_score").desc, col("cand_ext_id"), col("cand_title"))
     val ranked = scored
@@ -55,7 +54,7 @@ class EntityResolutionParitySpec extends AnyFunSuite {
           .over(Window.partitionBy(col(itemCol))))
     val wAlt = Window.partitionBy(col(itemCol)).orderBy(col("raw_rn"))
     val alts = flagged.where(col("cand_title") =!= col("best_name") &&
-        col("score") >= t.autoReject)
+        col("score") >= Normalize.AutoReject)
       .withColumn("alt_rn", row_number().over(wAlt))
       .where(col("alt_rn") <= nAlternatives)
       .groupBy(col(itemCol))
@@ -68,8 +67,7 @@ class EntityResolutionParitySpec extends AnyFunSuite {
           x.getField("score").as("score"),
           x.getField("ext_id").as("ext_id"))).as("alternatives"))
     val best = flagged.where(col("best_rn") === 1)
-      .withColumn("decision",
-        Normalize.decisionBand(col("score"), t.autoResolve, t.autoReject))
+      .withColumn("decision", Normalize.decisionBand(col("score")))
       .withColumn("ext_id", when(col("decision") =!= "rejected", col("cand_ext_id")))
       .select(col(itemCol), col("ext_id"), col("score"), col("decision"))
     val perName = best.join(alts, Seq(itemCol), "left")

@@ -20,7 +20,7 @@ shift || true
 SF_DIR="/root/testdata/$SF"
 OUT_DIR="/tmp/preflight_verify_$SF"
 
-echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern, one near-dup pipeline, one similarity-join core)"
+echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern, one near-dup pipeline, one similarity-join core, one decision policy)"
 # every testdata read goes through graft.Tables: a read(Stream) whose
 # path literal names a .parquet file anywhere else in src/main is a
 # second table-access path
@@ -77,6 +77,16 @@ SIMJOIN=$(find src/main -name '*.scala' -print0 \
         unless ($def // "") eq $home }')
 [ -z "$SIMJOIN" ] \
   || { echo "$SIMJOIN"; echo "PREFLIGHT FAIL: LSH geometry or PPJoin prefix bound outside its home (use TextFunctions.minhashBands / Dedup.prefixShingles)"; exit 1; }
+
+# the decision bands have one home, Normalize.AutoResolve/AutoReject
+# next to decisionBand(score): an autoResolve/autoReject/rescueFloor
+# name, a 97.0/50.0 literal or a decisionBand( call with threshold
+# arguments anywhere else is a second, settable copy of the policy
+POLICY=$(find src/main -name '*.scala' ! -path src/main/scala/graft/functions/Normalize.scala -print0 \
+  | xargs -0 perl -0777 -ne 'while (/\b(?:autoResolve|autoReject|rescueFloor)\b|(?<![\w.])(?:97|50)\.0\b|\bdecisionBand\((?:[^(),]++|(\((?:[^()]++|(?1))*\)))*,/g) {
+      printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }' | uniq)
+[ -z "$POLICY" ] \
+  || { echo "$POLICY"; echo "PREFLIGHT FAIL: decision-band threshold outside Normalize (read Normalize.AutoResolve/AutoReject, call decisionBand(score))"; exit 1; }
 
 echo "== preflight 2/5: sbt Test/compile (main + test must compile at HEAD+worktree)"
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 \
