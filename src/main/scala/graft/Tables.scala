@@ -80,9 +80,28 @@ object Tables {
         s"(got '$tz'); build the session via Tables.configure")
   }
 
+  /** Compiled classes Spark keeps per JVM
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One pass of
+    * the benchmark workloads compiles 117–120 classes on `submission`,
+    * 237 on `corpus` and 138–144 on `queries`, about 500 together, so at
+    * 100 the cache evicted every class before the next pass asked for
+    * it and each pass paid Janino and a cold JIT again. Twice the
+    * measured working set leaves room for the rest of the query suite;
+    * peak RSS of a 2 GB-heap benchmark JVM moved by −105 to +176 MB in
+    * single traced runs. The conf is static and Spark reads it once per
+    * JVM, when the first generated class is compiled, so the first
+    * session every entry point builds must come from here. The cache is
+    * keyed by the generated source; [[configure]] also drops the
+    * whole-stage stage id from the class name, so one stage that
+    * adaptive execution numbers differently from run to run is still
+    * one entry. */
+  val CodegenCacheEntries = 1000
+
   /** Session config every graft entry point applies. */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.master(s"local[$cpus]")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

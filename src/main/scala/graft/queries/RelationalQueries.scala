@@ -173,7 +173,7 @@ object RelationalQueries {
         .select("item_id", "rn", "title", "ext_id", "score", "decision")
         .orderBy("item_id", "rn")
     },
-      """WITH items AS (
+      s"""WITH items AS (
            SELECT p_partkey AS item_id, lower(p_name) AS item_name
            FROM part WHERE p_partkey % 7 = 3),
          dict AS (
@@ -189,8 +189,8 @@ object RelationalQueries {
            SELECT *, row_number() OVER (PARTITION BY item_id
              ORDER BY score DESC, ext_id) AS rn FROM scored)
          SELECT item_id, rn, title, ext_id, score,
-           CASE WHEN score >= 97 THEN 'resolved'
-                WHEN score >= 50 THEN 'review' ELSE 'rejected' END AS decision
+           CASE WHEN score >= ${Normalize.AutoResolve} THEN 'resolved'
+                WHEN score >= ${Normalize.AutoReject} THEN 'review' ELSE 'rejected' END AS decision
          FROM ranked WHERE rn <= 3 ORDER BY item_id, rn"""),
 
     // J4 — semi/anti probe split (the upsert update-vs-insert fork,

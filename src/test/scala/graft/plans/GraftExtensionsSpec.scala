@@ -11,10 +11,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // getOrCreate returns the shared suite session if one is alive and
     // ignores withExtensions — register into the live registry then
     // (exactly what spark.sql.extensions does at session build time).
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
+    // Tables.configure even here: if this suite builds the forked JVM's
+    // first session, the JVM-wide settings it fixes (the codegen cache
+    // size) must be the ones every other suite runs under
+    val spark = graft.Tables.configure(
+        SparkSession.builder().appName("graft-ext-test"), "2")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     val ext = new org.apache.spark.sql.SparkSessionExtensions

@@ -20,7 +20,7 @@ shift || true
 SF_DIR="/root/testdata/$SF"
 OUT_DIR="/tmp/preflight_verify_$SF"
 
-echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern, one near-dup pipeline, one similarity-join core, one decision policy)"
+echo "== preflight 1/5: layout guards (one table-access path, one registry entry per query, one kernel-call pattern, one near-dup pipeline, one similarity-join core, one decision policy, one session configuration)"
 # every testdata read goes through graft.Tables: a read(Stream) whose
 # path literal names a .parquet file anywhere else in src/main is a
 # second table-access path
@@ -80,13 +80,30 @@ SIMJOIN=$(find src/main -name '*.scala' -print0 \
 
 # the decision bands have one home, Normalize.AutoResolve/AutoReject
 # next to decisionBand(score): an autoResolve/autoReject/rescueFloor
-# name, a 97.0/50.0 literal or a decisionBand( call with threshold
-# arguments anywhere else is a second, settable copy of the policy
+# name, a 97.0/50.0 literal, a score compared with a bare 97/50 (a SQL
+# twin's band) or a decisionBand( call with threshold arguments
+# anywhere else is a second, settable copy of the policy
 POLICY=$(find src/main -name '*.scala' ! -path src/main/scala/graft/functions/Normalize.scala -print0 \
-  | xargs -0 perl -0777 -ne 'while (/\b(?:autoResolve|autoReject|rescueFloor)\b|(?<![\w.])(?:97|50)\.0\b|\bdecisionBand\((?:[^(),]++|(\((?:[^()]++|(?1))*\)))*,/g) {
+  | xargs -0 perl -0777 -ne 'while (/\b(?:autoResolve|autoReject|rescueFloor)\b|(?<![\w.])(?:97|50)\.0\b|score"?\)?\s*[<>]=?\s*(?:lit\()?(?:97|50)\b|\bdecisionBand\((?:[^(),]++|(\((?:[^()]++|(?1))*\)))*,/g) {
       printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }' | uniq)
 [ -z "$POLICY" ] \
   || { echo "$POLICY"; echo "PREFLIGHT FAIL: decision-band threshold outside Normalize (read Normalize.AutoResolve/AutoReject, call decisionBand(score))"; exit 1; }
+
+# every session is built by graft.Tables.configure: Spark fixes some
+# settings once per JVM from the first session (the codegen cache
+# size), so one plain SparkSession.builder() that runs first leaves the
+# whole JVM on Spark's defaults. The one exemption is
+# graft.tools.EntrySmoke, which builds a plain session on purpose to
+# stand in for a caller that knows none of the graft settings.
+BUILDER=$(find src/main src/test -name '*.scala' -print0 \
+  | xargs -0 perl -0777 -ne 'my ($pkg) = /^\s*package\s+([\w.]+)/m;
+    while (/\bSparkSession\s*\.\s*builder\b/g) {
+      my $pre = substr($_, 0, $-[0]); my ($obj) = $pre =~ /.*\b(?:object|class)\s+(\w+)/s;
+      printf "%s:%d (%s.%s)\n", $ARGV, 1 + ($pre =~ tr/\n//), $pkg // "?", $obj // "?"
+        unless $pre =~ /\bTables\s*\.\s*configure\(\s*\z/
+          || ($pkg // "") . "." . ($obj // "") eq "graft.tools.EntrySmoke" }')
+[ -z "$BUILDER" ] \
+  || { echo "$BUILDER"; echo "PREFLIGHT FAIL: SparkSession.builder() outside Tables.configure (wrap it: Tables.configure(SparkSession.builder(), cpus))"; exit 1; }
 
 echo "== preflight 2/5: sbt Test/compile (main + test must compile at HEAD+worktree)"
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 \
